@@ -41,7 +41,7 @@ object Translator {
     * leaves `COLUMNS` untouched (an analysis error, as in DuckDB when the
     * pattern matches nothing). */
   def translate(sql: String, schemaOf: String => Option[Seq[String]]): Translation =
-    translate(sql, schemaOf, _ => false)
+    translate(sql, schemaOf, ColTypes())
 
   /** Catalog column-type resolution for the schema-aware rewrites. All
     * resolvers are name-based over the VISIBLE catalog (the isMapCol
@@ -74,17 +74,6 @@ object Translator {
       isDateCol: (String, Boolean) => Boolean = (_, _) => false,
       isStringCol: String => Boolean = _ => false,
       isDecimalCol: String => Boolean = _ => false)
-
-  /** Back-compat overload (tests, simple callers): last-segment
-    * name-based resolvers, date lookup non-strict in both modes. */
-  def translate(sql: String, schemaOf: String => Option[Seq[String]],
-      isMapCol: String => Boolean,
-      isCollectionCol: String => Boolean = _ => false,
-      isDateCol: String => Boolean = _ => false): Translation =
-    translate(sql, schemaOf, ColTypes(
-      isMapCol = isMapCol,
-      isCollectionCol = isCollectionCol,
-      isDateCol = (chain, _) => isDateCol(chain.split('.').last)))
 
   def translate(sql: String, schemaOf: String => Option[Seq[String]],
       types: ColTypes): Translation = {
@@ -209,6 +198,49 @@ object Translator {
     toks.length - 1
   }
 
+  /** Runs a rewrite pass to its fixpoint. `step(toks, i)` returns the new
+    * tokens when a rule fires at token `i`. After a rewrite the scan resumes
+    * at the outermost call enclosing the first changed token, or at that
+    * token when it is at top level, and never after `i`, whose rules may
+    * match again; not at token 0, which made translate time quadratic in
+    * statement size. The enclosing call is the smallest resume point that
+    * keeps the output unchanged: an outer rule's guard reads its
+    * arguments, and an inner rewrite changes them. */
+  private def fixpoint(toks0: Vector[Tok])(
+      step: (Vector[Tok], Int) => Option[Vector[Tok]]): Vector[Tok] = {
+    var toks = toks0
+    var i = 0
+    while (i < toks.length) {
+      step(toks, i) match {
+        case Some(next) => i = math.min(i, resumeAt(toks, next)); toks = next
+        case None => i += 1
+      }
+    }
+    toks
+  }
+
+  /** Name token of the outermost call in `after` that encloses the first
+    * token where `before` and `after` differ; that token itself when no
+    * call encloses it. */
+  private def resumeAt(before: Vector[Tok], after: Vector[Tok]): Int = {
+    val n = math.min(before.length, after.length)
+    var k = 0
+    while (k < n && before(k) == after(k)) k += 1
+    var start = k; var d = 0; var j = k - 1
+    while (j >= 0) {
+      after(j) match {
+        case Punct(")") => d += 1
+        case Punct("(") if d > 0 => d -= 1
+        case Punct("(") =>
+          val p = prevNonWs(after, j)
+          if (p >= 0 && after(p).isInstanceOf[Ident]) start = p
+        case _ =>
+      }
+      j -= 1
+    }
+    start
+  }
+
   // ---- simple token rewrites ------------------------------------------
 
   /** `count()` → `count(*)` (`/root/reference/README.md:5` ClickHouse-ism). */
@@ -262,52 +294,40 @@ object Translator {
     * Aliased by function name when no explicit alias follows, so
     * `read_parquet.town` qualifications keep working
     * (`/root/reference/public/index.html:466`). */
-  private[dialect] def rewriteTableFunctions(toks0: Vector[Tok], views: ArrayBuffer[ViewReg]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if id.upper == "READ_PARQUET" || id.upper == "READ_CSV_AUTO" ||
-              id.upper == "READ_CSV" || id.upper == "READ_JSON_AUTO" || id.upper == "READ_JSON" ||
-              id.upper == "READ_NDJSON_AUTO" || id.upper == "READ_NDJSON" =>
-            val open = nextNonWs(toks, i)
-            if (open < toks.length && toks(open) == Punct("(")) {
-              val close = matchParen(toks, open)
-              // first string arg = path (ignore extra named args)
-              toks.slice(open, close).collectFirst { case s: Str => s } match {
-                case Some(path) =>
-                  val fnName = id.text.toLowerCase
-                  val alias = if (hasAliasAfter(toks, close)) "" else s" AS $fnName"
-                  val repl: String =
-                    if (id.upper == "READ_PARQUET") s"parquet.`${path.value}`$alias"
-                    else {
-                      // name derived from the path, not a per-translation
-                      // counter: two concurrent queries over different files
-                      // must never share a temp-view name (the registration
-                      // happens in the shared session)
-                      val fmt = if (id.upper.startsWith("READ_CSV")) "csv" else "json"
-                      val vn = s"graft_${fmt}_view_${
-                        java.security.MessageDigest.getInstance("MD5")
-                          .digest(path.value.getBytes("UTF-8"))
-                          .take(8).map("%02x".format(_)).mkString}"
-                      views += ViewReg(vn, fmt, path.value)
-                      s"$vn$alias"
-                    }
-                  toks = toks.patch(i, Seq(Ident(repl)), close - i + 1)
-                  changed = true
-                case None =>
-              }
+  private[dialect] def rewriteTableFunctions(toks0: Vector[Tok], views: ArrayBuffer[ViewReg]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if id.upper == "READ_PARQUET" || id.upper == "READ_CSV_AUTO" ||
+            id.upper == "READ_CSV" || id.upper == "READ_JSON_AUTO" || id.upper == "READ_JSON" ||
+            id.upper == "READ_NDJSON_AUTO" || id.upper == "READ_NDJSON" =>
+          val open = nextNonWs(toks, i)
+          if (open < toks.length && toks(open) == Punct("(")) {
+            val close = matchParen(toks, open)
+            // first string arg = path (ignore extra named args)
+            toks.slice(open, close).collectFirst { case s: Str => s }.map { path =>
+              val fnName = id.text.toLowerCase
+              val alias = if (hasAliasAfter(toks, close)) "" else s" AS $fnName"
+              val repl: String =
+                if (id.upper == "READ_PARQUET") s"parquet.`${path.value}`$alias"
+                else {
+                  // name derived from the path, not a per-translation
+                  // counter: two concurrent queries over different files
+                  // must never share a temp-view name (the registration
+                  // happens in the shared session)
+                  val fmt = if (id.upper.startsWith("READ_CSV")) "csv" else "json"
+                  val vn = s"graft_${fmt}_view_${
+                    java.security.MessageDigest.getInstance("MD5")
+                      .digest(path.value.getBytes("UTF-8"))
+                      .take(8).map("%02x".format(_)).mkString}"
+                  views += ViewReg(vn, fmt, path.value)
+                  s"$vn$alias"
+                }
+              toks.patch(i, Seq(Ident(repl)), close - i + 1)
             }
-          case _ =>
-        }
-        i += 1
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
   /** `FROM '/x/y.parquet'` / `FROM "https://…/f.parquet"` → `parquet.`…``
     * (`/root/reference/public/index.html:467-469`). */
@@ -374,61 +394,51 @@ object Translator {
     * higher-order builtins, so the result stays inside codegen'd
     * expression evaluation. Runs before the array-literal/subscript
     * rewrites (a comprehension's `[` sits in list-literal position);
-    * nested comprehensions converge through the restart loop. An `IF`
+    * nested comprehensions converge through the fixpoint driver. An `IF`
     * immediately followed by `(` is treated as the conditional function,
     * not a comprehension filter — parenthesize differently if both are
     * wanted (same ambiguity exists in DuckDB's grammar). */
-  private[dialect] def rewriteListComprehensions(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case Punct("[") if !isSubscriptOpen(toks, i) =>
-            val close = matchBracket(toks, i)
-            val inner = toks.slice(i + 1, close)
-            var d = 0; var forIdx = -1; var inIdx = -1; var ifIdx = -1
-            for ((t, j) <- inner.zipWithIndex) {
-              t match {
-                case Punct("(") | Punct("[") => d += 1
-                case Punct(")") | Punct("]") => d -= 1
-                case id: Ident if d == 0 && id.upper == "FOR" && forIdx < 0 =>
-                  forIdx = j
-                case id: Ident if d == 0 && id.upper == "IN" &&
-                    forIdx >= 0 && inIdx < 0 =>
-                  inIdx = j
-                case id: Ident if d == 0 && id.upper == "IF" && inIdx >= 0 &&
-                    ifIdx < 0 && {
-                      var n = j + 1
-                      while (n < inner.length && isWs(inner(n))) n += 1
-                      !(n < inner.length && inner(n) == Punct("("))
-                    } =>
-                  ifIdx = j
-                case _ =>
-              }
+  private[dialect] def rewriteListComprehensions(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case Punct("[") if !isSubscriptOpen(toks, i) =>
+          val close = matchBracket(toks, i)
+          val inner = toks.slice(i + 1, close)
+          var d = 0; var forIdx = -1; var inIdx = -1; var ifIdx = -1
+          for ((t, j) <- inner.zipWithIndex) {
+            t match {
+              case Punct("(") | Punct("[") => d += 1
+              case Punct(")") | Punct("]") => d -= 1
+              case id: Ident if d == 0 && id.upper == "FOR" && forIdx < 0 =>
+                forIdx = j
+              case id: Ident if d == 0 && id.upper == "IN" &&
+                  forIdx >= 0 && inIdx < 0 =>
+                inIdx = j
+              case id: Ident if d == 0 && id.upper == "IF" && inIdx >= 0 &&
+                  ifIdx < 0 && {
+                    var n = j + 1
+                    while (n < inner.length && isWs(inner(n))) n += 1
+                    !(n < inner.length && inner(n) == Punct("("))
+                  } =>
+                ifIdx = j
+              case _ =>
             }
-            if (forIdx > 0 && inIdx > forIdx) {
-              val expr = render(inner.slice(0, forIdx)).trim
-              val v = render(inner.slice(forIdx + 1, inIdx)).trim
-              val listEnd = if (ifIdx > inIdx) ifIdx else inner.length
-              val list = render(inner.slice(inIdx + 1, listEnd)).trim
-              val repl =
-                if (ifIdx > inIdx) {
-                  val cond = render(inner.slice(ifIdx + 1, inner.length)).trim
-                  s"transform(filter($list, $v -> $cond), $v -> $expr)"
-                } else s"transform($list, $v -> $expr)"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case _ =>
-        }
-        i += 1
+          }
+          if (forIdx > 0 && inIdx > forIdx) {
+            val expr = render(inner.slice(0, forIdx)).trim
+            val v = render(inner.slice(forIdx + 1, inIdx)).trim
+            val listEnd = if (ifIdx > inIdx) ifIdx else inner.length
+            val list = render(inner.slice(inIdx + 1, listEnd)).trim
+            val repl =
+              if (ifIdx > inIdx) {
+                val cond = render(inner.slice(ifIdx + 1, inner.length)).trim
+                s"transform(filter($list, $v -> $cond), $v -> $expr)"
+              } else s"transform($list, $v -> $expr)"
+            Some(toks.patch(i, lex(repl), close - i + 1))
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
   /** `:: TYPE[]` / `CAST(x AS TYPE[n])` — DuckDB's list and fixed-size
     * ARRAY type suffixes → `ARRAY<TYPE>` (r10 batch 10; Spark has no
@@ -443,48 +453,39 @@ object Translator {
       "DECIMAL", "NUMERIC", "VARCHAR", "TEXT", "STRING", "CHAR", "BPCHAR",
       "BOOLEAN", "BOOL", "DATE", "TIMESTAMP", "DATETIME", "BLOB", "BYTEA",
       "VARBINARY", "BINARY", "UUID", "JSON", "INTERVAL")
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if castTypeHeads.contains(id.upper) && {
-              val p = prevNonWs(toks, i)
-              p >= 0 && (toks(p) == Punct("::") || up(toks(p)) == "AS")
-            } =>
-            // type head [+ (precision args)] then one or more [n?] suffixes
-            var end = i
-            val n1 = nextNonWs(toks, i)
-            if (n1 < toks.length && toks(n1) == Punct("("))
-              end = matchParen(toks, n1)
-            var suffixes = 0
-            var cur = nextNonWs(toks, end)
-            var lastClose = end
-            while (cur < toks.length && toks(cur) == Punct("[") && {
-                val a = nextNonWs(toks, cur)
-                a < toks.length && (toks(a) == Punct("]") || (toks(a).isInstanceOf[Num] && {
-                  val b = nextNonWs(toks, a); b < toks.length && toks(b) == Punct("]")
-                }))
-              }) {
-              suffixes += 1
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if castTypeHeads.contains(id.upper) && {
+            val p = prevNonWs(toks, i)
+            p >= 0 && (toks(p) == Punct("::") || up(toks(p)) == "AS")
+          } =>
+          // type head [+ (precision args)] then one or more [n?] suffixes
+          var end = i
+          val n1 = nextNonWs(toks, i)
+          if (n1 < toks.length && toks(n1) == Punct("("))
+            end = matchParen(toks, n1)
+          var suffixes = 0
+          var cur = nextNonWs(toks, end)
+          var lastClose = end
+          while (cur < toks.length && toks(cur) == Punct("[") && {
               val a = nextNonWs(toks, cur)
-              lastClose = if (toks(a) == Punct("]")) a else nextNonWs(toks, a)
-              cur = nextNonWs(toks, lastClose)
-            }
-            if (suffixes > 0) {
-              var ty = render(toks.slice(i, end + 1)).trim
-              for (_ <- 1 to suffixes) ty = s"ARRAY<$ty>"
-              toks = toks.patch(i, lex(ty), lastClose - i + 1)
-              changed = true
-            }
-          case _ =>
-        }
-        i += 1
+              a < toks.length && (toks(a) == Punct("]") || (toks(a).isInstanceOf[Num] && {
+                val b = nextNonWs(toks, a); b < toks.length && toks(b) == Punct("]")
+              }))
+            }) {
+            suffixes += 1
+            val a = nextNonWs(toks, cur)
+            lastClose = if (toks(a) == Punct("]")) a else nextNonWs(toks, a)
+            cur = nextNonWs(toks, lastClose)
+          }
+          if (suffixes > 0) {
+            var ty = render(toks.slice(i, end + 1)).trim
+            for (_ <- 1 to suffixes) ty = s"ARRAY<$ty>"
+            Some(toks.patch(i, lex(ty), lastClose - i + 1))
+          } else None
+        case _ => None
       }
     }
-    toks
   }
 
   private[dialect] def rewriteArrayLiterals(toks: Vector[Tok]): Vector[Tok] = {
@@ -736,13 +737,6 @@ object Translator {
     * computed expression (map literal, function result, parenthesized
     * subquery output) takes the array guards — bare value, zero-guarded —
     * and empty brackets (`VARCHAR[]` type suffixes) are untouched. */
-  private[dialect] def rewriteSubscripts(toks0: Vector[Tok]): Vector[Tok] =
-    rewriteSubscripts(toks0, _ => false, _ => false)
-
-  private[dialect] def rewriteSubscripts(toks0: Vector[Tok],
-      isMapCol: String => Boolean): Vector[Tok] =
-    rewriteSubscripts(toks0, isMapCol, _ => false)
-
   private[dialect] def rewriteSubscripts(toks0: Vector[Tok],
       isMapCol: String => Boolean,
       isStringCol: String => Boolean): Vector[Tok] = {
@@ -755,221 +749,206 @@ object Translator {
           if (k % 2 == 0) t.isInstanceOf[Ident] && !keywordLike(up(t))
           else t == Punct(".")
       } && isStringCol(seg.map(_.text).mkString.toLowerCase(java.util.Locale.ROOT))
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if (id.upper == "ARRAY_SLICE" || id.upper == "LIST_SLICE") && {
-              // r10 batch 9b: a string-LITERAL receiver slices CHARACTERS
-              // (duck's array_slice('hello', 2, 4) = 'ell') — rewritten in
-              // THIS pass so the emitted CASTs get the int-cast rounding
-              // treatment once (emitting them later broke idempotence).
-              // r12 (VERDICT r11 #3): a string-typed COLUMN receiver
-              // (strict catalog resolution) takes the same character
-              // semantics. List receivers keep the later guarded-slice
-              // rewrite.
-              val open = nextNonWs(toks, i)
-              open < toks.length && toks(open) == Punct("(") && {
-                val close = matchParen(toks, open)
-                val args = splitTopLevel(toks.slice(open + 1, close))
-                args.length == 3 && (args(0).filterNot(isWs) match {
-                  case Vector(_: Str) => true
-                  case seg => strColChain(seg)
-                })
-              }
-            } =>
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if (id.upper == "ARRAY_SLICE" || id.upper == "LIST_SLICE") && {
+            // r10 batch 9b: a string-LITERAL receiver slices CHARACTERS
+            // (duck's array_slice('hello', 2, 4) = 'ell') — rewritten in
+            // THIS pass so the emitted CASTs get the int-cast rounding
+            // treatment once (emitting them later broke idempotence).
+            // r12 (VERDICT r11 #3): a string-typed COLUMN receiver
+            // (strict catalog resolution) takes the same character
+            // semantics. List receivers keep the later guarded-slice
+            // rewrite.
             val open = nextNonWs(toks, i)
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            val (l, a, b) = (render(args(0)).trim, render(args(1)).trim, render(args(2)).trim)
-            toks = toks.patch(i, lex(strSliceForm(l, a, b)), close - i + 1)
-            changed = true
-          case Punct("[") if {
-            val p = prevNonWs(toks, i)
-            p >= 0 && (toks(p) match {
-              case id: Ident => !keywordLike(id.upper)
-              case Punct(")") | Punct("]") => true
-              // string-literal receiver: 'abcdef'[2:4] (r10 batch 7b)
-              case _: Str => true
-              case _ => false
-            })
-          } =>
-            var d = 0; var j = i; var close = -1
-            while (j < toks.length && close < 0) {
-              toks(j) match {
-                case Punct("[") => d += 1
-                case Punct("]") => d -= 1; if (d == 0) close = j
-                case _ =>
-              }
-              j += 1
-            }
-            if (close > i) {
-              val inner = toks.slice(i + 1, close)
-              var dd = 0; var colonAt = -1
-              for ((t, k) <- inner.zipWithIndex) t match {
-                case Punct("(") | Punct("[") => dd += 1
-                case Punct(")") | Punct("]") => dd -= 1
-                case Punct(":") if dd == 0 && colonAt < 0 => colonAt = k
-                case _ =>
-              }
-              val p = prevNonWs(toks, i)
-              val rStart = primaryStart(toks, p)
-              val recv = render(toks.slice(rStart, p + 1)).trim
-              // bare string-literal receiver → character subscript/slice;
-              // r12: a string-typed COLUMN receiver (strict catalog
-              // resolution — the name must be VARCHAR in every defining
-              // table, exact when table-qualified) takes the same path
-              val strRecv = toks.slice(rStart, p + 1).filter(!isWs(_)) match {
+            open < toks.length && toks(open) == Punct("(") && {
+              val close = matchParen(toks, open)
+              val args = splitTopLevel(toks.slice(open + 1, close))
+              args.length == 3 && (args(0).filterNot(isWs) match {
                 case Vector(_: Str) => true
                 case seg => strColChain(seg)
-              }
-              // schema-aware map dispatch (r7): receiver is a plain
-              // (dot-qualified) identifier naming a known MAP column →
-              // DuckDB 1.0 semantics, probe-pinned: m[k] = [v] when the
-              // key is present (key 0 included — maps have no zero-index
-              // guard), [] when missing or k IS NULL.
-              val mapRecv = colonAt < 0 && {
-                // unwrap fully-parenthesized receivers — (MAP {…})[k] /
-                // (map_from_entries(…))[k] took the ARRAY subscript path
-                // and returned the bare value (r11 map fuzz); stripping
-                // outer parens lets the same shape checks see the map
-                var seg = toks.slice(rStart, p + 1).filter(!isWs(_))
-                var go = true
-                while (go) {
-                  go = false
-                  if (seg.length >= 2 && seg.head == Punct("(") &&
-                      seg.last == Punct(")")) {
-                    var d = 0; var fc = -1; var k = 0
-                    while (k < seg.length && fc < 0) {
-                      seg(k) match {
-                        case Punct("(") => d += 1
-                        case Punct(")") => d -= 1; if (d == 0) fc = k
-                        case _ => ()
-                      }
-                      k += 1
+              })
+            }
+          } =>
+          val open = nextNonWs(toks, i)
+          val close = matchParen(toks, open)
+          val args = splitTopLevel(toks.slice(open + 1, close))
+          val (l, a, b) = (render(args(0)).trim, render(args(1)).trim, render(args(2)).trim)
+          Some(toks.patch(i, lex(strSliceForm(l, a, b)), close - i + 1))
+        case Punct("[") if {
+          val p = prevNonWs(toks, i)
+          p >= 0 && (toks(p) match {
+            case id: Ident => !keywordLike(id.upper)
+            case Punct(")") | Punct("]") => true
+            // string-literal receiver: 'abcdef'[2:4] (r10 batch 7b)
+            case _: Str => true
+            case _ => false
+          })
+        } =>
+          var d = 0; var j = i; var close = -1
+          while (j < toks.length && close < 0) {
+            toks(j) match {
+              case Punct("[") => d += 1
+              case Punct("]") => d -= 1; if (d == 0) close = j
+              case _ =>
+            }
+            j += 1
+          }
+          if (close > i) {
+            val inner = toks.slice(i + 1, close)
+            var dd = 0; var colonAt = -1
+            for ((t, k) <- inner.zipWithIndex) t match {
+              case Punct("(") | Punct("[") => dd += 1
+              case Punct(")") | Punct("]") => dd -= 1
+              case Punct(":") if dd == 0 && colonAt < 0 => colonAt = k
+              case _ =>
+            }
+            val p = prevNonWs(toks, i)
+            val rStart = primaryStart(toks, p)
+            val recv = render(toks.slice(rStart, p + 1)).trim
+            // bare string-literal receiver → character subscript/slice;
+            // r12: a string-typed COLUMN receiver (strict catalog
+            // resolution — the name must be VARCHAR in every defining
+            // table, exact when table-qualified) takes the same path
+            val strRecv = toks.slice(rStart, p + 1).filter(!isWs(_)) match {
+              case Vector(_: Str) => true
+              case seg => strColChain(seg)
+            }
+            // schema-aware map dispatch (r7): receiver is a plain
+            // (dot-qualified) identifier naming a known MAP column →
+            // DuckDB 1.0 semantics, probe-pinned: m[k] = [v] when the
+            // key is present (key 0 included — maps have no zero-index
+            // guard), [] when missing or k IS NULL.
+            val mapRecv = colonAt < 0 && {
+              // unwrap fully-parenthesized receivers — (MAP {…})[k] /
+              // (map_from_entries(…))[k] took the ARRAY subscript path
+              // and returned the bare value (r11 map fuzz); stripping
+              // outer parens lets the same shape checks see the map
+              var seg = toks.slice(rStart, p + 1).filter(!isWs(_))
+              var go = true
+              while (go) {
+                go = false
+                if (seg.length >= 2 && seg.head == Punct("(") &&
+                    seg.last == Punct(")")) {
+                  var d = 0; var fc = -1; var k = 0
+                  while (k < seg.length && fc < 0) {
+                    seg(k) match {
+                      case Punct("(") => d += 1
+                      case Punct(")") => d -= 1; if (d == 0) fc = k
+                      case _ => ()
                     }
-                    if (fc == seg.length - 1) {
-                      seg = seg.slice(1, seg.length - 1); go = true
-                    }
+                    k += 1
+                  }
+                  if (fc == seg.length - 1) {
+                    seg = seg.slice(1, seg.length - 1); go = true
                   }
                 }
-                (seg.nonEmpty && seg.zipWithIndex.forall {
-                  case (t, k) =>
-                    if (k % 2 == 0) t.isInstanceOf[Ident] else t == Punct(".")
-                } && isMapCol(seg.last.text.toLowerCase)) ||
-                // map-returning call: `MAP {…}[k]` / map_from_entries(…)[k]
-                // take the LIST-shaped DuckDB map-subscript too (r9
-                // batch-4 fuzz: these returned the bare value)
-                (seg.length >= 2 && seg.head.isInstanceOf[Ident] &&
-                  Set("MAP", "MAP_FROM_ENTRIES", "MAP_CONCAT",
-                    "MAP_FILTER").contains(up(seg.head)) &&
-                  seg(1) == Punct("(") && seg.last == Punct(")"))
               }
-              if (inner.exists(!isWs(_))) {
-                if (mapRecv) {
-                  val idx = render(inner).trim
-                  val repl = s"IF(map_contains_key($recv, $idx), array(try_element_at($recv, $idx)), array())"
-                  toks = toks.patch(rStart, lex(repl), close - rStart + 1)
-                  changed = true
-                } else if (strRecv && colonAt < 0) {
-                  toks = toks.patch(rStart,
-                    lex(strIndexForm(recv, render(inner).trim)),
-                    close - rStart + 1)
-                  changed = true
-                } else if (strRecv) {
-                  // string slice — only the single-colon form (a step
-                  // slice on a string stays on the array path → loud)
-                  var dd2 = 0; var colon2 = -1
-                  for ((t, k) <- inner.zipWithIndex) t match {
-                    case Punct("(") | Punct("[") => dd2 += 1
-                    case Punct(")") | Punct("]") => dd2 -= 1
-                    case Punct(":") if dd2 == 0 && k > colonAt && colon2 < 0 =>
-                      colon2 = k
-                    case _ =>
-                  }
-                  if (colon2 < 0) {
-                    val a = render(inner.slice(0, colonAt)).trim
-                    val b = render(inner.slice(colonAt + 1, inner.length)).trim
-                    toks = toks.patch(rStart,
-                      lex(strSliceForm(recv, a, b)), close - rStart + 1)
-                    changed = true
-                  }
-                } else if (colonAt < 0) {
-                  val idx = render(inner).trim
-                  val guarded = intLit(idx) match {
-                    case Some(0L) => s"try_element_at($recv, CAST(NULL AS INT))"
-                    case Some(_) => s"try_element_at($recv, $idx)"
-                    case None if idx.startsWith("'") => s"try_element_at($recv, $idx)"
-                    case None =>
-                      // string compare covers every integer width's zero;
-                      // non-integer index types on ARRAYS are a DuckDB
-                      // binder error, so they can't reach this rewrite from
-                      // valid input. Documented divergence: a VARCHAR-keyed
-                      // MAP subscripted with a DYNAMIC key expression whose
-                      // value is the string '0' also trips this guard and
-                      // yields NULL where DuckDB returns the mapped value —
-                      // token-level rewriting has no schema to tell a map
-                      // receiver from an array (string-LITERAL keys take
-                      // the branch above and are unaffected).
-                      // typed NULL: an untyped THEN NULL with a NULL idx
-                      // makes the whole CASE VOID-typed (analysis error)
-                      s"try_element_at($recv, (CASE WHEN CAST(($idx) AS STRING) = '0' THEN CAST(NULL AS INT) ELSE ($idx) END))"
-                  }
-                  toks = toks.patch(rStart, lex(guarded), close - rStart + 1)
-                  changed = true
-                } else {
-                  // second top-level colon → step slice l[a:b:s] (r7
-                  // session 3; probe: [1..6][2:6:2] = [2,4,6], 1-based
-                  // inclusive bounds). Gathered via sequence+element_at;
-                  // the CASE guards the empty slice (Spark's sequence
-                  // errors when start > stop with a positive step).
-                  var dd2 = 0; var colon2 = -1
-                  for ((t, k) <- inner.zipWithIndex) t match {
-                    case Punct("(") | Punct("[") => dd2 += 1
-                    case Punct(")") | Punct("]") => dd2 -= 1
-                    case Punct(":") if dd2 == 0 && k > colonAt && colon2 < 0 =>
-                      colon2 = k
-                    case _ =>
-                  }
-                  if (colon2 > colonAt) {
-                    val a = render(inner.slice(0, colonAt)).trim
-                    val b = render(inner.slice(colonAt + 1, colon2)).trim
-                    val st = render(inner.slice(colon2 + 1, inner.length)).trim
-                    val sa = if (a.isEmpty) "1" else startBound(recv, a)
-                    val eb = if (b.isEmpty) s"size($recv)"
-                      else s"least(${normBound(recv, b)}, size($recv))"
-                    val repl = s"(CASE WHEN ($sa) > ($eb) THEN slice($recv, 1, 0) " +
-                      s"ELSE transform(sequence(($sa), ($eb), ($st)), " +
-                      s"__g_i -> try_element_at($recv, CAST(__g_i AS INT))) END)"
-                    toks = toks.patch(rStart, lex(repl), close - rStart + 1)
-                    changed = true
-                  } else {
+              (seg.nonEmpty && seg.zipWithIndex.forall {
+                case (t, k) =>
+                  if (k % 2 == 0) t.isInstanceOf[Ident] else t == Punct(".")
+              } && isMapCol(seg.last.text.toLowerCase)) ||
+              // map-returning call: `MAP {…}[k]` / map_from_entries(…)[k]
+              // take the LIST-shaped DuckDB map-subscript too (r9
+              // batch-4 fuzz: these returned the bare value)
+              (seg.length >= 2 && seg.head.isInstanceOf[Ident] &&
+                Set("MAP", "MAP_FROM_ENTRIES", "MAP_CONCAT",
+                  "MAP_FILTER").contains(up(seg.head)) &&
+                seg(1) == Punct("(") && seg.last == Punct(")"))
+            }
+            if (inner.exists(!isWs(_))) {
+              if (mapRecv) {
+                val idx = render(inner).trim
+                val repl = s"IF(map_contains_key($recv, $idx), array(try_element_at($recv, $idx)), array())"
+                Some(toks.patch(rStart, lex(repl), close - rStart + 1))
+              } else if (strRecv && colonAt < 0) {
+                Some(toks.patch(rStart,
+                  lex(strIndexForm(recv, render(inner).trim)),
+                  close - rStart + 1))
+              } else if (strRecv) {
+                // string slice — only the single-colon form (a step
+                // slice on a string stays on the array path → loud)
+                var dd2 = 0; var colon2 = -1
+                for ((t, k) <- inner.zipWithIndex) t match {
+                  case Punct("(") | Punct("[") => dd2 += 1
+                  case Punct(")") | Punct("]") => dd2 -= 1
+                  case Punct(":") if dd2 == 0 && k > colonAt && colon2 < 0 =>
+                    colon2 = k
+                  case _ =>
+                }
+                if (colon2 < 0) {
                   val a = render(inner.slice(0, colonAt)).trim
                   val b = render(inner.slice(colonAt + 1, inner.length)).trim
-                  val repl =
-                    if (a.isEmpty && b.isEmpty) ""
-                    else if (a.isEmpty) s"slice($recv, 1, ${clamp0(normBound(recv, b))})"
-                    else if (b.isEmpty) {
-                      val sa = startBound(recv, a)
-                      s"slice($recv, $sa, ${clamp0(s"size($recv) - ($sa) + 1")})"
-                    } else sliceForm(recv, a, b)
-                  if (repl.nonEmpty) {
-                    toks = toks.patch(rStart, lex(repl), close - rStart + 1)
-                    changed = true
-                  }
-                  }
+                  Some(toks.patch(rStart,
+                    lex(strSliceForm(recv, a, b)), close - rStart + 1))
+                } else None
+              } else if (colonAt < 0) {
+                val idx = render(inner).trim
+                val guarded = intLit(idx) match {
+                  case Some(0L) => s"try_element_at($recv, CAST(NULL AS INT))"
+                  case Some(_) => s"try_element_at($recv, $idx)"
+                  case None if idx.startsWith("'") => s"try_element_at($recv, $idx)"
+                  case None =>
+                    // string compare covers every integer width's zero;
+                    // non-integer index types on ARRAYS are a DuckDB
+                    // binder error, so they can't reach this rewrite from
+                    // valid input. Documented divergence: a VARCHAR-keyed
+                    // MAP subscripted with a DYNAMIC key expression whose
+                    // value is the string '0' also trips this guard and
+                    // yields NULL where DuckDB returns the mapped value —
+                    // token-level rewriting has no schema to tell a map
+                    // receiver from an array (string-LITERAL keys take
+                    // the branch above and are unaffected).
+                    // typed NULL: an untyped THEN NULL with a NULL idx
+                    // makes the whole CASE VOID-typed (analysis error)
+                    s"try_element_at($recv, (CASE WHEN CAST(($idx) AS STRING) = '0' THEN CAST(NULL AS INT) ELSE ($idx) END))"
+                }
+                Some(toks.patch(rStart, lex(guarded), close - rStart + 1))
+              } else {
+                // second top-level colon → step slice l[a:b:s] (r7
+                // session 3; probe: [1..6][2:6:2] = [2,4,6], 1-based
+                // inclusive bounds). Gathered via sequence+element_at;
+                // the CASE guards the empty slice (Spark's sequence
+                // errors when start > stop with a positive step).
+                var dd2 = 0; var colon2 = -1
+                for ((t, k) <- inner.zipWithIndex) t match {
+                  case Punct("(") | Punct("[") => dd2 += 1
+                  case Punct(")") | Punct("]") => dd2 -= 1
+                  case Punct(":") if dd2 == 0 && k > colonAt && colon2 < 0 =>
+                    colon2 = k
+                  case _ =>
+                }
+                if (colon2 > colonAt) {
+                  val a = render(inner.slice(0, colonAt)).trim
+                  val b = render(inner.slice(colonAt + 1, colon2)).trim
+                  val st = render(inner.slice(colon2 + 1, inner.length)).trim
+                  val sa = if (a.isEmpty) "1" else startBound(recv, a)
+                  val eb = if (b.isEmpty) s"size($recv)"
+                    else s"least(${normBound(recv, b)}, size($recv))"
+                  val repl = s"(CASE WHEN ($sa) > ($eb) THEN slice($recv, 1, 0) " +
+                    s"ELSE transform(sequence(($sa), ($eb), ($st)), " +
+                    s"__g_i -> try_element_at($recv, CAST(__g_i AS INT))) END)"
+                  Some(toks.patch(rStart, lex(repl), close - rStart + 1))
+                } else {
+                val a = render(inner.slice(0, colonAt)).trim
+                val b = render(inner.slice(colonAt + 1, inner.length)).trim
+                val repl =
+                  if (a.isEmpty && b.isEmpty) ""
+                  else if (a.isEmpty) s"slice($recv, 1, ${clamp0(normBound(recv, b))})"
+                  else if (b.isEmpty) {
+                    val sa = startBound(recv, a)
+                    s"slice($recv, $sa, ${clamp0(s"size($recv) - ($sa) + 1")})"
+                  } else sliceForm(recv, a, b)
+                if (repl.nonEmpty) {
+                  Some(toks.patch(rStart, lex(repl), close - rStart + 1))
+                } else None
                 }
               }
-            }
-          case _ =>
-        }
-        i += 1
+            } else None
+          } else None
+        case _ => None
       }
     }
-    toks
   }
 
   /** Round-4 dialect sugar with no 1:1 Spark spelling (SURVEY §2.9/§7.3):
@@ -990,445 +969,418 @@ object Translator {
     *     Spark spells the null treatment after the call, before OVER.
     */
   private[dialect] def rewriteOpsSugar(toks0: Vector[Tok],
-      isDateCol: (String, Boolean) => Boolean = (_, _) => false): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        val callOpen = {
-          val n = nextNonWs(toks, i)
-          if (n < toks.length && toks(n) == Punct("(")) n else -1
-        }
-        toks(i) match {
-          // `//` is handled by rewriteDivMod (last pass): duck's matrix
-          // is trunc-long-division for integral pairs but PLAIN DOUBLE
-          // division otherwise, NULL on zero either way (r12 num fuzz) —
-          // the old `//`→DIV swap was integral-only (loud on a double
-          // operand) and ANSI-raised on zero.
-          case Punct("-") if {
-              // DATE - DATE is INTEGER days in DuckDB but an INTERVAL in
-              // Spark (r8 fuzz) — rewrite when BOTH operands are
-              // date-valued: syntactically (DATE literals, make_date,
-              // to_date, current_date, last_day, day-or-coarser
-              // date_trunc) or — r11 — a DATE-typed column resolved
-              // through the catalog type set. STRICT resolution (r12,
-              // advice r11): the datediff rewrite silently changes the
-              // result of TIMESTAMP − TIMESTAMP, so a column name that is
-              // non-DATE in any visible table does not qualify here
-              // (unlike the ± INTERVAL rewrite, whose collision cost is a
-              // no-op CAST)
-              def dateish(from: Int, to: Int): Boolean =
-                dateValuedSlice(toks, from, to, isDateCol, strict = true)
-              def lBounds: Option[(Int, Int)] = {
-                val lEnd = prevNonWs(toks, i)
-                if (lEnd < 0) None
-                else {
-                  var lStart = primaryStart(toks, lEnd)
-                  // DATE '…' literal: the keyword sits before the Str primary
-                  if (toks(lStart).isInstanceOf[Str]) {
-                    val p = prevNonWs(toks, lStart)
-                    if (p >= 0 && up(toks(p)) == "DATE") lStart = p
-                  }
-                  Some((lStart, lEnd))
-                }
-              }
-              def rBounds: Option[(Int, Int)] = {
-                val rStart = nextNonWs(toks, i)
-                if (rStart >= toks.length) None
-                else {
-                  var rEnd = primaryEnd(toks, rStart)
-                  if (up(toks(rStart)) == "DATE") {
-                    val n = nextNonWs(toks, rStart)
-                    if (n < toks.length && toks(n).isInstanceOf[Str]) rEnd = n
-                  }
-                  Some((rStart, rEnd))
-                }
-              }
-              (lBounds, rBounds) match {
-                case (Some((ls, le)), Some((rs, re))) =>
-                  dateish(ls, le) && dateish(rs, re)
-                case _ => false
-              }
-            } =>
-            val lEnd = prevNonWs(toks, i)
-            val rStart = nextNonWs(toks, i)
-            val lStart = {
-              var s0 = primaryStart(toks, lEnd)
-              if (toks(s0).isInstanceOf[Str]) {
-                val p = prevNonWs(toks, s0)
-                if (p >= 0 && up(toks(p)) == "DATE") s0 = p
-              }
-              s0
-            }
-            val rEnd = {
-              var e0 = primaryEnd(toks, rStart)
-              if (up(toks(rStart)) == "DATE") {
-                val n = nextNonWs(toks, rStart)
-                if (n < toks.length && toks(n).isInstanceOf[Str]) e0 = n
-              }
-              e0
-            }
-            val l = render(toks.slice(lStart, lEnd + 1)).trim
-            val r = render(toks.slice(rStart, rEnd + 1)).trim
-            toks = toks.patch(lStart, lex(s"datediff($l, $r)"), rEnd - lStart + 1)
-            changed = true
-          case Punct(op0) if (op0 == "+" || op0 == "-") && {
-              // x ± INTERVAL … (r10, VERDICT r9 #3): DuckDB's DATE ±
-              // INTERVAL returns TIMESTAMP where Spark keeps DATE — wrap
-              // the syntactically date-valued operand in CAST(… AS
-              // TIMESTAMP). Also closes two loud parse gaps: the MIXED
-              // month+sub-month string interval (Spark rejects INTERVAL
-              // '1 month 2 days') via chained single-class adds, and the
-              // expression interval INTERVAL (e) UNIT via
-              // make_ym_interval / make_dt_interval.
-              val rStart = nextNonWs(toks, i)
+      isDateCol: (String, Boolean) => Boolean = (_, _) => false): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      val callOpen = {
+        val n = nextNonWs(toks, i)
+        if (n < toks.length && toks(n) == Punct("(")) n else -1
+      }
+      toks(i) match {
+        // `//` is handled by rewriteDivMod (last pass): duck's matrix
+        // is trunc-long-division for integral pairs but PLAIN DOUBLE
+        // division otherwise, NULL on zero either way (r12 num fuzz) —
+        // the old `//`→DIV swap was integral-only (loud on a double
+        // operand) and ANSI-raised on zero.
+        case Punct("-") if {
+            // DATE - DATE is INTEGER days in DuckDB but an INTERVAL in
+            // Spark (r8 fuzz) — rewrite when BOTH operands are
+            // date-valued: syntactically (DATE literals, make_date,
+            // to_date, current_date, last_day, day-or-coarser
+            // date_trunc) or — r11 — a DATE-typed column resolved
+            // through the catalog type set. STRICT resolution (r12,
+            // advice r11): the datediff rewrite silently changes the
+            // result of TIMESTAMP − TIMESTAMP, so a column name that is
+            // non-DATE in any visible table does not qualify here
+            // (unlike the ± INTERVAL rewrite, whose collision cost is a
+            // no-op CAST)
+            def dateish(from: Int, to: Int): Boolean =
+              dateValuedSlice(toks, from, to, isDateCol, strict = true)
+            def lBounds: Option[(Int, Int)] = {
               val lEnd = prevNonWs(toks, i)
-              rStart < toks.length && up(toks(rStart)) == "INTERVAL" &&
-                intervalRunEnd(toks, rStart) >= 0 && lEnd >= 0 &&
-                // left must be a real operand end (not SELECT/comma/open
-                // paren — those make the INTERVAL unary, not arithmetic)
-                (toks(lEnd) match {
-                  case _: Num | _: Str => true
-                  case Punct(")") | Punct("]") => true
-                  case id2: Ident => !keywordLike(id2.upper)
-                  case _ => false
-                }) && !intervalEndsAt(toks, lEnd)
-            } =>
-            val rStart = nextNonWs(toks, i)
-            val rEnd = intervalRunEnd(toks, rStart)
-            val lEnd = prevNonWs(toks, i)
-            var lStart = primaryStart(toks, lEnd)
-            if (toks(lStart).isInstanceOf[Str]) {
-              val p = prevNonWs(toks, lStart)
-              if (p >= 0 && (up(toks(p)) == "DATE" || up(toks(p)) == "TIMESTAMP"))
-                lStart = p
-            }
-            val l = render(toks.slice(lStart, lEnd + 1)).trim
-            val lDate = dateValuedSlice(toks, lStart, lEnd, isDateCol)
-            val lNew = if (lDate) s"CAST(($l) AS TIMESTAMP)" else l
-            val sig = toks.slice(rStart, rEnd + 1).filterNot(isWs)
-            val mixed = sig match {
-              case Vector(_: Ident, _: Str) =>
-                intervalWidth(toks.slice(rStart, rEnd + 1))
-                  .filter { case (m, us) => m != 0 && us != 0 }
-              case _ => None
-            }
-            val exprIv: Option[String] =
-              if (sig.length >= 3 && sig(1) == Punct("(")) {
-                val open = nextNonWs(toks, rStart)
-                val close = matchParen(toks, open)
-                val e = render(toks.slice(open, close + 1)).trim
-                val (m1, us1) = unitWidth(up(toks(rEnd)), 1L).get
-                Some(
-                  if (m1 > 0L) s"make_ym_interval(0, $e * $m1)"
-                  else if (us1 % 1000000L == 0L)
-                    s"make_dt_interval(0, 0, 0, $e * ${us1 / 1000000L})"
-                  else s"make_dt_interval(0, 0, 0, $e * $us1 / 1000000.0)")
-              } else None
-            (mixed, exprIv) match {
-              case (Some((m, us)), _) =>
-                // r13 (closing the last allowlisted ts cell): duck's
-                // TSTZ SUBTRACT applies interval components in REVERSE
-                // order (micros → days → months, the exact inverse of
-                // add, so t + i - i == t) while naive subtract and every
-                // add go months-first (probed: TSTZ Dec 31 − '1 mon
-                // 2 days' = Nov 29 = (−2d, −1mo); naive = Nov 28; TSTZ
-                // ADD Jan 30 + '1 mon 2 days' = Mar 2 = months-first).
-                // TSTZ producers are token-visible in the left slice
-                // (r14: CASE-condition regions masked — see
-                // tstzProducerToks).
-                val tstzLeft = tstzProducerToks(toks.slice(lStart, lEnd + 1))
-                val emission =
-                  if (op0 == "-" && tstzLeft)
-                    s"(($lNew - INTERVAL $us MICROSECOND) - INTERVAL $m MONTH)"
-                  else
-                    s"(($lNew $op0 INTERVAL $m MONTH) $op0 INTERVAL $us MICROSECOND)"
-                toks = toks.patch(lStart, lex(emission), rEnd - lStart + 1)
-                changed = true
-              case (_, Some(fn)) =>
-                toks = toks.patch(lStart, lex(s"($lNew $op0 $fn)"),
-                  rEnd - lStart + 1)
-                changed = true
-              case _ if lDate =>
-                toks = toks.patch(lStart, lex(lNew), lEnd - lStart + 1)
-                changed = true
-              case _ => // plain interval on a non-date operand: passthrough
-            }
-          case id: Ident if id.upper == "INTERVAL" && {
-              // r10 batch 9: a BARE mixed-class string interval —
-              // `SELECT INTERVAL '1 year 2 months 3 days'` parses in duck
-              // but Spark rejects literals mixing year-month and day-time
-              // classes. Only the mixed shape rewrites (single-class
-              // strings parse natively and feed the time_bucket/
-              // date_trunc literal scanners, which must see them raw).
-              val n = nextNonWs(toks, i)
-              n < toks.length && toks(n).isInstanceOf[Str] && {
-                val nn = nextNonWs(toks, n)
-                // `INTERVAL 'n' UNIT` has a trailing unit — not this form
-                (nn >= toks.length || unitWidth(up(toks(nn)), 1L).isEmpty) &&
-                  intervalWidth(toks.slice(i, n + 1))
-                    .exists { case (m, us) => m != 0 && us != 0 }
-              }
-            } =>
-            val n = nextNonWs(toks, i)
-            val Some((m, us)) = intervalWidth(toks.slice(i, n + 1))
-            val secs =
-              if (us % 1000000L == 0L) (us / 1000000L).toString
-              else s"$us / 1000000.0"
-            toks = toks.patch(i,
-              lex(s"make_interval(0, $m, 0, 0, 0, 0, $secs)"), n - i + 1)
-            changed = true
-          case Punct(op0) if (op0 == "+" || op0 == "-") && {
-              // r10 batch 9: date ± <interval-valued CALL> (to_days(n),
-              // make_interval(…)) — same TIMESTAMP-cast treatment as the
-              // literal INTERVAL run (DATE + micros-bearing intervals
-              // error at runtime in Spark and return TIMESTAMP in duck)
-              val rStart = nextNonWs(toks, i)
-              val lEnd = prevNonWs(toks, i)
-              rStart < toks.length && lEnd >= 0 && (toks(rStart) match {
-                case id2: Ident =>
-                  (toIntervalUnits.contains(id2.upper) ||
-                    id2.upper == "MAKE_INTERVAL") && {
-                    val n = nextNonWs(toks, rStart)
-                    n < toks.length && toks(n) == Punct("(")
-                  }
-                case _ => false
-              }) && {
+              if (lEnd < 0) None
+              else {
                 var lStart = primaryStart(toks, lEnd)
+                // DATE '…' literal: the keyword sits before the Str primary
                 if (toks(lStart).isInstanceOf[Str]) {
                   val p = prevNonWs(toks, lStart)
                   if (p >= 0 && up(toks(p)) == "DATE") lStart = p
                 }
-                dateValuedSlice(toks, lStart, lEnd, isDateCol)
+                Some((lStart, lEnd))
               }
-            } =>
-            val lEnd = prevNonWs(toks, i)
-            var lStart = primaryStart(toks, lEnd)
-            if (toks(lStart).isInstanceOf[Str]) {
-              val p = prevNonWs(toks, lStart)
-              if (p >= 0 && up(toks(p)) == "DATE") lStart = p
             }
-            val l = render(toks.slice(lStart, lEnd + 1)).trim
-            toks = toks.patch(lStart, lex(s"CAST(($l) AS TIMESTAMP)"),
-              lEnd - lStart + 1)
-            changed = true
-          case Punct("+") if {
-              // commuted form: INTERVAL … + <date-valued> — wrap the
-              // right side the same way
-              val lEnd = prevNonWs(toks, i)
+            def rBounds: Option[(Int, Int)] = {
               val rStart = nextNonWs(toks, i)
-              lEnd >= 0 && rStart < toks.length &&
-                intervalEndsAt(toks, lEnd) && {
-                  var rE = primaryEnd(toks, rStart)
-                  if (up(toks(rStart)) == "DATE") {
-                    val n = nextNonWs(toks, rStart)
-                    if (n < toks.length && toks(n).isInstanceOf[Str]) rE = n
-                  }
-                  dateValuedSlice(toks, rStart, rE, isDateCol)
+              if (rStart >= toks.length) None
+              else {
+                var rEnd = primaryEnd(toks, rStart)
+                if (up(toks(rStart)) == "DATE") {
+                  val n = nextNonWs(toks, rStart)
+                  if (n < toks.length && toks(n).isInstanceOf[Str]) rEnd = n
                 }
-            } =>
-            val rStart = nextNonWs(toks, i)
-            var rEnd = primaryEnd(toks, rStart)
+                Some((rStart, rEnd))
+              }
+            }
+            (lBounds, rBounds) match {
+              case (Some((ls, le)), Some((rs, re))) =>
+                dateish(ls, le) && dateish(rs, re)
+              case _ => false
+            }
+          } =>
+          val lEnd = prevNonWs(toks, i)
+          val rStart = nextNonWs(toks, i)
+          val lStart = {
+            var s0 = primaryStart(toks, lEnd)
+            if (toks(s0).isInstanceOf[Str]) {
+              val p = prevNonWs(toks, s0)
+              if (p >= 0 && up(toks(p)) == "DATE") s0 = p
+            }
+            s0
+          }
+          val rEnd = {
+            var e0 = primaryEnd(toks, rStart)
             if (up(toks(rStart)) == "DATE") {
               val n = nextNonWs(toks, rStart)
-              if (n < toks.length && toks(n).isInstanceOf[Str]) rEnd = n
+              if (n < toks.length && toks(n).isInstanceOf[Str]) e0 = n
             }
-            val r = render(toks.slice(rStart, rEnd + 1)).trim
-            toks = toks.patch(rStart, lex(s"CAST(($r) AS TIMESTAMP)"),
-              rEnd - rStart + 1)
-            changed = true
-          case id: Ident if id.upper == "AT" && {
-              // r12 ts fuzz: `x AT TIME ZONE 'z'` didn't parse (Spark has
-              // no AT TIME ZONE). Over a NAIVE timestamp it is exactly
-              // duck's timezone(z, x) two-arg form (probed identical:
-              // interpret x in z, render in the session zone) — emit that
-              // and let the TIMEZONE rewrite turn it into
-              // to_utc_timestamp. The TIMESTAMPTZ flavor inverts; the
-              // engine has no TSTZ type (documented posture, r10).
-              val n1 = nextNonWs(toks, i)
-              val n2 = if (n1 < toks.length) nextNonWs(toks, n1) else toks.length
-              val lEnd = prevNonWs(toks, i)
-              n1 < toks.length && n2 < toks.length && up(toks(n1)) == "TIME" &&
-                up(toks(n2)) == "ZONE" && nextNonWs(toks, n2) < toks.length &&
-                lEnd >= 0 && (toks(lEnd) match {
-                  case _: Str | _: Num => true
-                  case Punct(")") | Punct("]") => true
-                  case id2: Ident => !keywordLike(id2.upper)
-                  case _ => false
-                })
-            } =>
-            val n1 = nextNonWs(toks, i)
-            val n2 = nextNonWs(toks, n1)
+            e0
+          }
+          val l = render(toks.slice(lStart, lEnd + 1)).trim
+          val r = render(toks.slice(rStart, rEnd + 1)).trim
+          Some(toks.patch(lStart, lex(s"datediff($l, $r)"), rEnd - lStart + 1))
+        case Punct(op0) if (op0 == "+" || op0 == "-") && {
+            // x ± INTERVAL … (r10, VERDICT r9 #3): DuckDB's DATE ±
+            // INTERVAL returns TIMESTAMP where Spark keeps DATE — wrap
+            // the syntactically date-valued operand in CAST(… AS
+            // TIMESTAMP). Also closes two loud parse gaps: the MIXED
+            // month+sub-month string interval (Spark rejects INTERVAL
+            // '1 month 2 days') via chained single-class adds, and the
+            // expression interval INTERVAL (e) UNIT via
+            // make_ym_interval / make_dt_interval.
+            val rStart = nextNonWs(toks, i)
             val lEnd = prevNonWs(toks, i)
-            var lStart = primaryStart(toks, lEnd)
-            if (toks(lStart).isInstanceOf[Str]) {
-              val p = prevNonWs(toks, lStart)
-              if (p >= 0 && Set("TIMESTAMP", "DATE", "TIMESTAMPTZ")
-                  .contains(up(toks(p)))) lStart = p
+            rStart < toks.length && up(toks(rStart)) == "INTERVAL" &&
+              intervalRunEnd(toks, rStart) >= 0 && lEnd >= 0 &&
+              // left must be a real operand end (not SELECT/comma/open
+              // paren — those make the INTERVAL unary, not arithmetic)
+              (toks(lEnd) match {
+                case _: Num | _: Str => true
+                case Punct(")") | Punct("]") => true
+                case id2: Ident => !keywordLike(id2.upper)
+                case _ => false
+              }) && !intervalEndsAt(toks, lEnd)
+          } =>
+          val rStart = nextNonWs(toks, i)
+          val rEnd = intervalRunEnd(toks, rStart)
+          val lEnd = prevNonWs(toks, i)
+          var lStart = primaryStart(toks, lEnd)
+          if (toks(lStart).isInstanceOf[Str]) {
+            val p = prevNonWs(toks, lStart)
+            if (p >= 0 && (up(toks(p)) == "DATE" || up(toks(p)) == "TIMESTAMP"))
+              lStart = p
+          }
+          val l = render(toks.slice(lStart, lEnd + 1)).trim
+          val lDate = dateValuedSlice(toks, lStart, lEnd, isDateCol)
+          val lNew = if (lDate) s"CAST(($l) AS TIMESTAMP)" else l
+          val sig = toks.slice(rStart, rEnd + 1).filterNot(isWs)
+          val mixed = sig match {
+            case Vector(_: Ident, _: Str) =>
+              intervalWidth(toks.slice(rStart, rEnd + 1))
+                .filter { case (m, us) => m != 0 && us != 0 }
+            case _ => None
+          }
+          val exprIv: Option[String] =
+            if (sig.length >= 3 && sig(1) == Punct("(")) {
+              val open = nextNonWs(toks, rStart)
+              val close = matchParen(toks, open)
+              val e = render(toks.slice(open, close + 1)).trim
+              val (m1, us1) = unitWidth(up(toks(rEnd)), 1L).get
+              Some(
+                if (m1 > 0L) s"make_ym_interval(0, $e * $m1)"
+                else if (us1 % 1000000L == 0L)
+                  s"make_dt_interval(0, 0, 0, $e * ${us1 / 1000000L})"
+                else s"make_dt_interval(0, 0, 0, $e * $us1 / 1000000.0)")
+            } else None
+          (mixed, exprIv) match {
+            case (Some((m, us)), _) =>
+              // r13 (closing the last allowlisted ts cell): duck's
+              // TSTZ SUBTRACT applies interval components in REVERSE
+              // order (micros → days → months, the exact inverse of
+              // add, so t + i - i == t) while naive subtract and every
+              // add go months-first (probed: TSTZ Dec 31 − '1 mon
+              // 2 days' = Nov 29 = (−2d, −1mo); naive = Nov 28; TSTZ
+              // ADD Jan 30 + '1 mon 2 days' = Mar 2 = months-first).
+              // TSTZ producers are token-visible in the left slice
+              // (r14: CASE-condition regions masked — see
+              // tstzProducerToks).
+              val tstzLeft = tstzProducerToks(toks.slice(lStart, lEnd + 1))
+              val emission =
+                if (op0 == "-" && tstzLeft)
+                  s"(($lNew - INTERVAL $us MICROSECOND) - INTERVAL $m MONTH)"
+                else
+                  s"(($lNew $op0 INTERVAL $m MONTH) $op0 INTERVAL $us MICROSECOND)"
+              Some(toks.patch(lStart, lex(emission), rEnd - lStart + 1))
+            case (_, Some(fn)) =>
+              Some(toks.patch(lStart, lex(s"($lNew $op0 $fn)"),
+                rEnd - lStart + 1))
+            case _ if lDate =>
+              Some(toks.patch(lStart, lex(lNew), lEnd - lStart + 1))
+            case _ => None // plain interval on a non-date operand: passthrough
+          }
+        case id: Ident if id.upper == "INTERVAL" && {
+            // r10 batch 9: a BARE mixed-class string interval —
+            // `SELECT INTERVAL '1 year 2 months 3 days'` parses in duck
+            // but Spark rejects literals mixing year-month and day-time
+            // classes. Only the mixed shape rewrites (single-class
+            // strings parse natively and feed the time_bucket/
+            // date_trunc literal scanners, which must see them raw).
+            val n = nextNonWs(toks, i)
+            n < toks.length && toks(n).isInstanceOf[Str] && {
+              val nn = nextNonWs(toks, n)
+              // `INTERVAL 'n' UNIT` has a trailing unit — not this form
+              (nn >= toks.length || unitWidth(up(toks(nn)), 1L).isEmpty) &&
+                intervalWidth(toks.slice(i, n + 1))
+                  .exists { case (m, us) => m != 0 && us != 0 }
             }
-            val zStart = nextNonWs(toks, n2)
-            val zEnd = primaryEnd(toks, zStart)
-            val x = render(toks.slice(lStart, lEnd + 1)).trim
-            val z = render(toks.slice(zStart, zEnd + 1)).trim
-            toks = toks.patch(lStart, lex(s"timezone($z, $x)"),
-              zEnd - lStart + 1)
-            changed = true
-          case Punct(op0) if Set("~~", "~~*", "!~~", "!~~*").contains(op0) =>
-            // r10 batch 10: Postgres-spelling LIKE operators (probed on
-            // duck: ~~ = LIKE, ~~* = ILIKE, !-prefixed = NOT forms)
-            val repl = op0 match {
-              case "~~" => "LIKE"
-              case "~~*" => "ILIKE"
-              case "!~~" => "NOT LIKE"
-              case _ => "NOT ILIKE"
+          } =>
+          val n = nextNonWs(toks, i)
+          val Some((m, us)) = intervalWidth(toks.slice(i, n + 1))
+          val secs =
+            if (us % 1000000L == 0L) (us / 1000000L).toString
+            else s"$us / 1000000.0"
+          Some(toks.patch(i,
+            lex(s"make_interval(0, $m, 0, 0, 0, 0, $secs)"), n - i + 1))
+        case Punct(op0) if (op0 == "+" || op0 == "-") && {
+            // r10 batch 9: date ± <interval-valued CALL> (to_days(n),
+            // make_interval(…)) — same TIMESTAMP-cast treatment as the
+            // literal INTERVAL run (DATE + micros-bearing intervals
+            // error at runtime in Spark and return TIMESTAMP in duck)
+            val rStart = nextNonWs(toks, i)
+            val lEnd = prevNonWs(toks, i)
+            rStart < toks.length && lEnd >= 0 && (toks(rStart) match {
+              case id2: Ident =>
+                (toIntervalUnits.contains(id2.upper) ||
+                  id2.upper == "MAKE_INTERVAL") && {
+                  val n = nextNonWs(toks, rStart)
+                  n < toks.length && toks(n) == Punct("(")
+                }
+              case _ => false
+            }) && {
+              var lStart = primaryStart(toks, lEnd)
+              if (toks(lStart).isInstanceOf[Str]) {
+                val p = prevNonWs(toks, lStart)
+                if (p >= 0 && up(toks(p)) == "DATE") lStart = p
+              }
+              dateValuedSlice(toks, lStart, lEnd, isDateCol)
             }
-            toks = toks.patch(i, lex(repl), 1)
-            changed = true
-          case Punct(op0) if (op0 == "~" || op0 == "!~") && {
-              val lEnd = prevNonWs(toks, i)
-              val rStart = nextNonWs(toks, i)
-              lEnd >= 0 && rStart < toks.length && (toks(lEnd) match {
+          } =>
+          val lEnd = prevNonWs(toks, i)
+          var lStart = primaryStart(toks, lEnd)
+          if (toks(lStart).isInstanceOf[Str]) {
+            val p = prevNonWs(toks, lStart)
+            if (p >= 0 && up(toks(p)) == "DATE") lStart = p
+          }
+          val l = render(toks.slice(lStart, lEnd + 1)).trim
+          Some(toks.patch(lStart, lex(s"CAST(($l) AS TIMESTAMP)"),
+            lEnd - lStart + 1))
+        case Punct("+") if {
+            // commuted form: INTERVAL … + <date-valued> — wrap the
+            // right side the same way
+            val lEnd = prevNonWs(toks, i)
+            val rStart = nextNonWs(toks, i)
+            lEnd >= 0 && rStart < toks.length &&
+              intervalEndsAt(toks, lEnd) && {
+                var rE = primaryEnd(toks, rStart)
+                if (up(toks(rStart)) == "DATE") {
+                  val n = nextNonWs(toks, rStart)
+                  if (n < toks.length && toks(n).isInstanceOf[Str]) rE = n
+                }
+                dateValuedSlice(toks, rStart, rE, isDateCol)
+              }
+          } =>
+          val rStart = nextNonWs(toks, i)
+          var rEnd = primaryEnd(toks, rStart)
+          if (up(toks(rStart)) == "DATE") {
+            val n = nextNonWs(toks, rStart)
+            if (n < toks.length && toks(n).isInstanceOf[Str]) rEnd = n
+          }
+          val r = render(toks.slice(rStart, rEnd + 1)).trim
+          Some(toks.patch(rStart, lex(s"CAST(($r) AS TIMESTAMP)"),
+            rEnd - rStart + 1))
+        case id: Ident if id.upper == "AT" && {
+            // r12 ts fuzz: `x AT TIME ZONE 'z'` didn't parse (Spark has
+            // no AT TIME ZONE). Over a NAIVE timestamp it is exactly
+            // duck's timezone(z, x) two-arg form (probed identical:
+            // interpret x in z, render in the session zone) — emit that
+            // and let the TIMEZONE rewrite turn it into
+            // to_utc_timestamp. The TIMESTAMPTZ flavor inverts; the
+            // engine has no TSTZ type (documented posture, r10).
+            val n1 = nextNonWs(toks, i)
+            val n2 = if (n1 < toks.length) nextNonWs(toks, n1) else toks.length
+            val lEnd = prevNonWs(toks, i)
+            n1 < toks.length && n2 < toks.length && up(toks(n1)) == "TIME" &&
+              up(toks(n2)) == "ZONE" && nextNonWs(toks, n2) < toks.length &&
+              lEnd >= 0 && (toks(lEnd) match {
                 case _: Str | _: Num => true
                 case Punct(")") | Punct("]") => true
                 case id2: Ident => !keywordLike(id2.upper)
                 case _ => false
               })
-            } =>
-            // duck's ~ is a FULL regex match (probed: 'abc' ~ 'b' is
-            // false, 'abc' ~ 'abc' true) — the regexp_full_match form;
-            // !~ is its NULL-preserving negation
+          } =>
+          val n1 = nextNonWs(toks, i)
+          val n2 = nextNonWs(toks, n1)
+          val lEnd = prevNonWs(toks, i)
+          var lStart = primaryStart(toks, lEnd)
+          if (toks(lStart).isInstanceOf[Str]) {
+            val p = prevNonWs(toks, lStart)
+            if (p >= 0 && Set("TIMESTAMP", "DATE", "TIMESTAMPTZ")
+                .contains(up(toks(p)))) lStart = p
+          }
+          val zStart = nextNonWs(toks, n2)
+          val zEnd = primaryEnd(toks, zStart)
+          val x = render(toks.slice(lStart, lEnd + 1)).trim
+          val z = render(toks.slice(zStart, zEnd + 1)).trim
+          Some(toks.patch(lStart, lex(s"timezone($z, $x)"),
+            zEnd - lStart + 1))
+        case Punct(op0) if Set("~~", "~~*", "!~~", "!~~*").contains(op0) =>
+          // r10 batch 10: Postgres-spelling LIKE operators (probed on
+          // duck: ~~ = LIKE, ~~* = ILIKE, !-prefixed = NOT forms)
+          val repl = op0 match {
+            case "~~" => "LIKE"
+            case "~~*" => "ILIKE"
+            case "!~~" => "NOT LIKE"
+            case _ => "NOT ILIKE"
+          }
+          Some(toks.patch(i, lex(repl), 1))
+        case Punct(op0) if (op0 == "~" || op0 == "!~") && {
             val lEnd = prevNonWs(toks, i)
             val rStart = nextNonWs(toks, i)
-            val lStart = primaryStart(toks, lEnd)
+            lEnd >= 0 && rStart < toks.length && (toks(lEnd) match {
+              case _: Str | _: Num => true
+              case Punct(")") | Punct("]") => true
+              case id2: Ident => !keywordLike(id2.upper)
+              case _ => false
+            })
+          } =>
+          // duck's ~ is a FULL regex match (probed: 'abc' ~ 'b' is
+          // false, 'abc' ~ 'abc' true) — the regexp_full_match form;
+          // !~ is its NULL-preserving negation
+          val lEnd = prevNonWs(toks, i)
+          val rStart = nextNonWs(toks, i)
+          val lStart = primaryStart(toks, lEnd)
+          val rEnd = primaryEnd(toks, rStart)
+          val l = render(toks.slice(lStart, lEnd + 1)).trim
+          val r = render(toks.slice(rStart, rEnd + 1)).trim
+          val not = if (op0 == "!~") "NOT " else ""
+          Some(toks.patch(lStart,
+            lex(s"($not" + s"rlike(($l), '^(?:' || ($r) || ')$$'))"),
+            rEnd - lStart + 1))
+        case Punct(op0) if op0 == "**" || op0 == "^" =>
+          // `^` is POWER in DuckDB where Spark's `^` is bitwise XOR — a
+          // silent wrong answer through passthrough (r8 fuzz: 2 ^ 3 gave
+          // 1). Both spellings route through the same power() rewrite;
+          // DuckDB's xor is the xor() function, which stays loud.
+          val lEnd = prevNonWs(toks, i)
+          val rStart = nextNonWs(toks, i)
+          if (lEnd >= 0 && rStart < toks.length) {
+            var lStart = primaryStart(toks, lEnd)
+            val pm = prevNonWs(toks, lStart)
+            val unaryMinus = pm >= 0 && (toks(pm) == Punct("-") || toks(pm) == Punct("+")) && {
+              val before = prevNonWs(toks, pm)
+              before < 0 || !(toks(before).isInstanceOf[Num] || toks(before).isInstanceOf[Str] ||
+                toks(before) == Punct(")") ||
+                (toks(before).isInstanceOf[Ident] && !keywordLike(up(toks(before)))))
+            }
+            if (unaryMinus) lStart = pm
             val rEnd = primaryEnd(toks, rStart)
             val l = render(toks.slice(lStart, lEnd + 1)).trim
             val r = render(toks.slice(rStart, rEnd + 1)).trim
-            val not = if (op0 == "!~") "NOT " else ""
-            toks = toks.patch(lStart,
-              lex(s"($not" + s"rlike(($l), '^(?:' || ($r) || ')$$'))"),
-              rEnd - lStart + 1)
-            changed = true
-          case Punct(op0) if op0 == "**" || op0 == "^" =>
-            // `^` is POWER in DuckDB where Spark's `^` is bitwise XOR — a
-            // silent wrong answer through passthrough (r8 fuzz: 2 ^ 3 gave
-            // 1). Both spellings route through the same power() rewrite;
-            // DuckDB's xor is the xor() function, which stays loud.
-            val lEnd = prevNonWs(toks, i)
-            val rStart = nextNonWs(toks, i)
-            if (lEnd >= 0 && rStart < toks.length) {
-              var lStart = primaryStart(toks, lEnd)
-              val pm = prevNonWs(toks, lStart)
-              val unaryMinus = pm >= 0 && (toks(pm) == Punct("-") || toks(pm) == Punct("+")) && {
-                val before = prevNonWs(toks, pm)
-                before < 0 || !(toks(before).isInstanceOf[Num] || toks(before).isInstanceOf[Str] ||
-                  toks(before) == Punct(")") ||
-                  (toks(before).isInstanceOf[Ident] && !keywordLike(up(toks(before)))))
-              }
-              if (unaryMinus) lStart = pm
-              val rEnd = primaryEnd(toks, rStart)
-              val l = render(toks.slice(lStart, lEnd + 1)).trim
-              val r = render(toks.slice(rStart, rEnd + 1)).trim
-              toks = toks.patch(lStart, lex(s"power($l, $r)"), rEnd - lStart + 1)
-              changed = true
+            Some(toks.patch(lStart, lex(s"power($l, $r)"), rEnd - lStart + 1))
+          } else None
+        case id: Ident if id.upper == "GLOB" && {
+          val n = nextNonWs(toks, i); n < toks.length && toks(n).isInstanceOf[Str]
+        } =>
+          val n = nextNonWs(toks, i)
+          val raw = toks(n).asInstanceOf[Str].value
+          // r10 batch 10: patterns with character classes ([ab], [!x])
+          // have no LIKE form — route through an anchored regex; plain
+          // */? patterns keep the cheaper LIKE (probe: 'abc' GLOB
+          // '[ab]bc' is true, the old LIKE route matched literally)
+          if (raw.contains('[')) {
+            Some(toks.patch(i, Seq(Ident("RLIKE"), Ws(" "),
+              Str(sparkStrLit("^(?:" + globToRegex(raw) + ")$"))), n - i + 1))
+          } else {
+            // '~' as the explicit escape char, not backslash: the
+            // ESCAPE clause marks the pattern so the r13 LIKE-backslash
+            // pass (duck has no default escape) leaves this DELIBERATE
+            // escaping alone, and a backslash escape would round-trip
+            // through encodeStrLiterals' chr(92) — not a literal, which
+            // ESCAPE requires
+            val pat = raw.flatMap {
+              case '*' => "%"
+              case '?' => "_"
+              case '%' => "~%"
+              case '_' => "~_"
+              case '~' => "~~"
+              case c => c.toString
             }
-          case id: Ident if id.upper == "GLOB" && {
-            val n = nextNonWs(toks, i); n < toks.length && toks(n).isInstanceOf[Str]
-          } =>
-            val n = nextNonWs(toks, i)
-            val raw = toks(n).asInstanceOf[Str].value
-            // r10 batch 10: patterns with character classes ([ab], [!x])
-            // have no LIKE form — route through an anchored regex; plain
-            // */? patterns keep the cheaper LIKE (probe: 'abc' GLOB
-            // '[ab]bc' is true, the old LIKE route matched literally)
-            if (raw.contains('[')) {
-              toks = toks.patch(i, Seq(Ident("RLIKE"), Ws(" "),
-                Str(sparkStrLit("^(?:" + globToRegex(raw) + ")$"))), n - i + 1)
-            } else {
-              // '~' as the explicit escape char, not backslash: the
-              // ESCAPE clause marks the pattern so the r13 LIKE-backslash
-              // pass (duck has no default escape) leaves this DELIBERATE
-              // escaping alone, and a backslash escape would round-trip
-              // through encodeStrLiterals' chr(92) — not a literal, which
-              // ESCAPE requires
-              val pat = raw.flatMap {
-                case '*' => "%"
-                case '?' => "_"
-                case '%' => "~%"
-                case '_' => "~_"
-                case '~' => "~~"
-                case c => c.toString
-              }
-              toks = toks.patch(i, Seq(Ident("LIKE"), Ws(" "), Str(sparkStrLit(pat)),
-                Ws(" "), Ident("ESCAPE"), Ws(" "), Str("'~'")), n - i + 1)
-            }
-            changed = true
-          case id: Ident if id.upper == "SIMILAR" && {
-            val n = nextNonWs(toks, i)
-            n < toks.length && up(toks(n)) == "TO" && {
-              val s = nextNonWs(toks, n); s < toks.length && toks(s).isInstanceOf[Str]
-            }
-          } =>
-            val n = nextNonWs(toks, i)
-            val s = nextNonWs(toks, n)
-            // duck's SIMILAR TO is a PURE regex full match — unlike
-            // Postgres, % and _ are NOT wildcards (probed r10 batch 10:
-            // 'abc' SIMILAR TO 'a%' is false, 'a%c' SIMILAR TO 'a%c'
-            // true) — so the pattern passes through raw
-            val pat = toks(s).asInstanceOf[Str].value
-            toks = toks.patch(i,
-              Seq(Ident("RLIKE"), Ws(" "), Str(sparkStrLit("^(?:" + pat + ")$"))), s - i + 1)
-            changed = true
-          case id: Ident if id.upper == "STRUCT_PACK" && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            structPackParts(splitTopLevel(toks.slice(callOpen + 1, close))) match {
-              case Some(parts) =>
-                toks = toks.patch(i, lex(s"named_struct(${parts.mkString(", ")})"), close - i + 1)
-                changed = true
-              case None =>
-            }
-          case id: Ident if (id.upper == "IGNORE" || id.upper == "RESPECT") && {
-            val n = nextNonWs(toks, i)
-            n < toks.length && up(toks(n)) == "NULLS" && {
-              val c = nextNonWs(toks, n); c < toks.length && toks(c) == Punct(")")
-            } && { val p = prevNonWs(toks, i); p >= 0 && toks(p) != Punct("(") }
-          } =>
-            val n = nextNonWs(toks, i)
-            val c = nextNonWs(toks, n)
-            val head = toks.slice(0, i).reverse.dropWhile(isWs).reverse
-            toks = head ++ toks.slice(n + 1, c + 1).filterNot(isWs) ++
-              Vector(Ws(" "), Ident(id.text), Ws(" "), Ident("NULLS")) ++
-              toks.slice(c + 1, toks.length)
-            changed = true
-          case Punct(".") if {
-            val f = nextNonWs(toks, i)
-            val o = if (f < toks.length) nextNonWs(toks, f) else toks.length
-            val p = prevNonWs(toks, i)
-            f < toks.length && toks(f).isInstanceOf[Ident] && !keywordLike(up(toks(f))) &&
-              o < toks.length && toks(o) == Punct("(") && p >= 0 &&
-              (toks(p).isInstanceOf[Num] || toks(p).isInstanceOf[Str] || toks(p) == Punct(")") ||
-                (toks(p).isInstanceOf[Ident] && !keywordLike(up(toks(p)))))
-          } =>
-            val f = nextNonWs(toks, i)
-            val o = nextNonWs(toks, f)
-            val close = matchParen(toks, o)
-            val p = prevNonWs(toks, i)
-            val rStart = primaryStart(toks, p)
-            val recv = render(toks.slice(rStart, p + 1)).trim
-            val args = render(toks.slice(o + 1, close)).trim
-            val call =
-              if (args.isEmpty) s"${toks(f).text}($recv)"
-              else s"${toks(f).text}($recv, $args)"
-            toks = toks.patch(rStart, lex(call), close - rStart + 1)
-            changed = true
-          case _ =>
-        }
-        i += 1
+            Some(toks.patch(i, Seq(Ident("LIKE"), Ws(" "), Str(sparkStrLit(pat)),
+              Ws(" "), Ident("ESCAPE"), Ws(" "), Str("'~'")), n - i + 1))
+          }
+        case id: Ident if id.upper == "SIMILAR" && {
+          val n = nextNonWs(toks, i)
+          n < toks.length && up(toks(n)) == "TO" && {
+            val s = nextNonWs(toks, n); s < toks.length && toks(s).isInstanceOf[Str]
+          }
+        } =>
+          val n = nextNonWs(toks, i)
+          val s = nextNonWs(toks, n)
+          // duck's SIMILAR TO is a PURE regex full match — unlike
+          // Postgres, % and _ are NOT wildcards (probed r10 batch 10:
+          // 'abc' SIMILAR TO 'a%' is false, 'a%c' SIMILAR TO 'a%c'
+          // true) — so the pattern passes through raw
+          val pat = toks(s).asInstanceOf[Str].value
+          Some(toks.patch(i,
+            Seq(Ident("RLIKE"), Ws(" "), Str(sparkStrLit("^(?:" + pat + ")$"))), s - i + 1))
+        case id: Ident if id.upper == "STRUCT_PACK" && callOpen >= 0 =>
+          val close = matchParen(toks, callOpen)
+          structPackParts(splitTopLevel(toks.slice(callOpen + 1, close))).map { parts =>
+            toks.patch(i, lex(s"named_struct(${parts.mkString(", ")})"), close - i + 1)
+          }
+        case id: Ident if (id.upper == "IGNORE" || id.upper == "RESPECT") && {
+          val n = nextNonWs(toks, i)
+          n < toks.length && up(toks(n)) == "NULLS" && {
+            val c = nextNonWs(toks, n); c < toks.length && toks(c) == Punct(")")
+          } && { val p = prevNonWs(toks, i); p >= 0 && toks(p) != Punct("(") }
+        } =>
+          val n = nextNonWs(toks, i)
+          val c = nextNonWs(toks, n)
+          val head = toks.slice(0, i).reverse.dropWhile(isWs).reverse
+          Some(head ++ toks.slice(n + 1, c + 1).filterNot(isWs) ++
+            Vector(Ws(" "), Ident(id.text), Ws(" "), Ident("NULLS")) ++
+            toks.slice(c + 1, toks.length))
+        case Punct(".") if {
+          val f = nextNonWs(toks, i)
+          val o = if (f < toks.length) nextNonWs(toks, f) else toks.length
+          val p = prevNonWs(toks, i)
+          f < toks.length && toks(f).isInstanceOf[Ident] && !keywordLike(up(toks(f))) &&
+            o < toks.length && toks(o) == Punct("(") && p >= 0 &&
+            (toks(p).isInstanceOf[Num] || toks(p).isInstanceOf[Str] || toks(p) == Punct(")") ||
+              (toks(p).isInstanceOf[Ident] && !keywordLike(up(toks(p)))))
+        } =>
+          val f = nextNonWs(toks, i)
+          val o = nextNonWs(toks, f)
+          val close = matchParen(toks, o)
+          val p = prevNonWs(toks, i)
+          val rStart = primaryStart(toks, p)
+          val recv = render(toks.slice(rStart, p + 1)).trim
+          val args = render(toks.slice(o + 1, close)).trim
+          val call =
+            if (args.isEmpty) s"${toks(f).text}($recv)"
+            else s"${toks(f).text}($recv, $args)"
+          Some(toks.patch(rStart, lex(call), close - rStart + 1))
+        case _ => None
       }
     }
-    toks
-  }
 
   /** DuckDB `COLUMNS('regex')` star-expansion (partial-match semantics, like
     * regexp_matches) against the schema of the statement's FROM table,
@@ -1617,122 +1569,110 @@ object Translator {
     "DAMERAU_LEVENSHTEIN", "LEVENSHTEIN", "BPE_TOKEN_COUNT",
     "GRAFT_LEVENSHTEIN", "GRAFT_MISMATCHES",
     "ASCII_CHAR_COUNT", "GCD", "LCM")
-  private[dialect] def rewriteIntCastRounding(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if (id.upper == "CAST" || id.upper == "TRY_CAST") && {
-                val n = nextNonWs(toks, i)
-                n < toks.length && toks(n) == Punct("(")
-              } =>
-            val open = nextNonWs(toks, i)
-            val close = matchParen(toks, open)
-            // top-level AS inside the call
-            var d = 0; var asIdx = -1
-            for (j <- open + 1 until close) {
-              d += depthDelta(toks(j))
-              if (d == 0 && asIdx < 0 && up(toks(j)) == "AS") asIdx = j
+  private[dialect] def rewriteIntCastRounding(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if (id.upper == "CAST" || id.upper == "TRY_CAST") && {
+              val n = nextNonWs(toks, i)
+              n < toks.length && toks(n) == Punct("(")
+            } =>
+          val open = nextNonWs(toks, i)
+          val close = matchParen(toks, open)
+          // top-level AS inside the call
+          var d = 0; var asIdx = -1
+          for (j <- open + 1 until close) {
+            d += depthDelta(toks(j))
+            if (d == 0 && asIdx < 0 && up(toks(j)) == "AS") asIdx = j
+          }
+          if (asIdx > 0) {
+            val tyToks = toks.slice(asIdx + 1, close).filterNot(isWs)
+            val isIntTarget = tyToks.length == 1 &&
+              tyToks.head.isInstanceOf[Ident] &&
+              intCastTargets.contains(up(tyToks.head))
+            // a top-level round()/floor()/ceil() source is already
+            // integral — truncation equals rounding, and the declared
+            // surface quantizes with CAST(round(x)·10^k AS BIGINT) in
+            // per-row hot paths where a DECIMAL detour costs real time
+            val alreadyIntegral = {
+              val fnTok = nextNonWs(toks, open)
+              // NULL literal needs no rounding; neither do our own
+              // generated __g_* lambda/marker variables (always
+              // integral where an int cast is emitted)
+              (fnTok < asIdx && nextNonWs(toks, fnTok) >= asIdx &&
+                (up(toks(fnTok)) == "NULL" ||
+                  (toks(fnTok).isInstanceOf[Ident] &&
+                    toks(fnTok).text.startsWith("__g")))) || {
+                // (possibly parenthesized, possibly signed) INTEGER
+                // literal — emitted constants like (4) need no rounding
+                val nw = toks.slice(open + 1, asIdx).filterNot(isWs)
+                nw.nonEmpty && nw.forall {
+                  case Punct("(") | Punct(")") | Punct("-") | Punct("+") => true
+                  case n: Num => !n.text.exists(c => c == '.' || c == 'e' || c == 'E')
+                  case _ => false
+                } && nw.count(_.isInstanceOf[Num]) == 1
+              } ||
+              (fnTok < asIdx && toks(fnTok).isInstanceOf[Ident] &&
+              integralFns.contains(up(toks(fnTok))) && {
+                val innerOpen = nextNonWs(toks, fnTok)
+                innerOpen < asIdx && toks(innerOpen) == Punct("(") &&
+                  matchParen(toks, innerOpen) == prevNonWs(toks, asIdx)
+              })
             }
-            if (asIdx > 0) {
-              val tyToks = toks.slice(asIdx + 1, close).filterNot(isWs)
-              val isIntTarget = tyToks.length == 1 &&
-                tyToks.head.isInstanceOf[Ident] &&
-                intCastTargets.contains(up(tyToks.head))
-              // a top-level round()/floor()/ceil() source is already
-              // integral — truncation equals rounding, and the declared
-              // surface quantizes with CAST(round(x)·10^k AS BIGINT) in
-              // per-row hot paths where a DECIMAL detour costs real time
-              val alreadyIntegral = {
-                val fnTok = nextNonWs(toks, open)
-                // NULL literal needs no rounding; neither do our own
-                // generated __g_* lambda/marker variables (always
-                // integral where an int cast is emitted)
-                (fnTok < asIdx && nextNonWs(toks, fnTok) >= asIdx &&
-                  (up(toks(fnTok)) == "NULL" ||
-                    (toks(fnTok).isInstanceOf[Ident] &&
-                      toks(fnTok).text.startsWith("__g")))) || {
-                  // (possibly parenthesized, possibly signed) INTEGER
-                  // literal — emitted constants like (4) need no rounding
-                  val nw = toks.slice(open + 1, asIdx).filterNot(isWs)
-                  nw.nonEmpty && nw.forall {
-                    case Punct("(") | Punct(")") | Punct("-") | Punct("+") => true
-                    case n: Num => !n.text.exists(c => c == '.' || c == 'e' || c == 'E')
-                    case _ => false
-                  } && nw.count(_.isInstanceOf[Num]) == 1
-                } ||
-                (fnTok < asIdx && toks(fnTok).isInstanceOf[Ident] &&
-                integralFns.contains(up(toks(fnTok))) && {
-                  val innerOpen = nextNonWs(toks, fnTok)
-                  innerOpen < asIdx && toks(innerOpen) == Punct("(") &&
-                    matchParen(toks, innerOpen) == prevNonWs(toks, asIdx)
-                })
-              }
-              if (isIntTarget && !alreadyIntegral) {
-                val fn = id.upper
-                val expr = render(toks.slice(open + 1, asIdx)).trim
-                val ty = up(tyToks.head)
-                // r10: the graft_int_round kernel dispatches the rounding
-                // rule on the INPUT type (double/float half-even,
-                // decimal/string half-away — the old DECIMAL(38,9) detour
-                // applied half-away to everything, a silent off-by-one on
-                // float ties found by the randomized query fuzzer)
-                val kernel = if (fn == "TRY_CAST") "graft_int_round_try"
-                  else "graft_int_round"
-                toks = toks.patch(i, lex(
-                  s"$fn($kernel($expr) AS $ty)"),
-                  close - i + 1)
-                changed = true
-              } else if (id.upper == "TRY_CAST" && tyToks.length == 1 &&
-                  up(tyToks.head) == "BOOLEAN") {
-                // r10 fuzz batch 6, probe-pinned: DuckDB's string→BOOLEAN
-                // accepts only true/false/t/f/1/0, case-insensitive, NO
-                // whitespace trim — Spark additionally takes yes/y/no/n
-                // and trims, a silent wrong answer through try_cast.
-                // Implemented as an explicit value map over the
-                // stringified input (an inner TRY_CAST would re-capture;
-                // plain CAST string→boolean THROWS in Spark even
-                // non-ANSI). Residue: a non-0/1 NUMERIC input stringifies
-                // past the map and returns NULL where DuckDB gives
-                // nonzero→true — narrower than the yes/no bug and only
-                // for try_cast(<float> AS BOOLEAN), documented here.
-                val expr = render(toks.slice(open + 1, asIdx)).trim
-                val s = s"lower(CAST(($expr) AS STRING))"
-                toks = toks.patch(i, lex(
-                  s"(CASE WHEN $s IN ('true', 't', '1') THEN true " +
-                    s"WHEN $s IN ('false', 'f', '0') THEN false " +
-                    s"ELSE CAST(NULL AS BOOLEAN) END)"),
-                  close - i + 1)
-                changed = true
-              }
-            }
-          case Punct("::") =>
-            val tIdx = nextNonWs(toks, i)
-            val after = if (tIdx < toks.length) nextNonWs(toks, tIdx) else toks.length
-            val isIntTarget = tIdx < toks.length &&
-              toks(tIdx).isInstanceOf[Ident] &&
-              intCastTargets.contains(up(toks(tIdx))) &&
-              (after >= toks.length || toks(after) != Punct("("))
-            val lEnd = prevNonWs(toks, i)
-            if (isIntTarget && lEnd >= 0) {
-              val lStart = primaryStart(toks, lEnd)
-              val l = render(toks.slice(lStart, lEnd + 1)).trim
-              val ty = up(toks(tIdx))
-              toks = toks.patch(lStart, lex(
-                s"CAST(graft_int_round(($l)) AS $ty)"),
-                tIdx - lStart + 1)
-              changed = true
-            }
-          case _ =>
-        }
-        i += 1
+            if (isIntTarget && !alreadyIntegral) {
+              val fn = id.upper
+              val expr = render(toks.slice(open + 1, asIdx)).trim
+              val ty = up(tyToks.head)
+              // r10: the graft_int_round kernel dispatches the rounding
+              // rule on the INPUT type (double/float half-even,
+              // decimal/string half-away — the old DECIMAL(38,9) detour
+              // applied half-away to everything, a silent off-by-one on
+              // float ties found by the randomized query fuzzer)
+              val kernel = if (fn == "TRY_CAST") "graft_int_round_try"
+                else "graft_int_round"
+              Some(toks.patch(i, lex(
+                s"$fn($kernel($expr) AS $ty)"),
+                close - i + 1))
+            } else if (id.upper == "TRY_CAST" && tyToks.length == 1 &&
+                up(tyToks.head) == "BOOLEAN") {
+              // r10 fuzz batch 6, probe-pinned: DuckDB's string→BOOLEAN
+              // accepts only true/false/t/f/1/0, case-insensitive, NO
+              // whitespace trim — Spark additionally takes yes/y/no/n
+              // and trims, a silent wrong answer through try_cast.
+              // Implemented as an explicit value map over the
+              // stringified input (an inner TRY_CAST would re-capture;
+              // plain CAST string→boolean THROWS in Spark even
+              // non-ANSI). Residue: a non-0/1 NUMERIC input stringifies
+              // past the map and returns NULL where DuckDB gives
+              // nonzero→true — narrower than the yes/no bug and only
+              // for try_cast(<float> AS BOOLEAN), documented here.
+              val expr = render(toks.slice(open + 1, asIdx)).trim
+              val s = s"lower(CAST(($expr) AS STRING))"
+              Some(toks.patch(i, lex(
+                s"(CASE WHEN $s IN ('true', 't', '1') THEN true " +
+                  s"WHEN $s IN ('false', 'f', '0') THEN false " +
+                  s"ELSE CAST(NULL AS BOOLEAN) END)"),
+                close - i + 1))
+            } else None
+          } else None
+        case Punct("::") =>
+          val tIdx = nextNonWs(toks, i)
+          val after = if (tIdx < toks.length) nextNonWs(toks, tIdx) else toks.length
+          val isIntTarget = tIdx < toks.length &&
+            toks(tIdx).isInstanceOf[Ident] &&
+            intCastTargets.contains(up(toks(tIdx))) &&
+            (after >= toks.length || toks(after) != Punct("("))
+          val lEnd = prevNonWs(toks, i)
+          if (isIntTarget && lEnd >= 0) {
+            val lStart = primaryStart(toks, lEnd)
+            val l = render(toks.slice(lStart, lEnd + 1)).trim
+            val ty = up(toks(tIdx))
+            Some(toks.patch(lStart, lex(
+              s"CAST(graft_int_round(($l)) AS $ty)"),
+              tIdx - lStart + 1))
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
   /** DuckDB casts to DECIMAL(p,s) dispatch rounding on the INPUT type
     * (r13 dec fuzz — the ninth mode's first-batch headline): a DECIMAL
@@ -1775,69 +1715,60 @@ object Translator {
         case _ => None
       }
     }
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if (id.upper == "CAST" || id.upper == "TRY_CAST") && {
-                val n = nextNonWs(toks, i)
-                n < toks.length && toks(n) == Punct("(")
-              } =>
-            val open = nextNonWs(toks, i)
-            val close = matchParen(toks, open)
-            var d = 0; var asIdx = -1
-            for (j <- open + 1 until close) {
-              d += depthDelta(toks(j))
-              if (d == 0 && asIdx < 0 && up(toks(j)) == "AS") asIdx = j
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if (id.upper == "CAST" || id.upper == "TRY_CAST") && {
+              val n = nextNonWs(toks, i)
+              n < toks.length && toks(n) == Punct("(")
+            } =>
+          val open = nextNonWs(toks, i)
+          val close = matchParen(toks, open)
+          var d = 0; var asIdx = -1
+          for (j <- open + 1 until close) {
+            d += depthDelta(toks(j))
+            if (d == 0 && asIdx < 0 && up(toks(j)) == "AS") asIdx = j
+          }
+          if (asIdx > 0) {
+            val srcToks = toks.slice(open + 1, asIdx)
+            decTarget(toks.slice(asIdx + 1, close)) match {
+              case Some((p, s))
+                  if decimalRiskToks(srcToks, isDecimalCol) =>
+                val kernel = if (id.upper == "TRY_CAST") "graft_dec_cast_try"
+                  else "graft_dec_cast"
+                Some(toks.patch(i,
+                  lex(s"$kernel((${render(srcToks).trim}), $p, $s)"),
+                  close - i + 1))
+              case _ => None
             }
-            if (asIdx > 0) {
-              val srcToks = toks.slice(open + 1, asIdx)
-              decTarget(toks.slice(asIdx + 1, close)) match {
+          } else None
+        case Punct("::") =>
+          // x::DECIMAL(p,s) — Spark parses :: natively, so the suffix
+          // form survives to runtime unless rewritten here
+          val tIdx = nextNonWs(toks, i)
+          if (tIdx < toks.length && toks(tIdx).isInstanceOf[Ident] &&
+              (up(toks(tIdx)) == "DECIMAL" || up(toks(tIdx)) == "NUMERIC")) {
+            val after = nextNonWs(toks, tIdx)
+            val tyEnd =
+              if (after < toks.length && toks(after) == Punct("("))
+                matchParen(toks, after)
+              else tIdx
+            val lEnd = prevNonWs(toks, i)
+            if (lEnd >= 0) {
+              val lStart = primaryStart(toks, lEnd)
+              val srcToks = toks.slice(lStart, lEnd + 1)
+              decTarget(toks.slice(tIdx, tyEnd + 1)) match {
                 case Some((p, s))
                     if decimalRiskToks(srcToks, isDecimalCol) =>
-                  val kernel = if (id.upper == "TRY_CAST") "graft_dec_cast_try"
-                    else "graft_dec_cast"
-                  toks = toks.patch(i,
-                    lex(s"$kernel((${render(srcToks).trim}), $p, $s)"),
-                    close - i + 1)
-                  changed = true
-                case _ =>
+                  Some(toks.patch(lStart,
+                    lex(s"graft_dec_cast((${render(srcToks).trim}), $p, $s)"),
+                    tyEnd - lStart + 1))
+                case _ => None
               }
-            }
-          case Punct("::") =>
-            // x::DECIMAL(p,s) — Spark parses :: natively, so the suffix
-            // form survives to runtime unless rewritten here
-            val tIdx = nextNonWs(toks, i)
-            if (tIdx < toks.length && toks(tIdx).isInstanceOf[Ident] &&
-                (up(toks(tIdx)) == "DECIMAL" || up(toks(tIdx)) == "NUMERIC")) {
-              val after = nextNonWs(toks, tIdx)
-              val tyEnd =
-                if (after < toks.length && toks(after) == Punct("("))
-                  matchParen(toks, after)
-                else tIdx
-              val lEnd = prevNonWs(toks, i)
-              if (lEnd >= 0) {
-                val lStart = primaryStart(toks, lEnd)
-                val srcToks = toks.slice(lStart, lEnd + 1)
-                decTarget(toks.slice(tIdx, tyEnd + 1)) match {
-                  case Some((p, s))
-                      if decimalRiskToks(srcToks, isDecimalCol) =>
-                    toks = toks.patch(lStart,
-                      lex(s"graft_dec_cast((${render(srcToks).trim}), $p, $s)"),
-                      tyEnd - lStart + 1)
-                    changed = true
-                  case _ =>
-                }
-              }
-            }
-          case _ =>
-        }
-        i += 1
+            } else None
+          } else None
+        case _ => None
       }
     }
-    toks
   }
 
   /** DECIMAL(38,·)-mix comparison pre-widen (r14, VERDICT r13 #4 —
@@ -1859,7 +1790,6 @@ object Translator {
     * answer for an error on a magnitude the fixture never reaches).
     * Fixpoint-safe: after the wrap both sides' max scale is smax. */
   private[dialect] def rewriteDecCompare(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
     val cmpOps = Set("<", ">", "<=", ">=", "=", "<>", "!=", "==")
     // expression boundaries at comparison precedence (walking outward)
     val boundIds = Set("AND", "OR", "NOT", "WHERE", "THEN", "WHEN", "ELSE",
@@ -1870,7 +1800,7 @@ object Translator {
       "ANY", "SOME", "EXISTS", "RETURNING", "SET", "VALUES", "QUALIFY",
       "WINDOW", "SEMI", "ANTI", "LEFT", "RIGHT", "INNER", "FULL", "CROSS",
       "USING", "FILTER")
-    def leftBound(i: Int): Int = {
+    def leftBound(toks: Vector[Tok], i: Int): Int = {
       var j = i - 1; var depth = 0; var start = i
       var go = true
       while (go && j >= 0) {
@@ -1888,7 +1818,7 @@ object Translator {
       }
       start
     }
-    def rightBound(i: Int): Int = {
+    def rightBound(toks: Vector[Tok], i: Int): Int = {
       var j = i + 1; var depth = 0; var end = i
       var go = true
       while (go && j < toks.length) {
@@ -1920,7 +1850,7 @@ object Translator {
     // intervening type-changing wrappers — returns None and the compare
     // is left to Spark's coercion (the pre-r14 documented divergence,
     // strictly safer than a wrong rewrite).
-    def dec38HeadScale(from0: Int, to0: Int): Option[Int] = {
+    def dec38HeadScale(toks: Vector[Tok], from0: Int, to0: Int): Option[Int] = {
       var from = from0
       var to = to0
       // strip redundant outer parens covering the whole slice
@@ -1981,36 +1911,27 @@ object Translator {
         case _ => None
       }
     }
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case Punct(op) if cmpOps(op) =>
-            val (ls, rs) = (leftBound(i), rightBound(i))
-            val (lEnd, rStart) = (prevNonWs(toks, i), nextNonWs(toks, i))
-            if (ls <= lEnd && rStart <= rs) {
-              val sl = dec38HeadScale(ls, lEnd)
-              val sr = dec38HeadScale(rStart, rs)
-              if (sl.nonEmpty && sr.nonEmpty && sl.get != sr.get) {
-                val smax = math.max(sl.get, sr.get)
-                val lTxt = render(toks.slice(ls, lEnd + 1)).trim
-                val rTxt = render(toks.slice(rStart, rs + 1)).trim
-                // right first so left indices stay valid
-                toks = toks.patch(rStart,
-                  lex(s"graft_dec_cast(($rTxt), 38, $smax)"), rs - rStart + 1)
-                toks = toks.patch(ls,
-                  lex(s"graft_dec_cast(($lTxt), 38, $smax)"), lEnd - ls + 1)
-                changed = true
-              }
-            }
-          case _ =>
-        }
-        i += 1
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case Punct(op) if cmpOps(op) =>
+          val (ls, rs) = (leftBound(toks, i), rightBound(toks, i))
+          val (lEnd, rStart) = (prevNonWs(toks, i), nextNonWs(toks, i))
+          if (ls <= lEnd && rStart <= rs) {
+            val sl = dec38HeadScale(toks, ls, lEnd)
+            val sr = dec38HeadScale(toks, rStart, rs)
+            if (sl.nonEmpty && sr.nonEmpty && sl.get != sr.get) {
+              val smax = math.max(sl.get, sr.get)
+              val lTxt = render(toks.slice(ls, lEnd + 1)).trim
+              val rTxt = render(toks.slice(rStart, rs + 1)).trim
+              // right first so left indices stay valid
+              Some(toks.patch(rStart,
+                lex(s"graft_dec_cast(($rTxt), 38, $smax)"), rs - rStart + 1)
+                .patch(ls, lex(s"graft_dec_cast(($lTxt), 38, $smax)"), lEnd - ls + 1))
+            } else None
+          } else None
+        case _ => None
       }
     }
-    toks
   }
 
   /** ClickHouse-style `toString(x)`/`toInt32(x)`… (chsql macro surface,
@@ -2062,110 +1983,98 @@ object Translator {
     * ANY). The subquery is spliced once per aggregate; Spark's
     * ReuseSubquery collapses the identical plans. `= ALL` / `<> ANY`
     * (r8) become the count-guarded min=max=x CASE — see inline. */
-  private[dialect] def rewriteAnyAll(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if Set("ANY", "ALL", "SOME").contains(id.upper) =>
-            val opIdx = prevNonWs(toks, i)
-            val open = nextNonWs(toks, i)
-            val op = if (opIdx >= 0) toks(opIdx) match {
-              case Punct(p) if Set(">", "<", ">=", "<=", "=", "<>", "!=").contains(p) => p
-              case _ => ""
-            } else ""
-            val isSub = open < toks.length && toks(open) == Punct("(") && {
-              val k = nextNonWs(toks, open)
-              k < toks.length && (up(toks(k)) == "SELECT" || up(toks(k)) == "WITH" ||
-                up(toks(k)) == "FROM")
+  private[dialect] def rewriteAnyAll(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if Set("ANY", "ALL", "SOME").contains(id.upper) =>
+          val opIdx = prevNonWs(toks, i)
+          val open = nextNonWs(toks, i)
+          val op = if (opIdx >= 0) toks(opIdx) match {
+            case Punct(p) if Set(">", "<", ">=", "<=", "=", "<>", "!=").contains(p) => p
+            case _ => ""
+          } else ""
+          val isSub = open < toks.length && toks(open) == Punct("(") && {
+            val k = nextNonWs(toks, open)
+            k < toks.length && (up(toks(k)) == "SELECT" || up(toks(k)) == "WITH" ||
+              up(toks(k)) == "FROM")
+          }
+          if (op.nonEmpty && isSub) {
+            val close = matchParen(toks, open)
+            // the LHS is the full additive/concat expression (comparison
+            // binds loosest): walk back over operator-connected primaries
+            // so `'p' || c = ANY (…)` captures `'p' || c`, not just `c`
+            var lhsStart = primaryStart(toks, prevNonWs(toks, opIdx))
+            var extending = true
+            while (extending) {
+              val p = prevNonWs(toks, lhsStart)
+              val isBinOp = p >= 0 && (toks(p) match {
+                case Punct(o2) => Set("||", "+", "-", "*", "/", "%", "^",
+                  "//", "&", "|").contains(o2)
+                case _ => false
+              })
+              if (isBinOp && prevNonWs(toks, p) >= 0)
+                lhsStart = primaryStart(toks, prevNonWs(toks, p))
+              else extending = false
             }
-            if (op.nonEmpty && isSub) {
-              val close = matchParen(toks, open)
-              // the LHS is the full additive/concat expression (comparison
-              // binds loosest): walk back over operator-connected primaries
-              // so `'p' || c = ANY (…)` captures `'p' || c`, not just `c`
-              var lhsStart = primaryStart(toks, prevNonWs(toks, opIdx))
-              var extending = true
-              while (extending) {
-                val p = prevNonWs(toks, lhsStart)
-                val isBinOp = p >= 0 && (toks(p) match {
-                  case Punct(o2) => Set("||", "+", "-", "*", "/", "%", "^",
-                    "//", "&", "|").contains(o2)
-                  case _ => false
-                })
-                if (isBinOp && prevNonWs(toks, p) >= 0)
-                  lhsStart = primaryStart(toks, prevNonWs(toks, p))
-                else extending = false
-              }
-              val x = render(toks.slice(lhsStart, opIdx)).trim
-              val sub = render(toks.slice(open + 1, close)).trim
-              val isAll = id.upper == "ALL"
-              val repl: Option[String] = (op, isAll) match {
-                case ("=", false) => Some(s"(($x) IN ($sub))")
-                case (o, true) if o == "<>" || o == "!=" =>
-                  Some(s"(($x) NOT IN ($sub))")
-                case (o, all) if o == "=" && all ||
-                    (o == "<>" || o == "!=") && !all =>
-                  // `x = ALL s` (r8, probe-pinned on DuckDB 1.0): empty →
-                  // TRUE; a DEFINITE differing non-null element → FALSE
-                  // (min<>x OR max<>x is only TRUE when x is non-null and
-                  // an extremum differs — dominates NULL elements, e.g.
-                  // 1 = ALL {2, NULL} is FALSE); otherwise NULL elements
-                  // or a NULL x leave it undecided → NULL (1 = ALL
-                  // {1, NULL} is NULL, as is the all-NULL set); else all
-                  // non-null and equal → TRUE. `x <> ANY s` is exactly
-                  // NOT(x = ALL s) in three-valued logic (empty → FALSE),
-                  // so it swaps the TRUE/FALSE arms of the same CASE.
-                  // The whole decision is ONE scalar subquery over a
-                  // one-row aggregate (count/non-null/min/max) — spliced
-                  // per-aggregate forms decorrelate into one join EACH
-                  // (measured 1.11 s → this form at sf≈1 q191).
-                  val (onAll, onNone) = if (all) ("TRUE", "FALSE") else ("FALSE", "TRUE")
-                  Some(s"((SELECT CASE WHEN __g_c = 0 THEN $onAll " +
-                    s"WHEN __g_mn <> ($x) OR __g_mx <> ($x) THEN $onNone " +
-                    s"WHEN __g_c > __g_nn OR ($x) IS NULL THEN CAST(NULL AS BOOLEAN) " +
-                    s"ELSE $onAll END FROM (SELECT count(*) AS __g_c, " +
-                    s"count(__g_c0) AS __g_nn, min(__g_c0) AS __g_mn, " +
-                    s"max(__g_c0) AS __g_mx FROM ($sub) __g_q(__g_c0))))")
-                case (o, all) if Set(">", "<", ">=", "<=").contains(o) =>
-                  // ALL compares against the failing-side extremum; ANY
-                  // against the succeeding-side one. Kept as per-aggregate
-                  // scalar subqueries: Catalyst's MergeScalarSubqueries
-                  // consolidates the identical-FROM aggregates, and the
-                  // measured correlated form (q180 sf≈1) runs 2.6× faster
-                  // this way than the one-subquery CASE the = ALL path
-                  // uses (where the inverse held — both are pinned).
-                  val ext = (o.startsWith(">") == all)
-                  val extFn = if (ext) "max" else "min"
-                  val cnt = s"(SELECT count(*) FROM ($sub) __g_q(__g_c))"
-                  val nulls = s"(SELECT count(*) - count(__g_c) FROM ($sub) __g_q(__g_c))"
-                  val cmp = s"(($x) $o (SELECT $extFn(__g_c) FROM ($sub) __g_q(__g_c)))"
-                  val empty = if (all) "TRUE" else "FALSE"
-                  // the decided side dominates (FALSE for ALL, TRUE for
-                  // ANY) even with NULL elements; the undecided side goes
-                  // NULL when NULL elements exist; a NULL cmp (NULL x or
-                  // all-NULL set) falls through to ELSE = NULL
-                  val gate = if (all) cmp else s"(NOT $cmp)"
-                  Some(s"(CASE WHEN $cnt = 0 THEN $empty " +
-                    s"WHEN $gate AND $nulls > 0 THEN CAST(NULL AS BOOLEAN) " +
-                    s"ELSE $cmp END)")
-                case _ => None
-              }
-              repl.foreach { r =>
-                toks = toks.patch(lhsStart, lex(r), close - lhsStart + 1)
-                changed = true
-              }
+            val x = render(toks.slice(lhsStart, opIdx)).trim
+            val sub = render(toks.slice(open + 1, close)).trim
+            val isAll = id.upper == "ALL"
+            val repl: Option[String] = (op, isAll) match {
+              case ("=", false) => Some(s"(($x) IN ($sub))")
+              case (o, true) if o == "<>" || o == "!=" =>
+                Some(s"(($x) NOT IN ($sub))")
+              case (o, all) if o == "=" && all ||
+                  (o == "<>" || o == "!=") && !all =>
+                // `x = ALL s` (r8, probe-pinned on DuckDB 1.0): empty →
+                // TRUE; a DEFINITE differing non-null element → FALSE
+                // (min<>x OR max<>x is only TRUE when x is non-null and
+                // an extremum differs — dominates NULL elements, e.g.
+                // 1 = ALL {2, NULL} is FALSE); otherwise NULL elements
+                // or a NULL x leave it undecided → NULL (1 = ALL
+                // {1, NULL} is NULL, as is the all-NULL set); else all
+                // non-null and equal → TRUE. `x <> ANY s` is exactly
+                // NOT(x = ALL s) in three-valued logic (empty → FALSE),
+                // so it swaps the TRUE/FALSE arms of the same CASE.
+                // The whole decision is ONE scalar subquery over a
+                // one-row aggregate (count/non-null/min/max) — spliced
+                // per-aggregate forms decorrelate into one join EACH
+                // (measured 1.11 s → this form at sf≈1 q191).
+                val (onAll, onNone) = if (all) ("TRUE", "FALSE") else ("FALSE", "TRUE")
+                Some(s"((SELECT CASE WHEN __g_c = 0 THEN $onAll " +
+                  s"WHEN __g_mn <> ($x) OR __g_mx <> ($x) THEN $onNone " +
+                  s"WHEN __g_c > __g_nn OR ($x) IS NULL THEN CAST(NULL AS BOOLEAN) " +
+                  s"ELSE $onAll END FROM (SELECT count(*) AS __g_c, " +
+                  s"count(__g_c0) AS __g_nn, min(__g_c0) AS __g_mn, " +
+                  s"max(__g_c0) AS __g_mx FROM ($sub) __g_q(__g_c0))))")
+              case (o, all) if Set(">", "<", ">=", "<=").contains(o) =>
+                // ALL compares against the failing-side extremum; ANY
+                // against the succeeding-side one. Kept as per-aggregate
+                // scalar subqueries: Catalyst's MergeScalarSubqueries
+                // consolidates the identical-FROM aggregates, and the
+                // measured correlated form (q180 sf≈1) runs 2.6× faster
+                // this way than the one-subquery CASE the = ALL path
+                // uses (where the inverse held — both are pinned).
+                val ext = (o.startsWith(">") == all)
+                val extFn = if (ext) "max" else "min"
+                val cnt = s"(SELECT count(*) FROM ($sub) __g_q(__g_c))"
+                val nulls = s"(SELECT count(*) - count(__g_c) FROM ($sub) __g_q(__g_c))"
+                val cmp = s"(($x) $o (SELECT $extFn(__g_c) FROM ($sub) __g_q(__g_c)))"
+                val empty = if (all) "TRUE" else "FALSE"
+                // the decided side dominates (FALSE for ALL, TRUE for
+                // ANY) even with NULL elements; the undecided side goes
+                // NULL when NULL elements exist; a NULL cmp (NULL x or
+                // all-NULL set) falls through to ELSE = NULL
+                val gate = if (all) cmp else s"(NOT $cmp)"
+                Some(s"(CASE WHEN $cnt = 0 THEN $empty " +
+                  s"WHEN $gate AND $nulls > 0 THEN CAST(NULL AS BOOLEAN) " +
+                  s"ELSE $cmp END)")
+              case _ => None
             }
-          case _ =>
-        }
-        i += 1
+            repl.map(r => toks.patch(lhsStart, lex(r), close - lhsStart + 1))
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
   /** `agg(v) FILTER (WHERE c) OVER (…)` — Spark supports FILTER only on
     * grouped aggregates, not window functions. For the single-argument
@@ -2176,72 +2085,60 @@ object Translator {
     * wrapping BOTH arguments is exact. Other aggregates (first/last/
     * any_value/array_agg — NOT null-skipping) keep the clause and fail
     * loudly. */
-  private[dialect] def rewriteWindowFilter(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if id.upper == "FILTER" =>
-            val open = nextNonWs(toks, i)
-            if (open < toks.length && toks(open) == Punct("(")) {
-              val close = matchParen(toks, open)
-              val afterClose = nextNonWs(toks, close)
-              val isWindow = afterClose < toks.length && up(toks(afterClose)) == "OVER"
-              val inner = toks.slice(open + 1, close)
-              val wIdx = inner.indexWhere(!isWs(_))
-              if (isWindow && wIdx >= 0 && up(inner(wIdx)) == "WHERE") {
-                val cond = render(inner.slice(wIdx + 1, inner.length)).trim
-                val closeArgs = prevNonWs(toks, i)
-                if (closeArgs >= 0 && toks(closeArgs) == Punct(")")) {
-                  val openArgs = openOf(toks, closeArgs)
-                  val fnIdx = prevNonWs(toks, openArgs)
-                  val fn = if (fnIdx >= 0) up(toks(fnIdx)) else ""
-                  val args = splitTopLevel(toks.slice(openArgs + 1, closeArgs))
-                  val arg = if (args.length == 1) render(args(0)).trim else ""
-                  // whitelist: the CASE wrap is equivalent only for NULL-
-                  // SKIPPING aggregates — first/last/any_value/array_agg
-                  // would silently change results (review finding), so
-                  // they keep the clause and fail loudly
-                  val nullSkipping = Set("SUM", "COUNT", "AVG", "MIN", "MAX",
-                    "STDDEV", "STDDEV_SAMP", "STDDEV_POP", "VAR_SAMP",
-                    "VAR_POP", "VARIANCE")
-                  // pair-skipping aggregates (r8) drop a row iff EITHER
-                  // argument is NULL, so CASE-wrapping BOTH arguments with
-                  // the same predicate is exact (cond FALSE/NULL → both
-                  // NULL → skipped, matching FILTER's exclusion)
-                  val pairSkipping = Set("CORR", "COVAR_POP", "COVAR_SAMP",
-                    "REGR_SLOPE", "REGR_INTERCEPT", "REGR_R2", "REGR_AVGX",
-                    "REGR_AVGY", "REGR_SXX", "REGR_SYY", "REGR_SXY",
-                    "REGR_COUNT")
-                  val repl =
-                    if (fn == "COUNT" && arg == "*")
-                      Some(s"count(CASE WHEN ($cond) THEN 1 END)")
-                    else if (args.length == 1 && nullSkipping.contains(fn) && arg != "*")
-                      Some(s"${fn.toLowerCase}(CASE WHEN ($cond) THEN ($arg) END)")
-                    else if (args.length == 2 && pairSkipping.contains(fn))
-                      Some(s"${fn.toLowerCase}(" +
-                        s"CASE WHEN ($cond) THEN (${render(args(0)).trim}) END, " +
-                        s"CASE WHEN ($cond) THEN (${render(args(1)).trim}) END)")
-                    else None
-                  repl.foreach { r =>
-                    // replace fn(args) FILTER (…) with the CASE form,
-                    // keeping OVER (…) untouched
-                    toks = toks.patch(fnIdx, lex(r), close - fnIdx + 1)
-                    changed = true
-                  }
-                }
-              }
-            }
-          case _ =>
-        }
-        i += 1
+  private[dialect] def rewriteWindowFilter(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if id.upper == "FILTER" =>
+          val open = nextNonWs(toks, i)
+          if (open < toks.length && toks(open) == Punct("(")) {
+            val close = matchParen(toks, open)
+            val afterClose = nextNonWs(toks, close)
+            val isWindow = afterClose < toks.length && up(toks(afterClose)) == "OVER"
+            val inner = toks.slice(open + 1, close)
+            val wIdx = inner.indexWhere(!isWs(_))
+            if (isWindow && wIdx >= 0 && up(inner(wIdx)) == "WHERE") {
+              val cond = render(inner.slice(wIdx + 1, inner.length)).trim
+              val closeArgs = prevNonWs(toks, i)
+              if (closeArgs >= 0 && toks(closeArgs) == Punct(")")) {
+                val openArgs = openOf(toks, closeArgs)
+                val fnIdx = prevNonWs(toks, openArgs)
+                val fn = if (fnIdx >= 0) up(toks(fnIdx)) else ""
+                val args = splitTopLevel(toks.slice(openArgs + 1, closeArgs))
+                val arg = if (args.length == 1) render(args(0)).trim else ""
+                // whitelist: the CASE wrap is equivalent only for NULL-
+                // SKIPPING aggregates — first/last/any_value/array_agg
+                // would silently change results (review finding), so
+                // they keep the clause and fail loudly
+                val nullSkipping = Set("SUM", "COUNT", "AVG", "MIN", "MAX",
+                  "STDDEV", "STDDEV_SAMP", "STDDEV_POP", "VAR_SAMP",
+                  "VAR_POP", "VARIANCE")
+                // pair-skipping aggregates (r8) drop a row iff EITHER
+                // argument is NULL, so CASE-wrapping BOTH arguments with
+                // the same predicate is exact (cond FALSE/NULL → both
+                // NULL → skipped, matching FILTER's exclusion)
+                val pairSkipping = Set("CORR", "COVAR_POP", "COVAR_SAMP",
+                  "REGR_SLOPE", "REGR_INTERCEPT", "REGR_R2", "REGR_AVGX",
+                  "REGR_AVGY", "REGR_SXX", "REGR_SYY", "REGR_SXY",
+                  "REGR_COUNT")
+                val repl =
+                  if (fn == "COUNT" && arg == "*")
+                    Some(s"count(CASE WHEN ($cond) THEN 1 END)")
+                  else if (args.length == 1 && nullSkipping.contains(fn) && arg != "*")
+                    Some(s"${fn.toLowerCase}(CASE WHEN ($cond) THEN ($arg) END)")
+                  else if (args.length == 2 && pairSkipping.contains(fn))
+                    Some(s"${fn.toLowerCase}(" +
+                      s"CASE WHEN ($cond) THEN (${render(args(0)).trim}) END, " +
+                      s"CASE WHEN ($cond) THEN (${render(args(1)).trim}) END)")
+                  else None
+                // replace fn(args) FILTER (…) with the CASE form,
+                // keeping OVER (…) untouched
+                repl.map(r => toks.patch(fnIdx, lex(r), close - fnIdx + 1))
+              } else None
+            } else None
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
   /** `agg(v) OVER (spec EXCLUDE CURRENT ROW|GROUP|TIES)` → frame aggregate
     * minus the excluded contribution, for SUM/COUNT/AVG (Spark has no
@@ -2253,215 +2150,203 @@ object Translator {
     * frames straddling the current value — such frames contain every
     * peer; ROWS frames intersect the group (probe-pinned) and stay loud,
     * as do other aggregates (declared gaps, never silent). */
-  private[dialect] def rewriteWindowExclude(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if id.upper == "OVER" =>
-            val open = nextNonWs(toks, i)
-            if (open < toks.length && toks(open) == Punct("(")) {
-              val close = matchParen(toks, open)
-              val spec = toks.slice(open + 1, close)
-              // top-level EXCLUDE CURRENT ROW inside the spec
-              var d = 0; var ex = -1
-              for (j <- spec.indices) {
-                d += depthDelta(spec(j))
-                if (d == 0 && ex < 0 && up(spec(j)) == "EXCLUDE") ex = j
-              }
-              if (ex >= 0) {
-                val exNext = nextNonWs(spec, ex)
-                val exNext2 = if (exNext < spec.length) nextNonWs(spec, exNext) else spec.length
-                val isCurrentRow = exNext < spec.length &&
-                  up(spec(exNext)) == "CURRENT" && exNext2 < spec.length &&
-                  up(spec(exNext2)) == "ROW"
-                // EXCLUDE GROUP / EXCLUDE TIES (r8): peers of the current
-                // row by the ORDER BY keys leave (GROUP) or all-but-self
-                // leave (TIES)
-                val kind =
-                  if (isCurrentRow) "ROW"
-                  else if (exNext < spec.length && up(spec(exNext)) == "GROUP") "GROUP"
-                  else if (exNext < spec.length && up(spec(exNext)) == "TIES") "TIES"
-                  else ""
-                val exEnd = if (kind == "ROW") exNext2 else exNext
-                // the aggregate call directly before OVER
-                val closeArgs = prevNonWs(toks, i)
-                if (kind.nonEmpty && closeArgs >= 0 && toks(closeArgs) == Punct(")")) {
-                  val openArgs = openOf(toks, closeArgs)
-                  val fnIdx = prevNonWs(toks, openArgs)
-                  val fn = if (fnIdx >= 0) up(toks(fnIdx)) else ""
-                  val specNoExToks = spec.slice(0, ex) ++
-                    spec.slice(exEnd + 1, spec.length)
-                  val specNoEx = render(specNoExToks).trim
-                  // a frame that provably never CONTAINS the current row
-                  // (both bounds PRECEDING, or both FOLLOWING) makes
-                  // EXCLUDE CURRENT ROW a NO-OP in DuckDB — a subtraction
-                  // would be silently off by the current row's value.
-                  // Detected token-wise so multi-token bounds
-                  // (INTERVAL '2' DAY PRECEDING) are classified correctly:
-                  // each frame bound ENDS in PRECEDING/FOLLOWING/ROW, so the
-                  // last keyword before the frame's AND and the spec's final
-                  // keyword pin the two bounds regardless of bound arity.
-                  def topIdx(word: String): Int = {
-                    var d2 = 0; var r = -1
-                    for (j <- specNoExToks.indices) {
-                      d2 += depthDelta(specNoExToks(j))
-                      if (d2 == 0 && r < 0 && up(specNoExToks(j)) == word) r = j
-                    }
-                    r
+  private[dialect] def rewriteWindowExclude(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if id.upper == "OVER" =>
+          val open = nextNonWs(toks, i)
+          if (open < toks.length && toks(open) == Punct("(")) {
+            val close = matchParen(toks, open)
+            val spec = toks.slice(open + 1, close)
+            // top-level EXCLUDE CURRENT ROW inside the spec
+            var d = 0; var ex = -1
+            for (j <- spec.indices) {
+              d += depthDelta(spec(j))
+              if (d == 0 && ex < 0 && up(spec(j)) == "EXCLUDE") ex = j
+            }
+            if (ex >= 0) {
+              val exNext = nextNonWs(spec, ex)
+              val exNext2 = if (exNext < spec.length) nextNonWs(spec, exNext) else spec.length
+              val isCurrentRow = exNext < spec.length &&
+                up(spec(exNext)) == "CURRENT" && exNext2 < spec.length &&
+                up(spec(exNext2)) == "ROW"
+              // EXCLUDE GROUP / EXCLUDE TIES (r8): peers of the current
+              // row by the ORDER BY keys leave (GROUP) or all-but-self
+              // leave (TIES)
+              val kind =
+                if (isCurrentRow) "ROW"
+                else if (exNext < spec.length && up(spec(exNext)) == "GROUP") "GROUP"
+                else if (exNext < spec.length && up(spec(exNext)) == "TIES") "TIES"
+                else ""
+              val exEnd = if (kind == "ROW") exNext2 else exNext
+              // the aggregate call directly before OVER
+              val closeArgs = prevNonWs(toks, i)
+              if (kind.nonEmpty && closeArgs >= 0 && toks(closeArgs) == Punct(")")) {
+                val openArgs = openOf(toks, closeArgs)
+                val fnIdx = prevNonWs(toks, openArgs)
+                val fn = if (fnIdx >= 0) up(toks(fnIdx)) else ""
+                val specNoExToks = spec.slice(0, ex) ++
+                  spec.slice(exEnd + 1, spec.length)
+                val specNoEx = render(specNoExToks).trim
+                // a frame that provably never CONTAINS the current row
+                // (both bounds PRECEDING, or both FOLLOWING) makes
+                // EXCLUDE CURRENT ROW a NO-OP in DuckDB — a subtraction
+                // would be silently off by the current row's value.
+                // Detected token-wise so multi-token bounds
+                // (INTERVAL '2' DAY PRECEDING) are classified correctly:
+                // each frame bound ENDS in PRECEDING/FOLLOWING/ROW, so the
+                // last keyword before the frame's AND and the spec's final
+                // keyword pin the two bounds regardless of bound arity.
+                def topIdx(word: String): Int = {
+                  var d2 = 0; var r = -1
+                  for (j <- specNoExToks.indices) {
+                    d2 += depthDelta(specNoExToks(j))
+                    if (d2 == 0 && r < 0 && up(specNoExToks(j)) == word) r = j
                   }
-                  val (b1, b2) = {
-                    val bet = topIdx("BETWEEN")
-                    if (bet < 0) ("", "")
+                  r
+                }
+                val (b1, b2) = {
+                  val bet = topIdx("BETWEEN")
+                  if (bet < 0) ("", "")
+                  else {
+                    var d3 = 0; var andIdx = -1
+                    for (j <- bet + 1 until specNoExToks.length) {
+                      d3 += depthDelta(specNoExToks(j))
+                      if (d3 == 0 && andIdx < 0 && up(specNoExToks(j)) == "AND") andIdx = j
+                    }
+                    if (andIdx < 0) ("", "")
                     else {
-                      var d3 = 0; var andIdx = -1
-                      for (j <- bet + 1 until specNoExToks.length) {
-                        d3 += depthDelta(specNoExToks(j))
-                        if (d3 == 0 && andIdx < 0 && up(specNoExToks(j)) == "AND") andIdx = j
-                      }
-                      if (andIdx < 0) ("", "")
-                      else {
-                        val k = prevNonWs(specNoExToks, andIdx)
-                        val p = prevNonWs(specNoExToks, specNoExToks.length)
-                        (if (k >= 0) up(specNoExToks(k)) else "",
-                          if (p >= 0) up(specNoExToks(p)) else "")
-                      }
+                      val k = prevNonWs(specNoExToks, andIdx)
+                      val p = prevNonWs(specNoExToks, specNoExToks.length)
+                      (if (k >= 0) up(specNoExToks(k)) else "",
+                        if (p >= 0) up(specNoExToks(p)) else "")
                     }
                   }
-                  // offset of the bound NEAREST the current row (end bound
-                  // for both-PRECEDING, start bound for both-FOLLOWING):
-                  // a 0 offset means the frame touches the current row
-                  // (ROWS) / its value and peers (RANGE), so nothing is
-                  // provably excluded-free.
-                  def boundOffsetTok(endKwIdx: Int): String = {
-                    val v = prevNonWs(specNoExToks, endKwIdx)
-                    if (v >= 0) render(Vector(specNoExToks(v))).trim else ""
+                }
+                // offset of the bound NEAREST the current row (end bound
+                // for both-PRECEDING, start bound for both-FOLLOWING):
+                // a 0 offset means the frame touches the current row
+                // (ROWS) / its value and peers (RANGE), so nothing is
+                // provably excluded-free.
+                def boundOffsetTok(endKwIdx: Int): String = {
+                  val v = prevNonWs(specNoExToks, endKwIdx)
+                  if (v >= 0) render(Vector(specNoExToks(v))).trim else ""
+                }
+                val nearestZero = {
+                  val bet = topIdx("BETWEEN")
+                  if (bet < 0) false
+                  else {
+                    var d3 = 0; var andIdx = -1
+                    for (j <- bet + 1 until specNoExToks.length) {
+                      d3 += depthDelta(specNoExToks(j))
+                      if (d3 == 0 && andIdx < 0 && up(specNoExToks(j)) == "AND") andIdx = j
+                    }
+                    if (andIdx < 0) false
+                    else if (b1 == "PRECEDING" && b2 == "PRECEDING")
+                      boundOffsetTok(prevNonWs(specNoExToks, specNoExToks.length)) == "0"
+                    else if (b1 == "FOLLOWING" && b2 == "FOLLOWING")
+                      boundOffsetTok(prevNonWs(specNoExToks, andIdx)) == "0"
+                    else false
                   }
-                  val nearestZero = {
-                    val bet = topIdx("BETWEEN")
-                    if (bet < 0) false
+                }
+                val bothSided =
+                  ((b1 == "PRECEDING" && b2 == "PRECEDING") ||
+                    (b1 == "FOLLOWING" && b2 == "FOLLOWING")) && !nearestZero
+                // CURRENT ROW: such a frame never holds the current row.
+                // GROUP/TIES: peers share the ORDER value, so only a
+                // RANGE frame (value-bounded) provably excludes them —
+                // a ROWS frame 3 PRECEDING..1 PRECEDING can still hold
+                // peer rows (advice r8: silent keep). ROWS GROUP/TIES
+                // falls through to the loud branch.
+                val noOp = bothSided &&
+                  (kind == "ROW" || topIdx("RANGE") >= 0)
+                if (noOp) {
+                  // a frame that provably never contains the current
+                  // row's ORDER value holds neither it nor its peers —
+                  // EXCLUDE (any kind) is a no-op (probe-pinned)
+                  Some(toks.patch(open, lex(s"($specNoEx)"), close - open + 1))
+                } else if (kind == "ROW" && Set("SUM", "COUNT", "AVG").contains(fn)) {
+                  val arg = render(toks.slice(openArgs + 1, closeArgs)).trim
+                  val specSql = specNoEx
+                  val repl =
+                    if (fn == "COUNT" && arg == "*")
+                      s"(count(*) OVER ($specSql) - 1)"
+                    else if (fn == "COUNT")
+                      s"(count($arg) OVER ($specSql) - CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)"
                     else {
-                      var d3 = 0; var andIdx = -1
-                      for (j <- bet + 1 until specNoExToks.length) {
-                        d3 += depthDelta(specNoExToks(j))
-                        if (d3 == 0 && andIdx < 0 && up(specNoExToks(j)) == "AND") andIdx = j
-                      }
-                      if (andIdx < 0) false
-                      else if (b1 == "PRECEDING" && b2 == "PRECEDING")
-                        boundOffsetTok(prevNonWs(specNoExToks, specNoExToks.length)) == "0"
-                      else if (b1 == "FOLLOWING" && b2 == "FOLLOWING")
-                        boundOffsetTok(prevNonWs(specNoExToks, andIdx)) == "0"
-                      else false
+                      val cnt = s"(count($arg) OVER ($specSql) - CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)"
+                      val sum = s"(sum($arg) OVER ($specSql) - coalesce(($arg), 0))"
+                      if (fn == "SUM")
+                        s"(CASE WHEN $cnt = 0 THEN NULL ELSE $sum END)"
+                      else
+                        s"(CASE WHEN $cnt = 0 THEN NULL ELSE $sum / $cnt END)"
                     }
-                  }
-                  val bothSided =
-                    ((b1 == "PRECEDING" && b2 == "PRECEDING") ||
-                      (b1 == "FOLLOWING" && b2 == "FOLLOWING")) && !nearestZero
-                  // CURRENT ROW: such a frame never holds the current row.
-                  // GROUP/TIES: peers share the ORDER value, so only a
-                  // RANGE frame (value-bounded) provably excludes them —
-                  // a ROWS frame 3 PRECEDING..1 PRECEDING can still hold
-                  // peer rows (advice r8: silent keep). ROWS GROUP/TIES
-                  // falls through to the loud branch.
-                  val noOp = bothSided &&
-                    (kind == "ROW" || topIdx("RANGE") >= 0)
-                  if (noOp) {
-                    // a frame that provably never contains the current
-                    // row's ORDER value holds neither it nor its peers —
-                    // EXCLUDE (any kind) is a no-op (probe-pinned)
-                    toks = toks.patch(open, lex(s"($specNoEx)"), close - open + 1)
-                    changed = true
-                  } else if (kind == "ROW" && Set("SUM", "COUNT", "AVG").contains(fn)) {
+                  Some(toks.patch(fnIdx, lex(repl), close - fnIdx + 1))
+                } else if ((kind == "GROUP" || kind == "TIES") &&
+                    Set("SUM", "COUNT", "AVG").contains(fn) &&
+                    topIdx("RANGE") >= 0 &&
+                    (b1 == "PRECEDING" || b1 == "ROW") &&
+                    (b2 == "FOLLOWING" || b2 == "ROW")) {
+                  // A RANGE frame whose bounds straddle the current ORDER
+                  // value contains EVERY peer (they share the value), so
+                  // excluded-group aggregates are frame-aggregate minus
+                  // the WHOLE-PARTITION peer-group aggregate (window
+                  // partitioned by partition keys + order keys, no
+                  // frame = whole partition); TIES adds the current row
+                  // back. ROWS frames intersect the peer group
+                  // (probe-pinned: only in-frame peers leave) and cannot
+                  // be expressed this way — they stay loud.
+                  val partIdx = topIdx("PARTITION")
+                  val orderIdx = topIdx("ORDER")
+                  val rangeIdx = topIdx("RANGE")
+                  if (orderIdx >= 0 && rangeIdx > orderIdx) {
+                    val partSql =
+                      if (partIdx >= 0) {
+                        val byIdx = nextNonWs(specNoExToks, partIdx)
+                        render(specNoExToks.slice(byIdx + 1,
+                          if (orderIdx >= 0) orderIdx else rangeIdx)).trim
+                      } else ""
+                    val byIdx2 = nextNonWs(specNoExToks, orderIdx)
+                    val orderSec = specNoExToks.slice(byIdx2 + 1, rangeIdx)
+                    val orderKeys = splitTopLevel(orderSec).map { key =>
+                      var ks = key.filterNot(isWs)
+                      def lastUp = if (ks.nonEmpty) up(ks.last) else ""
+                      while (Set("ASC", "DESC", "FIRST", "LAST", "NULLS")
+                          .contains(lastUp)) ks = ks.dropRight(1)
+                      render(ks).trim
+                    }.filter(_.nonEmpty)
+                    val grpKeys =
+                      (if (partSql.nonEmpty) Seq(partSql) else Nil) ++ orderKeys
+                    val grp = s"PARTITION BY ${grpKeys.mkString(", ")}"
                     val arg = render(toks.slice(openArgs + 1, closeArgs)).trim
                     val specSql = specNoEx
+                    val ties = kind == "TIES"
                     val repl =
                       if (fn == "COUNT" && arg == "*")
-                        s"(count(*) OVER ($specSql) - 1)"
+                        s"(count(*) OVER ($specSql) - count(*) OVER ($grp)" +
+                          (if (ties) " + 1)" else ")")
                       else if (fn == "COUNT")
-                        s"(count($arg) OVER ($specSql) - CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)"
+                        s"(count($arg) OVER ($specSql) - count($arg) OVER ($grp)" +
+                          (if (ties) s" + CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)" else ")")
                       else {
-                        val cnt = s"(count($arg) OVER ($specSql) - CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)"
-                        val sum = s"(sum($arg) OVER ($specSql) - coalesce(($arg), 0))"
+                        val cnt = s"(count($arg) OVER ($specSql) - count($arg) OVER ($grp)" +
+                          (if (ties) s" + CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)" else ")")
+                        val sum = s"(sum($arg) OVER ($specSql) - coalesce(sum($arg) OVER ($grp), 0)" +
+                          (if (ties) s" + coalesce(($arg), 0))" else ")")
                         if (fn == "SUM")
                           s"(CASE WHEN $cnt = 0 THEN NULL ELSE $sum END)"
                         else
                           s"(CASE WHEN $cnt = 0 THEN NULL ELSE $sum / $cnt END)"
                       }
-                    toks = toks.patch(fnIdx, lex(repl), close - fnIdx + 1)
-                    changed = true
-                  } else if ((kind == "GROUP" || kind == "TIES") &&
-                      Set("SUM", "COUNT", "AVG").contains(fn) &&
-                      topIdx("RANGE") >= 0 &&
-                      (b1 == "PRECEDING" || b1 == "ROW") &&
-                      (b2 == "FOLLOWING" || b2 == "ROW")) {
-                    // A RANGE frame whose bounds straddle the current ORDER
-                    // value contains EVERY peer (they share the value), so
-                    // excluded-group aggregates are frame-aggregate minus
-                    // the WHOLE-PARTITION peer-group aggregate (window
-                    // partitioned by partition keys + order keys, no
-                    // frame = whole partition); TIES adds the current row
-                    // back. ROWS frames intersect the peer group
-                    // (probe-pinned: only in-frame peers leave) and cannot
-                    // be expressed this way — they stay loud.
-                    val partIdx = topIdx("PARTITION")
-                    val orderIdx = topIdx("ORDER")
-                    val rangeIdx = topIdx("RANGE")
-                    if (orderIdx >= 0 && rangeIdx > orderIdx) {
-                      val partSql =
-                        if (partIdx >= 0) {
-                          val byIdx = nextNonWs(specNoExToks, partIdx)
-                          render(specNoExToks.slice(byIdx + 1,
-                            if (orderIdx >= 0) orderIdx else rangeIdx)).trim
-                        } else ""
-                      val byIdx2 = nextNonWs(specNoExToks, orderIdx)
-                      val orderSec = specNoExToks.slice(byIdx2 + 1, rangeIdx)
-                      val orderKeys = splitTopLevel(orderSec).map { key =>
-                        var ks = key.filterNot(isWs)
-                        def lastUp = if (ks.nonEmpty) up(ks.last) else ""
-                        while (Set("ASC", "DESC", "FIRST", "LAST", "NULLS")
-                            .contains(lastUp)) ks = ks.dropRight(1)
-                        render(ks).trim
-                      }.filter(_.nonEmpty)
-                      val grpKeys =
-                        (if (partSql.nonEmpty) Seq(partSql) else Nil) ++ orderKeys
-                      val grp = s"PARTITION BY ${grpKeys.mkString(", ")}"
-                      val arg = render(toks.slice(openArgs + 1, closeArgs)).trim
-                      val specSql = specNoEx
-                      val ties = kind == "TIES"
-                      val repl =
-                        if (fn == "COUNT" && arg == "*")
-                          s"(count(*) OVER ($specSql) - count(*) OVER ($grp)" +
-                            (if (ties) " + 1)" else ")")
-                        else if (fn == "COUNT")
-                          s"(count($arg) OVER ($specSql) - count($arg) OVER ($grp)" +
-                            (if (ties) s" + CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)" else ")")
-                        else {
-                          val cnt = s"(count($arg) OVER ($specSql) - count($arg) OVER ($grp)" +
-                            (if (ties) s" + CASE WHEN ($arg) IS NOT NULL THEN 1 ELSE 0 END)" else ")")
-                          val sum = s"(sum($arg) OVER ($specSql) - coalesce(sum($arg) OVER ($grp), 0)" +
-                            (if (ties) s" + coalesce(($arg), 0))" else ")")
-                          if (fn == "SUM")
-                            s"(CASE WHEN $cnt = 0 THEN NULL ELSE $sum END)"
-                          else
-                            s"(CASE WHEN $cnt = 0 THEN NULL ELSE $sum / $cnt END)"
-                        }
-                      toks = toks.patch(fnIdx, lex(repl), close - fnIdx + 1)
-                      changed = true
-                    }
-                  }
-                }
-              }
-            }
-          case _ =>
-        }
-        i += 1
+                    Some(toks.patch(fnIdx, lex(repl), close - fnIdx + 1))
+                  } else None
+                } else None
+              } else None
+            } else None
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
 
   /** Literal separator → Spark regex-string form. Under
@@ -3009,36 +2894,27 @@ object Translator {
     * `aggregate(...)` forms (no Spark builtin exists). Accumulation is in
     * DOUBLE — DuckDB widens integer list sums to HUGEINT, so integer
     * outputs are not oracle-comparable; the surface is spec-tested. */
-  private[dialect] def rewriteListAggs(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if (id.upper == "LIST_SUM" || id.upper == "LIST_AVG") && {
-            val n = nextNonWs(toks, i); n < toks.length && toks(n) == Punct("(")
-          } =>
-            val open = nextNonWs(toks, i)
-            val close = matchParen(toks, open)
-            val arg = render(toks.slice(open + 1, close)).trim
-            // DuckDB list_sum/list_avg SKIP NULL elements and return NULL
-            // for an empty/all-NULL list (r8 fuzz: list_sum([]) was 0 and
-            // one NULL element poisoned the whole fold)
-            val nn = s"filter(($arg), __g_n -> __g_n IS NOT NULL)"
-            val sum = s"aggregate($nn, CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE))"
-            val body = if (id.upper == "LIST_SUM") sum else s"($sum / size($nn))"
-            val repl = s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE $body END)"
-            toks = toks.patch(i, lex(repl), close - i + 1)
-            changed = true // restart: a nested list_sum in `arg` re-lexed above
-          case _ =>
-        }
-        i += 1
+  private[dialect] def rewriteListAggs(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if (id.upper == "LIST_SUM" || id.upper == "LIST_AVG") && {
+          val n = nextNonWs(toks, i); n < toks.length && toks(n) == Punct("(")
+        } =>
+          val open = nextNonWs(toks, i)
+          val close = matchParen(toks, open)
+          val arg = render(toks.slice(open + 1, close)).trim
+          // DuckDB list_sum/list_avg SKIP NULL elements and return NULL
+          // for an empty/all-NULL list (r8 fuzz: list_sum([]) was 0 and
+          // one NULL element poisoned the whole fold)
+          val nn = s"filter(($arg), __g_n -> __g_n IS NOT NULL)"
+          val sum = s"aggregate($nn, CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE))"
+          val body = if (id.upper == "LIST_SUM") sum else s"($sum / size($nn))"
+          val repl = s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE $body END)"
+          // a nested list_sum in `arg` is rewritten when the scan resumes
+          Some(toks.patch(i, lex(repl), close - i + 1))
+        case _ => None
       }
     }
-    toks
-  }
 
   /** Arg-shape rewrites with no 1:1 Spark rename (round 4):
     *   - `xor(a, b)` → `((a) ^ (b))` — DuckDB's `^` is power, so the
@@ -3228,61 +3104,51 @@ object Translator {
     * (they diverged before: `::` rewrites to CAST only in the later
     * rewriteCastFuncs pass — r12 ADVICE). Sub-day units return
     * TIMESTAMP in both engines and pass through. */
-  private[dialect] def rewriteDateTruncShape(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case id: Ident if (id.upper == "DATE_TRUNC" || id.upper == "DATETRUNC") && {
-              val n = nextNonWs(toks, i)
-              n < toks.length && toks(n) == Punct("(")
-            } =>
-            val open = nextNonWs(toks, i)
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            val unit: Option[Either[String, Int]] =
-              if (args.length == 2) args(0).filterNot(isWs) match {
-                case Vector(s: Str) => dateTruncDayPlusUnit(s.value)
-                case _ => None
-              } else None
-            val enclosedInDateCast = {
-              var k = 0
-              var p = prevNonWs(toks, i)
-              while (p >= 0 && toks(p) == Punct("(")) { k += 1; p = prevNonWs(toks, p) }
-              k >= 1 && p >= 0 && toks(p).isInstanceOf[Ident] &&
-                up(toks(p)) == "CAST" && {
-                  var q = nextNonWs(toks, close)
-                  var kk = k - 1
-                  while (kk > 0 && q < toks.length && toks(q) == Punct(")")) {
-                    kk -= 1; q = nextNonWs(toks, q)
-                  }
-                  kk == 0 && q < toks.length && up(toks(q)) == "AS" && {
-                    val r = nextNonWs(toks, q)
-                    r < toks.length && toks(r).isInstanceOf[Ident] &&
-                      (up(toks(r)) == "DATE" || up(toks(r)) == "TIMESTAMP")
-                  }
+  private[dialect] def rewriteDateTruncShape(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident if (id.upper == "DATE_TRUNC" || id.upper == "DATETRUNC") && {
+            val n = nextNonWs(toks, i)
+            n < toks.length && toks(n) == Punct("(")
+          } =>
+          val open = nextNonWs(toks, i)
+          val close = matchParen(toks, open)
+          val args = splitTopLevel(toks.slice(open + 1, close))
+          val unit: Option[Either[String, Int]] =
+            if (args.length == 2) args(0).filterNot(isWs) match {
+              case Vector(s: Str) => dateTruncDayPlusUnit(s.value)
+              case _ => None
+            } else None
+          val enclosedInDateCast = {
+            var k = 0
+            var p = prevNonWs(toks, i)
+            while (p >= 0 && toks(p) == Punct("(")) { k += 1; p = prevNonWs(toks, p) }
+            k >= 1 && p >= 0 && toks(p).isInstanceOf[Ident] &&
+              up(toks(p)) == "CAST" && {
+                var q = nextNonWs(toks, close)
+                var kk = k - 1
+                while (kk > 0 && q < toks.length && toks(q) == Punct(")")) {
+                  kk -= 1; q = nextNonWs(toks, q)
                 }
-            }
-            if (unit.isDefined && !enclosedInDateCast) {
-              val arg = render(args(1)).trim
-              val repl = unit.get match {
-                case Left(u) => s"CAST(date_trunc('$u', $arg) AS DATE)"
-                case Right(k) =>
-                  s"make_date(year($arg) - pmod(year($arg), $k), 1, 1)"
+                kk == 0 && q < toks.length && up(toks(q)) == "AS" && {
+                  val r = nextNonWs(toks, q)
+                  r < toks.length && toks(r).isInstanceOf[Ident] &&
+                    (up(toks(r)) == "DATE" || up(toks(r)) == "TIMESTAMP")
+                }
               }
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
+          }
+          if (unit.isDefined && !enclosedInDateCast) {
+            val arg = render(args(1)).trim
+            val repl = unit.get match {
+              case Left(u) => s"CAST(date_trunc('$u', $arg) AS DATE)"
+              case Right(k) =>
+                s"make_date(year($arg) - pmod(year($arg), $k), 1, 1)"
             }
-          case _ =>
-        }
-        i += 1
+            Some(toks.patch(i, lex(repl), close - i + 1))
+          } else None
+        case _ => None
       }
     }
-    toks
-  }
 
   /** True when the operand ENDING at `lEnd` is a literal INTERVAL run —
     * interval+interval arithmetic must stay passthrough. */
@@ -3448,2247 +3314,1628 @@ object Translator {
     }
   }
 
+  /** An arg-shape rule's view of the function name at token `i`: the open
+    * paren (-1 when no `(` follows, for the operator-position rules), the
+    * close paren, and the split and rendered arguments, each computed once. */
+  private final class Call(val toks: Vector[Tok], val i: Int, val id: Ident,
+      val scope: ArgShapeScope) {
+    def name: String = id.upper
+    val open: Int = {
+      val n = nextNonWs(toks, i)
+      if (n < toks.length && toks(n) == Punct("(")) n else -1
+    }
+    lazy val close: Int = matchParen(toks, open)
+    lazy val inner: Vector[Tok] = toks.slice(open + 1, close)
+    lazy val args: Vector[Vector[Tok]] = splitTopLevel(inner)
+    private lazy val rendered = args.map(a => render(a).trim)
+    /** Argument `k`, rendered and trimmed. */
+    def arg(k: Int): String = rendered(k)
+    /** Argument `k` without its whitespace tokens. */
+    def sig(k: Int): Vector[Tok] = args(k).filterNot(isWs)
+    /** The call, name through close paren, replaced by `sql`. */
+    def to(sql: String): Option[Vector[Tok]] =
+      Some(toks.patch(i, lex(sql), close - i + 1))
+  }
+
+  /** Per-translation inputs of the arg-shape rules: the catalog resolvers
+    * and the index-lambda marker counter. */
+  private final class ArgShapeScope(val isCollectionCol: String => Boolean,
+      val isDateCol: (String, Boolean) => Boolean,
+      val isDecimalCol: String => Boolean) {
+    private var lambdaIx = 0
+    /** Unique per-rewrite index-lambda marker suffix. */
+    def nextLambdaIx(): Int = { lambdaIx += 1; lambdaIx }
+  }
+
+  /** An arg-shape rule. A matching `case` claims the name token, so later
+    * rules for that name never see it, even when the body then returns
+    * None and leaves the call as it is. */
+  private type ShapeRule = PartialFunction[Call, Option[Vector[Tok]]]
+
+  /** The arg-shape rules, keyed on the upper-cased function name, each
+    * name's rules in precedence order. The Boolean is true for `call`
+    * rules, which see the name only when `(` follows it. */
+  private val argShapeRules: Map[String, Vector[(Boolean, ShapeRule)]] = {
+    val table = scala.collection.mutable.Map[String, Vector[(Boolean, ShapeRule)]]()
+    def add(callOnly: Boolean, names: Seq[String], rule: ShapeRule): Unit =
+      names.foreach(n => table(n) = table.getOrElse(n, Vector.empty) :+ (callOnly -> rule))
+    def call(names: String*)(rule: ShapeRule): Unit = add(callOnly = true, names, rule)
+    def word(names: String*)(rule: ShapeRule): Unit = add(callOnly = false, names, rule)
+
+    call("GREATEST", "LEAST") {
+      // duck converts DECIMAL-bearing greatest/least to DOUBLE
+      // (r13 dec fuzz — probed: typeof(greatest(dec, dec)) =
+      // DOUBLE, including its >2^53 precision loss; HUGEINT
+      // pairs stay exact, so hugeint-only slices are skipped).
+      // Datetime-surface slices skip too: make_timestamp's
+      // fractional seconds are decimal-risk BY TOKEN but the
+      // value is a TIMESTAMP — the wrap broke analysis (ts
+      // fuzz regression caught by the r13 full-gate rerun)
+      case c if !dtSurfaceToks(c.inner) &&
+          decimalRiskNonHugeToks(c.inner, c.scope.isDecimalCol) &&
+          // skip-if-wrapped: every arg already CAST(… AS DOUBLE)
+          // means this is our own emission (fixpoint guard)
+          !c.args.forall(argWrappedAsDouble) =>
+        val wrapped = c.args.indices.map { k =>
+          if (argWrappedAsDouble(c.args(k))) c.arg(k) else s"CAST((${c.arg(k)}) AS DOUBLE)"
+        }
+        c.to(s"${c.id.text}(${wrapped.mkString(", ")})")
+    }
+    call("AVG", "MEAN") {
+      // duck's avg over DECIMAL/HUGEINT returns DOUBLE computed
+      // from the EXACT sum (r13 dec fuzz — probed: avg of 3×0.1
+      // DECIMAL is 0.1 exactly, neither double-accumulation nor
+      // double(sum)/n); Spark's DECIMAL avg rounds HALF_UP at
+      // scale s+4, a silent wrong answer in the 5th fractional
+      // digit. sum/count split: Spark's decimal division keeps
+      // scale ≥ 6 and the exact sum, then one double conversion
+      // — within 1 ulp of duck's integer-division double
+      case c if c.args.length == 1 && !dtSurfaceToks(c.inner) &&
+          (decimalRiskNonHugeToks(c.inner, c.scope.isDecimalCol) ||
+            hugeintRiskToks(c.inner)) =>
+        val (toks, arg) = (c.toks, render(c.inner).trim)
+        // absorb FILTER (WHERE …) and OVER (…)|OVER w suffixes so
+        // both halves of the split carry them
+        var sfxEnd = c.close
+        var look = nextNonWs(toks, sfxEnd)
+        while (look < toks.length && (up(toks(look)) == "FILTER" ||
+            up(toks(look)) == "OVER")) {
+          val nn = nextNonWs(toks, look)
+          sfxEnd =
+            if (nn < toks.length && toks(nn) == Punct("(")) matchParen(toks, nn)
+            else nn
+          look = nextNonWs(toks, sfxEnd)
+        }
+        val sfx =
+          if (sfxEnd > c.close) " " + render(toks.slice(c.close + 1, sfxEnd + 1)).trim
+          else ""
+        Some(toks.patch(c.i, lex(
+          s"CAST(try_divide(sum($arg)$sfx, count($arg)$sfx) AS DOUBLE)"),
+          sfxEnd - c.i + 1))
+    }
+    call("XOR") {
+      // or/and/not composition, NOT Spark's `^`: since r8 the `^`
+      // OPERATOR rewrites to power() (DuckDB semantics), so an
+      // emitted `a ^ b` would flip to power on any re-translation —
+      // this form is translate-idempotent
+      case c if c.args.length == 2 =>
+        val (a, b) = (c.arg(0), c.arg(1))
+        c.to(s"((($a) | ($b)) & ~(($a) & ($b)))")
+    }
+    call("LTRIM", "RTRIM", "TRIM") {
+      // DuckDB 2-arg char-set trims -> SQL-standard TRIM(side set FROM s)
+      // (same any-of-set semantics in both engines); 1-arg forms pass
+      // through untouched
+      case c if c.args.length == 2 && !c.args(0).exists(t =>
+          Set("LEADING", "TRAILING", "BOTH", "FROM").contains(up(t))) =>
+        val side = c.name match {
+          case "LTRIM" => "LEADING"; case "RTRIM" => "TRAILING"; case _ => "BOTH"
+        }
+        c.to(s"TRIM($side ${c.arg(1)} FROM ${c.arg(0)})")
+    }
+    call("INTDIV", "MODULO") {
+      // ClickHouse intDiv/modulo (chsql surface) → the operators.
+      // Rounding for negatives agrees: chsql's intDiv expands to
+      // DuckDB's `//`, and DuckDB 1.0 integer `//` TRUNCATES toward
+      // zero (probe: -7 // 2 = -3, 7 // -2 = -3), exactly Spark's
+      // DIV — no floor-division divergence (TranslatorSpec pins it
+      // with negative operands).
+      case c if c.args.length == 2 =>
+        val op = if (c.name == "INTDIV") "DIV" else "%"
+        c.to(s"((${c.arg(0)}) $op (${c.arg(1)}))")
+    }
+    call("EMPTY", "NOTEMPTY") {
+      // ClickHouse empty/notEmpty: zero-length test. A CASE-dispatch
+      // on typeof() cannot work — Spark type-checks BOTH branches at
+      // analysis time, so size(stringcol) fails even in a dead
+      // branch. Dispatch is SYNTACTIC — a bracket literal `[...]`
+      // or an array(...)/map(...)/list_value(...) call gets size()
+      // — plus SCHEMA-AWARE (r8): a bare (possibly qualified)
+      // identifier naming a known ARRAY/MAP column also gets size(),
+      // closing the array-typed-column gap for named columns;
+      // everything else gets length() (the string case the chsql
+      // wire surface serves). Computed array expressions still
+      // raise a loud DATATYPE_MISMATCH, never a silent wrong answer.
+      case c if c.args.length == 1 =>
+        val cmp = if (c.name == "EMPTY") "=" else "<>"
+        val fn = if (collectionShaped(c.args(0), c.scope.isCollectionCol)) "size"
+          else "length"
+        c.to(s"($fn(${c.arg(0)}) $cmp 0)")
+    }
+    call("SEM") {
+      // DuckDB sem = POPULATION stddev / sqrt(n) (probe-pinned)
+      case c if c.args.length == 1 =>
+        val x = c.arg(0)
+        c.to(s"(stddev_pop($x) / sqrt(CAST(count($x) AS DOUBLE)))")
+    }
+    call("CONCAT") {
+      // DuckDB concat stringifies EVERY argument and SKIPS NULLs
+      // (probe: concat('a', NULL, 'b') = 'ab', concat(1, 2) = '12',
+      // concat(NULL, NULL) = '') — Spark's concat propagates NULL
+      // and means array-concat on arrays, a silent divergence found
+      // by the r8 differential fuzz. concat_ws('') over per-arg
+      // string casts reproduces DuckDB exactly.
+      // list args stringify too (r9 probe: concat([1,2],[3]) =
+      // '[1, 2][3]' — concat is stringify-everything in DuckDB;
+      // list CONCATENATION spells list_concat/array_cat, which get
+      // their own flatten(array(…)) rewrite so the emission here is
+      // never re-captured)
+      case c if c.args.exists(_.exists(!isWs(_))) =>
+        val casts = c.args.indices.map(k => s"CAST((${c.arg(k)}) AS STRING)")
+        c.to(s"concat_ws('', ${casts.mkString(", ")})")
+    }
+    call("LIST_CONTAINS", "LIST_HAS", "ARRAY_CONTAINS", "ARRAY_HAS", "HAS") {
+      // DuckDB list_contains is NOT three-valued over NULL elements
+      // (r11 list fuzz): absent needle → false even when the list
+      // holds NULLs; NULL only for a NULL list or NULL needle.
+      // Spark's array_contains returns NULL for absent-with-NULLs,
+      // and array_position demands an EXACT element-type match
+      // (array_position([1.0, 2.0], 2) is an analysis error where
+      // array_contains coerces — probe-gate find), so emit a
+      // NULL-guarded coalesce(exists(l, x -> x = e), false): found
+      // → true (exists SHORT-CIRCUITS on the first hit — advice
+      // r11, replacing the full-scan size(filter(…)) > 0 form);
+      // absent-with-NULL-elements → exists' three-valued NULL →
+      // false via coalesce; either arg NULL → NULL via the guard
+      // (a literal NULL needle included: Spark's array_contains
+      // would reject it untyped at analysis);
+      // the lambda compares with `<=>` (r15 nested-NULL scout):
+      // duck matches entries by NULLS-EQUAL total equality —
+      // list_contains([[1,NULL]], [1,NULL]) is TRUE — where a
+      // plain `=` is three-valued over inner NULLs (the
+      // NestedCompare rule makes `=` duck-3VL, which would skip
+      // the match); `<=>` also equates NaN like duck and applies
+      // the same binary coercion.
+      // CAVEAT (same class as the other CASE-splice emissions,
+      // VERDICT r11): the arguments are interpolated into both the
+      // guard and the body, so a NON-DETERMINISTIC needle
+      // (random(), uuid()) evaluates more than once; columns,
+      // literals and deterministic expressions dedupe in codegen.
+      // The 1-param lambda dodges the 1-based index shift; exists
+      // is in the higher-order passthrough set, so the emission is
+      // not re-captured on re-translation.
+      case c if c.args.length == 2 =>
+        val (l, e) = (c.arg(0), c.arg(1))
+        c.to(s"(CASE WHEN ($l) IS NULL OR ($e) IS NULL THEN CAST(NULL AS BOOLEAN) " +
+          s"ELSE coalesce(exists(($l), graft_lc -> graft_lc <=> ($e)), false) END)")
+    }
+    call("LIST_CONCAT", "LIST_CAT", "ARRAY_CAT", "ARRAY_CONCAT") {
+      // DuckDB list concat is strictly 2-arg and SKIPS NULL args
+      // (probe: list_concat([1,2], NULL) = [1,2]; both NULL → NULL)
+      // — Spark's concat propagates NULL, and emitting concat was
+      // re-captured by the stringify rewrite above on
+      // re-translation (advice r8). flatten(array(a,b)) is the
+      // non-recapturable spelling of array concatenation.
+      case c if c.args.length == 2 =>
+        val (a, b) = (c.arg(0), c.arg(1))
+        c.to(s"(CASE WHEN ($a) IS NULL THEN ($b) WHEN ($b) IS NULL THEN ($a) " +
+          s"ELSE flatten(array(($a), ($b))) END)")
+    }
+    call("LENGTH", "LEN") {
+      // DuckDB length()/len() work on lists too (len([1,2]) = 2) —
+      // dispatch to size() for array literals / collection calls /
+      // named ARRAY-MAP columns (the empty() posture, r8); strings
+      // keep length(). Only rewrites when a collection shape is
+      // recognized, so plain string length is untouched.
+      case c if c.args.length == 1 && collectionShaped(c.args(0), c.scope.isCollectionCol) =>
+        c.to(s"size(${c.arg(0)})")
+      // r14 nested scout: a BARE identifier the shape scan cannot
+      // classify — above all a LAMBDA VARIABLE (`x -> len(x)` over
+      // list elements) — takes the type-dispatched kernel; string
+      // literals/calls keep Spark's native length (pinned
+      // emissions unchanged)
+      case c if c.args.length == 1 && (c.sig(0) match {
+          case Vector(a: Ident) => !keywordLike(a.upper) &&
+            !c.scope.isCollectionCol(a.text.toLowerCase)
+          case _ => false
+        }) =>
+        c.to(s"graft_len(${c.arg(0)})")
+    }
+    call("SUBSTR", "SUBSTRING") {
+      // DuckDB substr(s, 0, n) consumes one length unit on the
+      // virtual position 0 (Postgres clamp: 'hello',0,3 → 'he');
+      // Spark treats start 0 as 1 with the FULL length — shift the
+      // literal-0 form (expression starts stay as-is: both engines
+      // agree on every start except exactly 0)
+      case c if c.args.length == 3 && c.sig(1).map(_.text) == Vector("0") =>
+        c.to(s"substr(${c.arg(0)}, 1, (${c.arg(2)}) - 1)")
+    }
+    call("REGEXP_FULL_MATCH") {
+      // || not concat: the r8 DuckDB-concat rewrite (NULL-skipping
+      // concat_ws) would otherwise turn a NULL pattern into '^(?:)$'
+      case c if c.args.length == 2 =>
+        c.to(s"rlike((${c.arg(0)}), '^(?:' || (${c.arg(1)}) || ')$$')")
+    }
+    call("REGEXP_ESCAPE") {
+      // RE2 QuoteMeta: backslash-escape every char outside
+      // [A-Za-z0-9_] (probe: '.', '*', '#', '-', and SPACE all
+      // escaped)
+      case c if c.args.length == 1 =>
+        // Spark's 4-arg form (position 1): still a GLOBAL replace,
+        // and re-translation can't mistake it for DuckDB's 3-arg
+        // first-match form (the parse-fixpoint guard)
+        c.to(s"regexp_replace((${c.arg(0)}), '([^a-zA-Z0-9_])', '\\\\$$1', 1)")
+    }
+    call("FILTER") {
+      // DuckDB accepts FILTER (cond) without WHERE on aggregates —
+      // inject it. The clause form always follows the aggregate
+      // call's ')'; the filter() higher-order function never does.
+      case c if {
+          val p = prevNonWs(c.toks, c.i)
+          p >= 0 && c.toks(p) == Punct(")") && {
+            val first = nextNonWs(c.toks, c.open)
+            first < c.close && up(c.toks(first)) != "WHERE"
+          }
+        } =>
+        Some(c.toks.patch(c.open + 1, Seq(Ident("WHERE"), Ws(" ")), 0))
+    }
+    call("DATE_ADD") {
+      // DuckDB date_add(d, INTERVAL …) — Spark's date_add takes day
+      // counts; the interval form is plain + arithmetic
+      case c if c.args.length == 2 &&
+          c.args(1).find(!_.isInstanceOf[Ws]).exists(t => up(t) == "INTERVAL") =>
+        c.to(s"((${c.arg(0)}) + ${c.arg(1)})")
+    }
+    call("AGE") {
+      // r10 fuzz batch 6 (was a silent divergence): DuckDB age(a, b)
+      // is the CALENDAR decomposition (full months by date walking,
+      // then days, then time — Postgres semantics; probed:
+      // age(Mar 1, Jan 31) = '1 mon 1 day'), not the exact duration
+      // the old a - b mapping produced (30 days there). Emit the
+      // decomposition as a CalendarInterval via make_interval:
+      // m0 = raw month diff, stepped back/forward when B + m0
+      // months overshoots A; remainder split into trunc-toward-zero
+      // days + sub-day micros (Spark DIV/% both truncate, so the
+      // components share the sign like DuckDB's negative ages).
+      case c if c.args.length == 2 =>
+        val a = s"CAST((${c.arg(0)}) AS TIMESTAMP)"
+        val b = s"CAST((${c.arg(1)}) AS TIMESTAMP)"
+        val m0 = s"((year($a) - year($b)) * 12 + (month($a) - month($b)))"
+        val m = s"(CASE WHEN $a >= $b AND timestampadd(MONTH, $m0, $b) > $a THEN $m0 - 1 " +
+          s"WHEN $a < $b AND timestampadd(MONTH, $m0, $b) < $a THEN $m0 + 1 ELSE $m0 END)"
+        val rem = s"(unix_micros($a) - unix_micros(timestampadd(MONTH, $m, $b)))"
+        // round() is an identity on the integral DIV but marks the
+        // cast alreadyIntegral for the int-cast-rounding pass — the
+        // bare CAST(… DIV … AS INT) was re-wrapped on re-translation,
+        // breaking the translate∘translate fixpoint
+        c.to(s"make_interval(0, $m, 0, CAST(round($rem DIV 86400000000) AS INT), 0, 0, " +
+          // graft_dec_cast, not CAST(… AS DECIMAL(18,6)): the rem
+          // slice can carry user decimal tokens, and a risky CAST
+          // in our own emission would be re-captured by
+          // rewriteDecCast on re-translation (fixpoint); the kernel
+          // is exact for this integral input
+          s"graft_dec_cast($rem % 86400000000, 18, 6) / 1000000)")
+    }
+    call("ARRAY_TO_STRING") {
+      // DuckDB returns NULL for the EMPTY list (probe-pinned, even
+      // typed-empty); array_join returns '' — guard. NULL elements
+      // are skipped by both.
+      case c if c.args.length == 2 =>
+        val (l, sep) = (c.arg(0), c.arg(1))
+        c.to(s"(CASE WHEN size(($l)) = 0 THEN CAST(NULL AS STRING) ELSE array_join(($l), $sep) END)")
+    }
+    call("RANGE") {
+      // scalar-position range(n)/range(a, b): end-EXCLUSIVE list
+      // (empty when the range is void). Table-context ranges —
+      // both user-written FROM range(…) and the range() TVF the
+      // generate_series rewrite EMITS — must survive, so a range
+      // directly after FROM/JOIN is skipped. 3-arg (stepped)
+      // stays loud (sign-dependent end adjustment).
+      case c if {
+          val p = prevNonWs(c.toks, c.i)
+          !(p >= 0 && Set("FROM", "JOIN").contains(up(c.toks(p))))
+        } && (c.args.length == 1 || c.args.length == 2 ||
+          // 3-arg needs the step's sign at rewrite time (end-exclusive
+          // adjustment flips with it) — literal steps only, the rest
+          // stay loud
+          (c.args.length == 3 && scala.util.Try(c.arg(2).toLong).toOption.exists(_ != 0))) =>
+        // typed empty: slice of a 1-element sequence keeps the int
+        // element type (a bare array() would be ARRAY<STRING>)
+        if (c.args.length == 3) {
+          val (a, b) = (c.arg(0), c.arg(1))
+          val step = c.arg(2).toLong
+          val (empty, end) =
+            if (step > 0) (s"($b) <= ($a)", s"($b) - 1")
+            else (s"($b) >= ($a)", s"($b) + 1")
+          c.to(s"(CASE WHEN $empty THEN slice(sequence(($a), ($a)), 1, 0) ELSE sequence(($a), $end, $step) END)")
+        } else {
+          val (a, b) = if (c.args.length == 1) ("0", c.arg(0)) else (c.arg(0), c.arg(1))
+          c.to(s"(CASE WHEN ($b) <= ($a) THEN slice(sequence(($a), ($a)), 1, 0) ELSE sequence(($a), ($b) - 1) END)")
+        }
+    }
+    call("MAP_EXTRACT", "ELEMENT_AT") {
+      // DuckDB map_extract(m, k) → 1-element LIST ([] when absent) —
+      // the map-subscript wrap shape. element_at is MAP-ONLY in
+      // DuckDB and IS map_extract (r8 fuzz: it returned [1], the
+      // Spark passthrough returned the scalar — silent); list
+      // lookups spell list_element/list_extract → try_element_at
+      case c if c.args.length == 2 =>
+        val (m, k) = (c.arg(0), c.arg(1))
+        c.to(s"IF(map_contains_key(($m), ($k)), array(try_element_at(($m), ($k))), array())")
+    }
+    call("LIST_RESIZE", "ARRAY_RESIZE") {
+      // probe-pinned: pads with NULL (or the 3rd-arg fill) BEYOND the
+      // original length only, truncates, n = 0 -> []; Spark sequence
+      // errors on empty ranges, hence the guard
+      case c if c.args.length == 2 || c.args.length == 3 =>
+        val (l, n) = (c.arg(0), c.arg(1))
+        val fill = if (c.args.length == 3) c.arg(2) else "NULL"
+        c.to(s"(CASE WHEN ($n) <= 0 THEN slice(($l), 1, 0) ELSE " +
+          s"transform(sequence(1, CAST(($n) AS INT)), __g_i -> " +
+          s"CASE WHEN __g_i <= size(($l)) THEN try_element_at(($l), __g_i) ELSE ($fill) END) END)")
+    }
+    call("ENCODE", "DECODE") {
+      // DuckDB 1-arg UTF-8 string⇄blob conversions → Spark's
+      // charset forms
+      case c if c.args.length == 1 =>
+        c.to(s"${c.id.text.toLowerCase}(${c.arg(0)}, 'UTF-8')")
+    }
+    call("LIKE_ESCAPE", "ILIKE_ESCAPE", "NOT_LIKE_ESCAPE", "NOT_ILIKE_ESCAPE") {
+      // DuckDB function forms of LIKE … ESCAPE (probe-pinned);
+      // Spark supports both LIKE and ILIKE with ESCAPE natively
+      case c if c.args.length == 3 =>
+        val op = if (c.name.contains("ILIKE")) "ILIKE" else "LIKE"
+        val core = s"((${c.arg(0)}) $op (${c.arg(1)}) ESCAPE ${c.arg(2)})"
+        c.to(if (c.name.startsWith("NOT_")) s"(NOT $core)" else core)
+    }
+    call("PARSE_FILENAME") {
+      // last path component ('' after a trailing slash); optional
+      // trim_extension flag (probe: '/a/b/c.txt', true → 'c')
+      case c if c.args.length >= 1 && c.args.length <= 2 =>
+        val base = s"regexp_extract((${c.arg(0)}), '[^/]*$$', 0)"
+        // regexp_replace_first (the registered kernel), not Spark's
+        // global regexp_replace: idempotent under re-translation
+        // (the 3-arg REGEXP_REPLACE rewrite would convert it) and
+        // exactly DuckDB's first-match trim
+        c.to(if (c.args.length == 2 && c.arg(1).equalsIgnoreCase("true"))
+          s"regexp_replace_first($base, '\\.[^.]*$$', '')" else base)
+    }
+    call("LIST_TRANSFORM", "LIST_FILTER", "ARRAY_TRANSFORM", "ARRAY_FILTER",
+        "LIST_APPLY", "ARRAY_APPLY", "APPLY", "TRANSFORM", "FILTER") {
+      // two-parameter lambdas: DuckDB's element index is 1-BASED,
+      // Spark's is 0-based — a silent off-by-one through a plain
+      // rename (probe: list_transform([10,20], (x,i) -> x+i) is
+      // [11,22] there, [10,21] here). The index param is renamed to
+      // a marker and every body use shifted by +1; the marker keeps
+      // the fixpoint loop from re-shifting.
+      case c if c.args.length == 2 && {
+          val shape = c.sig(1)
+          shape.length > 6 && shape(0) == Punct("(") &&
+            shape(1).isInstanceOf[Ident] && shape(2) == Punct(",") &&
+            shape(3).isInstanceOf[Ident] && shape(4) == Punct(")") &&
+            shape(5) == Punct("->") &&
+            // never re-shift our own generated lambdas (grade_up etc.
+            // emit Spark-0-based __g_* index params by intent)
+            !shape(3).text.startsWith("__g_")
+        } =>
+        val lam = c.args(1).dropWhile(isWs)
+        val shape = lam.filterNot(isWs)
+        val xName = shape(1).text
+        val iName = shape(3).text
+        // unique marker per rewrite: a FIXED name would make a
+        // nested lambda's renamed index capture the outer
+        // reference (review finding)
+        val marker = s"__g_ix${c.scope.nextLambdaIx()}"
+        val arrowAt = lam.indexWhere(_ == Punct("->"))
+        val body = lam.slice(arrowAt + 1, lam.length)
+        // shadow guard: from the first NESTED lambda re-declaring
+        // the same index name, stop substituting (found by
+        // pre-scan so the declaration tokens themselves are never
+        // touched) — leftover outer `i` references past it fail
+        // LOUDLY at analysis instead of silently rebinding
+        val nw = body.indices.filter(k => !isWs(body(k)))
+        var shadowStart = Int.MaxValue
+        var w = 0
+        while (w + 5 < nw.length && shadowStart == Int.MaxValue) {
+          val Seq(a, b2, c2, d, e2, f) =
+            (w to w + 5).map(j => body(nw(j)))
+          if (a == Punct("(") && b2.isInstanceOf[Ident] &&
+              c2 == Punct(",") && d.isInstanceOf[Ident] &&
+              d.text.equalsIgnoreCase(iName) && e2 == Punct(")") &&
+              f == Punct("->"))
+            shadowStart = nw(w)
+          w += 1
+        }
+        val shifted = body.zipWithIndex.map { case (t2, k) =>
+          t2 match {
+            case b: Ident if k < shadowStart &&
+                b.text.equalsIgnoreCase(iName) &&
+                !(k > 0 && body.slice(0, k).reverse.find(!isWs(_))
+                  .contains(Punct("."))) => Ident(s"($marker + 1)")
+            case other => other
+          }
+        }
+        c.to(s"${c.id.text}(${c.arg(0)}, ($xName, $marker) -> ${render(shifted).trim})")
+    }
+    call("LIST_SORT", "ARRAY_SORT") {
+      // DuckDB 1/2/3-arg order forms (probe-pinned: default and
+      // 'ASC' are NULLS LAST; 'DESC' keeps NULLS LAST) → the
+      // graft_list_sort kernel (r15): one pinned semantics for
+      // flat AND nested element types — duck ranks inner NULLs
+      // HIGH where the previous array_sort/sort_array emissions
+      // kept Spark's NULL-low element ordering. A 2-arg form
+      // whose second arg is NOT a string literal is Spark's
+      // array_sort(l, lambda) comparator spelling — left alone.
+      case c if c.args.length <= 3 && c.args.indices.tail.forall(k => c.sig(k) match {
+          case Vector(_: Str) => true
+          case _ => false
+        }) =>
+        val lits = c.args.indices.tail.map(k => c.sig(k).head.asInstanceOf[Str].value.toUpperCase.trim)
+        val desc = lits.headOption.exists(_.startsWith("DESC"))
+        val nullsFirst = lits.lift(1).exists(_.contains("FIRST"))
+        c.to(s"graft_list_sort(${c.arg(0)}, $desc, $nullsFirst)")
+    }
+    call("STRUCT_INSERT") {
+      // struct_insert(s, a := v, …) → chained UpdateFields kernel
+      // (appends fields in argument order, DuckDB-identical)
+      case c if c.args.length >= 2 =>
+        val named = c.args.tail.map { arg =>
+          val at = arg.indexWhere(t => t == Punct(":="))
+          if (at <= 0) None
+          else arg.slice(0, at).filterNot(isWs) match {
+            case Vector(n: Ident) => Some((n.text, render(arg.slice(at + 1, arg.length)).trim))
+            case _ => None
+          }
+        }
+        if (named.forall(_.isDefined))
+          c.to(named.flatten.foldLeft(s"(${c.arg(0)})") { case (acc, (n, v)) =>
+            s"graft_struct_insert($acc, '$n', ($v))"
+          })
+        else None
+    }
+    call("UNNEST") {
+      // unnest(x, recursive := true) → explode(flatten(x)) — exact
+      // for two-level lists (deeper nesting fails loudly on
+      // flatten's type check; struct-unnesting not supported)
+      case c if c.args.length == 2 =>
+        val flag = c.arg(1).toUpperCase.replaceAll("\\s+", "")
+        if (flag.startsWith("RECURSIVE:=TRUE")) c.to(s"explode(flatten(${c.arg(0)}))")
+        // r14 nested scout: the explicit non-recursive spelling is
+        // plain unnest — drop the flag (duck's default)
+        else if (flag.startsWith("RECURSIVE:=FALSE")) c.to(s"unnest(${c.arg(0)})")
+        else None
+    }
+    call("PLUS", "MINUS", "MULTIPLY", "DIVIDE", "INTDIVORZERO") {
+      // ClickHouse arithmetic function forms (chsql). divide is float
+      // division — exactly Spark's `/`; intDivOrZero guards b = 0.
+      case c if c.args.length == 2 =>
+        val (a, b) = (c.arg(0), c.arg(1))
+        c.to(c.name match {
+          case "PLUS" => s"(($a) + ($b))"
+          case "MINUS" => s"(($a) - ($b))"
+          case "MULTIPLY" => s"(($a) * ($b))"
+          case "DIVIDE" => s"(($a) / ($b))"
+          case _ => s"(CASE WHEN ($b) = 0 THEN 0 ELSE ($a) DIV ($b) END)"
+        })
+    }
+    call("POSITIONCASEINSENSITIVE") {
+      // ClickHouse positionCaseInsensitive(haystack, needle), 1-based
+      case c if c.args.length == 2 =>
+        c.to(s"instr(lower(${c.arg(0)}), lower(${c.arg(1)}))")
+    }
+    call("MULTISEARCHANY") {
+      // ClickHouse multiSearchAny(haystack, [needles]) → UInt8 0/1
+      case c if c.args.length == 2 =>
+        c.to(s"(CASE WHEN exists((${c.arg(1)}), __g_n -> instr((${c.arg(0)}), __g_n) > 0) THEN 1 ELSE 0 END)")
+    }
+    call("TOYYYYMMDDHHMMSS") {
+      case c if c.args.length == 1 =>
+        val e = c.arg(0)
+        c.to(s"(CAST(year($e) AS BIGINT) * 10000000000 + month($e) * 100000000 + " +
+          s"day($e) * 1000000 + hour($e) * 10000 + minute($e) * 100 + second($e))")
+    }
+    call("IPV4NUMTOSTRING") {
+      // big-endian octets of a UInt32
+      case c if c.args.length == 1 =>
+        val n = c.arg(0)
+        c.to(s"concat_ws('.', CAST(($n) DIV 16777216 % 256 AS STRING), " +
+          s"CAST(($n) DIV 65536 % 256 AS STRING), " +
+          s"CAST(($n) DIV 256 % 256 AS STRING), CAST(($n) % 256 AS STRING))")
+    }
+    call("IPV4STRINGTONUM") {
+      case c if c.args.length == 1 =>
+        c.to(s"aggregate(split((${c.arg(0)}), '\\.'), " +
+          s"CAST(0 AS BIGINT), (__g_a, __g_x) -> __g_a * 256 + CAST(__g_x AS BIGINT))")
+    }
+    call("SPLITBYSTRING") {
+      // ClickHouse splitByString(sep, s) → split(s, quoted-sep)
+      case c if c.args.length == 2 && (c.sig(0) match {
+          case Vector(_: Str) => true
+          case _ => false
+        }) =>
+        val sep = c.sig(0).head.asInstanceOf[Str]
+        c.to(s"split(${c.arg(1)}, '${regexLiteralSep(sep.value)}')")
+    }
+    call("TO_TIMESTAMP") {
+      // DuckDB to_timestamp is numeric-seconds only (strings go
+      // through strptime) — exactly Spark's timestamp_seconds incl.
+      // fractions. 1-arg only: the 2-arg to_timestamp(s, fmt) the
+      // STRPTIME rewrite emits is already Spark semantics.
+      case c if c.args.length == 1 => c.to(s"timestamp_seconds(${c.arg(0)})")
+    }
+    call("REGEXP_EXTRACT") {
+      // DuckDB's 2-arg default is group 0 (the whole match); Spark's
+      // is group 1 — a silent divergence without the explicit 0.
+      // The 3-arg name-list form returns a STRUCT of groups 1..n.
+      case c if c.args.length == 2 =>
+        c.to(s"regexp_extract(${c.arg(0)}, ${c.arg(1)}, 0)")
+      case c if c.args.length == 3 && {
+          val third = c.sig(2)
+          // rewriteArrayLiterals runs first, so ['w','d'] arrives as
+          // array('w','d'); accept the raw bracket form too
+          (third.headOption.contains(Punct("[")) ||
+            third.headOption.exists(t => up(t) == "ARRAY")) &&
+            third.count(_.isInstanceOf[Str]) >= 1
+        } =>
+        val names = c.sig(2).collect { case st: Str => st.value }
+        val fields = names.zipWithIndex.map { case (n, gi) =>
+          s"'$n', regexp_extract(${c.arg(0)}, ${c.arg(1)}, ${gi + 1})"
+        }.mkString(", ")
+        c.to(s"named_struct($fields)")
+    }
+    call("LIST_GRADE_UP", "ARRAY_GRADE_UP", "GRADE_UP") {
+      // DuckDB list_grade_up: 1-based positions in ascending order,
+      // NULLS LAST, ties stable (probe: [10,NULL,10,5] → [4,1,3,2]).
+      // Sort key rides a (is-null, value, position) struct: boolean
+      // false<true puts NULLs last, position keeps ties stable.
+      case c if c.args.length == 1 =>
+        c.to(s"transform(array_sort(transform((${c.arg(0)}), (__g_x, __g_i) -> " +
+          s"named_struct('n', (__g_x IS NULL), 'v', __g_x, 'p', __g_i + 1))), " +
+          s"__g_s -> __g_s.p)")
+    }
+    call("LIST_ANY_VALUE") {
+      // first non-NULL element; all-NULL / empty → NULL (probe)
+      case c if c.args.length == 1 =>
+        c.to(s"try_element_at(filter((${c.arg(0)}), __g_x -> __g_x IS NOT NULL), 1)")
+    }
+    call("LIST_SELECT", "ARRAY_SELECT") {
+      // 1-based gather; 0, negative, and out-of-range indices → NULL
+      // (probe) — Spark's try_element_at would wrap negatives, so
+      // guard below 1 explicitly
+      case c if c.args.length == 2 =>
+        c.to(s"transform((${c.arg(1)}), __g_i -> CASE WHEN __g_i < 1 THEN NULL " +
+          s"ELSE try_element_at((${c.arg(0)}), CAST(__g_i AS INT)) END)")
+    }
+    call("LIST_WHERE", "ARRAY_WHERE") {
+      // boolean-mask gather (probe: [10,20,30],[t,f,t] → [10,30]).
+      // DuckDB errors on NULL mask elements; the filter form drops
+      // them — loud-vs-silent divergence documented in SURVEY §2.12.
+      case c if c.args.length == 2 =>
+        c.to(s"transform(filter(zip_with((${c.arg(0)}), (${c.arg(1)}), (__g_x, __g_m) -> " +
+          s"named_struct('v', __g_x, 'k', __g_m)), __g_s -> __g_s.k), " +
+          s"__g_t -> __g_t.v)")
+    }
+    call("TO_JSON", "ROW_TO_JSON", "ARRAY_TO_JSON") {
+      // DuckDB to_json keeps NULL struct fields ({"a":null}); Spark's
+      // to_json DROPS them by default — inject
+      // ignoreNullFields=false. One-arg calls only: the re-lexed
+      // 2-arg result no longer matches, so the fixpoint loop can't
+      // re-fire. (DuckDB scalar to_json('s') → '"s"' stays a
+      // declared gap: Spark's to_json takes only struct/map/array.)
+      case c if c.args.length == 1 =>
+        c.to(s"to_json(${c.arg(0)}, map('ignoreNullFields', 'false'))")
+    }
+    call("JSON_GROUP_ARRAY") {
+      // DuckDB macro: json_group_array(e) = to_json(list(e)). NULL
+      // elements survive in DuckDB's list but Spark's collect_list
+      // drops them — ride each value inside a never-NULL struct
+      // (the rewriteOrderedArrayAgg trick), then unwrap.
+      case c if c.args.length == 1 =>
+        c.to(s"to_json(transform(collect_list(named_struct('v', (${c.arg(0)}))), __g_j -> __g_j.v), map('ignoreNullFields', 'false'))")
+    }
+    call("JSON_GROUP_OBJECT") {
+      // DuckDB macro: json_group_object(k, v) = to_json(map built in
+      // input order). Spark twin: entries collected as structs (never
+      // NULL, so NULL values survive), then map_from_entries.
+      case c if c.args.length == 2 =>
+        c.to(s"to_json(map_from_entries(collect_list(named_struct('key', (${c.arg(0)}), 'value', (${c.arg(1)})))), map('ignoreNullFields', 'false'))")
+    }
+    call("SHA256") {
+      // DuckDB sha256(s) and Spark sha2(s, 256) both emit lowercase
+      // hex (probe-verified incl. empty string)
+      case c if c.args.length == 1 => c.to(s"sha2(${c.arg(0)}, 256)")
+    }
+    call("LIST_REVERSE_SORT", "ARRAY_REVERSE_SORT") {
+      // DuckDB list_reverse_sort: descending, NULLs last (probe:
+      // [3,NULL,1] -> [3,1,NULL]) → the graft_list_sort kernel
+      // (r15, duck's NULL-high element order for nested elements)
+      case c if c.args.length == 1 => c.to(s"graft_list_sort(${c.arg(0)}, true, false)")
+    }
+    call("LIST_COSINE_SIMILARITY", "LIST_INNER_PRODUCT", "LIST_DOT_PRODUCT",
+        "ARRAY_COSINE_SIMILARITY", "ARRAY_INNER_PRODUCT", "ARRAY_DOT_PRODUCT",
+        "LIST_DISTANCE", "ARRAY_DISTANCE") {
+      // vector kernels over generic numeric lists → double-math
+      // higher-order forms (the codegen cosine_sim kernel is the
+      // ARRAY<FLOAT> hot path; these translate the DuckDB spellings
+      // at full double precision). Sequential accumulation in both
+      // engines; declared queries quantize to micro units.
+      case c if c.args.length == 2 =>
+        val (a, b) = (c.arg(0), c.arg(1))
+        def dot(x: String, y: String) =
+          s"aggregate(zip_with($x, $y, (__gv_x, __gv_y) -> CAST(__gv_x AS DOUBLE) * CAST(__gv_y AS DOUBLE)), " +
+            s"CAST(0 AS DOUBLE), (__gv_a, __gv_v) -> __gv_a + __gv_v)"
+        def dist(x: String, y: String) =
+          s"aggregate(zip_with($x, $y, (__gv_x, __gv_y) -> " +
+            s"(CAST(__gv_x AS DOUBLE) - CAST(__gv_y AS DOUBLE)) * (CAST(__gv_x AS DOUBLE) - CAST(__gv_y AS DOUBLE))), " +
+            s"CAST(0 AS DOUBLE), (__gv_a, __gv_v) -> __gv_a + __gv_v)"
+        c.to(
+          if (c.name.endsWith("COSINE_SIMILARITY"))
+            s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
+          else if (c.name.endsWith("DISTANCE")) s"sqrt(${dist(a, b)})"
+          else dot(a, b))
+    }
+    call("SUMIF", "AVGIF", "MINIF", "MAXIF", "COUNTIF") {
+      // ClickHouse conditional aggregates xIf(expr, cond) →
+      // agg(expr) FILTER (WHERE cond) — Spark's native filtered
+      // aggregation (codegen'd, partial-agg friendly). DuckDB's own
+      // countif(cond) is 1-arg and name-mapped; the ClickHouse xIf
+      // family here is the 2-arg (expr, cond) form
+      case c if c.args.length == 2 =>
+        c.to(s"${c.name.stripSuffix("IF").toLowerCase}(${c.arg(0)}) FILTER (WHERE ${c.arg(1)})")
+    }
+    call("MULTIIF") {
+      // ClickHouse multiIf(c1, v1, ..., else) → CASE chain
+      case c if c.args.length >= 3 && c.args.length % 2 == 1 =>
+        val pairs = (0 until c.args.length - 1 by 2).map { k =>
+          s"WHEN ${c.arg(k)} THEN ${c.arg(k + 1)}"
+        }.mkString(" ")
+        c.to(s"(CASE $pairs ELSE ${c.arg(c.args.length - 1)} END)")
+    }
+    call(Seq("DAY", "MONTH", "YEAR", "HOUR", "MINUTE", "QUARTER", "WEEK")
+        .map("TOSTARTOF" + _): _*) {
+      // ClickHouse toStartOfX(d) → date_trunc('X', d); toStartOfWeek
+      // default mode 0 starts SUNDAY (Spark/DuckDB week = Monday) →
+      // shifted trunc. r12: MONTH/QUARTER/YEAR return Date in
+      // ClickHouse → pre-wrapped CAST(… AS DATE) (also what
+      // rewriteDateTruncShape would produce — emitting it here
+      // keeps the fixpoint); DAY returns DateTime there → the
+      // ENCLOSING CAST(… AS TIMESTAMP) sentinel opts out of the
+      // day-or-coarser DATE rewrite (r13; no-op cast, folded by
+      // SimplifyCasts).
+      case c if c.args.length == 1 =>
+        val d = c.arg(0)
+        c.to(c.name.stripPrefix("TOSTARTOF") match {
+          case "WEEK" =>
+            s"date_sub(CAST(date_trunc('WEEK', date_add($d, 1)) AS DATE), 1)"
+          case unit @ ("MONTH" | "QUARTER" | "YEAR") =>
+            s"CAST(date_trunc('$unit', $d) AS DATE)"
+          case "DAY" =>
+            s"CAST(date_trunc('DAY', CAST(($d) AS TIMESTAMP)) AS TIMESTAMP)"
+          case unit => s"date_trunc('$unit', $d)"
+        })
+    }
+    call("TOYYYYMM", "TOYYYYMMDD") {
+      case c if c.args.length == 1 =>
+        val d = c.arg(0)
+        c.to(if (c.name == "TOYYYYMM") s"(year($d) * 100 + month($d))"
+          else s"(year($d) * 10000 + month($d) * 100 + day($d))")
+    }
+    call("TODAYOFWEEK") {
+      // ClickHouse: Monday=1..Sunday=7; Spark dayofweek: Sunday=1
+      case c if c.args.length == 1 => c.to(s"(((graft_dow(${c.arg(0)}) + 6) % 7) + 1)")
+    }
+    call("POSITION") {
+      // ClickHouse position(haystack, needle) — Spark's 2-arg
+      // position() takes (substr, str), REVERSED; instr has the CH
+      // order. SQL-standard position(x IN y) passes through untouched.
+      case c if c.args.length == 2 && !c.args.exists(_.exists {
+          case i2: Ident => i2.upper == "IN"; case _ => false }) =>
+        c.to(s"instr(${c.arg(0)}, ${c.arg(1)})")
+    }
+    call("FIRST", "LAST") {
+      // DuckDB `first(e ORDER BY k [DESC])` → min_by/max_by (probe:
+      // first ORDER BY ≡ min_by, last ≡ max_by; DESC swaps). Ties are
+      // arbitrary in both engines — declared queries use unique keys.
+      case c if c.args.length == 1 && c.args(0).exists(t => up(t) == "ORDER") =>
+        val arg = c.args(0)
+        val obIdx = arg.indexWhere(t => up(t) == "ORDER")
+        val byIdx = arg.indices.find(j => j > obIdx && up(arg(j)) == "BY").getOrElse(-1)
+        if (byIdx > 0) {
+          val e = render(arg.take(obIdx)).trim
+          var key = arg.drop(byIdx + 1)
+          val last = key.reverse.find(!isWs(_)).map(up)
+          val isDesc = last.contains("DESC")
+          if (isDesc || last.contains("ASC")) key = key.take(key.lastIndexWhere(!isWs(_)))
+          val fn = (c.name, isDesc) match {
+            case ("FIRST", false) | ("LAST", true) => "min_by"
+            case _ => "max_by"
+          }
+          c.to(s"$fn($e, ${render(key).trim})")
+        } else None
+    }
+    call("SKEWNESS", "KURTOSIS") {
+      // SILENT same-name divergence closed (r7): DuckDB's skewness/
+      // kurtosis are SAMPLE statistics (G1 / excess G2), Spark's are
+      // population (g1 / excess g2). Exact conversion:
+      //   G1 = g1 · √(n(n−1)) / (n−2)          [NULL below n=3]
+      //   G2 = ((n+1)·g2 + 6) · (n−1) / ((n−2)(n−3))   [NULL below n=4]
+      // (both probe-verified value-exact on DuckDB 1.0; DuckDB
+      // returns NULL at the small-n edges, which the CASE mirrors)
+      case c if c.args.length == 1 =>
+        val e = c.arg(0)
+        c.to(
+          if (c.name == "SKEWNESS")
+            s"(CASE WHEN count($e) < 3 THEN CAST(NULL AS DOUBLE) " +
+              s"ELSE graft_skewness_g1($e) * sqrt(count($e) * (count($e) - 1)) / (count($e) - 2) END)"
+          else
+            s"(CASE WHEN count($e) < 4 THEN CAST(NULL AS DOUBLE) " +
+              s"ELSE ((count($e) + 1) * graft_kurtosis_g2($e) + 6) * (count($e) - 1) / ((count($e) - 2) * (count($e) - 3)) END)")
+    }
+    call("JACCARD") {
+      // DuckDB jaccard: case-sensitive CHARACTER-SET Jaccard
+      // (multiset collapses: jaccard('aab','ab') = 1.0, probed) →
+      // intersect/union over split(s, ''). DuckDB errors on empty
+      // inputs ("argument too short"); this form returns a value —
+      // error-path-only divergence.
+      case c if c.args.length == 2 =>
+        val (a, b) = (c.arg(0), c.arg(1))
+        c.to(s"(CAST(size(array_intersect(split($a, ''), split($b, ''))) AS DOUBLE)" +
+          s" / size(array_union(split($a, ''), split($b, ''))))")
+    }
+    call("HAMMING", "MISMATCHES") {
+      // DuckDB hamming/mismatches: positionwise differing-BYTE
+      // count (r14 str fuzz: 'éa' vs 'Xa' errors in duck — 3 vs 2
+      // BYTES — where the old char-split emission compared 2-char
+      // strings), ERROR on unequal byte lengths → NULL here
+      // (error-path divergence only; equal-byte-length inputs agree)
+      case c if c.args.length == 2 => c.to(s"graft_mismatches((${c.arg(0)}), (${c.arg(1)}))")
+    }
+    call("TRUNC") {
+      // 1-arg numeric trunc (toward zero) — Spark's trunc is
+      // date-only; emit the floor/ceil CASE at DOUBLE. DuckDB's
+      // DECIMAL-in → DECIMAL-out stays a declared-cast concern.
+      // isnan/huge guards (r12 num fuzz): floor/ceil return LONG
+      // in Spark — |x| > 2^63 ANSI-overflowed and NaN/inf threw
+      // where duck passes them through; doubles at |x| >= 2^53
+      // are already integral
+      case c if c.args.length == 1 =>
+        val x = c.arg(0)
+        c.to(s"CAST(CASE WHEN isnan($x) OR abs($x) >= 9007199254740992e0 THEN ($x) " +
+          s"WHEN ($x) >= 0 THEN floor($x) ELSE ceil($x) END AS DOUBLE)")
+    }
+    call("SIGN") {
+      // r12 num fuzz: duck sign() is an INTEGER -1/0/1 — and
+      // sign(NaN) = 0 — where Spark's returns DOUBLE ±1.0/NaN (a
+      // CAST of the NaN then ANSI-throws, and Spark orders NaN
+      // above zero so CASE comparisons mislabel it 1). Kernel
+      // emission: a CASE splice was non-idempotent (the int-cast
+      // rounding pass wrapped its head on re-translation);
+      // GRAFT_SIGN is integralFns-listed so CAST(sign(x) AS
+      // BIGINT) stays rounding-free.
+      case c if c.args.length == 1 => c.to(s"graft_sign(${c.arg(0)})")
+    }
+    call("ABS") {
+      // r13 (VERDICT r12 #5, closing the num-mode allowlist
+      // residual): duck types `-2147483648` BIGINT where Spark
+      // types it INT and abs() ANSI-overflows — graft_abs widens
+      // BYTE/SHORT/INT one step so the type-min is representable,
+      // and throws on LONG min exactly where duck errors. The
+      // trunc/even/isinf guard emissions in THIS pass also get
+      // captured on rescan (double operands — Math.abs either
+      // way), which keeps the translate fixpoint.
+      case c if c.args.length == 1 => c.to(s"graft_abs(${c.arg(0)})")
+    }
+    call("ROUND") {
+      // r13 dec fuzz (num-mode probe 34): duck's round() over
+      // DOUBLE is `std::round(x·10^n)/10^n` — half-away on the FP
+      // PRODUCT — while Spark rounds the shortest decimal
+      // rendering via BigDecimal.HALF_UP; they disagree on every
+      // binary knife-edge (round(2.675e0, 2): duck 2.68, Spark
+      // 2.67; round(167634154485.89804, 4): duck ….8981, Spark
+      // ….8980). graft_round_dbl replicates duck bit-exactly and
+      // subsumes the r12 negative-digit NaN/±inf→0 guard (its
+      // negative branch returns 0 there, the positive branch
+      // passes the special through — both probed).
+      case c if c.args.length <= 2 && decimalRiskToks(c.args(0), c.scope.isDecimalCol) =>
+        // DECIMAL operand: Spark's decimal round already
+        // matches duck's exact half-away (r12-pinned); only
+        // bare negative-literal digits need the parenthesized
+        // re-emission (r13, r12 ADVICE: the old NaN guard
+        // coerced DECIMAL results to DOUBLE)
+        if (c.args.length == 2 && (c.sig(1) match {
+            case Vector(Punct("-"), _: Num) => true
+            case _ => false
+          })) c.to(s"round(${c.arg(0)}, (${c.arg(1)}))")
+        else None
+      // non-decimal → duck's FP round kernel, EXCEPT the
+      // integral-marker shapes: round-as-identity over a DIV
+      // or an integral-fn head — internal emissions rely on
+      // the round( spelling for the int-cast-rounding skip,
+      // and the value is already integral on both engines
+      case c if c.args.length <= 2 && !roundIntegralMarker(c.args(0)) =>
+        c.to(if (c.args.length == 2) s"graft_round_dbl(${c.arg(0)}, ${c.arg(1)})"
+          else s"graft_round_dbl(${c.arg(0)})")
+    }
+    call("EVEN") {
+      // round away from zero to the next even (even(2.5)=4,
+      // even(-2.5)=-4, even(3)=4, probed); same isnan/huge guards
+      // as trunc (r12 num fuzz): ceil returns LONG;
+      // even(1.5e300)/even(inf) overflowed where duck passes
+      // through (|x| >= 2^53 doubles are integral with even spacing)
+      case c if c.args.length == 1 =>
+        val x = c.arg(0)
+        c.to(s"CAST(CASE WHEN isnan($x) OR abs($x) >= 9007199254740992e0 THEN ($x) " +
+          s"WHEN ($x) >= 0 THEN ceil(($x) / 2) * 2 " +
+          s"ELSE -(ceil(abs($x) / 2) * 2) END AS DOUBLE)")
+    }
+    call("ISINF", "ISFINITE") {
+      // Spark has isnan but no isinf/isfinite. NULL-input note:
+      // DuckDB's isnan(NULL) is NULL while Spark's is false — these
+      // two forms propagate NULL via the arithmetic, matching DuckDB.
+      case c if c.args.length == 1 =>
+        val x = c.arg(0)
+        c.to(if (c.name == "ISINF") s"(abs($x) = CAST('Infinity' AS DOUBLE))"
+          else s"(NOT isnan($x + CAST(0 AS DOUBLE)) AND abs($x) <> CAST('Infinity' AS DOUBLE))")
+    }
+    call("LEFT", "RIGHT") {
+      // DuckDB left/right accept NEGATIVE n ("all but the last/first
+      // |n|"); Spark's return '' there. Rewritten to substring CASE
+      // forms that agree on every n (probe-verified on: n<-len, -2,
+      // 0, 2, >len); substring spelling keeps the rewrite fixpoint.
+      case c if c.args.length == 2 =>
+        val (s0, n) = (c.arg(0), c.arg(1))
+        c.to(
+          if (c.name == "LEFT")
+            s"substring($s0, 1, CASE WHEN ($n) >= 0 THEN ($n) ELSE greatest(0, length($s0) + ($n)) END)"
+          else
+            s"substring($s0, CASE WHEN ($n) >= 0 THEN greatest(1, length($s0) - ($n) + 1) ELSE 1 - ($n) END)")
+    }
+    call("TO_BASE") {
+      case c if c.args.length == 2 => c.to(s"conv(${c.arg(0)}, 10, ${c.arg(1)})")
+    }
+    call("LIST_AGGREGATE", "LIST_AGGR", "ARRAY_AGGREGATE", "ARRAY_AGGR", "AGGREGATE") {
+      // list_aggregate(l, 'name' [, extra]) -> the matching array
+      // form. DuckDB element-aggregate semantics (r8, probe-pinned):
+      // NULL elements are SKIPPED ('count' of [1,NULL] is 1, sum of
+      // the empty/all-NULL list is NULL), string_agg joins with the
+      // given (or default ',') separator, first/last pick ends.
+      // Spark's own aggregate(l, init, merge) passes through: only a
+      // string-literal second argument names an element aggregate.
+      case c if c.name != "AGGREGATE" ||
+          (c.args.length >= 2 && c.sig(1).forall(_.isInstanceOf[Str])) =>
+        val fnLit = if (c.args.length >= 2) c.args(1).collectFirst { case s: Str => s.value } else None
+        val l = c.arg(0)
+        val two = c.args.length == 2
+        val nn = s"filter(($l), __g_n -> __g_n IS NOT NULL)"
+        val sumForm = s"aggregate($nn, CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE))"
+        fnLit.map(_.toLowerCase).collect {
+          case "min" if two => s"array_min($l)"
+          case "max" if two => s"array_max($l)"
+          case "count" if two => s"size($nn)"
+          case "sum" if two =>
+            s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE $sumForm END)"
+          case "avg" | "mean" if two =>
+            s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE ($sumForm / size($nn)) END)"
+          case "string_agg" =>
+            s"array_join($l, ${if (c.args.length >= 3) c.arg(2) else "','"})"
+          case "first" if two => s"try_element_at($l, 1)"
+          case "last" if two => s"try_element_at($l, -1)"
+        }.flatMap(c.to)
+    }
+    call("PRINTF") {
+      // r10 batch 7: Java's Formatter rejects DECIMAL values for the
+      // FLOAT conversions (%f/%e/%g threw IllegalFormatConversion
+      // where DuckDB formats them) — cast each float-specifier arg
+      // to DOUBLE, matching duck's coercion. %i is duck's alias for
+      // %d. Non-literal formats keep the plain name map.
+      case c if c.args.length >= 2 && (c.sig(0) match {
+          case Vector(_: Str) => true
+          case _ => false
+        }) =>
+        val fmt = c.sig(0).head.asInstanceOf[Str].value.replace("%i", "%d")
+        val convs = "%[-+ #0]*\\d*(?:\\.\\d+)?([a-zA-Z%])".r
+          .findAllMatchIn(fmt).map(_.group(1)).filterNot(_ == "%").toSeq
+        val rest = (1 until c.args.length).map(k => (c.arg(k), k - 1)).map {
+          case (a, ix) if ix < convs.length && "feg".contains(convs(ix)) =>
+            s"CAST(($a) AS DOUBLE)"
+          case (a, _) => a
+        }
+        c.to(s"format_string(${sparkStrLit(fmt)}, ${rest.mkString(", ")})")
+    }
+    call("FORMAT") {
+      // fmt-style format('{} x {}', ...) -> format_string('%s x %s',
+      // ...) when the first arg is a literal of {} / {N} holes, plus
+      // (r10 batch 7) the spec forms {:.Nf} / {:d} / {:s} and
+      // (r10 batch 9) alignment/zero-pad/width {:>6} {:<8s} {:06d}
+      // {:8.3f}; center-align and custom fills stay loud
+      case c if c.args.length >= 2 && (c.sig(0) match {
+          case Vector(s: Str) => !s.value.contains("%") &&
+            "\\{:([^}]*)\\}".r.findAllMatchIn(s.value)
+              .forall(m => fmtSpecToJava(m.group(1)).isDefined)
+          case _ => false
+        }) =>
+        val fmt = c.sig(0).head.asInstanceOf[Str].value
+        // collect per-hole conversions in order for arg casting
+        val holeRe = "\\{(\\d*)(?::([^}]*))?\\}".r
+        val convs = holeRe.findAllMatchIn(fmt)
+          .map(m => fmtSpecToJava(Option(m.group(2)).getOrElse("")).getOrElse("s"))
+          .toSeq
+        val jfmt = holeRe.replaceAllIn(fmt, m => {
+          val spec = Option(m.group(2)).getOrElse("")
+          val body = fmtSpecToJava(spec).getOrElse("s")
+          if (m.group(1).isEmpty) "%" + body
+          else s"%${m.group(1).toInt + 1}\\$$$body"
+        })
+        val rest = (1 until c.args.length).map(k => (c.arg(k), k - 1)).map {
+          case (a, ix) if ix < convs.length && convs(ix).endsWith("f") =>
+            s"CAST(($a) AS DOUBLE)"
+          case (a, _) => a
+        }
+        c.to(s"format_string(${sparkStrLit(jfmt)}, ${rest.mkString(", ")})")
+    }
+    call("LIST_PREPEND") {
+      // DuckDB list_prepend(element, list) vs Spark
+      // array_prepend(list, element): swap the arguments (the reason
+      // a name-only fnMap entry was deliberately never added)
+      case c if c.args.length == 2 => c.to(s"array_prepend((${c.arg(1)}), (${c.arg(0)}))")
+    }
+    call("REGEXP_MATCHES") {
+      // r10 batch 9: duck's options string → Java inline flags.
+      // i/m/s carry over; c (case-sensitive) is both engines'
+      // default. Other options stay loud — including 'g', which
+      // duck itself rejects on regexp_matches.
+      case c if c.args.length == 3 && (c.sig(2) match {
+          case Vector(s: Str) => s.value.forall("imsc".contains(_))
+          case _ => false
+        }) =>
+        val flags = c.sig(2).head.asInstanceOf[Str].value.filter("ims".contains(_))
+        val pat = if (flags.isEmpty) s"(${c.arg(1)})" else s"'(?$flags)' || (${c.arg(1)})"
+        c.to(s"rlike((${c.arg(0)}), $pat)")
+    }
+    call("REGEXP_EXTRACT_ALL") {
+      // same name, different 2-arg default: DuckDB extracts group 0
+      // (the whole match), Spark group 1 — pin the 0 explicitly
+      case c if c.args.length == 2 => c.to(s"regexp_extract_all(${c.arg(0)}, ${c.arg(1)}, 0)")
+    }
+    call("DAYNAME", "MONTHNAME") {
+      // full English names in both engines; Spark spells them via
+      // date_format patterns (EEEE / MMMM) — probe-verified equal
+      case c =>
+        val fmt = if (c.name == "DAYNAME") "EEEE" else "MMMM"
+        c.to(s"date_format(${render(c.inner).trim}, '$fmt')")
+    }
+    call("LIST_REDUCE", "ARRAY_REDUCE") {
+      // DuckDB folds left with the FIRST element as the seed (an
+      // empty list errors there; NULL seed here — documented
+      // divergence, declared queries keep lists non-empty)
+      case c if c.args.length == 2 =>
+        val l = c.arg(0)
+        c.to(s"reduce(slice(($l), 2, size($l) - 1), try_element_at(($l), 1), ${c.arg(1)})")
+    }
+    call("LIST_UNIQUE", "ARRAY_UNIQUE") {
+      // count of distinct NON-NULL elements (probe: list_unique(
+      // [1,2,2,NULL]) = 2 — DuckDB excludes NULL; Spark's
+      // array_distinct keeps it, so filter first). DuckDB returns
+      // UBIGINT; Spark's size is INT — declared queries CAST.
+      case c => c.to(s"size(graft_list_distinct(${render(c.inner).trim}))")
+    }
+    call("LIST_DISTINCT", "ARRAY_DISTINCT") {
+      // DuckDB's list_distinct AND its array_distinct alias DROP
+      // NULLs (probe on both: [1,2,2,NULL,NULL] → [2,1]); Spark's
+      // array_distinct keeps one NULL. graft_list_distinct is the
+      // registered native ArrayDistinct∘ArrayCompact — the alias
+      // spelling matters because this pass runs to FIXPOINT: a
+      // replacement containing `array_distinct` would re-match this
+      // very rule forever. (r7: the ARRAY_DISTINCT alias previously
+      // passed through to Spark's native fn, silently diverging on
+      // NULL-bearing lists.) Result ORDER is unspecified in DuckDB:
+      // declared queries wrap in list_sort before serializing.
+      case c => c.to(s"graft_list_distinct(${render(c.inner).trim})")
+    }
+    call("TIME_BUCKET") {
+      // time_bucket(width, ts[, offset|origin]) — DuckDB anchors
+      // fixed widths to 2000-01-03 00:00:00 (a Monday: 7-day
+      // buckets start Mondays) and month widths to 2000-01-01,
+      // flooring pre-origin inputs (probe: 1969-03-05 → 1969-03-04
+      // for 2-day buckets). pmod IS the floor arithmetic:
+      // bucket = t - pmod(t - origin, w). A 3rd INTERVAL arg
+      // shifts the origin; a 3rd DATE/TIMESTAMP arg replaces it
+      // (month widths use only its year+month — probe: origin
+      // 2000-02-15 buckets land on the 1st). DATE-typed input
+      // returns DATE in DuckDB: pinned for DATE literals / ::DATE
+      // casts; bare columns get the TIMESTAMP shape (documented
+      // rendering-class divergence, same class as date_trunc).
+      case c if (c.args.length == 2 || c.args.length == 3) &&
+          bucketWidth(c.args(0)).isDefined =>
+        val (wm, wus) = bucketWidth(c.args(0)).get
+        val ts = c.arg(1)
+        val dateIn = {
+          val sig = c.sig(1)
+          val r = ts.toUpperCase
+          (sig.headOption.exists(t => up(t) == "DATE") &&
+            sig.length == 2) ||
+            r.endsWith("::DATE") || r.matches("(?s).*AS\\s+DATE\\s*\\)\\s*$") ||
+            // r12 (VERDICT r11 #1): DATE-TYPED COLUMN inputs get the
+            // DATE result shape too — strict catalog resolution (the
+            // wrong shape on a name collision would be silent)
+            dateValuedSlice(c.args(1), 0, c.args(1).length - 1,
+              c.scope.isDateCol, strict = true)
+        }
+        val thirdIv: Option[(Long, Long)] =
+          if (c.args.length == 3) intervalWidth(c.args(2)) else None
+        val thirdOrigin: Option[String] =
+          if (c.args.length == 3 && thirdIv.isEmpty) Some(c.arg(2)) else None
+        // an offset must live on the same grid axis as the width; a
+        // cross-axis offset stays loud
+        if (thirdIv.exists { case (om, ous) => !((wus > 0 && om == 0) || (wm > 0 && ous == 0)) })
+          None
+        else if (wus > 0) {
+          val oExpr = thirdOrigin match {
+            case Some(org) => s"(unix_micros(CAST(($org) AS TIMESTAMP)))"
+            case None =>
+              val base = 946857600000000L // 2000-01-03 00:00:00 UTC
+              s"(${base + thirdIv.map(_._2).getOrElse(0L)})"
+          }
+          val t = s"unix_micros(CAST(($ts) AS TIMESTAMP))"
+          val bucket = s"timestamp_micros($t - pmod($t - $oExpr, $wus))"
+          c.to(if (dateIn) s"CAST($bucket AS DATE)" else bucket)
+        } else {
+          // month grid: bucket month-index arithmetic, day-of-month 1
+          val md0 = thirdOrigin match {
+            case Some(org) => s"(year(($org)) * 12 + month(($org)) - 1)"
+            case None => s"(${2000 * 12 + thirdIv.map(_._1).getOrElse(0L)})"
+          }
+          val md = s"(year(($ts)) * 12 + month(($ts)) - 1)"
+          val bm = s"($md - pmod($md - $md0, $wm))"
+          val d = s"make_date(CAST(round($bm DIV 12) AS INT), CAST(round($bm % 12 + 1) AS INT), 1)"
+          c.to(if (dateIn) d else s"CAST($d AS TIMESTAMP)")
+        }
+    }
+    call("DATE_SUB", "DATESUB") {
+      // DuckDB date_sub('part', a, b) counts COMPLETE parts from a
+      // to b, sign-symmetric, truncating toward zero (probes:
+      // ('hour', 10:00, +1d 09:59:59) = 23; ('month', Jan 31,
+      // Mar 30) = 1 but Mar 31 = 2 — interval-arithmetic clamping,
+      // NOT months_between's /31 day fractions, whose floor
+      // diverges on e.g. (Jan 30, Feb 29)). Fixed parts divide the
+      // microsecond span (BIGINT DIV truncates toward zero);
+      // month-class parts take the raw month-index diff and walk
+      // back one step when start+m0 months overshoots — a single
+      // step always suffices because month addition is monotonic.
+      // NOT Spark's 2-arg date_sub(date, days), which passes through.
+      case c if c.args.length == 3 && (c.sig(0) match {
+          case Vector(_: Str) => true
+          case _ => false
+        }) =>
+        val part = c.sig(0).head.asInstanceOf[Str].value.trim.toLowerCase
+        val (a, b) = (c.arg(1), c.arg(2))
+        val fixedUs: Option[Long] = part match {
+          case "microsecond" | "microseconds" | "us" => Some(1L)
+          case "millisecond" | "milliseconds" | "ms" => Some(1000L)
+          case "second" | "seconds" | "sec" | "secs" => Some(1000000L)
+          case "minute" | "minutes" | "min" | "mins" => Some(60000000L)
+          case "hour" | "hours" | "hr" | "hrs" => Some(3600000000L)
+          case "day" | "days" | "d" => Some(86400000000L)
+          case "week" | "weeks" | "w" => Some(604800000000L)
+          case _ => None
+        }
+        val monthsPer: Option[Long] = part match {
+          case "month" | "months" | "mon" | "mons" => Some(1L)
+          case "quarter" | "quarters" => Some(3L)
+          case "year" | "years" | "yr" | "yrs" | "y" => Some(12L)
+          case "decade" | "decades" => Some(120L)
+          case "century" | "centuries" => Some(1200L)
+          case "millennium" | "millennia" => Some(12000L)
+          case _ => None
+        }
+        if (fixedUs.isDefined)
+          c.to(s"((unix_micros(CAST(($b) AS TIMESTAMP)) - unix_micros(CAST(($a) AS TIMESTAMP))) DIV ${fixedUs.get})")
+        else monthsPer.flatMap { per =>
+          // probe-pinned direction contract: the complete-month count
+          // always steps forward FROM THE EARLIER endpoint (clamped
+          // month addition), then carries the sign — a backward walk
+          // from the later endpoint disagrees when clamping is
+          // asymmetric (('month', Feb 29, Jan 31) is -1: Jan 31 + 1mo
+          // clamps to Feb 29; Feb 29 - 1mo = Jan 29 would say 0).
+          val ta = s"CAST(($a) AS TIMESTAMP)"
+          val tb = s"CAST(($b) AS TIMESTAMP)"
+          val lo = s"least($ta, $tb)"
+          val hi = s"greatest($ta, $tb)"
+          // round() head keeps the emitted int cast out of the
+          // rounding-cast rewrite (identity on integrals) — idempotence
+          val m0 = s"(CAST(round(year($hi) - year($lo)) AS BIGINT) * 12 + month($hi) - month($lo))"
+          val adj = s"(CASE WHEN timestampadd(MONTH, CAST(round($m0) AS INT), $lo) > $hi " +
+            s"THEN $m0 - 1 ELSE $m0 END)"
+          val signed = s"(CASE WHEN $ta > $tb THEN -($adj) ELSE $adj END)"
+          c.to(if (per == 1L) signed
+            else s"((CASE WHEN $ta > $tb THEN -($adj DIV $per) ELSE ($adj DIV $per) END))")
+        } // unknown part name: stays loud
+    }
+    // a single-token JSON path argument `k`, normalized
+    def jsonPath(c: Call, k: Int): Option[String] =
+      if (c.args.length > k && c.sig(k).length == 1) normalizeJsonPath(c.sig(k).head) else None
+    call("JSON_EXTRACT", "JSON_EXTRACT_PATH") {
+      // DuckDB json_extract returns JSON (strings stay quoted:
+      // '"x"') — get_json_object is the TEXT form and silently
+      // unquoted (r9 batch-4 fuzz). to_json ∘ variant_get keeps
+      // the JSON rendering for every type; parse_json stays loud
+      // on malformed input exactly like DuckDB.
+      case c if c.args.length == 2 && jsonPath(c, 1).isDefined =>
+        c.to(s"to_json(variant_get(parse_json(${c.arg(0)}), ${jsonPath(c, 1).get}))")
+    }
+    call("JSON_EXTRACT_STRING", "JSON_EXTRACT_PATH_TEXT") {
+      // text form — get_json_object, with the path normalized
+      // (quoted keys / pointer / bare-key forms)
+      case c if c.args.length == 2 && jsonPath(c, 1).isDefined =>
+        c.to(s"get_json_object(${c.arg(0)}, ${jsonPath(c, 1).get})")
+    }
+    call("JSON_VALID") {
+      // NULL in → NULL; otherwise parseability (try_parse_json is
+      // NULL exactly on malformed input; a JSON 'null' is a
+      // non-NULL variant)
+      case c =>
+        val j = render(c.inner).trim
+        c.to(s"(CASE WHEN ($j) IS NULL THEN NULL ELSE try_parse_json($j) IS NOT NULL END)")
+    }
+    call("JSON_QUOTE") {
+      // JSON-encode one value: serialize {"g": v} and strip the
+      // 6-char prefix + closing brace (ignoreNullFields=false so
+      // NULL renders as the JSON null)
+      case c =>
+        val ser = s"to_json(named_struct('g', (${render(c.inner).trim})), map('ignoreNullFields', 'false'))"
+        c.to(s"substr($ser, 6, length($ser) - 6)")
+    }
+    call("JSON_ARRAY_LENGTH") {
+      // 2-arg path form → extract the array, then Spark's native
+      // 1-arg json_array_length
+      case c if c.args.length == 2 && jsonPath(c, 1).isDefined =>
+        c.to(s"json_array_length(get_json_object(${c.arg(0)}, ${jsonPath(c, 1).get}))")
+    }
+    call("FROM_JSON") {
+      // DuckDB from_json(j, structure) takes a JSON structure of
+      // type-name strings — Spark takes a DDL schema; the converted
+      // DDL never starts with {/[, so the emission isn't
+      // re-captured. Scalar structures ('"INTEGER"') stay loud.
+      case c if c.args.length == 2 && (c.sig(1) match {
+          case Vector(st: Str) =>
+            st.value.trim.headOption.exists(ch => ch == '{' || ch == '[') &&
+              jsonStructureToDdl(st.value).isDefined
+          case _ => false
+        }) =>
+        val ddl = jsonStructureToDdl(c.sig(1).head.asInstanceOf[Str].value).get
+        c.to(s"from_json(${c.arg(0)}, '$ddl')")
+    }
+    call("JSON") {
+      // json(x) validates + minifies — a variant round-trip does
+      // exactly that (loud on malformed input, like DuckDB)
+      case c if c.args.length == 1 => c.to(s"to_json(parse_json(${c.arg(0)}))")
+    }
+    call("JSON_TYPE") {
+      // first-character dispatch over the (extracted) JSON text —
+      // probe-pinned names: OBJECT/ARRAY/VARCHAR/BOOLEAN/NULL,
+      // UBIGINT for unsigned ints, BIGINT for negatives, DOUBLE
+      // when a . or exponent appears
+      case c if c.args.length == 1 || (c.args.length == 2 && jsonPath(c, 1).isDefined) =>
+        val j = if (c.args.length == 1) s"(${c.arg(0)})"
+          else s"to_json(variant_get(parse_json(${c.arg(0)}), ${jsonPath(c, 1).get}))"
+        c.to(s"(CASE WHEN $j IS NULL THEN NULL ELSE " +
+          s"CASE substr(ltrim($j), 1, 1) " +
+          s"WHEN '{' THEN 'OBJECT' WHEN '[' THEN 'ARRAY' " +
+          s"WHEN '\"' THEN 'VARCHAR' WHEN 't' THEN 'BOOLEAN' " +
+          s"WHEN 'f' THEN 'BOOLEAN' WHEN 'n' THEN 'NULL' " +
+          s"ELSE CASE WHEN ltrim($j) RLIKE '[.eE]' THEN 'DOUBLE' " +
+          s"WHEN substr(ltrim($j), 1, 1) = '-' THEN 'BIGINT' " +
+          s"ELSE 'UBIGINT' END END END)")
+    }
+    call("GROUPING") {
+      // DuckDB's multi-arg GROUPING is the bitmask (first argument
+      // highest bit) — Spark spells that grouping_id; 1-arg
+      // grouping passes through
+      case c if c.args.length >= 2 => c.to(s"grouping_id(${render(c.inner).trim})")
+    }
+    call("LIST_HAS_ALL", "ARRAY_HAS_ALL") {
+      case c if c.args.length == 2 => c.to(s"(size(array_except((${c.arg(1)}), (${c.arg(0)}))) = 0)")
+    }
+    call("GENERATE_SUBSCRIPTS") {
+      // generate_subscripts(l, 1) — the set-returning 1-based index
+      // generator (lists are 1-D in DuckDB; dim != 1 errors there and
+      // stays untouched → loud unknown-function on Spark).
+      case c if c.args.length == 2 && c.arg(1) == "1" =>
+        c.to(s"explode(sequence(1, size(${c.arg(0)})))")
+    }
+    call("STRUCT_EXTRACT") {
+      // struct_extract(s, 'name') → ($s).`name` for a literal field
+      // name (both engines resolve fields case-insensitively); a
+      // dynamic name or an exotic field name has no Spark spelling
+      // and stays untouched (loud).
+      case c if c.args.length == 2 && (c.args(1).find(!isWs(_)) match {
+          case Some(s0: Str) => s0.value.matches("[A-Za-z_][A-Za-z0-9_]*")
+          case _ => false
+        }) =>
+        c.to(s"((${c.arg(0)}).${c.args(1).find(!isWs(_)).get.asInstanceOf[Str].value})")
+    }
+    call("LIST_SLICE", "ARRAY_SLICE") {
+      // same 1-based inclusive semantics as the `l[a:b]` bracket
+      // syntax → the same guarded form (r5: previously emitted the
+      // unguarded slice, so list_slice(l, 4, 2) threw where the
+      // bracket spelling returned [])
+      case c if c.args.length == 3 => c.to(sliceForm(s"(${c.arg(0)})", c.arg(1), c.arg(2)))
+    }
+    call("TIMEZONE") {
+      // r10 batch 8, probe-pinned: duck timezone(zone, ts) over a
+      // NAIVE timestamp interprets ts in `zone` and renders it in
+      // the session zone (UTC) — exactly to_utc_timestamp. The
+      // TIMESTAMPTZ flavor INVERTS (convert the instant TO the
+      // zone); the engine has no TSTZ type, but the two common
+      // syntactic TSTZ producers are visible at token level (r12
+      // ts fuzz): a to_timestamp(…) argument and a NESTED
+      // timezone(…) argument (whose own emission computes the
+      // instant) — those dispatch to from_utc_timestamp,
+      // reproducing duck's nested-zone chains exactly. r13
+      // narrowed the residual class: date_diff now floor-grids
+      // TSTZ-flavored operands and chained AT TIME ZONE inverts
+      // via the containment scan below; what remains is the
+      // single pinned matrix cell (ts2.37) — a MIXED interval
+      // applied to a TSTZ value runs days-first in duck where
+      // naive runs months-first.
+      case c if c.args.length == 2 =>
+        // r13 (closing two allowlisted ts cells): CONTAINMENT scan,
+        // not a bare head match — a chained `(x AT TIME ZONE 'a') AT
+        // TIME ZONE 'b'` parenthesizes the inner producer, and duck
+        // COERCES mixed expressions to TSTZ anyway, so any producer
+        // in the slice means the operand is TSTZ-flavored (r14:
+        // CASE-condition regions masked — see tstzProducerToks)
+        val (z, x) = (c.arg(0), c.arg(1))
+        c.to(
+          if (tstzProducerToks(c.args(1))) s"from_utc_timestamp(CAST($x AS TIMESTAMP), $z)"
+          else s"to_utc_timestamp(CAST($x AS TIMESTAMP), $z)")
+    }
+    call("ARRAY_LENGTH") {
+      // r10 batch 8: duck's 2-arg array_length(l, 1) — dimension 1
+      // is the plain length; higher literal dims stay loud (duck
+      // errors on non-nested inputs there too)
+      case c if c.args.length == 2 && (c.sig(1) match {
+          case Vector(n: Num) => n.text == "1"
+          case _ => false
+        }) =>
+        c.to(s"size(${c.arg(0)})")
+    }
+    call("STRPTIME", "TRY_STRPTIME") {
+      // only rewrite when every '%'-literal in the call scans
+      // cleanly in parse mode — unknown or format-only specifiers
+      // leave the call untranslated (duck errors there too)
+      case c if c.inner.forall {
+          case s: Str if s.value.contains("%") => scanStrftime(s.value, parse = true).isDefined
+          case _ => true
+        } =>
+        val isTry = c.name == "TRY_STRPTIME"
+        val fmtIsLiteral = c.args.length == 2 && (c.sig(1) match {
+          case Vector(s: Str) => s.value.contains("%")
+          case _ => false
+        })
+        if (fmtIsLiteral) {
+          // convert ONLY the format argument (r13 full-gate rerun):
+          // the old whole-call-range map also converted %-literals
+          // belonging to NESTED strftime/strptime calls inside
+          // args(0) — their own rewrite then saw a %-free pattern,
+          // fell through to the DYNAMIC kernel, and fed it an
+          // already-JDK literal (a runtime parse error) — and a
+          // legitimate '%' in the DATA string would have been
+          // corrupted the same way. Token-level reconstruction
+          // leaves args(0) byte-identical.
+          val fmtStr = c.sig(1).head.asInstanceOf[Str]
+          val jdk = Str("'" + strptimeToJava(fmtStr.value).replace("'", "''") + "'")
+          // try_strptime → try_to_timestamp (r13): NULL on parse
+          // failure or out-of-range date, duck's split exactly
+          val fn = if (isTry) "try_to_timestamp" else "to_timestamp"
+          val repl = Vector(Ident(fn), Punct("(")) ++ c.args(0) ++
+            Vector(Punct(","), Ws(" "), jdk, Punct(")"))
+          Some(c.toks.patch(c.i, repl, c.close - c.i + 1))
+        } else if (c.args.length == 2) {
+          // DYNAMIC pattern (r13, VERDICT r12 #3 — the strftime
+          // pair's parse direction): the old fall-through renamed to
+          // to_timestamp(s, fmt_expr), feeding duck %-patterns to
+          // the JDK formatter per row — a SILENT wrong answer. Route
+          // through the graft_strptime runtime kernel (duck itself
+          // rejects non-constant formats — permissive superset with
+          // duck-faithful probe-pinned semantics).
+          val fn = if (isTry) "graft_strptime_try" else "graft_strptime"
+          c.to(s"$fn(${c.arg(0)}, ${c.arg(1)})")
+        } else {
+          // 1- or 3+-arg forms (duck's list-of-formats) stay loud
+          Some(c.toks.patch(c.i,
+            Seq(Ident(if (isTry) "try_to_timestamp" else "to_timestamp")), 1))
+        }
+    }
+    call("PARSE_PATH", "PARSE_DIRNAME") {
+      // r13 string scout (loud UNRESOLVED_ROUTINE before): duck's
+      // path parsers, probed matrix — parse_path keeps a rooted
+      // leading separator as its own '/' element and drops empties
+      // ('/a/b/c.txt' → ['/','a','b','c.txt'], 'a//b/' → ['a','b'],
+      // '' → [], '/' → ['/']); parse_dirname is the TOP-level
+      // directory ('/'-rooted → '/', 'a/b/c' → 'a', separator-free
+      // → ''). Default separator class is duck's both_slash; the
+      // 'system'/'forward_slash' literals map to '/' on this
+      // platform, 'backslash' to '\'. Verbatim literals
+      // (escapedStringLiterals=true) keep the regex char class exact.
+      case c if c.args.length <= 2 =>
+        val p = c.arg(0)
+        // regex class vs one-char literals: VERBATIM string literals
+        // (escapedStringLiterals=true) mean the REGEX text needs its
+        // backslash doubled ('[/\\]') while the one-character
+        // comparison literal is a single '\'. Plain OR comparisons,
+        // not IN — the IN-list rewrite would re-capture the emission.
+        // root chars compare as ASCII CODES: a bare '\' literal
+        // round-trips through encodeStrLiterals' chr(92), which the
+        // CHR rename re-captures on re-translation; ascii() compares
+        // are capture-proof
+        val sepClass: Option[(String, Seq[Int])] =
+          if (c.args.length == 1) Some(("[/\\\\]", Seq(47, 92)))
+          else c.sig(1) match {
+            case Vector(s: Str) => s.value match {
+              case "both_slash" => Some(("[/\\\\]", Seq(47, 92)))
+              case "system" | "forward_slash" => Some(("/", Seq(47)))
+              case "backslash" => Some(("\\\\", Seq(92)))
+              case _ => None
+            }
+            case _ => None
+          }
+        // capture-proof spellings only: concat() would take the
+        // STRING-concat rewrite, element_at() the duck map-subscript
+        // form — array_insert/get/regexp survive every later pass
+        sepClass.flatMap { case (re, roots) =>
+          val rootPred = roots.map(r => s"ascii(substr($p, 1, 1)) = $r").mkString("(", " OR ", ")")
+          c.to(
+            if (c.name == "PARSE_PATH")
+              s"(CASE WHEN $rootPred " +
+                s"THEN array_insert(filter(split($p, '$re'), __gpp -> __gpp <> ''), 1, substr($p, 1, 1)) " +
+                s"ELSE filter(split($p, '$re'), __gpp -> __gpp <> '') END)"
+            else
+              s"(CASE WHEN $rootPred THEN substr($p, 1, 1) " +
+                s"WHEN $p RLIKE '$re' THEN " +
+                s"get(filter(split($p, '$re'), __gpd -> __gpd <> ''), 0) " +
+                s"ELSE '' END)")
+        }
+    }
+    word("NOCASE") {
+      // r10 batch 7: DuckDB's NOCASE collation — Spark 4 spells
+      // the case-insensitive UTF8 collation UTF8_LCASE
+      case c if { val p = prevNonWs(c.toks, c.i); p >= 0 && up(c.toks(p)) == "COLLATE" } =>
+        Some(c.toks.updated(c.i, Ident("UTF8_LCASE")))
+    }
+    call("SPLIT_PART") {
+      // r13 string scout: EMPTY separator — duck splits into
+      // CHARACTERS ('a,b,c','',2 → ','; negative n from the end;
+      // out-of-range and NULL input → '') where Spark returns
+      // the whole string. Literal-empty-sep only.
+      case c if c.args.length == 3 && (c.sig(1) match {
+          case Vector(s: Str) => s.value.isEmpty
+          case _ => false
+        }) =>
+        val (s0, n0) = (c.arg(0), c.arg(2))
+        c.to(s"(CASE WHEN ($n0) = 0 THEN '' " +
+          s"ELSE coalesce(try_element_at(split($s0, ''), $n0), '') END)")
+      // r10 batch 7: DuckDB split_part index 0 → '' where Spark
+      // raises INVALID_INDEX_OF_ZERO (literal-0 only; a dynamic 0
+      // stays loud — documented)
+      case c if c.args.length == 3 && (c.sig(2) match {
+          case Vector(n: Num) => n.text == "0"
+          case _ => false
+        }) =>
+        c.to("''")
+    }
+    call("SUBSTR", "SUBSTRING") {
+      // r10 batch 7, probe-pinned: DuckDB substr with a NEGATIVE
+      // length L takes the |L| chars ENDING just before pos —
+      // substr('hello', 2, -1) = 'h', (4, -2) = 'el', clamped at the
+      // string start — where Spark returns ''. Literal negative
+      // lengths only (the silent case); dynamic lengths keep
+      // Spark's '' (documented).
+      case c if c.args.length == 3 && (c.sig(2) match {
+          case Vector(Punct("-"), _: Num) => true
+          case _ => false
+        }) =>
+        val (s0, pos, lenL) = (c.arg(0), c.arg(1), c.arg(2))
+        val p = s"(CASE WHEN ($pos) < 0 THEN length($s0) + ($pos) + 1 ELSE ($pos) END)"
+        val st = s"GREATEST($p + ($lenL), 1)"
+        c.to(s"substr(($s0), $st, $p - $st)")
+    }
+    // end of the pattern operand starting at `rStart`, `||` chains included
+    def patternEnd(toks: Vector[Tok], rStart: Int): Int = {
+      var rEnd = primaryEnd(toks, rStart)
+      var ext = true
+      while (ext) {
+        val n = nextNonWs(toks, rEnd)
+        if (n < toks.length && toks(n) == Punct("||") &&
+          nextNonWs(toks, n) < toks.length)
+          rEnd = primaryEnd(toks, nextNonWs(toks, n))
+        else ext = false
+      }
+      rEnd
+    }
+    word("LIKE", "ILIKE") {
+      // r13 string scout: duck's LIKE has NO default escape —
+      // backslash is an ordinary character ('a_c' LIKE 'a\_c'
+      // is FALSE there; Spark's \_ escapes the wildcard, TRUE).
+      // For literal patterns CONTAINING a backslash, append an
+      // ESCAPE clause with a character absent from the pattern:
+      // backslash turns ordinary, %/_ stay wildcards, and the
+      // clause marks the pattern processed (fixpoint). Dynamic
+      // patterns keep Spark's escape — documented residual.
+      case c if c.open < 0 && {
+          val rStart = nextNonWs(c.toks, c.i)
+          rStart < c.toks.length && (c.toks(rStart) match {
+            case s: Str => s.value.contains("\\") && {
+              val after = nextNonWs(c.toks, rStart)
+              !(after < c.toks.length && up(c.toks(after)) == "ESCAPE")
+            }
+            case _ => false
+          })
+        } =>
+        val rStart = nextNonWs(c.toks, c.i)
+        val pat = c.toks(rStart).asInstanceOf[Str].value
+        // a pattern holding every candidate stays Spark's
+        Seq('~', '^', '@', '#', '!', '&').find(ch => !pat.contains(ch)).map { ch =>
+          c.toks.patch(rStart, Seq(c.toks(rStart), Ws(" "),
+            Ident("ESCAPE"), Ws(" "), Str(s"'$ch'")), 1)
+        }
+    }
+    word("LIKE", "ILIKE") {
+      // (no call guard: `LIKE (p || '%')` has a paren right
+      // after the keyword and would read as a call)
+      // r14 (VERDICT r13 #5 — the dynamic-pattern residual):
+      // duck's LIKE has NO default escape, so a backslash IN A
+      // COLUMN-VALUED pattern is an ordinary character where
+      // Spark's default escape consumes it. Switch the escape
+      // char to '~' (backslash becomes ordinary — duck's
+      // reading; %/_ stay wildcards) and neutralize any '~' the
+      // runtime pattern carries by doubling it
+      // (replace(p,'~','~~') → a literal '~', duck's reading
+      // again). No backslash appears in the emission — ESCAPE
+      // requires a string LITERAL and the backslash-literal
+      // hop pass would otherwise turn it into chr(92). The
+      // ESCAPE clause marks the pattern processed (fixpoint);
+      // a user-written ESCAPE skips the rewrite (both engines
+      // honor it identically).
+      case c if {
+          val rStart = nextNonWs(c.toks, c.i)
+          rStart < c.toks.length && (c.toks(rStart) match {
+            case _: Str => false // literal: previous rule owns it
+            case Punct("(") => true
+            case id2: Ident => !keywordLike(id2.upper)
+            case _ => false
+          }) && {
+            val after = nextNonWs(c.toks, patternEnd(c.toks, rStart))
+            !(after < c.toks.length && up(c.toks(after)) == "ESCAPE")
+          }
+        } =>
+        val rStart = nextNonWs(c.toks, c.i)
+        val rEnd = patternEnd(c.toks, rStart)
+        val p0 = render(c.toks.slice(rStart, rEnd + 1)).trim
+        Some(c.toks.patch(rStart,
+          lex(s"replace(($p0), '~', '~~') ESCAPE '~'"),
+          rEnd - rStart + 1))
+    }
+    word("ILIKE") {
+      // r10 fuzz batch 6: DuckDB ILIKE folds with the SIMPLE case
+      // mapping ('İSTANBUL' ILIKE 'istanbul' is true); Spark's
+      // native ILIKE uses Java full folding — rewrite to LIKE
+      // over graft_lower on both sides. A trailing ESCAPE clause
+      // survives untouched.
+      case c if c.open < 0 && {
+          val (toks, lEnd, rStart) = (c.toks, prevNonWs(c.toks, c.i), nextNonWs(c.toks, c.i))
+          lEnd >= 0 && rStart < toks.length && {
+            val opEndL = if (up(toks(lEnd)) == "NOT") prevNonWs(toks, lEnd) else lEnd
+            opEndL >= 0 && (toks(opEndL) match {
+              case _: Num | _: Str => true
+              case Punct(")") | Punct("]") => true
+              case id2: Ident => !keywordLike(id2.upper)
+              case _ => false
+            })
+          }
+        } =>
+        val toks = c.toks
+        val lEnd0 = prevNonWs(toks, c.i)
+        val notKw = up(toks(lEnd0)) == "NOT"
+        val lEnd = if (notKw) prevNonWs(toks, lEnd0) else lEnd0
+        // capture whole || chains on BOTH sides (r11 advisor fix):
+        // `a ILIKE b || '%'` must fold the ENTIRE pattern — || binds
+        // tighter than LIKE, so a partial capture would leave the
+        // concatenated tail case-sensitive
+        var lStart = primaryStart(toks, lEnd)
+        var lExt = true
+        while (lExt) {
+          val p = prevNonWs(toks, lStart)
+          if (p >= 0 && toks(p) == Punct("||") && prevNonWs(toks, p) >= 0)
+            lStart = primaryStart(toks, prevNonWs(toks, p))
+          else lExt = false
+        }
+        val rStart = nextNonWs(toks, c.i)
+        val rEnd = patternEnd(toks, rStart)
+        val l = render(toks.slice(lStart, lEnd + 1)).trim
+        val r = render(toks.slice(rStart, rEnd + 1)).trim
+        val not = if (notKw) "NOT " else ""
+        Some(toks.patch(lStart,
+          lex(s"graft_lower($l) ${not}LIKE graft_lower($r)"),
+          rEnd - lStart + 1))
+    }
+    call("UNICODE", "ORD") {
+      // r10 fuzz batch 6: DuckDB unicode('')/ord('') = -1 where
+      // Spark ascii('') = 0; NULL passes through either way
+      case c if c.args.length == 1 =>
+        val x = c.arg(0)
+        c.to(s"(CASE WHEN length($x) = 0 THEN -1 ELSE ascii($x) END)")
+    }
+    call("FMOD") {
+      // r10 (advisor fix): fmod = FLOORED modulo — result takes the
+      // sign of the DIVISOR (probe on DuckDB 1.0: fmod(7,-2)=-1,
+      // fmod(10,-3)=-2, fmod(-7,2)=1, fmod(7,0)=NULL, always
+      // DOUBLE). Spark pmod matches only for positive divisors, so
+      // emit x - y*floor(x/y) directly; Spark's non-ANSI x/0 → NULL
+      // reproduces the NULL-on-zero-divisor edge for free.
+      case c if c.args.length == 2 =>
+        val xd = s"CAST((${c.arg(0)}) AS DOUBLE)"
+        val yd = s"CAST((${c.arg(1)}) AS DOUBLE)"
+        c.to(s"($xd - $yd * floor($xd / $yd))")
+    }
+    call("FDIV") {
+      // r9 batch 5: fdiv = floored division (probe: fdiv(-7,-2)=3,
+      // fdiv(10.5,-3)=-4); Spark / on integers is double division,
+      // so floor(x / y) reproduces it for every numeric pairing
+      case c if c.args.length == 2 => c.to(s"floor((${c.arg(0)}) / (${c.arg(1)}))")
+    }
+    call("GENERATE_SERIES") {
+      case c if {
+          val p = prevNonWs(c.toks, c.i)
+          !(p >= 0 && (up(c.toks(p)) == "FROM" || up(c.toks(p)) == "JOIN"))
+        } =>
+        Some(c.toks.patch(c.i, Seq(Ident("sequence")), 1))
+      case c if c.args.length == 2 || c.args.length == 3 =>
+        val stepLit = if (c.args.length == 3) c.arg(2) else "1"
+        val (a, b) = (c.arg(0), c.arg(1))
+        // the end adjustment needs the step's sign at rewrite time
+        scala.util.Try(stepLit.toLong).toOption match {
+          case Some(step) if step != 0 =>
+            val end = if (step > 0) s"($b) + 1" else s"($b) - 1"
+            val tail = if (c.args.length == 3) s", $stepLit" else ""
+            c.to(s"range($a, $end$tail)")
+          case _ if c.args.length == 3 =>
+            // r10 batch 9: the DATE/TIMESTAMP + INTERVAL-step table
+            // form — duck returns TIMESTAMPs inclusive of the end
+            // bound, exactly explode(sequence) over TIMESTAMP-cast
+            // bounds (Spark's sequence is end-inclusive too)
+            c.to(s"explode(sequence(CAST($a AS TIMESTAMP), CAST($b AS TIMESTAMP), $stepLit))")
+          case _ => None
+        }
+    }
+    table.toMap
+  }
+
   private[dialect] def rewriteArgShapeFns(toks0: Vector[Tok],
       isCollectionCol: String => Boolean = _ => false,
       isDateCol: (String, Boolean) => Boolean = (_, _) => false,
       isDecimalCol: String => Boolean = _ => false): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    var lambdaIx = 0 // unique per-rewrite index-lambda marker suffix
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        val callOpen = {
-          val n = nextNonWs(toks, i)
-          if (n < toks.length && toks(n) == Punct("(")) n else -1
+    val scope = new ArgShapeScope(isCollectionCol, isDateCol, isDecimalCol)
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case id: Ident => argShapeRules.get(id.upper).flatMap { rules =>
+          val c = new Call(toks, i, id, scope)
+          rules.iterator.collect { case (callOnly, rule) if !callOnly || c.open >= 0 => rule.lift(c) }
+            .collectFirst { case Some(out) => out }.flatten
         }
-        toks(i) match {
-          case id: Ident if Set("GREATEST", "LEAST").contains(id.upper) &&
-              callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val inner = toks.slice(callOpen + 1, close)
-                // duck converts DECIMAL-bearing greatest/least to DOUBLE
-                // (r13 dec fuzz — probed: typeof(greatest(dec, dec)) =
-                // DOUBLE, including its >2^53 precision loss; HUGEINT
-                // pairs stay exact, so hugeint-only slices are skipped).
-                // Datetime-surface slices skip too: make_timestamp's
-                // fractional seconds are decimal-risk BY TOKEN but the
-                // value is a TIMESTAMP — the wrap broke analysis (ts
-                // fuzz regression caught by the r13 full-gate rerun)
-                !dtSurfaceToks(inner) &&
-                decimalRiskNonHugeToks(inner, isDecimalCol) && {
-                  // skip-if-wrapped: every arg already CAST(… AS DOUBLE)
-                  // means this is our own emission (fixpoint guard)
-                  val args = splitTopLevel(inner)
-                  !args.forall(argWrappedAsDouble)
-                }
-              } =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val wrapped = args.map { a =>
-              if (argWrappedAsDouble(a)) render(a).trim
-              else s"CAST((${render(a).trim}) AS DOUBLE)"
-            }
-            toks = toks.patch(i,
-              lex(s"${id.text}(${wrapped.mkString(", ")})"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "AVG" || id.upper == "MEAN") &&
-              callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val inner = toks.slice(callOpen + 1, close)
-                // duck's avg over DECIMAL/HUGEINT returns DOUBLE computed
-                // from the EXACT sum (r13 dec fuzz — probed: avg of 3×0.1
-                // DECIMAL is 0.1 exactly, neither double-accumulation nor
-                // double(sum)/n); Spark's DECIMAL avg rounds HALF_UP at
-                // scale s+4, a silent wrong answer in the 5th fractional
-                // digit. sum/count split: Spark's decimal division keeps
-                // scale ≥ 6 and the exact sum, then one double conversion
-                // — within 1 ulp of duck's integer-division double
-                splitTopLevel(inner).length == 1 &&
-                  !dtSurfaceToks(inner) &&
-                  (decimalRiskNonHugeToks(inner, isDecimalCol) ||
-                    hugeintRiskToks(inner))
-              } =>
-            val close = matchParen(toks, callOpen)
-            val arg = render(toks.slice(callOpen + 1, close)).trim
-            // absorb FILTER (WHERE …) and OVER (…)|OVER w suffixes so
-            // both halves of the split carry them
-            var sfxEnd = close
-            var look = nextNonWs(toks, sfxEnd)
-            while (look < toks.length && (up(toks(look)) == "FILTER" ||
-                up(toks(look)) == "OVER")) {
-              val nn = nextNonWs(toks, look)
-              sfxEnd =
-                if (nn < toks.length && toks(nn) == Punct("(")) matchParen(toks, nn)
-                else nn
-              look = nextNonWs(toks, sfxEnd)
-            }
-            val sfx =
-              if (sfxEnd > close) " " + render(toks.slice(close + 1, sfxEnd + 1)).trim
-              else ""
-            toks = toks.patch(i, lex(
-              s"CAST(try_divide(sum($arg)$sfx, count($arg)$sfx) AS DOUBLE)"),
-              sfxEnd - i + 1)
-            changed = true
-          case id: Ident if id.upper == "XOR" && callOpen >= 0 =>
-            // or/and/not composition, NOT Spark's `^`: since r8 the `^`
-            // OPERATOR rewrites to power() (DuckDB semantics), so an
-            // emitted `a ^ b` would flip to power on any re-translation —
-            // this form is translate-idempotent
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              val repl = s"((($a) | ($b)) & ~(($a) & ($b)))"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("LTRIM", "RTRIM", "TRIM").contains(id.upper) && callOpen >= 0 =>
-            // DuckDB 2-arg char-set trims -> SQL-standard TRIM(side set FROM s)
-            // (same any-of-set semantics in both engines); 1-arg forms pass
-            // through untouched
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2 && !args(0).exists(t =>
-                Set("LEADING", "TRAILING", "BOTH", "FROM").contains(up(t)))) {
-              val side = id.upper match {
-                case "LTRIM" => "LEADING"; case "RTRIM" => "TRAILING"; case _ => "BOTH"
-              }
-              val (s0, cs) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(s"TRIM($side $cs FROM $s0)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "INTDIV" || id.upper == "MODULO") && callOpen >= 0 =>
-            // ClickHouse intDiv/modulo (chsql surface) → the operators.
-            // Rounding for negatives agrees: chsql's intDiv expands to
-            // DuckDB's `//`, and DuckDB 1.0 integer `//` TRUNCATES toward
-            // zero (probe: -7 // 2 = -3, 7 // -2 = -3), exactly Spark's
-            // DIV — no floor-division divergence (TranslatorSpec pins it
-            // with negative operands).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val op = if (id.upper == "INTDIV") "DIV" else "%"
-              val repl = s"((${render(args(0)).trim}) $op (${render(args(1)).trim}))"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "EMPTY" || id.upper == "NOTEMPTY") && callOpen >= 0 =>
-            // ClickHouse empty/notEmpty: zero-length test. A CASE-dispatch
-            // on typeof() cannot work — Spark type-checks BOTH branches at
-            // analysis time, so size(stringcol) fails even in a dead
-            // branch. Dispatch is SYNTACTIC — a bracket literal `[...]`
-            // or an array(...)/map(...)/list_value(...) call gets size()
-            // — plus SCHEMA-AWARE (r8): a bare (possibly qualified)
-            // identifier naming a known ARRAY/MAP column also gets size(),
-            // closing the array-typed-column gap for named columns;
-            // everything else gets length() (the string case the chsql
-            // wire surface serves). Computed array expressions still
-            // raise a loud DATATYPE_MISMATCH, never a silent wrong answer.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val cmp = if (id.upper == "EMPTY") "=" else "<>"
-              val a = render(args(0)).trim
-              val fn = if (collectionShaped(args(0), isCollectionCol)) "size"
-                else "length"
-              val repl = s"($fn($a) $cmp 0)"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "SEM" && callOpen >= 0 =>
-            // DuckDB sem = POPULATION stddev / sqrt(n) (probe-pinned)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val x = render(args(0)).trim
-              toks = toks.patch(i, lex(
-                s"(stddev_pop($x) / sqrt(CAST(count($x) AS DOUBLE)))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "CONCAT" && callOpen >= 0 =>
-            // DuckDB concat stringifies EVERY argument and SKIPS NULLs
-            // (probe: concat('a', NULL, 'b') = 'ab', concat(1, 2) = '12',
-            // concat(NULL, NULL) = '') — Spark's concat propagates NULL
-            // and means array-concat on arrays, a silent divergence found
-            // by the r8 differential fuzz. concat_ws('') over per-arg
-            // string casts reproduces DuckDB exactly.
-            // list args stringify too (r9 probe: concat([1,2],[3]) =
-            // '[1, 2][3]' — concat is stringify-everything in DuckDB;
-            // list CONCATENATION spells list_concat/array_cat, which get
-            // their own flatten(array(…)) rewrite so the emission here is
-            // never re-captured)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.nonEmpty && args.exists(_.exists(!isWs(_)))) {
-              val casts = args.map(a => s"CAST((${render(a).trim}) AS STRING)")
-              toks = toks.patch(i,
-                lex(s"concat_ws('', ${casts.mkString(", ")})"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("LIST_CONTAINS", "LIST_HAS",
-              "ARRAY_CONTAINS", "ARRAY_HAS", "HAS").contains(id.upper) && callOpen >= 0 =>
-            // DuckDB list_contains is NOT three-valued over NULL elements
-            // (r11 list fuzz): absent needle → false even when the list
-            // holds NULLs; NULL only for a NULL list or NULL needle.
-            // Spark's array_contains returns NULL for absent-with-NULLs,
-            // and array_position demands an EXACT element-type match
-            // (array_position([1.0, 2.0], 2) is an analysis error where
-            // array_contains coerces — probe-gate find), so emit a
-            // NULL-guarded coalesce(exists(l, x -> x = e), false): found
-            // → true (exists SHORT-CIRCUITS on the first hit — advice
-            // r11, replacing the full-scan size(filter(…)) > 0 form);
-            // absent-with-NULL-elements → exists' three-valued NULL →
-            // false via coalesce; either arg NULL → NULL via the guard;
-            // the lambda compares with `<=>` (r15 nested-NULL scout):
-            // duck matches entries by NULLS-EQUAL total equality —
-            // list_contains([[1,NULL]], [1,NULL]) is TRUE — where a
-            // plain `=` is three-valued over inner NULLs (the
-            // NestedCompare rule makes `=` duck-3VL, which would skip
-            // the match); `<=>` also equates NaN like duck and applies
-            // the same binary coercion.
-            // CAVEAT (same class as the other CASE-splice emissions,
-            // VERDICT r11): the arguments are interpolated into both the
-            // guard and the body, so a NON-DETERMINISTIC needle
-            // (random(), uuid()) evaluates more than once; columns,
-            // literals and deterministic expressions dedupe in codegen.
-            // The 1-param lambda dodges the 1-based index shift; exists
-            // is in the higher-order passthrough set, so the emission is
-            // not re-captured on re-translation.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (l, e) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN ($l) IS NULL OR ($e) IS NULL THEN CAST(NULL AS BOOLEAN) " +
-                  s"ELSE coalesce(exists(($l), graft_lc -> graft_lc <=> ($e)), false) END)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("LIST_CONCAT", "LIST_CAT", "ARRAY_CAT",
-              "ARRAY_CONCAT").contains(id.upper) && callOpen >= 0 =>
-            // DuckDB list concat is strictly 2-arg and SKIPS NULL args
-            // (probe: list_concat([1,2], NULL) = [1,2]; both NULL → NULL)
-            // — Spark's concat propagates NULL, and emitting concat was
-            // re-captured by the stringify rewrite above on
-            // re-translation (advice r8). flatten(array(a,b)) is the
-            // non-recapturable spelling of array concatenation.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN ($a) IS NULL THEN ($b) WHEN ($b) IS NULL THEN ($a) " +
-                  s"ELSE flatten(array(($a), ($b))) END)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LENGTH" || id.upper == "LEN") && callOpen >= 0 =>
-            // DuckDB length()/len() work on lists too (len([1,2]) = 2) —
-            // dispatch to size() for array literals / collection calls /
-            // named ARRAY-MAP columns (the empty() posture, r8); strings
-            // keep length(). Only rewrites when a collection shape is
-            // recognized, so plain string length is untouched.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1 && collectionShaped(args(0), isCollectionCol)) {
-              toks = toks.patch(i,
-                lex(s"size(${render(args(0)).trim})"), close - i + 1)
-              changed = true
-            } else if (args.length == 1 && (args(0).filterNot(isWs) match {
-              // r14 nested scout: a BARE identifier the shape scan cannot
-              // classify — above all a LAMBDA VARIABLE (`x -> len(x)` over
-              // list elements) — takes the type-dispatched kernel; string
-              // literals/calls keep Spark's native length (pinned
-              // emissions unchanged)
-              case Vector(a: Ident) => !keywordLike(a.upper) &&
-                !isCollectionCol(a.text.toLowerCase)
-              case _ => false
-            })) {
-              toks = toks.patch(i,
-                lex(s"graft_len(${render(args(0)).trim})"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "SUBSTR" || id.upper == "SUBSTRING") &&
-              callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 3 &&
-                  args(1).filterNot(isWs).map(_.text) == Vector("0")
-              } =>
-            // DuckDB substr(s, 0, n) consumes one length unit on the
-            // virtual position 0 (Postgres clamp: 'hello',0,3 → 'he');
-            // Spark treats start 0 as 1 with the FULL length — shift the
-            // literal-0 form (expression starts stay as-is: both engines
-            // agree on every start except exactly 0)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            toks = toks.patch(i, lex(
-              s"substr(${render(args(0)).trim}, 1, (${render(args(2)).trim}) - 1)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "REGEXP_FULL_MATCH" && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (s0, p0) = (render(args(0)).trim, render(args(1)).trim)
-              // || not concat: the r8 DuckDB-concat rewrite (NULL-skipping
-              // concat_ws) would otherwise turn a NULL pattern into '^(?:)$'
-              toks = toks.patch(i, lex(
-                s"rlike(($s0), '^(?:' || ($p0) || ')$$')"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "REGEXP_ESCAPE" && callOpen >= 0 =>
-            // RE2 QuoteMeta: backslash-escape every char outside
-            // [A-Za-z0-9_] (probe: '.', '*', '#', '-', and SPACE all
-            // escaped)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(
-                // Spark's 4-arg form (position 1): still a GLOBAL replace,
-                // and re-translation can't mistake it for DuckDB's 3-arg
-                // first-match form (the parse-fixpoint guard)
-                s"regexp_replace((${render(args(0)).trim}), '([^a-zA-Z0-9_])', '\\\\$$1', 1)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "FILTER" && callOpen >= 0 && {
-              // DuckDB accepts FILTER (cond) without WHERE on aggregates —
-              // inject it. The clause form always follows the aggregate
-              // call's ')'; the filter() higher-order function never does.
-              val p = prevNonWs(toks, i)
-              p >= 0 && toks(p) == Punct(")") && {
-                val first = nextNonWs(toks, callOpen)
-                first < matchParen(toks, callOpen) && up(toks(first)) != "WHERE"
-              }
-            } =>
-            toks = toks.patch(callOpen + 1,
-              Seq(Ident("WHERE"), Ws(" ")), 0)
-            changed = true
-          case id: Ident if id.upper == "DATE_ADD" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length == 2 &&
-                args(1).find(!_.isInstanceOf[Ws]).exists(t => up(t) == "INTERVAL")
-            } =>
-            // DuckDB date_add(d, INTERVAL …) — Spark's date_add takes day
-            // counts; the interval form is plain + arithmetic
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            toks = toks.patch(i, lex(
-              s"((${render(args(0)).trim}) + ${render(args(1)).trim})"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "AGE" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              splitTopLevel(toks.slice(callOpen + 1, close)).length == 2
-            } =>
-            // r10 fuzz batch 6 (was a silent divergence): DuckDB age(a, b)
-            // is the CALENDAR decomposition (full months by date walking,
-            // then days, then time — Postgres semantics; probed:
-            // age(Mar 1, Jan 31) = '1 mon 1 day'), not the exact duration
-            // the old a - b mapping produced (30 days there). Emit the
-            // decomposition as a CalendarInterval via make_interval:
-            // m0 = raw month diff, stepped back/forward when B + m0
-            // months overshoots A; remainder split into trunc-toward-zero
-            // days + sub-day micros (Spark DIV/% both truncate, so the
-            // components share the sign like DuckDB's negative ages).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val a = s"CAST((${render(args(0)).trim}) AS TIMESTAMP)"
-            val b = s"CAST((${render(args(1)).trim}) AS TIMESTAMP)"
-            val m0 = s"((year($a) - year($b)) * 12 + (month($a) - month($b)))"
-            val m = s"(CASE WHEN $a >= $b AND timestampadd(MONTH, $m0, $b) > $a THEN $m0 - 1 " +
-              s"WHEN $a < $b AND timestampadd(MONTH, $m0, $b) < $a THEN $m0 + 1 ELSE $m0 END)"
-            val rem = s"(unix_micros($a) - unix_micros(timestampadd(MONTH, $m, $b)))"
-            // round() is an identity on the integral DIV but marks the
-            // cast alreadyIntegral for the int-cast-rounding pass — the
-            // bare CAST(… DIV … AS INT) was re-wrapped on re-translation,
-            // breaking the translate∘translate fixpoint
-            toks = toks.patch(i, lex(
-              s"make_interval(0, $m, 0, CAST(round($rem DIV 86400000000) AS INT), 0, 0, " +
-                // graft_dec_cast, not CAST(… AS DECIMAL(18,6)): the rem
-                // slice can carry user decimal tokens, and a risky CAST
-                // in our own emission would be re-captured by
-                // rewriteDecCast on re-translation (fixpoint); the kernel
-                // is exact for this integral input
-                s"graft_dec_cast($rem % 86400000000, 18, 6) / 1000000)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "ARRAY_TO_STRING" && callOpen >= 0 && {
-              splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen))).length == 2
-            } =>
-            // DuckDB returns NULL for the EMPTY list (probe-pinned, even
-            // typed-empty); array_join returns '' — guard. NULL elements
-            // are skipped by both.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val (l, sep) = (render(args(0)).trim, render(args(1)).trim)
-            toks = toks.patch(i, lex(
-              s"(CASE WHEN size(($l)) = 0 THEN CAST(NULL AS STRING) ELSE array_join(($l), $sep) END)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "RANGE" && callOpen >= 0 && {
-              // scalar-position range(n)/range(a, b): end-EXCLUSIVE list
-              // (empty when the range is void). Table-context ranges —
-              // both user-written FROM range(…) and the range() TVF the
-              // generate_series rewrite EMITS — must survive, so a range
-              // directly after FROM/JOIN is skipped. 3-arg (stepped)
-              // stays loud (sign-dependent end adjustment).
-              val p = prevNonWs(toks, i)
-              val tableCtx = p >= 0 && Set("FROM", "JOIN").contains(up(toks(p)))
-              val argsN = splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen)))
-              // 3-arg needs the step's sign at rewrite time (end-exclusive
-              // adjustment flips with it) — literal steps only, the rest
-              // stay loud
-              !tableCtx && (argsN.length == 1 || argsN.length == 2 ||
-                (argsN.length == 3 &&
-                  scala.util.Try(render(argsN(2)).trim.toLong).toOption.exists(_ != 0)))
-            } =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            // typed empty: slice of a 1-element sequence keeps the int
-            // element type (a bare array() would be ARRAY<STRING>)
-            if (args.length == 3) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              val step = render(args(2)).trim.toLong
-              val (empty, end) =
-                if (step > 0) (s"($b) <= ($a)", s"($b) - 1")
-                else (s"($b) >= ($a)", s"($b) + 1")
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN $empty THEN slice(sequence(($a), ($a)), 1, 0) ELSE sequence(($a), $end, $step) END)"),
-                close - i + 1)
-            } else {
-              val (a, b) =
-                if (args.length == 1) ("0", render(args(0)).trim)
-                else (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN ($b) <= ($a) THEN slice(sequence(($a), ($a)), 1, 0) ELSE sequence(($a), ($b) - 1) END)"),
-                close - i + 1)
-            }
-            changed = true
-          case id: Ident if (id.upper == "MAP_EXTRACT" ||
-              id.upper == "ELEMENT_AT") && callOpen >= 0 =>
-            // DuckDB map_extract(m, k) → 1-element LIST ([] when absent) —
-            // the map-subscript wrap shape. element_at is MAP-ONLY in
-            // DuckDB and IS map_extract (r8 fuzz: it returned [1], the
-            // Spark passthrough returned the scalar — silent); list
-            // lookups spell list_element/list_extract → try_element_at
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (m, k) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"IF(map_contains_key(($m), ($k)), array(try_element_at(($m), ($k))), array())"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LIST_RESIZE" || id.upper == "ARRAY_RESIZE") && callOpen >= 0 =>
-            // probe-pinned: pads with NULL (or the 3rd-arg fill) BEYOND the
-            // original length only, truncates, n = 0 -> []; Spark sequence
-            // errors on empty ranges, hence the guard
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2 || args.length == 3) {
-              val (l, n) = (render(args(0)).trim, render(args(1)).trim)
-              val fill = if (args.length == 3) render(args(2)).trim else "NULL"
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN ($n) <= 0 THEN slice(($l), 1, 0) ELSE " +
-                  s"transform(sequence(1, CAST(($n) AS INT)), __g_i -> " +
-                  s"CASE WHEN __g_i <= size(($l)) THEN try_element_at(($l), __g_i) ELSE ($fill) END) END)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "ENCODE" || id.upper == "DECODE") && callOpen >= 0 =>
-            // DuckDB 1-arg UTF-8 string⇄blob conversions → Spark's
-            // charset forms
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(
-                s"${id.text.toLowerCase}(${render(args(0)).trim}, 'UTF-8')"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("LIKE_ESCAPE", "ILIKE_ESCAPE",
-              "NOT_LIKE_ESCAPE", "NOT_ILIKE_ESCAPE").contains(id.upper) && callOpen >= 0 =>
-            // DuckDB function forms of LIKE … ESCAPE (probe-pinned);
-            // Spark supports both LIKE and ILIKE with ESCAPE natively
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 3) {
-              val (s0, p0, e0) = (render(args(0)).trim, render(args(1)).trim,
-                render(args(2)).trim)
-              val op = if (id.upper.contains("ILIKE")) "ILIKE" else "LIKE"
-              val core = s"(($s0) $op ($p0) ESCAPE $e0)"
-              val repl = if (id.upper.startsWith("NOT_")) s"(NOT $core)" else core
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "PARSE_FILENAME" && callOpen >= 0 =>
-            // last path component ('' after a trailing slash); optional
-            // trim_extension flag (probe: '/a/b/c.txt', true → 'c')
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length >= 1 && args.length <= 2) {
-              val p = render(args(0)).trim
-              val base = s"regexp_extract(($p), '[^/]*$$', 0)"
-              val trim = args.length == 2 &&
-                render(args(1)).trim.equalsIgnoreCase("true")
-              // regexp_replace_first (the registered kernel), not Spark's
-              // global regexp_replace: idempotent under re-translation
-              // (the 3-arg REGEXP_REPLACE rewrite would convert it) and
-              // exactly DuckDB's first-match trim
-              val repl = if (trim)
-                s"regexp_replace_first($base, '\\.[^.]*$$', '')" else base
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("LIST_TRANSFORM", "LIST_FILTER", "ARRAY_TRANSFORM",
-              "ARRAY_FILTER", "LIST_APPLY", "ARRAY_APPLY", "APPLY",
-              "TRANSFORM", "FILTER").contains(id.upper) && callOpen >= 0 =>
-            // two-parameter lambdas: DuckDB's element index is 1-BASED,
-            // Spark's is 0-based — a silent off-by-one through a plain
-            // rename (probe: list_transform([10,20], (x,i) -> x+i) is
-            // [11,22] there, [10,21] here). The index param is renamed to
-            // a marker and every body use shifted by +1; the marker keeps
-            // the fixpoint loop from re-shifting.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val lam = args(1).dropWhile(isWs)
-              val shape = lam.filterNot(isWs)
-              val isTwoParam = shape.length > 6 && shape(0) == Punct("(") &&
-                shape(1).isInstanceOf[Ident] && shape(2) == Punct(",") &&
-                shape(3).isInstanceOf[Ident] && shape(4) == Punct(")") &&
-                shape(5) == Punct("->") &&
-                // never re-shift our own generated lambdas (grade_up etc.
-                // emit Spark-0-based __g_* index params by intent)
-                !shape(3).text.startsWith("__g_")
-              if (isTwoParam) {
-                val xName = shape(1).text
-                val iName = shape(3).text
-                // unique marker per rewrite: a FIXED name would make a
-                // nested lambda's renamed index capture the outer
-                // reference (review finding)
-                lambdaIx += 1
-                val marker = s"__g_ix$lambdaIx"
-                val arrowAt = lam.indexWhere(_ == Punct("->"))
-                val body = lam.slice(arrowAt + 1, lam.length)
-                // shadow guard: from the first NESTED lambda re-declaring
-                // the same index name, stop substituting (found by
-                // pre-scan so the declaration tokens themselves are never
-                // touched) — leftover outer `i` references past it fail
-                // LOUDLY at analysis instead of silently rebinding
-                val nw = body.indices.filter(k => !isWs(body(k)))
-                var shadowStart = Int.MaxValue
-                var w = 0
-                while (w + 5 < nw.length && shadowStart == Int.MaxValue) {
-                  val Seq(a, b2, c, d, e2, f) =
-                    (w to w + 5).map(j => body(nw(j)))
-                  if (a == Punct("(") && b2.isInstanceOf[Ident] &&
-                      c == Punct(",") && d.isInstanceOf[Ident] &&
-                      d.text.equalsIgnoreCase(iName) && e2 == Punct(")") &&
-                      f == Punct("->"))
-                    shadowStart = nw(w)
-                  w += 1
-                }
-                val shifted = body.zipWithIndex.map { case (t2, k) =>
-                  t2 match {
-                    case b: Ident if k < shadowStart &&
-                        b.text.equalsIgnoreCase(iName) &&
-                        !(k > 0 && body.slice(0, k).reverse.find(!isWs(_))
-                          .contains(Punct("."))) => Ident(s"($marker + 1)")
-                    case other => other
-                  }
-                }
-                val repl = s"${id.text}(${render(args(0)).trim}, " +
-                  s"($xName, $marker) -> ${render(shifted).trim})"
-                toks = toks.patch(i, lex(repl), close - i + 1)
-                changed = true
-              }
-            }
-          case id: Ident if (id.upper == "LIST_SORT" || id.upper == "ARRAY_SORT") && callOpen >= 0 =>
-            // DuckDB 1/2/3-arg order forms (probe-pinned: default and
-            // 'ASC' are NULLS LAST; 'DESC' keeps NULLS LAST) → the
-            // graft_list_sort kernel (r15): one pinned semantics for
-            // flat AND nested element types — duck ranks inner NULLs
-            // HIGH where the previous array_sort/sort_array emissions
-            // kept Spark's NULL-low element ordering. A 2-arg form
-            // whose second arg is NOT a string literal is Spark's
-            // array_sort(l, lambda) comparator spelling — left alone.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length >= 1 && args.length <= 3) {
-              val lits = args.tail.map(_.filterNot(isWs)).flatMap {
-                case Vector(s: Str) => Some(s.value.toUpperCase.trim)
-                case _ => None
-              }
-              if (lits.length == args.length - 1) {
-                val l = render(args(0)).trim
-                val desc = lits.headOption.exists(_.startsWith("DESC"))
-                val nullsFirst = lits.lift(1).exists(_.contains("FIRST"))
-                toks = toks.patch(i,
-                  lex(s"graft_list_sort($l, $desc, $nullsFirst)"),
-                  close - i + 1)
-                changed = true
-              }
-            }
-          case id: Ident if id.upper == "STRUCT_INSERT" && callOpen >= 0 =>
-            // struct_insert(s, a := v, …) → chained UpdateFields kernel
-            // (appends fields in argument order, DuckDB-identical)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length >= 2) {
-              val named = args.tail.map { arg =>
-                val at = arg.indexWhere(t => t == Punct(":="))
-                if (at <= 0) None
-                else {
-                  val name = arg.slice(0, at).filterNot(isWs) match {
-                    case Vector(n: Ident) => Some(n.text)
-                    case _ => None
-                  }
-                  name.map(n => (n, render(arg.slice(at + 1, arg.length)).trim))
-                }
-              }
-              if (named.forall(_.isDefined)) {
-                var acc = s"(${render(args(0)).trim})"
-                named.flatten.foreach { case (n, v) =>
-                  acc = s"graft_struct_insert($acc, '$n', ($v))"
-                }
-                toks = toks.patch(i, lex(acc), close - i + 1)
-                changed = true
-              }
-            }
-          case id: Ident if id.upper == "UNNEST" && callOpen >= 0 =>
-            // unnest(x, recursive := true) → explode(flatten(x)) — exact
-            // for two-level lists (deeper nesting fails loudly on
-            // flatten's type check; struct-unnesting not supported)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2 &&
-                render(args(1)).trim.toUpperCase.replaceAll("\\s+", "")
-                  .startsWith("RECURSIVE:=TRUE")) {
-              toks = toks.patch(i, lex(
-                s"explode(flatten(${render(args(0)).trim}))"), close - i + 1)
-              changed = true
-            } else if (args.length == 2 &&
-                render(args(1)).trim.toUpperCase.replaceAll("\\s+", "")
-                  .startsWith("RECURSIVE:=FALSE")) {
-              // r14 nested scout: the explicit non-recursive spelling is
-              // plain unnest — drop the flag (duck's default)
-              toks = toks.patch(i, lex(
-                s"unnest(${render(args(0)).trim})"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("PLUS", "MINUS", "MULTIPLY", "DIVIDE",
-              "INTDIVORZERO").contains(id.upper) && callOpen >= 0 =>
-            // ClickHouse arithmetic function forms (chsql). divide is float
-            // division — exactly Spark's `/`; intDivOrZero guards b = 0.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              val repl = id.upper match {
-                case "PLUS" => s"(($a) + ($b))"
-                case "MINUS" => s"(($a) - ($b))"
-                case "MULTIPLY" => s"(($a) * ($b))"
-                case "DIVIDE" => s"(($a) / ($b))"
-                case _ => s"(CASE WHEN ($b) = 0 THEN 0 ELSE ($a) DIV ($b) END)"
-              }
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "POSITIONCASEINSENSITIVE" && callOpen >= 0 =>
-            // ClickHouse positionCaseInsensitive(haystack, needle), 1-based
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              toks = toks.patch(i, lex(
-                s"instr(lower(${render(args(0)).trim}), lower(${render(args(1)).trim}))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "MULTISEARCHANY" && callOpen >= 0 =>
-            // ClickHouse multiSearchAny(haystack, [needles]) → UInt8 0/1
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN exists((${render(args(1)).trim}), __g_n -> instr((${render(args(0)).trim}), __g_n) > 0) THEN 1 ELSE 0 END)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "TOYYYYMMDDHHMMSS" && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val e = render(args(0)).trim
-              toks = toks.patch(i, lex(
-                s"(CAST(year($e) AS BIGINT) * 10000000000 + month($e) * 100000000 + " +
-                  s"day($e) * 1000000 + hour($e) * 10000 + minute($e) * 100 + second($e))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "IPV4NUMTOSTRING" && callOpen >= 0 =>
-            // big-endian octets of a UInt32
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val n = render(args(0)).trim
-              toks = toks.patch(i, lex(
-                s"concat_ws('.', CAST(($n) DIV 16777216 % 256 AS STRING), " +
-                  s"CAST(($n) DIV 65536 % 256 AS STRING), " +
-                  s"CAST(($n) DIV 256 % 256 AS STRING), CAST(($n) % 256 AS STRING))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "IPV4STRINGTONUM" && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(
-                s"aggregate(split((${render(args(0)).trim}), '\\.'), " +
-                  s"CAST(0 AS BIGINT), (__g_a, __g_x) -> __g_a * 256 + CAST(__g_x AS BIGINT))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "SPLITBYSTRING" && callOpen >= 0 =>
-            // ClickHouse splitByString(sep, s) → split(s, quoted-sep)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              args(0).filterNot(isWs) match {
-                case Vector(sep: Str) =>
-                  val quoted = regexLiteralSep(sep.value)
-                  toks = toks.patch(i, lex(
-                    s"split(${render(args(1)).trim}, '$quoted')"), close - i + 1)
-                  changed = true
-                case _ =>
-              }
-            }
-          case id: Ident if id.upper == "TO_TIMESTAMP" && callOpen >= 0 =>
-            // DuckDB to_timestamp is numeric-seconds only (strings go
-            // through strptime) — exactly Spark's timestamp_seconds incl.
-            // fractions. 1-arg only: the 2-arg to_timestamp(s, fmt) the
-            // STRPTIME rewrite emits is already Spark semantics.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(
-                s"timestamp_seconds(${render(args(0)).trim})"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "REGEXP_EXTRACT" && callOpen >= 0 =>
-            // DuckDB's 2-arg default is group 0 (the whole match); Spark's
-            // is group 1 — a silent divergence without the explicit 0.
-            // The 3-arg name-list form returns a STRUCT of groups 1..n.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              toks = toks.patch(i, lex(
-                s"regexp_extract(${render(args(0)).trim}, ${render(args(1)).trim}, 0)"),
-                close - i + 1)
-              changed = true
-            } else if (args.length == 3) {
-              val third = args(2).filterNot(isWs)
-              // rewriteArrayLiterals runs first, so ['w','d'] arrives as
-              // array('w','d'); accept the raw bracket form too
-              val isNameList = (third.headOption.contains(Punct("[")) ||
-                third.headOption.exists(t => up(t) == "ARRAY")) &&
-                third.count(_.isInstanceOf[Str]) >= 1
-              if (isNameList) {
-                val names = third.collect { case st: Str => st.value }
-                val (s0, re) = (render(args(0)).trim, render(args(1)).trim)
-                val fields = names.zipWithIndex.map { case (n, gi) =>
-                  s"'$n', regexp_extract($s0, $re, ${gi + 1})"
-                }.mkString(", ")
-                toks = toks.patch(i, lex(s"named_struct($fields)"), close - i + 1)
-                changed = true
-              }
-            }
-          case id: Ident if Set("LIST_GRADE_UP", "ARRAY_GRADE_UP", "GRADE_UP").contains(id.upper) && callOpen >= 0 =>
-            // DuckDB list_grade_up: 1-based positions in ascending order,
-            // NULLS LAST, ties stable (probe: [10,NULL,10,5] → [4,1,3,2]).
-            // Sort key rides a (is-null, value, position) struct: boolean
-            // false<true puts NULLs last, position keeps ties stable.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val l = render(args(0)).trim
-              toks = toks.patch(i, lex(
-                s"transform(array_sort(transform(($l), (__g_x, __g_i) -> " +
-                  s"named_struct('n', (__g_x IS NULL), 'v', __g_x, 'p', __g_i + 1))), " +
-                  s"__g_s -> __g_s.p)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "LIST_ANY_VALUE" && callOpen >= 0 =>
-            // first non-NULL element; all-NULL / empty → NULL (probe)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(
-                s"try_element_at(filter((${render(args(0)).trim}), __g_x -> __g_x IS NOT NULL), 1)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LIST_SELECT" || id.upper == "ARRAY_SELECT") && callOpen >= 0 =>
-            // 1-based gather; 0, negative, and out-of-range indices → NULL
-            // (probe) — Spark's try_element_at would wrap negatives, so
-            // guard below 1 explicitly
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (l, idx) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"transform(($idx), __g_i -> CASE WHEN __g_i < 1 THEN NULL " +
-                  s"ELSE try_element_at(($l), CAST(__g_i AS INT)) END)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LIST_WHERE" || id.upper == "ARRAY_WHERE") && callOpen >= 0 =>
-            // boolean-mask gather (probe: [10,20,30],[t,f,t] → [10,30]).
-            // DuckDB errors on NULL mask elements; the filter form drops
-            // them — loud-vs-silent divergence documented in SURVEY §2.12.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (l, m) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"transform(filter(zip_with(($l), ($m), (__g_x, __g_m) -> " +
-                  s"named_struct('v', __g_x, 'k', __g_m)), __g_s -> __g_s.k), " +
-                  s"__g_t -> __g_t.v)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("TO_JSON", "ROW_TO_JSON", "ARRAY_TO_JSON").contains(id.upper) && callOpen >= 0 =>
-            // DuckDB to_json keeps NULL struct fields ({"a":null}); Spark's
-            // to_json DROPS them by default — inject
-            // ignoreNullFields=false. One-arg calls only: the re-lexed
-            // 2-arg result no longer matches, so the fixpoint loop can't
-            // re-fire. (DuckDB scalar to_json('s') → '"s"' stays a
-            // declared gap: Spark's to_json takes only struct/map/array.)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(
-                s"to_json(${render(args(0)).trim}, map('ignoreNullFields', 'false'))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "JSON_GROUP_ARRAY" && callOpen >= 0 =>
-            // DuckDB macro: json_group_array(e) = to_json(list(e)). NULL
-            // elements survive in DuckDB's list but Spark's collect_list
-            // drops them — ride each value inside a never-NULL struct
-            // (the rewriteOrderedArrayAgg trick), then unwrap.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val e = render(args(0)).trim
-              toks = toks.patch(i, lex(
-                s"to_json(transform(collect_list(named_struct('v', ($e))), __g_j -> __g_j.v), map('ignoreNullFields', 'false'))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "JSON_GROUP_OBJECT" && callOpen >= 0 =>
-            // DuckDB macro: json_group_object(k, v) = to_json(map built in
-            // input order). Spark twin: entries collected as structs (never
-            // NULL, so NULL values survive), then map_from_entries.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (k, v) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"to_json(map_from_entries(collect_list(named_struct('key', ($k), 'value', ($v)))), map('ignoreNullFields', 'false'))"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "SHA256" && callOpen >= 0 =>
-            // DuckDB sha256(s) and Spark sha2(s, 256) both emit lowercase
-            // hex (probe-verified incl. empty string)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i, lex(s"sha2(${render(args(0)).trim}, 256)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LIST_REVERSE_SORT" || id.upper == "ARRAY_REVERSE_SORT") && callOpen >= 0 =>
-            // DuckDB list_reverse_sort: descending, NULLs last (probe:
-            // [3,NULL,1] -> [3,1,NULL]) → the graft_list_sort kernel
-            // (r15, duck's NULL-high element order for nested elements)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              toks = toks.patch(i,
-                lex(s"graft_list_sort(${render(args(0)).trim}, true, false)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("LIST_COSINE_SIMILARITY", "LIST_INNER_PRODUCT",
-              "LIST_DOT_PRODUCT", "ARRAY_COSINE_SIMILARITY", "ARRAY_INNER_PRODUCT",
-              "ARRAY_DOT_PRODUCT", "LIST_DISTANCE", "ARRAY_DISTANCE").contains(id.upper) && callOpen >= 0 =>
-            // vector kernels over generic numeric lists → double-math
-            // higher-order forms (the codegen cosine_sim kernel is the
-            // ARRAY<FLOAT> hot path; these translate the DuckDB spellings
-            // at full double precision). Sequential accumulation in both
-            // engines; declared queries quantize to micro units.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              def dot(x: String, y: String) =
-                s"aggregate(zip_with($x, $y, (__gv_x, __gv_y) -> CAST(__gv_x AS DOUBLE) * CAST(__gv_y AS DOUBLE)), " +
-                  s"CAST(0 AS DOUBLE), (__gv_a, __gv_v) -> __gv_a + __gv_v)"
-              def dist(x: String, y: String) =
-                s"aggregate(zip_with($x, $y, (__gv_x, __gv_y) -> " +
-                  s"(CAST(__gv_x AS DOUBLE) - CAST(__gv_y AS DOUBLE)) * (CAST(__gv_x AS DOUBLE) - CAST(__gv_y AS DOUBLE))), " +
-                  s"CAST(0 AS DOUBLE), (__gv_a, __gv_v) -> __gv_a + __gv_v)"
-              val repl =
-                if (id.upper.endsWith("COSINE_SIMILARITY"))
-                  s"(${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
-                else if (id.upper.endsWith("DISTANCE"))
-                  s"sqrt(${dist(a, b)})"
-                else dot(a, b)
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if Set("SUMIF", "AVGIF", "MINIF", "MAXIF", "COUNTIF")
-              .contains(id.upper) && callOpen >= 0 && {
-                // DuckDB's own countif(cond) is 1-arg and name-mapped; the
-                // ClickHouse xIf family here is the 2-arg (expr, cond) form
-                splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen))).length == 2
-              } =>
-            // ClickHouse conditional aggregates xIf(expr, cond) →
-            // agg(expr) FILTER (WHERE cond) — Spark's native filtered
-            // aggregation (codegen'd, partial-agg friendly)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val agg = id.upper.stripSuffix("IF").toLowerCase
-            val (e, c) = (render(args(0)).trim, render(args(1)).trim)
-            toks = toks.patch(i, lex(s"$agg($e) FILTER (WHERE $c)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "MULTIIF" && callOpen >= 0 =>
-            // ClickHouse multiIf(c1, v1, ..., else) → CASE chain
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length >= 3 && args.length % 2 == 1) {
-              val pairs = args.dropRight(1).grouped(2).map { p =>
-                s"WHEN ${render(p(0)).trim} THEN ${render(p(1)).trim}"
-              }.mkString(" ")
-              val els = render(args.last).trim
-              toks = toks.patch(i, lex(s"(CASE $pairs ELSE $els END)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper.startsWith("TOSTARTOF") && callOpen >= 0 &&
-              Set("DAY", "MONTH", "YEAR", "HOUR", "MINUTE", "QUARTER", "WEEK")
-                .contains(id.upper.stripPrefix("TOSTARTOF")) =>
-            // ClickHouse toStartOfX(d) → date_trunc('X', d); toStartOfWeek
-            // default mode 0 starts SUNDAY (Spark/DuckDB week = Monday) →
-            // shifted trunc. r12: MONTH/QUARTER/YEAR return Date in
-            // ClickHouse → pre-wrapped CAST(… AS DATE) (also what
-            // rewriteDateTruncShape would produce — emitting it here
-            // keeps the fixpoint); DAY returns DateTime there → the
-            // ENCLOSING CAST(… AS TIMESTAMP) sentinel opts out of the
-            // day-or-coarser DATE rewrite (r13; no-op cast, folded by
-            // SimplifyCasts).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val d = render(args(0)).trim
-              val unit = id.upper.stripPrefix("TOSTARTOF")
-              val repl = unit match {
-                case "WEEK" =>
-                  s"date_sub(CAST(date_trunc('WEEK', date_add($d, 1)) AS DATE), 1)"
-                case "MONTH" | "QUARTER" | "YEAR" =>
-                  s"CAST(date_trunc('$unit', $d) AS DATE)"
-                case "DAY" =>
-                  s"CAST(date_trunc('DAY', CAST(($d) AS TIMESTAMP)) AS TIMESTAMP)"
-                case _ => s"date_trunc('$unit', $d)"
-              }
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "TOYYYYMM" || id.upper == "TOYYYYMMDD") && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val d = render(args(0)).trim
-              val repl =
-                if (id.upper == "TOYYYYMM") s"(year($d) * 100 + month($d))"
-                else s"(year($d) * 10000 + month($d) * 100 + day($d))"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "TODAYOFWEEK" && callOpen >= 0 =>
-            // ClickHouse: Monday=1..Sunday=7; Spark dayofweek: Sunday=1
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val d = render(args(0)).trim
-              toks = toks.patch(i,
-                lex(s"(((graft_dow($d) + 6) % 7) + 1)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "POSITION" && callOpen >= 0 && {
-                val args = splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen)))
-                args.length == 2 && !args.exists(_.exists {
-                  case i2: Ident => i2.upper == "IN"; case _ => false })
-              } =>
-            // ClickHouse position(haystack, needle) — Spark's 2-arg
-            // position() takes (substr, str), REVERSED; instr has the CH
-            // order. SQL-standard position(x IN y) passes through untouched.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            toks = toks.patch(i,
-              lex(s"instr(${render(args(0)).trim}, ${render(args(1)).trim})"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "FIRST" || id.upper == "LAST") && callOpen >= 0 &&
-              splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen))).length == 1 && {
-                val arg = splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen))).head
-                arg.exists { case i2: Ident => i2.upper == "ORDER"; case _ => false }
-              } =>
-            // DuckDB `first(e ORDER BY k [DESC])` → min_by/max_by (probe:
-            // first ORDER BY ≡ min_by, last ≡ max_by; DESC swaps). Ties are
-            // arbitrary in both engines — declared queries use unique keys.
-            val close = matchParen(toks, callOpen)
-            val arg = splitTopLevel(toks.slice(callOpen + 1, close)).head
-            val obIdx = arg.indices.find(j => arg(j) match {
-              case i2: Ident => i2.upper == "ORDER"; case _ => false
-            }).get
-            val byIdx = arg.indices.find(j => j > obIdx && (arg(j) match {
-              case i2: Ident => i2.upper == "BY"; case _ => false
-            })).getOrElse(-1)
-            if (byIdx > 0) {
-              val e = render(arg.take(obIdx)).trim
-              var key = arg.drop(byIdx + 1)
-              val isDesc = key.reverse.find(!isWs(_)).exists {
-                case i2: Ident => i2.upper == "DESC"; case _ => false
-              }
-              if (isDesc || key.reverse.find(!isWs(_)).exists {
-                  case i2: Ident => i2.upper == "ASC"; case _ => false }) {
-                val cut = key.lastIndexWhere(!isWs(_))
-                key = key.take(cut)
-              }
-              val k = render(key).trim
-              val fn = (id.upper, isDesc) match {
-                case ("FIRST", false) | ("LAST", true) => "min_by"
-                case _ => "max_by"
-              }
-              toks = toks.patch(i, lex(s"$fn($e, $k)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "SKEWNESS" || id.upper == "KURTOSIS") && callOpen >= 0 =>
-            // SILENT same-name divergence closed (r7): DuckDB's skewness/
-            // kurtosis are SAMPLE statistics (G1 / excess G2), Spark's are
-            // population (g1 / excess g2). Exact conversion:
-            //   G1 = g1 · √(n(n−1)) / (n−2)          [NULL below n=3]
-            //   G2 = ((n+1)·g2 + 6) · (n−1) / ((n−2)(n−3))   [NULL below n=4]
-            // (both probe-verified value-exact on DuckDB 1.0; DuckDB
-            // returns NULL at the small-n edges, which the CASE mirrors)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val e = render(args(0)).trim
-              val repl =
-                if (id.upper == "SKEWNESS")
-                  s"(CASE WHEN count($e) < 3 THEN CAST(NULL AS DOUBLE) " +
-                    s"ELSE graft_skewness_g1($e) * sqrt(count($e) * (count($e) - 1)) / (count($e) - 2) END)"
-                else
-                  s"(CASE WHEN count($e) < 4 THEN CAST(NULL AS DOUBLE) " +
-                    s"ELSE ((count($e) + 1) * graft_kurtosis_g2($e) + 6) * (count($e) - 1) / ((count($e) - 2) * (count($e) - 3)) END)"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "JACCARD" && callOpen >= 0 =>
-            // DuckDB jaccard: case-sensitive CHARACTER-SET Jaccard
-            // (multiset collapses: jaccard('aab','ab') = 1.0, probed) →
-            // intersect/union over split(s, ''). DuckDB errors on empty
-            // inputs ("argument too short"); this form returns a value —
-            // error-path-only divergence.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              val repl = s"(CAST(size(array_intersect(split($a, ''), split($b, ''))) AS DOUBLE)" +
-                s" / size(array_union(split($a, ''), split($b, ''))))"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "HAMMING" || id.upper == "MISMATCHES") && callOpen >= 0 =>
-            // DuckDB hamming/mismatches: positionwise differing-BYTE
-            // count (r14 str fuzz: 'éa' vs 'Xa' errors in duck — 3 vs 2
-            // BYTES — where the old char-split emission compared 2-char
-            // strings), ERROR on unequal byte lengths → NULL here
-            // (error-path divergence only; equal-byte-length inputs agree)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i,
-                lex(s"graft_mismatches(($a), ($b))"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "TRUNC" && callOpen >= 0 =>
-            // 1-arg numeric trunc (toward zero) — Spark's trunc is
-            // date-only; emit the floor/ceil CASE at DOUBLE. DuckDB's
-            // DECIMAL-in → DECIMAL-out stays a declared-cast concern.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val x = render(args(0)).trim
-              // isnan/huge guards (r12 num fuzz): floor/ceil return LONG
-              // in Spark — |x| > 2^63 ANSI-overflowed and NaN/inf threw
-              // where duck passes them through; doubles at |x| >= 2^53
-              // are already integral
-              val repl = s"CAST(CASE WHEN isnan($x) OR abs($x) >= 9007199254740992e0 THEN ($x) " +
-                s"WHEN ($x) >= 0 THEN floor($x) ELSE ceil($x) END AS DOUBLE)"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "SIGN" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              splitTopLevel(toks.slice(callOpen + 1, close)).length == 1
-            } =>
-            // r12 num fuzz: duck sign() is an INTEGER -1/0/1 — and
-            // sign(NaN) = 0 — where Spark's returns DOUBLE ±1.0/NaN (a
-            // CAST of the NaN then ANSI-throws, and Spark orders NaN
-            // above zero so CASE comparisons mislabel it 1). Kernel
-            // emission: a CASE splice was non-idempotent (the int-cast
-            // rounding pass wrapped its head on re-translation);
-            // GRAFT_SIGN is integralFns-listed so CAST(sign(x) AS
-            // BIGINT) stays rounding-free.
-            val close = matchParen(toks, callOpen)
-            val x = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i, lex(s"graft_sign($x)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "ABS" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              splitTopLevel(toks.slice(callOpen + 1, close)).length == 1
-            } =>
-            // r13 (VERDICT r12 #5, closing the num-mode allowlist
-            // residual): duck types `-2147483648` BIGINT where Spark
-            // types it INT and abs() ANSI-overflows — graft_abs widens
-            // BYTE/SHORT/INT one step so the type-min is representable,
-            // and throws on LONG min exactly where duck errors. The
-            // trunc/even/isinf guard emissions in THIS pass also get
-            // captured on rescan (double operands — Math.abs either
-            // way), which keeps the translate fixpoint.
-            val close = matchParen(toks, callOpen)
-            val x = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i, lex(s"graft_abs($x)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "ROUND" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              (args.length == 1 || args.length == 2) && {
-                if (decimalRiskToks(args(0), isDecimalCol))
-                  // DECIMAL operand: Spark's decimal round already
-                  // matches duck's exact half-away (r12-pinned); only
-                  // bare negative-literal digits need the parenthesized
-                  // re-emission (r13, r12 ADVICE: the old NaN guard
-                  // coerced DECIMAL results to DOUBLE)
-                  args.length == 2 && (args(1).filterNot(isWs) match {
-                    case Vector(Punct("-"), _: Num) => true
-                    case _ => false
-                  })
-                else
-                  // non-decimal → duck's FP round kernel, EXCEPT the
-                  // integral-marker shapes: round-as-identity over a DIV
-                  // or an integral-fn head — internal emissions rely on
-                  // the round( spelling for the int-cast-rounding skip,
-                  // and the value is already integral on both engines
-                  !roundIntegralMarker(args(0))
-              }
-            } =>
-            // r13 dec fuzz (num-mode probe 34): duck's round() over
-            // DOUBLE is `std::round(x·10^n)/10^n` — half-away on the FP
-            // PRODUCT — while Spark rounds the shortest decimal
-            // rendering via BigDecimal.HALF_UP; they disagree on every
-            // binary knife-edge (round(2.675e0, 2): duck 2.68, Spark
-            // 2.67; round(167634154485.89804, 4): duck ….8981, Spark
-            // ….8980). graft_round_dbl replicates duck bit-exactly and
-            // subsumes the r12 negative-digit NaN/±inf→0 guard (its
-            // negative branch returns 0 there, the positive branch
-            // passes the special through — both probed).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val x = render(args(0)).trim
-            val repl =
-              if (decimalRiskToks(args(0), isDecimalCol))
-                s"round($x, (${render(args(1)).trim}))"
-              else if (args.length == 2)
-                s"graft_round_dbl($x, ${render(args(1)).trim})"
-              else s"graft_round_dbl($x)"
-            toks = toks.patch(i, lex(repl), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "EVEN" && callOpen >= 0 =>
-            // round away from zero to the next even (even(2.5)=4,
-            // even(-2.5)=-4, even(3)=4, probed)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val x = render(args(0)).trim
-              // same isnan/huge guards as trunc (r12 num fuzz): ceil
-              // returns LONG; even(1.5e300)/even(inf) overflowed where
-              // duck passes through (|x| >= 2^53 doubles are integral
-              // with even spacing)
-              val repl = s"CAST(CASE WHEN isnan($x) OR abs($x) >= 9007199254740992e0 THEN ($x) " +
-                s"WHEN ($x) >= 0 THEN ceil(($x) / 2) * 2 " +
-                s"ELSE -(ceil(abs($x) / 2) * 2) END AS DOUBLE)"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "ISINF" || id.upper == "ISFINITE") && callOpen >= 0 =>
-            // Spark has isnan but no isinf/isfinite. NULL-input note:
-            // DuckDB's isnan(NULL) is NULL while Spark's is false — these
-            // two forms propagate NULL via the arithmetic, matching DuckDB.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val x = render(args(0)).trim
-              val repl =
-                if (id.upper == "ISINF") s"(abs($x) = CAST('Infinity' AS DOUBLE))"
-                else s"(NOT isnan($x + CAST(0 AS DOUBLE)) AND abs($x) <> CAST('Infinity' AS DOUBLE))"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LEFT" || id.upper == "RIGHT") && callOpen >= 0 =>
-            // DuckDB left/right accept NEGATIVE n ("all but the last/first
-            // |n|"); Spark's return '' there. Rewritten to substring CASE
-            // forms that agree on every n (probe-verified on: n<-len, -2,
-            // 0, 2, >len); substring spelling keeps the rewrite fixpoint.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (s0, n) = (render(args(0)).trim, render(args(1)).trim)
-              val repl =
-                if (id.upper == "LEFT")
-                  s"substring($s0, 1, CASE WHEN ($n) >= 0 THEN ($n) ELSE greatest(0, length($s0) + ($n)) END)"
-                else
-                  s"substring($s0, CASE WHEN ($n) >= 0 THEN greatest(1, length($s0) - ($n) + 1) ELSE 1 - ($n) END)"
-              toks = toks.patch(i, lex(repl), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "TO_BASE" && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (n, b) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(s"conv($n, 10, $b)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if callOpen >= 0 &&
-              (Set("LIST_AGGREGATE", "LIST_AGGR", "ARRAY_AGGREGATE",
-                "ARRAY_AGGR").contains(id.upper) ||
-              (id.upper == "AGGREGATE" && {
-                // callOpen is checked FIRST: a bare `aggregate` identifier
-                // (no call parens) must not reach matchParen(toks, -1)
-                val parts = splitTopLevel(toks.slice(callOpen + 1, matchParen(toks, callOpen)))
-                parts.length >= 2 && parts(1).filterNot(isWs).forall(_.isInstanceOf[Str])
-              })) =>
-            // list_aggregate(l, 'name' [, extra]) -> the matching array
-            // form. DuckDB element-aggregate semantics (r8, probe-pinned):
-            // NULL elements are SKIPPED ('count' of [1,NULL] is 1, sum of
-            // the empty/all-NULL list is NULL), string_agg joins with the
-            // given (or default ',') separator, first/last pick ends.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val fnLit = if (args.length >= 2) args(1).collectFirst { case s: Str => s.value } else None
-            val l = if (args.nonEmpty) render(args(0)).trim else ""
-            val nn = s"filter(($l), __g_n -> __g_n IS NOT NULL)"
-            val sumForm = s"aggregate($nn, CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE))"
-            val repl = fnLit.map(_.toLowerCase) match {
-              case Some("min") if args.length == 2 => Some(s"array_min($l)")
-              case Some("max") if args.length == 2 => Some(s"array_max($l)")
-              case Some("count") if args.length == 2 => Some(s"size($nn)")
-              case Some("sum") if args.length == 2 =>
-                Some(s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE $sumForm END)")
-              case Some("avg") | Some("mean") if args.length == 2 =>
-                Some(s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE ($sumForm / size($nn)) END)")
-              case Some("string_agg") =>
-                val sep = if (args.length >= 3) render(args(2)).trim else "','"
-                Some(s"array_join($l, $sep)")
-              case Some("first") if args.length == 2 => Some(s"try_element_at($l, 1)")
-              case Some("last") if args.length == 2 => Some(s"try_element_at($l, -1)")
-              case _ => None
-            }
-            repl.foreach { r =>
-              toks = toks.patch(i, lex(r), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "PRINTF" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length >= 2 && (args(0).filterNot(isWs) match {
-                case Vector(_: Str) => true
-                case _ => false
-              })
-            } =>
-            // r10 batch 7: Java's Formatter rejects DECIMAL values for the
-            // FLOAT conversions (%f/%e/%g threw IllegalFormatConversion
-            // where DuckDB formats them) — cast each float-specifier arg
-            // to DOUBLE, matching duck's coercion. %i is duck's alias for
-            // %d. Non-literal formats keep the plain name map.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val fmt0 = args(0).filterNot(isWs).head.asInstanceOf[Str].value
-            val fmt = fmt0.replace("%i", "%d")
-            val convs = "%[-+ #0]*\\d*(?:\\.\\d+)?([a-zA-Z%])".r
-              .findAllMatchIn(fmt).map(_.group(1)).filterNot(_ == "%").toSeq
-            val rest = args.drop(1).map(a => render(a).trim).zipWithIndex.map {
-              case (a, ix) if ix < convs.length && "feg".contains(convs(ix)) =>
-                s"CAST(($a) AS DOUBLE)"
-              case (a, _) => a
-            }
-            toks = toks.patch(i,
-              lex(s"format_string(${sparkStrLit(fmt)}, ${rest.mkString(", ")})"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "FORMAT" && callOpen >= 0 && {
-            // fmt-style format('{} x {}', ...) -> format_string('%s x %s',
-            // ...) when the first arg is a literal of {} / {N} holes, plus
-            // (r10 batch 7) the spec forms {:.Nf} / {:d} / {:s} and
-            // (r10 batch 9) alignment/zero-pad/width {:>6} {:<8s} {:06d}
-            // {:8.3f}; center-align and custom fills stay loud
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            args.length >= 2 && (args(0).filterNot(isWs) match {
-              case Vector(s: Str) => !s.value.contains("%") &&
-                "\\{:([^}]*)\\}".r.findAllMatchIn(s.value)
-                  .forall(m => fmtSpecToJava(m.group(1)).isDefined)
-              case _ => false
-            })
-          } =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val fmt = args(0).filterNot(isWs).head.asInstanceOf[Str].value
-            // collect per-hole conversions in order for arg casting
-            val holeRe = "\\{(\\d*)(?::([^}]*))?\\}".r
-            val convs = holeRe.findAllMatchIn(fmt)
-              .map(m => fmtSpecToJava(Option(m.group(2)).getOrElse("")).getOrElse("s"))
-              .toSeq
-            val jfmt = holeRe.replaceAllIn(fmt, m => {
-              val spec = Option(m.group(2)).getOrElse("")
-              val body = fmtSpecToJava(spec).getOrElse("s")
-              if (m.group(1).isEmpty) "%" + body
-              else s"%${m.group(1).toInt + 1}\\$$$body"
-            })
-            val rest = args.drop(1).map(a => render(a).trim).zipWithIndex.map {
-              case (a, ix) if ix < convs.length && convs(ix).endsWith("f") =>
-                s"CAST(($a) AS DOUBLE)"
-              case (a, _) => a
-            }
-            toks = toks.patch(i,
-              lex(s"format_string(${sparkStrLit(jfmt)}, ${rest.mkString(", ")})"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "LIST_PREPEND" && callOpen >= 0 =>
-            // DuckDB list_prepend(element, list) vs Spark
-            // array_prepend(list, element): swap the arguments (the reason
-            // a name-only fnMap entry was deliberately never added)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (e, l) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(s"array_prepend(($l), ($e))"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "REGEXP_MATCHES" && callOpen >= 0 && {
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            args.length == 3 && (args(2).filterNot(isWs) match {
-              case Vector(s: Str) => s.value.forall("imsc".contains(_))
-              case _ => false
-            })
-          } =>
-            // r10 batch 9: duck's options string → Java inline flags.
-            // i/m/s carry over; c (case-sensitive) is both engines'
-            // default. Other options stay loud — including 'g', which
-            // duck itself rejects on regexp_matches.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val flags = args(2).filterNot(isWs).head.asInstanceOf[Str]
-              .value.filter("ims".contains(_))
-            val (s0, p0) = (render(args(0)).trim, render(args(1)).trim)
-            val pat = if (flags.isEmpty) s"($p0)" else s"'(?$flags)' || ($p0)"
-            toks = toks.patch(i, lex(s"rlike(($s0), $pat)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "REGEXP_EXTRACT_ALL" && callOpen >= 0 && {
-            val close = matchParen(toks, callOpen)
-            splitTopLevel(toks.slice(callOpen + 1, close)).length == 2
-          } =>
-            // same name, different 2-arg default: DuckDB extracts group 0
-            // (the whole match), Spark group 1 — pin the 0 explicitly
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-            toks = toks.patch(i, lex(s"regexp_extract_all($a, $b, 0)"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "DAYNAME" || id.upper == "MONTHNAME") && callOpen >= 0 =>
-            // full English names in both engines; Spark spells them via
-            // date_format patterns (EEEE / MMMM) — probe-verified equal
-            val close = matchParen(toks, callOpen)
-            val arg = render(toks.slice(callOpen + 1, close)).trim
-            val fmt = if (id.upper == "DAYNAME") "EEEE" else "MMMM"
-            toks = toks.patch(i, lex(s"date_format($arg, '$fmt')"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "LIST_REDUCE" || id.upper == "ARRAY_REDUCE") && callOpen >= 0 =>
-            // DuckDB folds left with the FIRST element as the seed (an
-            // empty list errors there; NULL seed here — documented
-            // divergence, declared queries keep lists non-empty)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (l, lam) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i,
-                lex(s"reduce(slice(($l), 2, size($l) - 1), try_element_at(($l), 1), $lam)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LIST_UNIQUE" || id.upper == "ARRAY_UNIQUE") && callOpen >= 0 =>
-            // count of distinct NON-NULL elements (probe: list_unique(
-            // [1,2,2,NULL]) = 2 — DuckDB excludes NULL; Spark's
-            // array_distinct keeps it, so filter first). DuckDB returns
-            // UBIGINT; Spark's size is INT — declared queries CAST.
-            val close = matchParen(toks, callOpen)
-            val arg = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i,
-              lex(s"size(graft_list_distinct($arg))"),
-              close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "LIST_DISTINCT" || id.upper == "ARRAY_DISTINCT") && callOpen >= 0 =>
-            // DuckDB's list_distinct AND its array_distinct alias DROP
-            // NULLs (probe on both: [1,2,2,NULL,NULL] → [2,1]); Spark's
-            // array_distinct keeps one NULL. graft_list_distinct is the
-            // registered native ArrayDistinct∘ArrayCompact — the alias
-            // spelling matters because this loop runs to FIXPOINT: a
-            // replacement containing `array_distinct` would re-match this
-            // very case forever. (r7: the ARRAY_DISTINCT alias previously
-            // passed through to Spark's native fn, silently diverging on
-            // NULL-bearing lists.) Result ORDER is unspecified in DuckDB:
-            // declared queries wrap in list_sort before serializing.
-            val close = matchParen(toks, callOpen)
-            val arg = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i,
-              lex(s"graft_list_distinct($arg)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "TIME_BUCKET" && callOpen >= 0 && {
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            (args.length == 2 || args.length == 3) &&
-              bucketWidth(args(0)).isDefined
-          } =>
-            // time_bucket(width, ts[, offset|origin]) — DuckDB anchors
-            // fixed widths to 2000-01-03 00:00:00 (a Monday: 7-day
-            // buckets start Mondays) and month widths to 2000-01-01,
-            // flooring pre-origin inputs (probe: 1969-03-05 → 1969-03-04
-            // for 2-day buckets). pmod IS the floor arithmetic:
-            // bucket = t - pmod(t - origin, w). A 3rd INTERVAL arg
-            // shifts the origin; a 3rd DATE/TIMESTAMP arg replaces it
-            // (month widths use only its year+month — probe: origin
-            // 2000-02-15 buckets land on the 1st). DATE-typed input
-            // returns DATE in DuckDB: pinned for DATE literals / ::DATE
-            // casts; bare columns get the TIMESTAMP shape (documented
-            // rendering-class divergence, same class as date_trunc).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val (wm, wus) = bucketWidth(args(0)).get
-            val ts = render(args(1)).trim
-            val dateIn = {
-              val sig = args(1).filterNot(isWs)
-              val r = render(args(1)).trim.toUpperCase
-              (sig.headOption.exists(t => up(t) == "DATE") &&
-                sig.length == 2) ||
-                r.endsWith("::DATE") || r.matches("(?s).*AS\\s+DATE\\s*\\)\\s*$") ||
-                // r12 (VERDICT r11 #1): DATE-TYPED COLUMN inputs get the
-                // DATE result shape too — strict catalog resolution (the
-                // wrong shape on a name collision would be silent)
-                dateValuedSlice(args(1), 0, args(1).length - 1,
-                  isDateCol, strict = true)
-            }
-            val thirdIv: Option[(Long, Long)] =
-              if (args.length == 3) intervalWidth(args(2)) else None
-            val thirdOrigin: Option[String] =
-              if (args.length == 3 && thirdIv.isEmpty)
-                Some(render(args(2)).trim) else None
-            val ok =
-              if (args.length == 3 && thirdIv.isDefined) {
-                // offset must live on the same grid axis as the width
-                val (om, ous) = thirdIv.get
-                (wus > 0 && om == 0) || (wm > 0 && ous == 0)
-              } else true
-            if (!ok) { () /* cross-axis offset: stays loud */ }
-            else if (wus > 0) {
-              val oExpr = thirdOrigin match {
-                case Some(org) => s"(unix_micros(CAST(($org) AS TIMESTAMP)))"
-                case None =>
-                  val base = 946857600000000L // 2000-01-03 00:00:00 UTC
-                  s"(${base + thirdIv.map(_._2).getOrElse(0L)})"
-              }
-              val t = s"unix_micros(CAST(($ts) AS TIMESTAMP))"
-              val bucket = s"timestamp_micros($t - pmod($t - $oExpr, $wus))"
-              val out = if (dateIn) s"CAST($bucket AS DATE)" else bucket
-              toks = toks.patch(i, lex(out), close - i + 1)
-              changed = true
-            } else {
-              // month grid: bucket month-index arithmetic, day-of-month 1
-              val md0 = thirdOrigin match {
-                case Some(org) => s"(year(($org)) * 12 + month(($org)) - 1)"
-                case None => s"(${2000 * 12 + thirdIv.map(_._1).getOrElse(0L)})"
-              }
-              val md = s"(year(($ts)) * 12 + month(($ts)) - 1)"
-              val bm = s"($md - pmod($md - $md0, $wm))"
-              val d = s"make_date(CAST(round($bm DIV 12) AS INT), CAST(round($bm % 12 + 1) AS INT), 1)"
-              val out = if (dateIn) d else s"CAST($d AS TIMESTAMP)"
-              toks = toks.patch(i, lex(out), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "DATE_SUB" || id.upper == "DATESUB") &&
-              callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 3 &&
-                  (args(0).filterNot(isWs) match {
-                    case Vector(_: Str) => true
-                    case _ => false
-                  })
-              } =>
-            // DuckDB date_sub('part', a, b) counts COMPLETE parts from a
-            // to b, sign-symmetric, truncating toward zero (probes:
-            // ('hour', 10:00, +1d 09:59:59) = 23; ('month', Jan 31,
-            // Mar 30) = 1 but Mar 31 = 2 — interval-arithmetic clamping,
-            // NOT months_between's /31 day fractions, whose floor
-            // diverges on e.g. (Jan 30, Feb 29)). Fixed parts divide the
-            // microsecond span (BIGINT DIV truncates toward zero);
-            // month-class parts take the raw month-index diff and walk
-            // back one step when start+m0 months overshoots — a single
-            // step always suffices because month addition is monotonic.
-            // NOT Spark's 2-arg date_sub(date, days), which passes through.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val part = args(0).filterNot(isWs).head.asInstanceOf[Str]
-              .value.trim.toLowerCase
-            val a = render(args(1)).trim
-            val b = render(args(2)).trim
-            val fixedUs: Option[Long] = part match {
-              case "microsecond" | "microseconds" | "us" => Some(1L)
-              case "millisecond" | "milliseconds" | "ms" => Some(1000L)
-              case "second" | "seconds" | "sec" | "secs" => Some(1000000L)
-              case "minute" | "minutes" | "min" | "mins" => Some(60000000L)
-              case "hour" | "hours" | "hr" | "hrs" => Some(3600000000L)
-              case "day" | "days" | "d" => Some(86400000000L)
-              case "week" | "weeks" | "w" => Some(604800000000L)
-              case _ => None
-            }
-            val monthsPer: Option[Long] = part match {
-              case "month" | "months" | "mon" | "mons" => Some(1L)
-              case "quarter" | "quarters" => Some(3L)
-              case "year" | "years" | "yr" | "yrs" | "y" => Some(12L)
-              case "decade" | "decades" => Some(120L)
-              case "century" | "centuries" => Some(1200L)
-              case "millennium" | "millennia" => Some(12000L)
-              case _ => None
-            }
-            if (fixedUs.isDefined) {
-              val w = fixedUs.get
-              toks = toks.patch(i, lex(
-                s"((unix_micros(CAST(($b) AS TIMESTAMP)) - unix_micros(CAST(($a) AS TIMESTAMP))) DIV $w)"),
-                close - i + 1)
-              changed = true
-            } else if (monthsPer.isDefined) {
-              // probe-pinned direction contract: the complete-month count
-              // always steps forward FROM THE EARLIER endpoint (clamped
-              // month addition), then carries the sign — a backward walk
-              // from the later endpoint disagrees when clamping is
-              // asymmetric (('month', Feb 29, Jan 31) is -1: Jan 31 + 1mo
-              // clamps to Feb 29; Feb 29 - 1mo = Jan 29 would say 0).
-              val per = monthsPer.get
-              val ta = s"CAST(($a) AS TIMESTAMP)"
-              val tb = s"CAST(($b) AS TIMESTAMP)"
-              val lo = s"least($ta, $tb)"
-              val hi = s"greatest($ta, $tb)"
-              // round() head keeps the emitted int cast out of the
-              // rounding-cast rewrite (identity on integrals) — idempotence
-              val m0 = s"(CAST(round(year($hi) - year($lo)) AS BIGINT) * 12 + month($hi) - month($lo))"
-              val adj = s"(CASE WHEN timestampadd(MONTH, CAST(round($m0) AS INT), $lo) > $hi " +
-                s"THEN $m0 - 1 ELSE $m0 END)"
-              val signed = s"(CASE WHEN $ta > $tb THEN -($adj) ELSE $adj END)"
-              val out = if (per == 1L) signed
-                else s"((CASE WHEN $ta > $tb THEN -($adj DIV $per) ELSE ($adj DIV $per) END))"
-              toks = toks.patch(i, lex(out), close - i + 1)
-              changed = true
-            } // unknown part name: stays loud
-          case id: Ident if (id.upper == "JSON_EXTRACT" ||
-              id.upper == "JSON_EXTRACT_PATH") && callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 2 &&
-                  args(1).filterNot(isWs).length == 1 &&
-                  normalizeJsonPath(args(1).filterNot(isWs).head).isDefined
-              } =>
-            // DuckDB json_extract returns JSON (strings stay quoted:
-            // '"x"') — get_json_object is the TEXT form and silently
-            // unquoted (r9 batch-4 fuzz). to_json ∘ variant_get keeps
-            // the JSON rendering for every type; parse_json stays loud
-            // on malformed input exactly like DuckDB.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val j = render(args(0)).trim
-            val path = normalizeJsonPath(args(1).filterNot(isWs).head).get
-            toks = toks.patch(i, lex(
-              s"to_json(variant_get(parse_json($j), $path))"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "JSON_EXTRACT_STRING" ||
-              id.upper == "JSON_EXTRACT_PATH_TEXT") && callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 2 &&
-                  args(1).filterNot(isWs).length == 1 &&
-                  normalizeJsonPath(args(1).filterNot(isWs).head).isDefined
-              } =>
-            // text form — get_json_object, with the path normalized
-            // (quoted keys / pointer / bare-key forms)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val j = render(args(0)).trim
-            val path = normalizeJsonPath(args(1).filterNot(isWs).head).get
-            toks = toks.patch(i, lex(
-              s"get_json_object($j, $path)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "JSON_VALID" && callOpen >= 0 =>
-            // NULL in → NULL; otherwise parseability (try_parse_json is
-            // NULL exactly on malformed input; a JSON 'null' is a
-            // non-NULL variant)
-            val close = matchParen(toks, callOpen)
-            val j = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i, lex(
-              s"(CASE WHEN ($j) IS NULL THEN NULL ELSE try_parse_json($j) IS NOT NULL END)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "JSON_QUOTE" && callOpen >= 0 =>
-            // JSON-encode one value: serialize {"g": v} and strip the
-            // 6-char prefix + closing brace (ignoreNullFields=false so
-            // NULL renders as the JSON null)
-            val close = matchParen(toks, callOpen)
-            val j = render(toks.slice(callOpen + 1, close)).trim
-            val ser = s"to_json(named_struct('g', ($j)), map('ignoreNullFields', 'false'))"
-            toks = toks.patch(i, lex(
-              s"substr($ser, 6, length($ser) - 6)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "JSON_ARRAY_LENGTH" && callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 2 &&
-                  args(1).filterNot(isWs).length == 1 &&
-                  normalizeJsonPath(args(1).filterNot(isWs).head).isDefined
-              } =>
-            // 2-arg path form → extract the array, then Spark's native
-            // 1-arg json_array_length
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val j = render(args(0)).trim
-            val path = normalizeJsonPath(args(1).filterNot(isWs).head).get
-            toks = toks.patch(i, lex(
-              s"json_array_length(get_json_object($j, $path))"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "FROM_JSON" && callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 2 && (args(1).filterNot(isWs) match {
-                  case Vector(st: Str) =>
-                    st.value.trim.headOption.exists(c => c == '{' || c == '[') &&
-                      jsonStructureToDdl(st.value).isDefined
-                  case _ => false
-                })
-              } =>
-            // DuckDB from_json(j, structure) takes a JSON structure of
-            // type-name strings — Spark takes a DDL schema; the converted
-            // DDL never starts with {/[, so the emission isn't
-            // re-captured. Scalar structures ('"INTEGER"') stay loud.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val spec = args(1).filterNot(isWs).head.asInstanceOf[Str].value
-            val ddl = jsonStructureToDdl(spec).get
-            toks = toks.patch(i, lex(
-              s"from_json(${render(args(0)).trim}, '$ddl')"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "JSON" && callOpen >= 0 && {
-                splitTopLevel(toks.slice(callOpen + 1,
-                  matchParen(toks, callOpen))).length == 1
-              } =>
-            // json(x) validates + minifies — a variant round-trip does
-            // exactly that (loud on malformed input, like DuckDB)
-            val close = matchParen(toks, callOpen)
-            val j = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i, lex(s"to_json(parse_json($j))"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "JSON_TYPE" && callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                val args = splitTopLevel(toks.slice(callOpen + 1, close))
-                args.length == 1 || (args.length == 2 &&
-                  args(1).filterNot(isWs).length == 1 &&
-                  normalizeJsonPath(args(1).filterNot(isWs).head).isDefined)
-              } =>
-            // first-character dispatch over the (extracted) JSON text —
-            // probe-pinned names: OBJECT/ARRAY/VARCHAR/BOOLEAN/NULL,
-            // UBIGINT for unsigned ints, BIGINT for negatives, DOUBLE
-            // when a . or exponent appears
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val j0 = render(args(0)).trim
-            val j = if (args.length == 1) s"($j0)"
-              else s"to_json(variant_get(parse_json($j0), ${normalizeJsonPath(args(1).filterNot(isWs).head).get}))"
-            toks = toks.patch(i, lex(
-              s"(CASE WHEN $j IS NULL THEN NULL ELSE " +
-                s"CASE substr(ltrim($j), 1, 1) " +
-                s"WHEN '{' THEN 'OBJECT' WHEN '[' THEN 'ARRAY' " +
-                s"WHEN '\"' THEN 'VARCHAR' WHEN 't' THEN 'BOOLEAN' " +
-                s"WHEN 'f' THEN 'BOOLEAN' WHEN 'n' THEN 'NULL' " +
-                s"ELSE CASE WHEN ltrim($j) RLIKE '[.eE]' THEN 'DOUBLE' " +
-                s"WHEN substr(ltrim($j), 1, 1) = '-' THEN 'BIGINT' " +
-                s"ELSE 'UBIGINT' END END END)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "GROUPING" && callOpen >= 0 && {
-                val close = matchParen(toks, callOpen)
-                splitTopLevel(toks.slice(callOpen + 1, close)).length >= 2
-              } =>
-            // DuckDB's multi-arg GROUPING is the bitmask (first argument
-            // highest bit) — Spark spells that grouping_id; 1-arg
-            // grouping passes through
-            val close = matchParen(toks, callOpen)
-            val inner = render(toks.slice(callOpen + 1, close)).trim
-            toks = toks.patch(i, lex(s"grouping_id($inner)"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "LIST_HAS_ALL" || id.upper == "ARRAY_HAS_ALL") && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (l, sub) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(s"(size(array_except(($sub), ($l))) = 0)"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "GENERATE_SUBSCRIPTS" && callOpen >= 0 =>
-            // generate_subscripts(l, 1) — the set-returning 1-based index
-            // generator (lists are 1-D in DuckDB; dim != 1 errors there and
-            // stays untouched → loud unknown-function on Spark).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2 && render(args(1)).trim == "1") {
-              val l = render(args(0)).trim
-              toks = toks.patch(i,
-                lex(s"explode(sequence(1, size($l)))"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "STRUCT_EXTRACT" && callOpen >= 0 =>
-            // struct_extract(s, 'name') → ($s).`name` for a literal field
-            // name (both engines resolve fields case-insensitively); a
-            // dynamic name has no Spark spelling and stays untouched.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val nameTok = args(1).find(!isWs(_))
-              nameTok match {
-                case Some(s0: Str)
-                    if s0.value.matches("[A-Za-z_][A-Za-z0-9_]*") =>
-                  val s = render(args(0)).trim
-                  toks = toks.patch(i,
-                    lex(s"(($s).${s0.value})"), close - i + 1)
-                  changed = true
-                case _ => () // exotic field names stay untouched (loud)
-              }
-            }
-          case id: Ident if (id.upper == "LIST_SLICE" || id.upper == "ARRAY_SLICE") && callOpen >= 0 =>
-            // same 1-based inclusive semantics as the `l[a:b]` bracket
-            // syntax → the same guarded form (r5: previously emitted the
-            // unguarded slice, so list_slice(l, 4, 2) threw where the
-            // bracket spelling returned [])
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 3) {
-              val (l, a, b) = (render(args(0)).trim, render(args(1)).trim, render(args(2)).trim)
-              toks = toks.patch(i, lex(sliceForm(s"($l)", a, b)), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "TIMEZONE" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              splitTopLevel(toks.slice(callOpen + 1, close)).length == 2
-            } =>
-            // r10 batch 8, probe-pinned: duck timezone(zone, ts) over a
-            // NAIVE timestamp interprets ts in `zone` and renders it in
-            // the session zone (UTC) — exactly to_utc_timestamp. The
-            // TIMESTAMPTZ flavor INVERTS (convert the instant TO the
-            // zone); the engine has no TSTZ type, but the two common
-            // syntactic TSTZ producers are visible at token level (r12
-            // ts fuzz): a to_timestamp(…) argument and a NESTED
-            // timezone(…) argument (whose own emission computes the
-            // instant) — those dispatch to from_utc_timestamp,
-            // reproducing duck's nested-zone chains exactly. r13
-            // narrowed the residual class: date_diff now floor-grids
-            // TSTZ-flavored operands and chained AT TIME ZONE inverts
-            // via the containment scan below; what remains is the
-            // single pinned matrix cell (ts2.37) — a MIXED interval
-            // applied to a TSTZ value runs days-first in duck where
-            // naive runs months-first.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            // r13 (closing two allowlisted ts cells): CONTAINMENT scan,
-            // not a bare head match — a chained `(x AT TIME ZONE 'a') AT
-            // TIME ZONE 'b'` parenthesizes the inner producer, and duck
-            // COERCES mixed expressions to TSTZ anyway, so any producer
-            // in the slice means the operand is TSTZ-flavored (r14:
-            // CASE-condition regions masked — see tstzProducerToks)
-            val tstzProducer = tstzProducerToks(args(1))
-            val (z, x) = (render(args(0)).trim, render(args(1)).trim)
-            toks = toks.patch(i, lex(
-              if (tstzProducer) s"from_utc_timestamp(CAST($x AS TIMESTAMP), $z)"
-              else s"to_utc_timestamp(CAST($x AS TIMESTAMP), $z)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "ARRAY_LENGTH" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length == 2 && (args(1).filterNot(isWs) match {
-                case Vector(n: Num) => n.text == "1"
-                case _ => false
-              })
-            } =>
-            // r10 batch 8: duck's 2-arg array_length(l, 1) — dimension 1
-            // is the plain length; higher literal dims stay loud (duck
-            // errors on non-nested inputs there too)
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            toks = toks.patch(i,
-              lex(s"size(${render(args(0)).trim})"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "STRPTIME" || id.upper == "TRY_STRPTIME") &&
-              callOpen >= 0 && {
-              // only rewrite when every '%'-literal in the call scans
-              // cleanly in parse mode — unknown or format-only specifiers
-              // leave the call untranslated (duck errors there too)
-              val close = matchParen(toks, callOpen)
-              toks.zipWithIndex.forall {
-                case (s: Str, j) if j > callOpen && j < close && s.value.contains("%") =>
-                  scanStrftime(s.value, parse = true).isDefined
-                case _ => true
-              }
-            } =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val fmtIsLiteral = args.length == 2 &&
-              (args(1).filterNot(isWs) match {
-                case Vector(s: Str) => s.value.contains("%")
-                case _ => false
-              })
-            val isTry = id.upper == "TRY_STRPTIME"
-            if (fmtIsLiteral) {
-              // convert ONLY the format argument (r13 full-gate rerun):
-              // the old whole-call-range map also converted %-literals
-              // belonging to NESTED strftime/strptime calls inside
-              // args(0) — their own rewrite then saw a %-free pattern,
-              // fell through to the DYNAMIC kernel, and fed it an
-              // already-JDK literal (a runtime parse error) — and a
-              // legitimate '%' in the DATA string would have been
-              // corrupted the same way. Token-level reconstruction
-              // leaves args(0) byte-identical.
-              val fmtStr = args(1).filterNot(isWs).head.asInstanceOf[Str]
-              val jdk = Str("'" + strptimeToJava(fmtStr.value).replace("'", "''") + "'")
-              // try_strptime → try_to_timestamp (r13): NULL on parse
-              // failure or out-of-range date, duck's split exactly
-              val fn = if (isTry) "try_to_timestamp" else "to_timestamp"
-              val repl = Vector(Ident(fn), Punct("(")) ++ args(0) ++
-                Vector(Punct(","), Ws(" "), jdk, Punct(")"))
-              toks = toks.patch(i, repl, close - i + 1)
-            } else if (args.length == 2) {
-              // DYNAMIC pattern (r13, VERDICT r12 #3 — the strftime
-              // pair's parse direction): the old fall-through renamed to
-              // to_timestamp(s, fmt_expr), feeding duck %-patterns to
-              // the JDK formatter per row — a SILENT wrong answer. Route
-              // through the graft_strptime runtime kernel (duck itself
-              // rejects non-constant formats — permissive superset with
-              // duck-faithful probe-pinned semantics).
-              val (s0, fmt) = (render(args(0)).trim, render(args(1)).trim)
-              val fn = if (isTry) "graft_strptime_try" else "graft_strptime"
-              toks = toks.patch(i, lex(s"$fn($s0, $fmt)"), close - i + 1)
-            } else {
-              // 1- or 3+-arg forms (duck's list-of-formats) stay loud
-              toks = toks.patch(i,
-                Seq(Ident(if (isTry) "try_to_timestamp" else "to_timestamp")), 1)
-            }
-            changed = true
-          case id: Ident if Set("PARSE_PATH", "PARSE_FILENAME",
-              "PARSE_DIRNAME").contains(id.upper) && callOpen >= 0 => {
-            // r13 string scout (loud UNRESOLVED_ROUTINE before): duck's
-            // path parsers, probed matrix — parse_path keeps a rooted
-            // leading separator as its own '/' element and drops empties
-            // ('/a/b/c.txt' → ['/','a','b','c.txt'], 'a//b/' → ['a','b'],
-            // '' → [], '/' → ['/']); parse_filename is the last
-            // component ('' after a trailing slash), trim_extension=true
-            // strips the final .ext only ('c.tar.gz' → 'c.tar');
-            // parse_dirname is the TOP-level directory ('/'-rooted → '/',
-            // 'a/b/c' → 'a', separator-free → ''). Default separator
-            // class is duck's both_slash; the 'system'/'forward_slash'
-            // literals map to '/' on this platform, 'backslash' to '\'.
-            // Verbatim literals (escapedStringLiterals=true) keep the
-            // regex char class exact.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val p = if (args.nonEmpty) render(args(0)).trim else ""
-            // regex class vs one-char literals: VERBATIM string literals
-            // (escapedStringLiterals=true) mean the REGEX text needs its
-            // backslash doubled ('[/\\]') while the one-character
-            // comparison literal is a single '\'. Plain OR comparisons,
-            // not IN — the IN-list rewrite would re-capture the emission.
-            // root chars compare as ASCII CODES: a bare '\' literal
-            // round-trips through encodeStrLiterals' chr(92), which the
-            // CHR rename re-captures on re-translation; ascii() compares
-            // are capture-proof
-            def sepClass(a: Option[Seq[Tok]]): Option[(String, Seq[Int])] =
-              a.map(_.filterNot(isWs)) match {
-                case None => Some(("[/\\\\]", Seq(47, 92)))
-                case Some(Vector(s: Str)) => s.value match {
-                  case "both_slash" => Some(("[/\\\\]", Seq(47, 92)))
-                  case "system" | "forward_slash" => Some(("/", Seq(47)))
-                  case "backslash" => Some(("\\\\", Seq(92)))
-                  case _ => None
-                }
-                case _ => None
-              }
-            def rootPred(roots: Seq[Int]): String =
-              roots.map(r => s"ascii(substr($p, 1, 1)) = $r")
-                .mkString("(", " OR ", ")")
-            val repl: Option[String] = id.upper match {
-              // capture-proof spellings only: concat() would take the
-              // STRING-concat rewrite, element_at() the duck map-subscript
-              // form — array_insert/get/regexp survive every later pass
-              case "PARSE_PATH" if args.length <= 2 && args.nonEmpty =>
-                sepClass(args.lift(1)).map { case (re, roots) =>
-                  s"(CASE WHEN ${rootPred(roots)} " +
-                    s"THEN array_insert(filter(split($p, '$re'), __gpp -> __gpp <> ''), 1, substr($p, 1, 1)) " +
-                    s"ELSE filter(split($p, '$re'), __gpp -> __gpp <> '') END)"
-                }
-              case "PARSE_FILENAME" if args.nonEmpty && args.length <= 3 =>
-                // optional trim_extension boolean, optional separator
-                val (trim, sepArg) = args.map(_.filterNot(isWs)).toList match {
-                  case _ :: Vector(b: Ident) :: rest
-                      if Set("TRUE", "FALSE").contains(b.upper) =>
-                    (b.upper == "TRUE", rest.headOption.map(_.toSeq))
-                  case _ :: rest => (false, rest.headOption.map(_.toSeq))
-                  case _ => (false, None)
-                }
-                sepClass(sepArg).map { case (re, _) =>
-                  // the last run of non-separator characters ('' after a
-                  // trailing slash, duck-probed)
-                  val cls = if (re.startsWith("[")) re.init.tail else re
-                  val base = s"regexp_extract($p, '[^$cls]*$$', 0)"
-                  if (trim) s"regexp_replace($base, '\\.[^.]*$$', '')"
-                  else base
-                }
-              case "PARSE_DIRNAME" if args.length <= 2 && args.nonEmpty =>
-                sepClass(args.lift(1)).map { case (re, roots) =>
-                  s"(CASE WHEN ${rootPred(roots)} THEN substr($p, 1, 1) " +
-                    s"WHEN $p RLIKE '$re' THEN " +
-                    s"get(filter(split($p, '$re'), __gpd -> __gpd <> ''), 0) " +
-                    s"ELSE '' END)"
-                }
-              case _ => None
-            }
-            repl.foreach { r =>
-              toks = toks.patch(i, lex(r), close - i + 1)
-              changed = true
-            }
-          }
-          case id: Ident if id.upper == "NOCASE" && {
-              // r10 batch 7: DuckDB's NOCASE collation — Spark 4 spells
-              // the case-insensitive UTF8 collation UTF8_LCASE
-              val p = prevNonWs(toks, i)
-              p >= 0 && up(toks(p)) == "COLLATE"
-            } =>
-            toks = toks.updated(i, Ident("UTF8_LCASE"))
-            changed = true
-          case id: Ident if id.upper == "SPLIT_PART" && callOpen >= 0 && {
-              // r13 string scout: EMPTY separator — duck splits into
-              // CHARACTERS ('a,b,c','',2 → ','; negative n from the end;
-              // out-of-range and NULL input → '') where Spark returns
-              // the whole string. Literal-empty-sep only.
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length == 3 && (args(1).filterNot(isWs) match {
-                case Vector(s: Str) => s.value.isEmpty
-                case _ => false
-              })
-            } =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val (s0, n0) = (render(args(0)).trim, render(args(2)).trim)
-            toks = toks.patch(i, lex(
-              s"(CASE WHEN ($n0) = 0 THEN '' " +
-                s"ELSE coalesce(try_element_at(split($s0, ''), $n0), '') END)"),
-              close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "SPLIT_PART" && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length == 3 && (args(2).filterNot(isWs) match {
-                case Vector(n: Num) => n.text == "0"
-                case _ => false
-              })
-            } =>
-            // r10 batch 7: DuckDB split_part index 0 → '' where Spark
-            // raises INVALID_INDEX_OF_ZERO (literal-0 only; a dynamic 0
-            // stays loud — documented)
-            val close = matchParen(toks, callOpen)
-            toks = toks.patch(i, lex("''"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "SUBSTR" || id.upper == "SUBSTRING") &&
-              callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length == 3 && (args(2).filterNot(isWs) match {
-                case Vector(Punct("-"), _: Num) => true
-                case _ => false
-              })
-            } =>
-            // r10 batch 7, probe-pinned: DuckDB substr with a NEGATIVE
-            // length L takes the |L| chars ENDING just before pos —
-            // substr('hello', 2, -1) = 'h', (4, -2) = 'el', clamped at the
-            // string start — where Spark returns ''. Literal negative
-            // lengths only (the silent case); dynamic lengths keep
-            // Spark's '' (documented).
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val s0 = render(args(0)).trim
-            val pos = render(args(1)).trim
-            val lenL = render(args(2)).trim
-            val p = s"(CASE WHEN ($pos) < 0 THEN length($s0) + ($pos) + 1 ELSE ($pos) END)"
-            val st = s"GREATEST($p + ($lenL), 1)"
-            toks = toks.patch(i, lex(
-              s"substr(($s0), $st, $p - $st)"), close - i + 1)
-            changed = true
-          case id: Ident if (id.upper == "LIKE" || id.upper == "ILIKE") &&
-              callOpen < 0 && {
-                // r13 string scout: duck's LIKE has NO default escape —
-                // backslash is an ordinary character ('a_c' LIKE 'a\_c'
-                // is FALSE there; Spark's \_ escapes the wildcard, TRUE).
-                // For literal patterns CONTAINING a backslash, append an
-                // ESCAPE clause with a character absent from the pattern:
-                // backslash turns ordinary, %/_ stay wildcards, and the
-                // clause marks the pattern processed (fixpoint). Dynamic
-                // patterns keep Spark's escape — documented residual.
-                val rStart = nextNonWs(toks, i)
-                rStart < toks.length && (toks(rStart) match {
-                  case s: Str => s.value.contains("\\") && {
-                    val after = nextNonWs(toks, rStart)
-                    !(after < toks.length && up(toks(after)) == "ESCAPE")
-                  }
-                  case _ => false
-                })
-              } =>
-            val rStart = nextNonWs(toks, i)
-            val pat = toks(rStart).asInstanceOf[Str].value
-            Seq('~', '^', '@', '#', '!', '&').find(c => !pat.contains(c)) match {
-              case Some(c) =>
-                toks = toks.patch(rStart, Seq(toks(rStart), Ws(" "),
-                  Ident("ESCAPE"), Ws(" "), Str(s"'$c'")), 1)
-                changed = true
-              case None => () // pattern holds every candidate — stay Spark
-            }
-          case id: Ident if (id.upper == "LIKE" || id.upper == "ILIKE") && {
-                // (no callOpen guard: `LIKE (p || '%')` has a paren right
-                // after the keyword and would read as a call)
-                // r14 (VERDICT r13 #5 — the dynamic-pattern residual):
-                // duck's LIKE has NO default escape, so a backslash IN A
-                // COLUMN-VALUED pattern is an ordinary character where
-                // Spark's default escape consumes it. Switch the escape
-                // char to '~' (backslash becomes ordinary — duck's
-                // reading; %/_ stay wildcards) and neutralize any '~' the
-                // runtime pattern carries by doubling it
-                // (replace(p,'~','~~') → a literal '~', duck's reading
-                // again). No backslash appears in the emission — ESCAPE
-                // requires a string LITERAL and the backslash-literal
-                // hop pass would otherwise turn it into chr(92). The
-                // ESCAPE clause marks the pattern processed (fixpoint);
-                // a user-written ESCAPE skips the rewrite (both engines
-                // honor it identically).
-                val rStart = nextNonWs(toks, i)
-                rStart < toks.length && (toks(rStart) match {
-                  case _: Str => false // literal: previous arm owns it
-                  case Punct("(") => true
-                  case id2: Ident => !keywordLike(id2.upper)
-                  case _ => false
-                }) && {
-                  // pattern operand incl. || chains and call parens
-                  var rEnd = primaryEnd(toks, rStart)
-                  var ext = true
-                  while (ext) {
-                    val n = nextNonWs(toks, rEnd)
-                    if (n < toks.length && toks(n) == Punct("||") &&
-                      nextNonWs(toks, n) < toks.length)
-                      rEnd = primaryEnd(toks, nextNonWs(toks, n))
-                    else ext = false
-                  }
-                  val after = nextNonWs(toks, rEnd)
-                  !(after < toks.length && up(toks(after)) == "ESCAPE")
-                }
-              } =>
-            val rStart = nextNonWs(toks, i)
-            var rEnd = primaryEnd(toks, rStart)
-            var ext = true
-            while (ext) {
-              val n = nextNonWs(toks, rEnd)
-              if (n < toks.length && toks(n) == Punct("||") &&
-                nextNonWs(toks, n) < toks.length)
-                rEnd = primaryEnd(toks, nextNonWs(toks, n))
-              else ext = false
-            }
-            val p0 = render(toks.slice(rStart, rEnd + 1)).trim
-            toks = toks.patch(rStart,
-              lex(s"replace(($p0), '~', '~~') ESCAPE '~'"),
-              rEnd - rStart + 1)
-            changed = true
-          case id: Ident if id.upper == "ILIKE" && callOpen < 0 && {
-              // r10 fuzz batch 6: DuckDB ILIKE folds with the SIMPLE case
-              // mapping ('İSTANBUL' ILIKE 'istanbul' is true); Spark's
-              // native ILIKE uses Java full folding — rewrite to LIKE
-              // over graft_lower on both sides. A trailing ESCAPE clause
-              // survives untouched.
-              val lEnd = prevNonWs(toks, i)
-              val rStart = nextNonWs(toks, i)
-              lEnd >= 0 && rStart < toks.length && {
-                val opEndL = if (up(toks(lEnd)) == "NOT") prevNonWs(toks, lEnd) else lEnd
-                opEndL >= 0 && (toks(opEndL) match {
-                  case _: Num | _: Str => true
-                  case Punct(")") | Punct("]") => true
-                  case id2: Ident => !keywordLike(id2.upper)
-                  case _ => false
-                })
-              }
-            } =>
-            val lEnd0 = prevNonWs(toks, i)
-            val notKw = up(toks(lEnd0)) == "NOT"
-            val lEnd = if (notKw) prevNonWs(toks, lEnd0) else lEnd0
-            // capture whole || chains on BOTH sides (r11 advisor fix):
-            // `a ILIKE b || '%'` must fold the ENTIRE pattern — || binds
-            // tighter than LIKE, so a partial capture would leave the
-            // concatenated tail case-sensitive
-            var lStart = primaryStart(toks, lEnd)
-            var lExt = true
-            while (lExt) {
-              val p = prevNonWs(toks, lStart)
-              if (p >= 0 && toks(p) == Punct("||") && prevNonWs(toks, p) >= 0)
-                lStart = primaryStart(toks, prevNonWs(toks, p))
-              else lExt = false
-            }
-            val rStart = nextNonWs(toks, i)
-            var rEnd = primaryEnd(toks, rStart)
-            var rExt = true
-            while (rExt) {
-              val n = nextNonWs(toks, rEnd)
-              if (n < toks.length && toks(n) == Punct("||") &&
-                nextNonWs(toks, n) < toks.length)
-                rEnd = primaryEnd(toks, nextNonWs(toks, n))
-              else rExt = false
-            }
-            val l = render(toks.slice(lStart, lEnd + 1)).trim
-            val r = render(toks.slice(rStart, rEnd + 1)).trim
-            val not = if (notKw) "NOT " else ""
-            toks = toks.patch(lStart,
-              lex(s"graft_lower($l) ${not}LIKE graft_lower($r)"),
-              rEnd - lStart + 1)
-            changed = true
-          case id: Ident if (id.upper == "UNICODE" || id.upper == "ORD") &&
-              callOpen >= 0 =>
-            // r10 fuzz batch 6: DuckDB unicode('')/ord('') = -1 where
-            // Spark ascii('') = 0; NULL passes through either way
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 1) {
-              val x = render(args(0)).trim
-              toks = toks.patch(i, lex(
-                s"(CASE WHEN length($x) = 0 THEN -1 ELSE ascii($x) END)"),
-                close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "FMOD" && callOpen >= 0 =>
-            // r10 (advisor fix): fmod = FLOORED modulo — result takes the
-            // sign of the DIVISOR (probe on DuckDB 1.0: fmod(7,-2)=-1,
-            // fmod(10,-3)=-2, fmod(-7,2)=1, fmod(7,0)=NULL, always
-            // DOUBLE). Spark pmod matches only for positive divisors, so
-            // emit x - y*floor(x/y) directly; Spark's non-ANSI x/0 → NULL
-            // reproduces the NULL-on-zero-divisor edge for free.
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (x, y) = (render(args(0)).trim, render(args(1)).trim)
-              val xd = s"CAST(($x) AS DOUBLE)"
-              val yd = s"CAST(($y) AS DOUBLE)"
-              toks = toks.patch(i, lex(s"($xd - $yd * floor($xd / $yd))"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if id.upper == "FDIV" && callOpen >= 0 =>
-            // r9 batch 5: fdiv = floored division (probe: fdiv(-7,-2)=3,
-            // fdiv(10.5,-3)=-4); Spark / on integers is double division,
-            // so floor(x / y) reproduces it for every numeric pairing
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            if (args.length == 2) {
-              val (x, y) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(s"floor(($x) / ($y))"), close - i + 1)
-              changed = true
-            }
-          case id: Ident if (id.upper == "LIST_CONTAINS" ||
-              id.upper == "LIST_HAS") && callOpen >= 0 && {
-              val close = matchParen(toks, callOpen)
-              val args = splitTopLevel(toks.slice(callOpen + 1, close))
-              args.length == 2 && (args(1).filterNot(isWs) match {
-                case Vector(n: Ident) => n.upper == "NULL"
-                case _ => false
-              })
-            } =>
-            // r9 batch 5: list_contains(l, NULL) is NULL in DuckDB; Spark's
-            // array_contains rejects the untyped NULL needle at analysis
-            val close = matchParen(toks, callOpen)
-            toks = toks.patch(i, lex("CAST(NULL AS BOOLEAN)"), close - i + 1)
-            changed = true
-          case id: Ident if id.upper == "GENERATE_SERIES" && callOpen >= 0 =>
-            val close = matchParen(toks, callOpen)
-            val args = splitTopLevel(toks.slice(callOpen + 1, close))
-            val p = prevNonWs(toks, i)
-            val tableCtx = p >= 0 && (up(toks(p)) == "FROM" || up(toks(p)) == "JOIN")
-            if (!tableCtx) {
-              toks = toks.patch(i, Seq(Ident("sequence")), 1)
-              changed = true
-            } else if (args.length == 2 || args.length == 3) {
-              val stepLit = if (args.length == 3) render(args(2)).trim else "1"
-              // the end adjustment needs the step's sign at rewrite time
-              scala.util.Try(stepLit.toLong).toOption match {
-                case Some(step) if step != 0 =>
-                  val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-                  val end = if (step > 0) s"($b) + 1" else s"($b) - 1"
-                  val tail = if (args.length == 3) s", $stepLit" else ""
-                  toks = toks.patch(i, lex(s"range($a, $end$tail)"), close - i + 1)
-                  changed = true
-                case _ if args.length == 3 =>
-                  // r10 batch 9: the DATE/TIMESTAMP + INTERVAL-step table
-                  // form — duck returns TIMESTAMPs inclusive of the end
-                  // bound, exactly explode(sequence) over TIMESTAMP-cast
-                  // bounds (Spark's sequence is end-inclusive too)
-                  val (a, b) = (render(args(0)).trim, render(args(1)).trim)
-                  toks = toks.patch(i, lex(
-                    s"explode(sequence(CAST($a AS TIMESTAMP), CAST($b AS TIMESTAMP), $stepLit))"),
-                    close - i + 1)
-                  changed = true
-                case _ =>
-              }
-            }
-          case _ =>
-        }
-        i += 1
+        case _ => None
       }
     }
-    toks
   }
 
   /** Aggregate heads whose value is independent of input order — an
@@ -6928,7 +6175,6 @@ object Translator {
 
   private[dialect] def rewriteDivMod(toks0: Vector[Tok],
       isDecimalCol: String => Boolean = _ => false): Vector[Tok] = {
-    var toks = toks0
 
     def isPrimaryEndTok(t: Tok): Boolean = t match {
       case _: Num | _: Str => true
@@ -6940,7 +6186,7 @@ object Translator {
     // `FILTER (WHERE …)` suffixes leftward: primaryStart on the trailing
     // paren group of a window spec lands on OVER — walk back to the
     // aggregate call so the whole windowed expression is one operand
-    def extendLeft(s0: Int): Int = {
+    def extendLeft(toks: Vector[Tok], s0: Int): Int = {
       var s = s0
       var go = true
       while (go && s > 0) {
@@ -6965,8 +6211,8 @@ object Translator {
     }
     // the full left operand: the maximal run of primaries joined by
     // same-precedence multiplicative operators (* / % DIV //)
-    def mulRunStart(lEnd: Int): Int = {
-      var s = extendLeft(primaryStart(toks, lEnd))
+    def mulRunStart(toks: Vector[Tok], lEnd: Int): Int = {
+      var s = extendLeft(toks, primaryStart(toks, lEnd))
       var go = true
       while (go && s > 0) {
         go = false
@@ -6979,7 +6225,7 @@ object Translator {
         if (isMulOp) {
           val pp = prevNonWs(toks, p)
           if (pp >= 0 && isPrimaryEndTok(toks(pp))) {
-            s = extendLeft(primaryStart(toks, pp))
+            s = extendLeft(toks, primaryStart(toks, pp))
             go = true
           }
         }
@@ -6988,7 +6234,7 @@ object Translator {
     }
     // absorb a trailing OVER/FILTER window suffix on the RIGHT operand so
     // `2 / sum(x) OVER (…)` keeps the window inside the divisor
-    def extendRight(e0: Int): Int = {
+    def extendRight(toks: Vector[Tok], e0: Int): Int = {
       var e = e0
       var go = true
       while (go) {
@@ -7015,11 +6261,11 @@ object Translator {
       e
     }
     // DECIMAL-risk containment scan over an operand slice
-    def decimalRisk(from: Int, to: Int): Boolean =
+    def decimalRisk(toks: Vector[Tok], from: Int, to: Int): Boolean =
       decimalRiskToks(toks.slice(from, to + 1), isDecimalCol)
     // (possibly parenthesized/signed) non-zero INTEGER literal divisor —
     // can never divide by zero, leave the operator alone
-    def nonZeroIntLit(from: Int, to: Int): Boolean = {
+    def nonZeroIntLit(toks: Vector[Tok], from: Int, to: Int): Boolean = {
       val nw = toks.slice(from, to + 1).filterNot(isWs)
       nw.count(_.isInstanceOf[Num]) == 1 && nw.forall {
         case Punct("(") | Punct(")") | Punct("-") | Punct("+") => true
@@ -7030,71 +6276,63 @@ object Translator {
       }
     }
 
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        toks(i) match {
-          case Punct(op) if (op == "/" || op == "%" || op == "//") && {
-              val lEnd = prevNonWs(toks, i)
-              val rStart = nextNonWs(toks, i)
-              lEnd >= 0 && rStart < toks.length &&
-                isPrimaryEndTok(toks(lEnd)) && !intervalEndsAt(toks, lEnd) &&
-                (toks(rStart) match {
-                  case Punct("(") | Punct("-") | Punct("+") => true
-                  case _: Num | _: Str => true
-                  case id: Ident =>
-                    !keywordLike(id.upper) &&
-                      !Set("CASE", "END", "INTERVAL", "EXISTS").contains(id.upper)
-                  case _ => false
-                })
-            } =>
+    fixpoint(toks0) { (toks, i) =>
+      toks(i) match {
+        case Punct(op) if (op == "/" || op == "%" || op == "//") && {
             val lEnd = prevNonWs(toks, i)
             val rStart = nextNonWs(toks, i)
-            val rEnd = extendRight(primaryEnd(toks, rStart))
-            val lStart = mulRunStart(lEnd)
-            // `//` ALWAYS takes a kernel (duck dispatches integral-vs-
-            // double semantics on operand types the token level can't
-            // see, and the kernel accepts decimal operands — duck's
-            // decimal // is double division too); / and % keep the
-            // literal/decimal skips. r13 (dec fuzz): HUGEINT-SPELLED
-            // slices (>19-digit literal or the rename's single-token
-            // DECIMAL(38,0)) with no other DECIMAL risk route to the
-            // EXACT kernel — duck's HUGEINT // is exact INT128 trunc
-            // division where its DECIMAL // is plain double division,
-            // and the type mapping erases that distinction. A catalog
-            // DECIMAL column keeps the double path (its HUGEINT-vs-
-            // DECIMAL origin is unknowable — documented residual).
-            if (op == "//" || (!nonZeroIntLit(rStart, rEnd) &&
-                !decimalRisk(lStart, lEnd) && !decimalRisk(rStart, rEnd))) {
-              val lToks = toks.slice(lStart, lEnd + 1)
-              val rToks = toks.slice(rStart, rEnd + 1)
-              val fn = if (op == "/") "try_divide"
-                else if (op == "//") {
-                  val slice = lToks ++ rToks
-                  if (hugeintRiskToks(slice) &&
-                      !decimalRiskNonHugeToks(slice, isDecimalCol))
-                    "graft_intdiv_exact"
-                  else "graft_intdiv"
-                }
-                else "try_mod"
-              // token-level construction, NOT lex(render(…)): a lex
-              // round-trip flattens the hugeint rename's single-token
-              // DECIMAL(38,0) ident into the user multi-token spelling,
-              // mis-routing the OUTER links of nested // chains to the
-              // double kernel (r13 dec fuzz, probe: (h // 3) // 3)
-              val repl = Vector(Ident(fn), Punct("(")) ++ lToks ++
-                Vector(Punct(","), Ws(" ")) ++ rToks :+ Punct(")")
-              toks = toks.patch(lStart, repl, rEnd - lStart + 1)
-              changed = true
-            }
-          case _ =>
-        }
-        i += 1
+            lEnd >= 0 && rStart < toks.length &&
+              isPrimaryEndTok(toks(lEnd)) && !intervalEndsAt(toks, lEnd) &&
+              (toks(rStart) match {
+                case Punct("(") | Punct("-") | Punct("+") => true
+                case _: Num | _: Str => true
+                case id: Ident =>
+                  !keywordLike(id.upper) &&
+                    !Set("CASE", "END", "INTERVAL", "EXISTS").contains(id.upper)
+                case _ => false
+              })
+          } =>
+          val lEnd = prevNonWs(toks, i)
+          val rStart = nextNonWs(toks, i)
+          val rEnd = extendRight(toks, primaryEnd(toks, rStart))
+          val lStart = mulRunStart(toks, lEnd)
+          // `//` ALWAYS takes a kernel (duck dispatches integral-vs-
+          // double semantics on operand types the token level can't
+          // see, and the kernel accepts decimal operands — duck's
+          // decimal // is double division too); / and % keep the
+          // literal/decimal skips. r13 (dec fuzz): HUGEINT-SPELLED
+          // slices (>19-digit literal or the rename's single-token
+          // DECIMAL(38,0)) with no other DECIMAL risk route to the
+          // EXACT kernel — duck's HUGEINT // is exact INT128 trunc
+          // division where its DECIMAL // is plain double division,
+          // and the type mapping erases that distinction. A catalog
+          // DECIMAL column keeps the double path (its HUGEINT-vs-
+          // DECIMAL origin is unknowable — documented residual).
+          if (op == "//" || (!nonZeroIntLit(toks, rStart, rEnd) &&
+              !decimalRisk(toks, lStart, lEnd) && !decimalRisk(toks, rStart, rEnd))) {
+            val lToks = toks.slice(lStart, lEnd + 1)
+            val rToks = toks.slice(rStart, rEnd + 1)
+            val fn = if (op == "/") "try_divide"
+              else if (op == "//") {
+                val slice = lToks ++ rToks
+                if (hugeintRiskToks(slice) &&
+                    !decimalRiskNonHugeToks(slice, isDecimalCol))
+                  "graft_intdiv_exact"
+                else "graft_intdiv"
+              }
+              else "try_mod"
+            // token-level construction, NOT lex(render(…)): a lex
+            // round-trip flattens the hugeint rename's single-token
+            // DECIMAL(38,0) ident into the user multi-token spelling,
+            // mis-routing the OUTER links of nested // chains to the
+            // double kernel (r13 dec fuzz, probe: (h // 3) // 3)
+            val repl = Vector(Ident(fn), Punct("(")) ++ lToks ++
+              Vector(Punct(","), Ws(" ")) ++ rToks :+ Punct(")")
+            Some(toks.patch(lStart, repl, rEnd - lStart + 1))
+          } else None
+        case _ => None
       }
     }
-    toks
   }
 
   // ---- DuckDB default null order --------------------------------------
@@ -7165,63 +6403,68 @@ object Translator {
     * branches' select items are nameable and the name sets match (DuckDB's
     * own requirement); otherwise the tokens pass through untouched and fail
     * analysis with Spark's error. Top-level unions only. */
-  private[dialect] def rewriteUnionByName(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var d = 0
-      var i = 0
-      var found = -1; var byIdx = -1; var nameIdx = -1
-      while (i < toks.length && found < 0) {
-        d += depthDelta(toks(i))
-        if (d == 0 && up(toks(i)) == "UNION") {
-          var j = nextNonWs(toks, i)
-          if (j < toks.length && (up(toks(j)) == "ALL" || up(toks(j)) == "DISTINCT"))
-            j = nextNonWs(toks, j)
-          if (j < toks.length && up(toks(j)) == "BY") {
-            val k = nextNonWs(toks, j)
-            if (k < toks.length && up(toks(k)) == "NAME") { found = i; byIdx = j; nameIdx = k }
-          }
-        }
-        i += 1
-      }
-      if (found >= 0) {
+  private[dialect] def rewriteUnionByName(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, found) =>
+      // only the first top-level BY NAME union is rewritten; once it
+      // passes through, the later ones do too
+      if (up(toks(found)) != "UNION") None
+      else firstUnionByName(toks).filter(_._1 == found).flatMap { case (_, byIdx, nameIdx) =>
         val leftToks = toks.take(found)
         val rightToks = toks.drop(nameIdx + 1)
-        val (lcO, rcO) = (splitClauses(leftToks), splitClauses(rightToks))
-        if (lcO.isEmpty || rcO.isEmpty) return toks
-        val (lc, rc) = (lcO.get, rcO.get)
-        // a FROM-less branch still ends its select list at the next clause
-        // (e.g. `… BY NAME SELECT 4 AS b, 3 AS a ORDER BY a`)
-        def selEnd(c: Clauses, len: Int): Int =
-          if (c.fromIdx >= 0) c.fromIdx
-          else Seq(c.whereIdx, c.groupIdx, c.havingIdx, c.windowIdx,
-            c.qualifyIdx, c.orderIdx, c.limitIdx, c.offsetIdx)
-            .filter(_ >= 0).minOption.getOrElse(len)
-        val lEnd = selEnd(lc, leftToks.length)
-        val rEnd = selEnd(rc, rightToks.length)
-        val lNames = splitTopLevel(leftToks.slice(lc.selectIdx + 1, lEnd)).map(itemName)
-        val rItems = splitTopLevel(rightToks.slice(rc.selectIdx + 1, rEnd))
-        val rNames = rItems.map(itemName)
-        if (lNames.exists(_.isEmpty) || rNames.exists(_.isEmpty)) return toks
-        val rSeq = rNames.flatten.map(_.toLowerCase)
-        val rByName = rSeq.zip(rItems).toMap
-        val lSeq = lNames.flatten.map(_.toLowerCase)
-        // duplicate names on either side make BY NAME ambiguous (DuckDB
-        // errors); pass through rather than silently dropping an item
-        if (lSeq.toSet != rByName.keySet || lSeq.distinct != lSeq ||
-          rSeq.distinct != rSeq) return toks
-        val unionKw = render(toks.slice(found, byIdx)).trim // UNION [ALL|DISTINCT]
-        val rTail = rightToks.drop(rEnd)
-        val sql = render(leftToks).trim + " " + unionKw + " SELECT " +
-          lSeq.map(n => render(rByName(n)).trim).mkString(", ") +
-          " " + render(rTail).trim
-        toks = lex(sql.trim)
-        changed = true
+        (splitClauses(leftToks), splitClauses(rightToks)) match {
+          case (Some(lc), Some(rc)) =>
+            // a FROM-less branch still ends its select list at the next
+            // clause (e.g. `… BY NAME SELECT 4 AS b, 3 AS a ORDER BY a`)
+            def selEnd(c: Clauses, len: Int): Int =
+              if (c.fromIdx >= 0) c.fromIdx
+              else Seq(c.whereIdx, c.groupIdx, c.havingIdx, c.windowIdx,
+                c.qualifyIdx, c.orderIdx, c.limitIdx, c.offsetIdx)
+                .filter(_ >= 0).minOption.getOrElse(len)
+            val lEnd = selEnd(lc, leftToks.length)
+            val rEnd = selEnd(rc, rightToks.length)
+            val lNames = splitTopLevel(leftToks.slice(lc.selectIdx + 1, lEnd)).map(itemName)
+            val rItems = splitTopLevel(rightToks.slice(rc.selectIdx + 1, rEnd))
+            val rNames = rItems.map(itemName)
+            val rSeq = rNames.flatten.map(_.toLowerCase)
+            val rByName = rSeq.zip(rItems).toMap
+            val lSeq = lNames.flatten.map(_.toLowerCase)
+            // duplicate names on either side make BY NAME ambiguous (DuckDB
+            // errors); pass through rather than silently dropping an item
+            if (lNames.exists(_.isEmpty) || rNames.exists(_.isEmpty) ||
+                lSeq.toSet != rByName.keySet || lSeq.distinct != lSeq ||
+                rSeq.distinct != rSeq) None
+            else {
+              val unionKw = render(toks.slice(found, byIdx)).trim // UNION [ALL|DISTINCT]
+              val sql = render(leftToks).trim + " " + unionKw + " SELECT " +
+                lSeq.map(n => render(rByName(n)).trim).mkString(", ") +
+                " " + render(rightToks.drop(rEnd)).trim
+              Some(lex(sql.trim))
+            }
+          case _ => None
+        }
       }
     }
-    toks
+
+  /** (UNION, BY, NAME) token indices of the first top-level
+    * `UNION [ALL|DISTINCT] BY NAME`. */
+  private def firstUnionByName(toks: Vector[Tok]): Option[(Int, Int, Int)] = {
+    var d = 0
+    var i = 0
+    var found: Option[(Int, Int, Int)] = None
+    while (i < toks.length && found.isEmpty) {
+      d += depthDelta(toks(i))
+      if (d == 0 && up(toks(i)) == "UNION") {
+        var j = nextNonWs(toks, i)
+        if (j < toks.length && (up(toks(j)) == "ALL" || up(toks(j)) == "DISTINCT"))
+          j = nextNonWs(toks, j)
+        if (j < toks.length && up(toks(j)) == "BY") {
+          val k = nextNonWs(toks, j)
+          if (k < toks.length && up(toks(k)) == "NAME") found = Some((i, j, k))
+        }
+      }
+      i += 1
+    }
+    found
   }
 
   // ---- statement-level restructures -----------------------------------
@@ -7323,98 +6566,88 @@ object Translator {
     * the position, no one-task stage.
     * Divergence: `SELECT *` over the join also surfaces the synthetic
     * position columns — declared queries project explicitly. */
-  private[dialect] def rewritePositionalJoin(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var changed = true
-    while (changed) {
-      changed = false
-      var i = 0
-      while (i < toks.length && !changed) {
-        if (up(toks(i)) == "POSITIONAL" && {
-              val n = nextNonWs(toks, i); n < toks.length && up(toks(n)) == "JOIN"
-            }) {
-          val jn = nextNonWs(toks, i)
-          def fail(why: String): Nothing = throw new UnsupportedOperationException(
-            s"POSITIONAL JOIN: $why — supported form is " +
-              "(subquery with ORDER BY) [alias] POSITIONAL JOIN (subquery with ORDER BY) [alias] " +
-              "(a distributed scan has no reproducible row order)")
-          // right side: ( subquery ) [AS] alias?
-          val rOpen = nextNonWs(toks, jn)
-          if (rOpen >= toks.length || toks(rOpen) != Punct("(")) fail("right side is not a parenthesized subquery")
-          val rClose = matchParen(toks, rOpen)
-          var rEnd = rClose
-          var rAlias: Option[String] = None
-          locally {
-            val n = nextNonWs(toks, rClose)
-            if (n < toks.length && up(toks(n)) == "AS") {
-              val a = nextNonWs(toks, n)
-              if (a < toks.length && toks(a).isInstanceOf[Ident]) { rAlias = Some(toks(a).text); rEnd = a }
-            } else if (n < toks.length && toks(n).isInstanceOf[Ident] &&
-                !(clauseStarters ++ Set("ON", "JOIN", "INNER", "LEFT", "RIGHT",
-                  "FULL", "CROSS", "USING", "NATURAL", "POSITIONAL")).contains(up(toks(n)))) {
-              rAlias = Some(toks(n).text); rEnd = n
-            }
+  private[dialect] def rewritePositionalJoin(toks0: Vector[Tok]): Vector[Tok] =
+    fixpoint(toks0) { (toks, i) =>
+      if (up(toks(i)) == "POSITIONAL" && {
+            val n = nextNonWs(toks, i); n < toks.length && up(toks(n)) == "JOIN"
+          }) {
+        val jn = nextNonWs(toks, i)
+        def fail(why: String): Nothing = throw new UnsupportedOperationException(
+          s"POSITIONAL JOIN: $why — supported form is " +
+            "(subquery with ORDER BY) [alias] POSITIONAL JOIN (subquery with ORDER BY) [alias] " +
+            "(a distributed scan has no reproducible row order)")
+        // right side: ( subquery ) [AS] alias?
+        val rOpen = nextNonWs(toks, jn)
+        if (rOpen >= toks.length || toks(rOpen) != Punct("(")) fail("right side is not a parenthesized subquery")
+        val rClose = matchParen(toks, rOpen)
+        var rEnd = rClose
+        var rAlias: Option[String] = None
+        locally {
+          val n = nextNonWs(toks, rClose)
+          if (n < toks.length && up(toks(n)) == "AS") {
+            val a = nextNonWs(toks, n)
+            if (a < toks.length && toks(a).isInstanceOf[Ident]) { rAlias = Some(toks(a).text); rEnd = a }
+          } else if (n < toks.length && toks(n).isInstanceOf[Ident] &&
+              !(clauseStarters ++ Set("ON", "JOIN", "INNER", "LEFT", "RIGHT",
+                "FULL", "CROSS", "USING", "NATURAL", "POSITIONAL")).contains(up(toks(n)))) {
+            rAlias = Some(toks(n).text); rEnd = n
           }
-          // left side: ( subquery ) [AS] alias?  scanning backward
-          var p = prevNonWs(toks, i)
-          var lAlias: Option[String] = None
-          if (p >= 0 && toks(p).isInstanceOf[Ident]) {
-            lAlias = Some(toks(p).text)
-            val p2 = prevNonWs(toks, p)
-            p = if (p2 >= 0 && up(toks(p2)) == "AS") prevNonWs(toks, p2) else p2
-          }
-          if (p < 0 || toks(p) != Punct(")")) fail("left side is not a parenthesized subquery")
-          val lClose = p
-          var lOpen = -1
-          locally {
-            var d = 0; var j = lClose
-            while (j >= 0 && lOpen < 0) {
-              toks(j) match {
-                case Punct(")") => d += 1
-                case Punct("(") => d -= 1; if (d == 0) lOpen = j
-                case _ =>
-              }
-              j -= 1
-            }
-          }
-          if (lOpen < 0) fail("left side is not a parenthesized subquery")
-          val sqL = toks.slice(lOpen + 1, lClose)
-          val sqR = toks.slice(rOpen + 1, rClose)
-          // inject the position column INTO the subquery's select list —
-          // its ORDER BY names base-scope columns (e.g. `ORDER BY
-          // c_custkey` under `SELECT c_custkey AS ck`), so a wrapper
-          // around the subquery could not evaluate them
-          def inject(sq: Vector[Tok], posName: String, side: String): String = {
-            val ord = topOrderByExprs(sq).getOrElse(fail(s"$side subquery has no top-level ORDER BY"))
-            val selIdx = nextNonWs(sq, -1)
-            if (selIdx >= sq.length || up(sq(selIdx)) != "SELECT") fail(s"$side side is not a plain SELECT subquery")
-            if ({ val n = nextNonWs(sq, selIdx); n < sq.length && up(sq(n)) == "DISTINCT" })
-              fail(s"$side side uses DISTINCT (a position column would defeat it)")
-            var d = 0; var fromIdx = -1; var j = selIdx
-            while (j < sq.length && fromIdx < 0) {
-              d += depthDelta(sq(j))
-              if (d == 0 && up(sq(j)) == "FROM") fromIdx = j
-              j += 1
-            }
-            if (fromIdx < 0) fail(s"$side side has no FROM clause")
-            render(sq.slice(0, fromIdx)).trim +
-              s", row_number() OVER (ORDER BY $ord) AS $posName " +
-              render(sq.slice(fromIdx, sq.length)).trim
-          }
-          val la = lAlias.getOrElse("__g_pl")
-          val ra = rAlias.getOrElse("__g_pr")
-          val repl =
-            s"(${inject(sqL, "__g_pos", "left")}) $la " +
-              s"FULL JOIN (${inject(sqR, "__g_pos2", "right")}) $ra " +
-              s"ON $la.__g_pos = $ra.__g_pos2"
-          toks = toks.patch(lOpen, lex(repl), rEnd - lOpen + 1)
-          changed = true
         }
-        i += 1
-      }
+        // left side: ( subquery ) [AS] alias?  scanning backward
+        var p = prevNonWs(toks, i)
+        var lAlias: Option[String] = None
+        if (p >= 0 && toks(p).isInstanceOf[Ident]) {
+          lAlias = Some(toks(p).text)
+          val p2 = prevNonWs(toks, p)
+          p = if (p2 >= 0 && up(toks(p2)) == "AS") prevNonWs(toks, p2) else p2
+        }
+        if (p < 0 || toks(p) != Punct(")")) fail("left side is not a parenthesized subquery")
+        val lClose = p
+        var lOpen = -1
+        locally {
+          var d = 0; var j = lClose
+          while (j >= 0 && lOpen < 0) {
+            toks(j) match {
+              case Punct(")") => d += 1
+              case Punct("(") => d -= 1; if (d == 0) lOpen = j
+              case _ =>
+            }
+            j -= 1
+          }
+        }
+        if (lOpen < 0) fail("left side is not a parenthesized subquery")
+        val sqL = toks.slice(lOpen + 1, lClose)
+        val sqR = toks.slice(rOpen + 1, rClose)
+        // inject the position column INTO the subquery's select list —
+        // its ORDER BY names base-scope columns (e.g. `ORDER BY
+        // c_custkey` under `SELECT c_custkey AS ck`), so a wrapper
+        // around the subquery could not evaluate them
+        def inject(sq: Vector[Tok], posName: String, side: String): String = {
+          val ord = topOrderByExprs(sq).getOrElse(fail(s"$side subquery has no top-level ORDER BY"))
+          val selIdx = nextNonWs(sq, -1)
+          if (selIdx >= sq.length || up(sq(selIdx)) != "SELECT") fail(s"$side side is not a plain SELECT subquery")
+          if ({ val n = nextNonWs(sq, selIdx); n < sq.length && up(sq(n)) == "DISTINCT" })
+            fail(s"$side side uses DISTINCT (a position column would defeat it)")
+          var d = 0; var fromIdx = -1; var j = selIdx
+          while (j < sq.length && fromIdx < 0) {
+            d += depthDelta(sq(j))
+            if (d == 0 && up(sq(j)) == "FROM") fromIdx = j
+            j += 1
+          }
+          if (fromIdx < 0) fail(s"$side side has no FROM clause")
+          render(sq.slice(0, fromIdx)).trim +
+            s", row_number() OVER (ORDER BY $ord) AS $posName " +
+            render(sq.slice(fromIdx, sq.length)).trim
+        }
+        val la = lAlias.getOrElse("__g_pl")
+        val ra = rAlias.getOrElse("__g_pr")
+        val repl =
+          s"(${inject(sqL, "__g_pos", "left")}) $la " +
+            s"FULL JOIN (${inject(sqR, "__g_pos2", "right")}) $ra " +
+            s"ON $la.__g_pos = $ra.__g_pos2"
+        Some(toks.patch(lOpen, lex(repl), rEnd - lOpen + 1))
+      } else None
     }
-    toks
-  }
 
   /** The rendered expression list of a top-level ORDER BY inside a
     * subquery's tokens (up to a top-level LIMIT/OFFSET or the end);

@@ -134,22 +134,23 @@ object Decontamination {
     * which slices quietly duplicate each other (mirrored crawls, vendored
     * subsets, eval sets leaked into a crawl) before deciding dedup order.
     *
-    * Scale shape (r17 rework, guide §2.3/§2.4): one
-    * [[graft.functions.WindowMd5s]] kernel scan → per-digest group SET
-    * (collect_set partial-aggregates map-side, collapsing in-partition
-    * repeats exactly like the old distinct) → pairs exploded from each
-    * set → tiny per-pair count. Window content never materializes; the
-    * digest-keyed set aggregation is the ONLY corpus-scale shuffle.
-    * The r6-r16 form (distinct → digest self-join → count) planned the
-    * scan+explode+distinct subtree TWICE — the join's build side became
-    * its own BroadcastExchange, so no exchange reuse applied (two full
-    * corpus scans + two corpus-scale exchanges; see
-    * plans/r17/p47_cross_source_overlap_before.txt). The set state per
-    * digest is bounded by the GROUP count — the operator's output is
-    * per group PAIR, so it is only meaningful for group vocabularies
-    * whose square fits in a result table, the same bound the join's
-    * per-digest fan-out already assumed. Windows in a single group
-    * (the overwhelming majority) are dropped before the pair explode. */
+    * Plan shape: one [[graft.functions.WindowMd5s]] kernel scan
+    * explodes each document into its k-token window digests, and a
+    * `distinct` keeps one (group, digest) row per pair. That frame is
+    * self-joined on the digest under a `shuffle_hash` hint, so both join
+    * sides come from the same digest-keyed shuffle, which AQE reuses as
+    * a `ReusedExchange` (plans/r17/p47_cross_source_overlap_after.txt;
+    * the `_before` plan is the broadcast form this replaced, which
+    * scanned the corpus twice). `s1 < s2` keeps each unordered group pair once, and the
+    * final aggregate counts shared windows per pair. Window content
+    * never materializes; only digests are shuffled.
+    *
+    * Memory: the shuffled hash join holds each partition's build side in
+    * an in-memory hash table and does not spill. A digest shared by many
+    * groups fans out quadratically in its group count, and a skewed
+    * partition must fit in executor memory. The output is per group
+    * PAIR, so the operator is only meaningful for group vocabularies
+    * whose square fits in a result table. */
   def crossCorpusOverlap(docs: DataFrame, k: Int = 8,
       textCol: String = "text", groupCol: String = "source"): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)

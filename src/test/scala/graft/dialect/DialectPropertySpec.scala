@@ -60,6 +60,19 @@ class DialectPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("translate time grows linearly with statement size") {
+    val q196 = graft.DeclaredQueries.all.collectFirst {
+      case (name, sql) if name.startsWith("q196_") => sql
+    }.get
+    def minOf3(sql: String): Long = (1 to 3).map { _ =>
+      val t0 = System.nanoTime(); Translator.translate(sql); System.nanoTime() - t0
+    }.min
+    val x4 = Seq.fill(4)(q196).mkString(" UNION ALL ")
+    Translator.translate(q196); Translator.translate(x4) // warm-up
+    val (t1, t4) = (minOf3(q196), minOf3(x4))
+    assert(t4 <= 10 * t1, s"x1 ${t1 / 1000} us, x4 ${t4 / 1000} us")
+  }
+
   test("msgpack pack∘unpack round-trips random values") {
     import graft.flight.Msgpack._
     def leaf(): Value = rnd.nextInt(6) match {
