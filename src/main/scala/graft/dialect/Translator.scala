@@ -202,10 +202,10 @@ object Translator {
     * tokens when a rule fires at token `i`. After a rewrite the scan resumes
     * at the outermost call enclosing the first changed token, or at that
     * token when it is at top level, and never after `i`, whose rules may
-    * match again; not at token 0, which made translate time quadratic in
-    * statement size. The enclosing call is the smallest resume point that
-    * keeps the output unchanged: an outer rule's guard reads its
-    * arguments, and an inner rewrite changes them. */
+    * match again. Restarting at token 0 would make translate time
+    * quadratic in statement size. The scan backs up to the enclosing call
+    * because an outer rule's guard reads its arguments, which an inner
+    * rewrite changes. */
   private def fixpoint(toks0: Vector[Tok])(
       step: (Vector[Tok], Int) => Option[Vector[Tok]]): Vector[Tok] = {
     var toks = toks0
@@ -856,15 +856,14 @@ object Translator {
                   "MAP_FILTER").contains(up(seg.head)) &&
                 seg(1) == Punct("(") && seg.last == Punct(")"))
             }
+            // the receiver through the close bracket, replaced by `sql`
+            def subst(sql: String) = Some(toks.patch(rStart, lex(sql), close - rStart + 1))
             if (inner.exists(!isWs(_))) {
               if (mapRecv) {
                 val idx = render(inner).trim
-                val repl = s"IF(map_contains_key($recv, $idx), array(try_element_at($recv, $idx)), array())"
-                Some(toks.patch(rStart, lex(repl), close - rStart + 1))
+                subst(s"IF(map_contains_key($recv, $idx), array(try_element_at($recv, $idx)), array())")
               } else if (strRecv && colonAt < 0) {
-                Some(toks.patch(rStart,
-                  lex(strIndexForm(recv, render(inner).trim)),
-                  close - rStart + 1))
+                subst(strIndexForm(recv, render(inner).trim))
               } else if (strRecv) {
                 // string slice — only the single-colon form (a step
                 // slice on a string stays on the array path → loud)
@@ -879,8 +878,7 @@ object Translator {
                 if (colon2 < 0) {
                   val a = render(inner.slice(0, colonAt)).trim
                   val b = render(inner.slice(colonAt + 1, inner.length)).trim
-                  Some(toks.patch(rStart,
-                    lex(strSliceForm(recv, a, b)), close - rStart + 1))
+                  subst(strSliceForm(recv, a, b))
                 } else None
               } else if (colonAt < 0) {
                 val idx = render(inner).trim
@@ -903,7 +901,7 @@ object Translator {
                     // makes the whole CASE VOID-typed (analysis error)
                     s"try_element_at($recv, (CASE WHEN CAST(($idx) AS STRING) = '0' THEN CAST(NULL AS INT) ELSE ($idx) END))"
                 }
-                Some(toks.patch(rStart, lex(guarded), close - rStart + 1))
+                subst(guarded)
               } else {
                 // second top-level colon → step slice l[a:b:s] (r7
                 // session 3; probe: [1..6][2:6:2] = [2,4,6], 1-based
@@ -928,20 +926,16 @@ object Translator {
                   val repl = s"(CASE WHEN ($sa) > ($eb) THEN slice($recv, 1, 0) " +
                     s"ELSE transform(sequence(($sa), ($eb), ($st)), " +
                     s"__g_i -> try_element_at($recv, CAST(__g_i AS INT))) END)"
-                  Some(toks.patch(rStart, lex(repl), close - rStart + 1))
+                  subst(repl)
                 } else {
-                val a = render(inner.slice(0, colonAt)).trim
-                val b = render(inner.slice(colonAt + 1, inner.length)).trim
-                val repl =
-                  if (a.isEmpty && b.isEmpty) ""
-                  else if (a.isEmpty) s"slice($recv, 1, ${clamp0(normBound(recv, b))})"
+                  val a = render(inner.slice(0, colonAt)).trim
+                  val b = render(inner.slice(colonAt + 1, inner.length)).trim
+                  if (a.isEmpty && b.isEmpty) None
+                  else if (a.isEmpty) subst(s"slice($recv, 1, ${clamp0(normBound(recv, b))})")
                   else if (b.isEmpty) {
                     val sa = startBound(recv, a)
-                    s"slice($recv, $sa, ${clamp0(s"size($recv) - ($sa) + 1")})"
-                  } else sliceForm(recv, a, b)
-                if (repl.nonEmpty) {
-                  Some(toks.patch(rStart, lex(repl), close - rStart + 1))
-                } else None
+                    subst(s"slice($recv, $sa, ${clamp0(s"size($recv) - ($sa) + 1")})")
+                  } else subst(sliceForm(recv, a, b))
                 }
               }
             } else None
