@@ -82,65 +82,59 @@ object ArrowIO {
     * the schema payload a FlightInfo carries (reference serves these from
     * a full query execution, `main.py:822-828`; here the schema comes from
     * the analyzed plan, no execution). */
-  def schemaIpc(schema: StructType): Array[Byte] = {
-    val allocator = new RootAllocator()
-    try {
-      val fields = schema.fields.map(toArrowField).toList
-      val root = VectorSchemaRoot.create(new ArrowSchema(fields.asJava), allocator)
-      val out = new ByteArrayOutputStream()
-      val writer = new ArrowStreamWriter(root, null, out)
-      writer.start()
-      writer.end()
-      root.close()
-      out.toByteArray
-    } finally allocator.close()
-  }
+  def schemaIpc(schema: StructType): Array[Byte] = bytesOf(writeIpc(schema, Iterator.empty, _))
 
   /** DataFrame → Arrow IPC stream written to `out`, ≤1024-row batches,
     * streamed from `toLocalIterator` — the ArrowStreamWriter pushes each
     * record batch to the sink as it seals, so pairing this with a chunked
     * HTTP response bounds driver memory at one batch regardless of result
     * size. Returns the row count. */
-  def toArrowStreamTo(df: DataFrame, out: java.io.OutputStream): Long = {
+  def toArrowStreamTo(df: DataFrame, out: java.io.OutputStream): Long =
+    writeIpc(df.schema, df.toLocalIterator().asScala, out)
+
+  /** DataFrame → Arrow IPC stream bytes (one array; use [[toArrowStreamTo]]
+    * on response paths). */
+  def toArrowStream(df: DataFrame): Array[Byte] = bytesOf(toArrowStreamTo(df, _))
+
+  private def bytesOf(write: java.io.OutputStream => Unit): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    write(out)
+    out.toByteArray
+  }
+
+  /** The one IPC writer: the schema header, then `rows` in ≤[[batchSize]]-row
+    * record batches — none for a schema-only stream. Returns the row count. */
+  private def writeIpc(schema: StructType, rows: Iterator[Row], out: java.io.OutputStream): Long = {
     val allocator = new RootAllocator()
     try {
-      val fields = df.schema.fields.map(toArrowField).toList
+      val fields = schema.fields.map(toArrowField).toList
       val root = VectorSchemaRoot.create(new ArrowSchema(fields.asJava), allocator)
       val writer = new ArrowStreamWriter(root, null, out)
       writer.start()
-      var rows = 0L
-      val it = df.toLocalIterator()
+      var n = 0L
       val buf = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
       def flush(): Unit = if (buf.nonEmpty) {
         root.allocateNew()
         var i = 0
         while (i < buf.length) {
-          writeRow(root, i, buf(i), df.schema)
+          writeRow(root, i, buf(i), schema)
           i += 1
         }
         root.setRowCount(buf.length)
         writer.writeBatch()
-        rows += buf.length
+        n += buf.length
         buf.clear()
       }
-      while (it.hasNext) {
-        buf += it.next()
+      while (rows.hasNext) {
+        buf += rows.next()
         if (buf.length >= batchSize) flush()
       }
       flush()
       writer.end()
       root.close()
       out.flush()
-      rows
+      n
     } finally allocator.close()
-  }
-
-  /** DataFrame → Arrow IPC stream bytes (one array; use [[toArrowStreamTo]]
-    * on response paths). */
-  def toArrowStream(df: DataFrame): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    toArrowStreamTo(df, out)
-    out.toByteArray
   }
 
   private def writeRow(root: VectorSchemaRoot, idx: Int, row: Row, schema: StructType): Unit = {
@@ -199,78 +193,6 @@ object ArrowIO {
     case other => throw new IllegalArgumentException(s"not a timestamp: $other")
   }
 
-  /** Cluster-scale variant of [[toArrowStream]]: the row→columnar
-    * conversion runs per-partition on executors, and the driver splices one
-    * partition's record batches at a time (`toLocalIterator` — bounded
-    * driver memory even for huge results).
-    *
-    * Dispatch guidance (measured): in local mode "executors" share the
-    * driver JVM, so this path only adds serialize/splice cost (0.25s→1.7s
-    * at 60k rows, 0.7s→3.1s at 600k). On a real cluster the conversion
-    * parallelism and the bounded driver memory are the point — use it when
-    * results are large and executors are remote; default to
-    * [[toArrowStream]] for interactive result sizes.
-    */
-  def toArrowStreamDistributed(df: DataFrame): Array[Byte] = {
-    val schema = df.schema
-    // each non-empty partition → one complete IPC stream (header + batches)
-    val perPartition = df.mapPartitions { it =>
-      val rows = it.toSeq
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val allocator = new RootAllocator()
-        try {
-          val fields = schema.fields.map(toArrowField).toList
-          val root = VectorSchemaRoot.create(new ArrowSchema(fields.asJava), allocator)
-          val out = new ByteArrayOutputStream()
-          val writer = new ArrowStreamWriter(root, null, out)
-          writer.start()
-          rows.grouped(batchSize).foreach { group =>
-            root.allocateNew()
-            group.zipWithIndex.foreach { case (r, i) => writeRow(root, i, r, schema) }
-            root.setRowCount(group.length)
-            writer.writeBatch()
-          }
-          writer.end()
-          root.close()
-          Iterator.single(out.toByteArray)
-        } finally allocator.close()
-      }
-    }(org.apache.spark.sql.Encoders.BINARY)
-
-    // splice incrementally: one partition stream in driver memory at a time
-    val allocator = new RootAllocator()
-    try {
-      val fields = schema.fields.map(toArrowField).toList
-      val root = VectorSchemaRoot.create(new ArrowSchema(fields.asJava), allocator)
-      val out = new ByteArrayOutputStream()
-      val writer = new ArrowStreamWriter(root, null, out)
-      writer.start()
-      val loader = new org.apache.arrow.vector.VectorLoader(root)
-      val it = perPartition.toLocalIterator()
-      while (it.hasNext) {
-        val bytes = it.next()
-        val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator)
-        try {
-          while (reader.loadNextBatch()) {
-            val unloader = new org.apache.arrow.vector.VectorUnloader(reader.getVectorSchemaRoot)
-            val recordBatch = unloader.getRecordBatch
-            try { loader.load(recordBatch); writer.writeBatch() }
-            finally recordBatch.close()
-          }
-        } finally reader.close()
-      }
-      writer.end()
-      root.close()
-      out.toByteArray
-    } finally allocator.close()
-  }
-
-  /** Arrow IPC stream bytes → DataFrame (reference S15 `do_put` ingest path:
-    * register + INSERT, `main.py:793-799`). */
-  def fromArrowStream(spark: SparkSession, bytes: Array[Byte]): DataFrame =
-    fromArrowStreamWithCount(spark, bytes)._1
-
   /** Decode the currently-loaded record batch of `root` into Rows — the
     * per-chunk unit of the do_exchange insert loop. */
   def currentBatchRows(root: VectorSchemaRoot, sparkSchema: StructType): Seq[Row] = {
@@ -281,28 +203,20 @@ object ArrowIO {
     }
   }
 
-  /** Decode once, returning the row count known from the IPC batches — so
-    * callers never re-execute the DataFrame just to count it. NOT an ingest
-    * path: do_put / do_exchange / HTTP insert all stream chunk-by-chunk
+  /** Arrow IPC stream bytes → DataFrame (reference S15 `do_put` ingest path:
+    * register + INSERT, `main.py:793-799`). NOT an ingest path: do_put /
+    * do_exchange / HTTP insert all stream chunk-by-chunk
     * (FlightActions.streamingAppend, QueryExecutor.runInsertStream) — this
     * whole-body decode is for small protocol payloads and tests only. */
-  def fromArrowStreamWithCount(spark: SparkSession, bytes: Array[Byte]): (DataFrame, Long) = {
+  def fromArrowStream(spark: SparkSession, bytes: Array[Byte]): DataFrame = {
     val allocator = new RootAllocator()
     val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator)
     try {
       val root = reader.getVectorSchemaRoot
       val sparkSchema = toSparkSchema(root.getSchema)
       val rows = new scala.collection.mutable.ArrayBuffer[Row]()
-      while (reader.loadNextBatch()) {
-        val n = root.getRowCount
-        var i = 0
-        while (i < n) {
-          rows += Row.fromSeq(sparkSchema.fields.indices.map(c =>
-            readValue(root.getVector(c), i, sparkSchema.fields(c).dataType)))
-          i += 1
-        }
-      }
-      (spark.createDataFrame(rows.asJava, sparkSchema), rows.length.toLong)
+      while (reader.loadNextBatch()) rows ++= currentBatchRows(root, sparkSchema)
+      spark.createDataFrame(rows.asJava, sparkSchema)
     } finally { reader.close(); allocator.close() }
   }
 

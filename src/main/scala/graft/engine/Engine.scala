@@ -548,20 +548,13 @@ object Engine {
           // no target row matches: the table is untouched — no swap
           lastCowStats.set((allFiles.length, 0, allFiles.length))
           return returning match {
-            case Some(proj) =>
-              matched.drop("__g_f", "__g_r")
-                .createOrReplaceTempView("graft_returning_src")
-              sql(spark, s"SELECT $proj FROM graft_returning_src")
+            case Some(proj) => returningFrame(spark, matched.drop("__g_f", "__g_r"), proj)
             case None => Seq(0L).toDF("Count")
           }
         }
         val affected = perFile.map(_.getString(0)).toSeq
         val affectedSet = affected.map(fsPath).toSet
         val untouched = allFiles.filterNot(f => affectedSet.contains(fsPath(f)))
-        returning.foreach { _ =>
-          matched.drop("__g_f", "__g_r")
-            .createOrReplaceTempView("graft_returning_src")
-        }
         val target = sql(spark,
           s"SELECT *, _metadata.file_path AS __g_f, _metadata.row_index AS __g_r " +
             s"FROM $table" + (if (untouched.nonEmpty)
@@ -577,7 +570,7 @@ object Engine {
         else swapInto(spark, table, newRows)
         lastCowStats.set((allFiles.length, affected.length, untouched.length))
         returning match {
-          case Some(proj) => sql(spark, s"SELECT $proj FROM graft_returning_src")
+          case Some(proj) => returningFrame(spark, matched.drop("__g_f", "__g_r"), proj)
           case None => Seq(matchedN).toDF("Count")
         }
       case None =>
@@ -595,8 +588,7 @@ object Engine {
           val matchedNew = sql(spark,
             s"SELECT ${fields.map(_.name).mkString(", ")} FROM ($joinSql) " +
               "WHERE __g_rn = 1 AND coalesce(__g_m, false)").localCheckpoint(true)
-          matchedNew.createOrReplaceTempView("graft_returning_src")
-          proj
+          (matchedNew, proj)
         }
         // matched-row count against the OLD table, BEFORE the swap
         val matched =
@@ -606,7 +598,7 @@ object Engine {
           else 0L
         swapInto(spark, table, newRows)
         ret match {
-          case Some(proj) => sql(spark, s"SELECT $proj FROM graft_returning_src")
+          case Some((matchedNew, proj)) => returningFrame(spark, matchedNew, proj)
           case None => Seq(matched).toDF("Count")
         }
     }
@@ -645,9 +637,7 @@ object Engine {
           lastCowStats.set((allFiles.length, 0, allFiles.length))
           returning match {
             case Some(proj) =>
-              sql(spark, s"SELECT * FROM $table WHERE false")
-                .createOrReplaceTempView("graft_returning_src")
-              sql(spark, s"SELECT $proj FROM graft_returning_src")
+              returningFrame(spark, sql(spark, s"SELECT * FROM $table WHERE false"), proj)
             case None => Seq(0L).toDF("Count")
           }
         } else {
@@ -668,9 +658,7 @@ object Engine {
           else swapInto(spark, table, kept)
           lastCowStats.set((allFiles.length, affected.length, untouched.length))
           (returning, deleted) match {
-            case (Some(proj), Some(d)) =>
-              d.createOrReplaceTempView("graft_returning_src")
-              sql(spark, s"SELECT $proj FROM graft_returning_src")
+            case (Some(proj), Some(d)) => returningFrame(spark, d, proj)
             case _ => Seq(removed).toDF("Count")
           }
         }
@@ -682,9 +670,7 @@ object Engine {
         val kept = sql(spark, s"SELECT * FROM $table WHERE NOT $existsCond")
         val keptN = swapInto(spark, table, kept)
         (returning, deleted) match {
-          case (Some(proj), Some(d)) =>
-            d.createOrReplaceTempView("graft_returning_src")
-            sql(spark, s"SELECT $proj FROM graft_returning_src")
+          case (Some(proj), Some(d)) => returningFrame(spark, d, proj)
           case _ =>
             // the plain-DELETE Count contract: removed rows
             Seq(total - keptN).toDF("Count")
@@ -723,12 +709,11 @@ object Engine {
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
     val rows = full.localCheckpoint(true)
-    rows.createOrReplaceTempView("graft_returning_src")
     tableWriteLock(table).synchronized {
       rows.write.mode("append").insertInto(table)
     }
     bumpDataVersion() // append: schema unchanged (r17)
-    sql(spark, s"SELECT $proj FROM graft_returning_src")
+    returningFrame(spark, rows, proj)
   }
   private val updateRe =
     "(?is)^\\s*UPDATE\\s+([\\w.`\"]+)\\s+SET\\s+(.+?)(?:\\s+WHERE\\s+(.+?))?(?:\\s+RETURNING\\s+(.+?))?\\s*$".r
@@ -797,6 +782,19 @@ object Engine {
       try spark.catalog.dropTempView(v) catch { case _: Exception => }
       cowPruneView.remove()
     }
+  }
+
+  /** A DML's RETURNING projection over `rows`. Same per-call naming as the
+    * prune view above: a fixed view name would let two concurrent
+    * RETURNING statements on one session overwrite each other's rows
+    * between registration and analysis. The view is dropped as soon as the
+    * frame is analyzed, so none is left in the session catalog. */
+  private val returningSeq = new java.util.concurrent.atomic.AtomicLong(0)
+  private def returningFrame(spark: SparkSession, rows: DataFrame, proj: String): DataFrame = {
+    val vn = s"graft_returning_${returningSeq.incrementAndGet()}"
+    rows.createOrReplaceTempView(vn)
+    try sql(spark, s"SELECT $proj FROM $vn")
+    finally spark.catalog.dropTempView(vn)
   }
 
   /** Affected-file scan prune (r10, VERDICT r9 #5). Below
@@ -945,9 +943,7 @@ object Engine {
           lastCowStats.set((untouched.length, 0, untouched.length))
           return returning match {
             case Some(proj) =>
-              sql(spark, s"SELECT * FROM $table WHERE false")
-                .createOrReplaceTempView("graft_returning_src")
-              sql(spark, s"SELECT $proj FROM graft_returning_src")
+              returningFrame(spark, sql(spark, s"SELECT * FROM $table WHERE false"), proj)
             case None => Seq(0L).toDF("Count")
           }
         }
@@ -962,9 +958,7 @@ object Engine {
         lastCowStats.set((affected.length + untouched.length,
           affected.length, untouched.length))
         returning match {
-          case Some(proj) =>
-            deleted.get.createOrReplaceTempView("graft_returning_src")
-            sql(spark, s"SELECT $proj FROM graft_returning_src")
+          case Some(proj) => returningFrame(spark, deleted.get, proj)
           case None => Seq(matched).toDF("Count")
         }
       case _ =>
@@ -984,9 +978,7 @@ object Engine {
           else s"SELECT * FROM $table WHERE NOT coalesce(($where), false)"
         val keptN = swapInto(spark, table, sql(spark, keepSql))
         returning match {
-          case Some(proj) =>
-            deleted.get.createOrReplaceTempView("graft_returning_src")
-            sql(spark, s"SELECT $proj FROM graft_returning_src")
+          case Some(proj) => returningFrame(spark, deleted.get, proj)
           case None =>
             import spark.implicits._
             Seq(total - keptN).toDF("Count")
@@ -1055,9 +1047,7 @@ object Engine {
       lastCowStats.set((u.length, 0, u.length))
       return returning match {
         case Some(proj) =>
-          sql(spark, s"SELECT * FROM $table WHERE false")
-            .createOrReplaceTempView("graft_returning_src")
-          sql(spark, s"SELECT $proj FROM graft_returning_src")
+          returningFrame(spark, sql(spark, s"SELECT * FROM $table WHERE false"), proj)
         case None =>
           import spark.implicits._
           Seq(0L).toDF("Count")
@@ -1103,9 +1093,7 @@ object Engine {
           sql(spark, s"SELECT ${selectList.mkString(", ")} FROM $table"))
     }
     returning match {
-      case Some(proj) =>
-        updatedRows.get.createOrReplaceTempView("graft_returning_src")
-        sql(spark, s"SELECT $proj FROM graft_returning_src")
+      case Some(proj) => returningFrame(spark, updatedRows.get, proj)
       case None =>
         import spark.implicits._
         Seq(matched).toDF("Count")

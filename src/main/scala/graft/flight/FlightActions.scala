@@ -206,9 +206,6 @@ object FlightActions {
 
   // ---- S15/S16: Arrow ingest (do_put / do_exchange insert) ---------------
 
-  /** Arrow IPC stream → append to table; returns rows inserted (the
-    * do_exchange response is a 1-row {rows_inserted: int64} table,
-    * main.py:1089-1094). */
   /** S16: `do_exchange` insert — the bidi loop (main.py:1007-1105). Reads
     * the incoming Arrow IPC stream CHUNK BY CHUNK, appending each record
     * batch as it arrives (the reference registers + INSERTs per chunk,

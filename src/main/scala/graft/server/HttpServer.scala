@@ -23,7 +23,7 @@ import scala.jdk.CollectionConverters._
 final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[String] = None) {
 
   private val tenants = new TenantManager(spark)
-  private val cache = new ResultCache(10)
+  private val cache = new ResultCache
   private var server: JdkHttpServer = _
 
   def start(): Int = {
@@ -53,6 +53,23 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
     if (bytes.nonEmpty) { val os = ex.getResponseBody; os.write(bytes); os.close() }
     ex.close()
+  }
+
+  private def respondText(ex: HttpExchange, code: Int, msg: String): Unit =
+    respond(ex, code, (msg + "\n").getBytes(StandardCharsets.UTF_8), "text/plain")
+
+  /** Chunked 200 reply (length 0): `write` streams the body through a
+    * 64 KiB buffer, so a huge result never becomes one driver-side array.
+    * A failure inside `write` leaves a truncated chunked body — the wire
+    * signal for a mid-stream error. */
+  private def respondStream(ex: HttpExchange, contentType: String)(
+      write: java.io.OutputStream => Unit): Unit = {
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.getResponseHeaders.set("Access-Control-Allow-Origin", "*")
+    ex.sendResponseHeaders(200, 0)
+    val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
+    try { write(os); os.flush() }
+    finally { try os.close() catch { case _: Throwable => }; ex.close() }
   }
 
   private def handle(ex: HttpExchange): Unit =
@@ -99,8 +116,9 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     *    the `{rows_inserted: int64}` Arrow response table
     *  - `POST /flight/do_exchange?table=t` — per-batch insert loop, same
     *    response table
-    *  - `GET /flight/info?query=…` — result schema WITHOUT execution, as
-    *    a schema-only Arrow IPC stream; `?path=<command>` — path-mode
+    *  - `GET /flight/info?query=…` — result schema as a schema-only Arrow
+    *    IPC stream, read off the analyzed plan: no optimize, plan or
+    *    execute step runs; `?path=<command>` — path-mode
     *    FlightInfo for the canned catalog flights (ticket echoed in the
     *    `X-Flight-Ticket` header)
     *  - `GET /flight/list_flights` — msgpack+zstd envelope of FlightInfo
@@ -126,21 +144,16 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
         val bodyBytes = body()
         val ticket = if (bodyBytes.nonEmpty) bodyBytes
           else params.getOrElse("ticket", "").getBytes(StandardCharsets.UTF_8)
-        if (ticket.isEmpty) { respond(ex, 400, "no ticket\n".getBytes, "text/plain"); return }
-        val sql = FlightActions.parseTicket(ticket)
-        val df = graft.engine.Engine.sqlScript(session, sql)
-        // chunked: each sealed record batch flushes to the client — a huge
-        // result never becomes one driver-side array (gRPC do_get likewise
-        // sends a stream of batches)
-        ex.getResponseHeaders.set("Content-Type", arrowType)
-        ex.getResponseHeaders.set("Access-Control-Allow-Origin", "*")
-        ex.sendResponseHeaders(200, 0)
-        val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
-        try { ArrowIO.toArrowStreamTo(df, os); os.flush() }
-        finally { try os.close() catch { case _: Throwable => }; ex.close() }
+        if (ticket.isEmpty) respondText(ex, 400, "no ticket")
+        else {
+          val df = graft.engine.Engine.sqlScript(session, FlightActions.parseTicket(ticket))
+          // each sealed record batch flushes to the client (gRPC do_get
+          // likewise sends a stream of batches)
+          respondStream(ex, arrowType)(ArrowIO.toArrowStreamTo(df, _))
+        }
       case "/flight/do_put" | "/flight/do_exchange" =>
         params.get("table") match {
-          case None => respond(ex, 400, "missing table param\n".getBytes, "text/plain")
+          case None => respondText(ex, 400, "missing table param")
           case Some(table) =>
             // both routes use the incremental per-batch append (the
             // reference's do_exchange shape, main.py:1057-1075) reading
@@ -159,18 +172,15 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
               case Some((schema, ticket)) =>
                 ex.getResponseHeaders.set("X-Flight-Ticket", ticket)
                 respond(ex, 200, ArrowIO.schemaIpc(schema), arrowType)
-              case None =>
-                respond(ex, 404, s"no flight for path $p\n".getBytes, "text/plain")
+              case None => respondText(ex, 404, s"no flight for path $p")
             }
-            return
           case None =>
+            val sql = params.getOrElse("query", new String(body(), StandardCharsets.UTF_8))
+            // schema without execution (S20), as in path mode
+            if (sql.trim.isEmpty) respondText(ex, 400, "no query")
+            else respond(ex, 200,
+              ArrowIO.schemaIpc(FlightActions.commandSchema(session, sql)), arrowType)
         }
-        val sql = params.getOrElse("query", new String(body(), StandardCharsets.UTF_8))
-        if (sql.trim.isEmpty) { respond(ex, 400, "no query\n".getBytes, "text/plain"); return }
-        // schema without execution (S20): an empty-limit plan carries the
-        // analyzed schema through the IPC stream header
-        val df = graft.engine.Engine.sql(session, sql).limit(0)
-        respond(ex, 200, ArrowIO.toArrowStream(df), arrowType)
       case "/flight/list_flights" =>
         // filters arrive as the reference's airport-* headers or as query
         // params; both filters present → table listing, else canned flights
@@ -185,7 +195,7 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
           FlightActions.listSchemas(session, params.getOrElse("catalog", "spark_catalog")),
           "application/octet-stream")
       case _ =>
-        respond(ex, 404, s"unknown flight endpoint $path\n".getBytes, "text/plain")
+        respondText(ex, 404, s"unknown flight endpoint $path")
     }
   }
 
@@ -219,11 +229,10 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     if (insertTarget.isDefined) {
       val session = tenants.sessionFor(auth, params.get("database"))
       QueryExecutor.runInsertStream(session, insertTarget.get, ex.getRequestBody) match {
-        case Right(r) =>
-          queryId.foreach(id => cache.put(id, r.bytes))
-          respond(ex, 200, r.bytes)
-        case Left(err) =>
-          respond(ex, 400, (err + "\n").getBytes(StandardCharsets.UTF_8), "text/plain")
+        case Right(_) =>
+          queryId.foreach(id => cache.put(id, Array.emptyByteArray))
+          respond(ex, 200, Array.emptyByteArray)
+        case Left(err) => respondText(ex, 400, err)
       }
       return
     }
@@ -233,70 +242,69 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     // cache replay: query_id with no query (reference main.py:276-278)
     if (paramQuery.isEmpty && body.isEmpty && queryId.nonEmpty) {
       cache.get(queryId.get) match {
-        case Some(bytes) => respond(ex, 200, bytes); return
-        case None => respond(ex, 404, "query_id not cached\n".getBytes, "text/plain"); return
+        case Some(bytes) => respond(ex, 200, bytes)
+        case None => respondText(ex, 404, "query_id not cached")
       }
+      return
     }
 
     val session = tenants.sessionFor(auth, params.get("database"))
 
     val sql = if (paramQuery.nonEmpty && body.nonEmpty) s"$paramQuery\n$body"
       else if (paramQuery.nonEmpty) paramQuery else body
-    if (sql.trim.isEmpty) { respond(ex, 400, "no query\n".getBytes, "text/plain"); return }
-    // HEAD: execute, report Content-Length + Accept-Ranges, no body
-    // (reference main.py:290-298 — it too must produce the bytes to
-    // know the length)
-    if (ex.getRequestMethod == "HEAD") {
-      QueryExecutor.run(session, sql, defaultFormat) match {
-        case Right(r) =>
+    if (sql.trim.isEmpty) { respondText(ex, 400, "no query"); return }
+    // Analysis happened in prepare, so bad SQL answers 400 before any
+    // header goes out
+    QueryExecutor.prepare(session, sql, defaultFormat) match {
+      case Left(err) => respondText(ex, 400, err)
+      case Right(p) if ex.getRequestMethod == "HEAD" =>
+        // HEAD: Content-Length + Accept-Ranges, no body (reference
+        // main.py:290-298 — it too must encode the result to know the
+        // length). The bytes are counted, none kept, and a runtime error
+        // still answers 400 since nothing has been sent yet.
+        val counter = new org.apache.commons.io.output.CountingOutputStream(
+          java.io.OutputStream.nullOutputStream())
+        try {
+          graft.formats.Encoders.encodeTo(p.df, p.format, p.t0, counter)
           ex.getResponseHeaders.set("Content-Type", "application/json; charset=UTF-8")
           ex.getResponseHeaders.set("Accept-Ranges", "bytes")
-          ex.getResponseHeaders.set("Content-Length", r.bytes.length.toString)
+          ex.getResponseHeaders.set("Content-Length", counter.getByteCount.toString)
           ex.sendResponseHeaders(200, -1)
           ex.close()
-        case Left(err) =>
-          respond(ex, 400, (err + "\n").getBytes(StandardCharsets.UTF_8), "text/plain")
-      }
-      return
-    }
-    QueryExecutor.prepare(session, sql, defaultFormat) match {
-      case Left(err) =>
-        respond(ex, 400, (err + "\n").getBytes(StandardCharsets.UTF_8), "text/plain")
+        } catch { case e: Throwable => respondText(ex, 400, QueryExecutor.errorMessage(e)) }
       case Right(p) =>
-        // chunked streaming (length 0): the encoder flushes per batch,
-        // so a huge SELECT never materializes its body on the driver.
-        // Analysis already happened in prepare — only runtime failures
-        // can strike mid-stream (client sees a truncated chunked body).
-        ex.getResponseHeaders.set("Content-Type", "application/json; charset=UTF-8")
-        ex.getResponseHeaders.set("Access-Control-Allow-Origin", "*")
-        ex.sendResponseHeaders(200, 0)
-        val os = new java.io.BufferedOutputStream(ex.getResponseBody, 64 * 1024)
-        // query_id caching needs the bytes — tee them only when asked
-        val cacheBuf = queryId.map(_ => new java.io.ByteArrayOutputStream())
-        val sink: java.io.OutputStream = cacheBuf match {
-          case Some(b) => new TeeOutputStream(os, b)
-          case None => os
-        }
-        try {
-          graft.formats.Encoders.encodeTo(p.df, p.format, p.t0, sink)
-          sink.flush()
-          // cache only a COMPLETE result — a mid-stream failure must
-          // not leave a truncated body replayable under its query_id
-          cacheBuf.foreach(b => cache.put(queryId.get, b.toByteArray))
-        } finally {
-          try os.close() catch { case _: Throwable => }
-          ex.close()
+        // only runtime failures can strike mid-stream (the client sees a
+        // truncated chunked body)
+        respondStream(ex, "application/json; charset=UTF-8") { os =>
+          queryId match {
+            case None => graft.formats.Encoders.encodeTo(p.df, p.format, p.t0, os)
+            case Some(id) =>
+              val tee = new TeeOutputStream(os)
+              graft.formats.Encoders.encodeTo(p.df, p.format, p.t0, tee)
+              // cache only a COMPLETE result — a mid-stream failure must
+              // not leave a truncated body replayable under its query_id;
+              // an over-cap result is not cached (its replay answers 404)
+              tee.copy.fold(cache.remove(id))(cache.put(id, _))
+          }
         }
     }
   }
 
-  /** Duplicates writes into the cache buffer; flush/close act on the
+  /** Duplicates writes into a cache copy until the copy would pass
+    * [[ResultCache.maxBytes]], then drops it; flush/close act on the
     * response stream only. */
-  private final class TeeOutputStream(main: java.io.OutputStream,
-      copy: java.io.OutputStream) extends java.io.OutputStream {
-    override def write(b: Int): Unit = { main.write(b); copy.write(b) }
-    override def write(buf: Array[Byte], off: Int, len: Int): Unit = {
-      main.write(buf, off, len); copy.write(buf, off, len)
+  private final class TeeOutputStream(main: java.io.OutputStream) extends java.io.OutputStream {
+    private var buf = new java.io.ByteArrayOutputStream()
+    /** The whole result, or None once it outgrew the cap. */
+    def copy: Option[Array[Byte]] = Option(buf).map(_.toByteArray)
+    private def keep(n: Int): Boolean = {
+      if (buf != null && buf.size.toLong + n > ResultCache.maxBytes) buf = null
+      buf != null
+    }
+    override def write(b: Int): Unit = { main.write(b); if (keep(1)) buf.write(b) }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      main.write(b, off, len)
+      if (keep(len)) buf.write(b, off, len)
     }
     override def flush(): Unit = main.flush()
     override def close(): Unit = main.close()

@@ -1,16 +1,13 @@
 package graft.server
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.dialect.{Sanitizer, Translator}
+import graft.dialect.Sanitizer
 import graft.engine.Engine
-import graft.formats.Encoders
 
 /** Query execution + format dispatch + error channel (reference S2,
   * `duckdb_query_with_errmsg`, `/root/reference/main.py:223-249`).
   */
 object QueryExecutor {
-
-  final case class Result(bytes: Array[Byte], rows: Long, elapsedSec: Double)
 
   /** Analyzed-but-not-executed query, ready to stream. Analysis (and any
     * eager DDL in a multi-statement script) happens inside [[prepare]], so
@@ -25,25 +22,12 @@ object QueryExecutor {
       val (noFmt, fmt) = Sanitizer.stripFormat(sql)
       val df = Engine.sqlScript(spark, noFmt)
       Right(Prepared(df, fmt.getOrElse(defaultFormat), t0))
-    } catch {
-      case e: Throwable =>
-        Left(Option(e.getMessage).map(_.trim).filter(_.nonEmpty)
-          .getOrElse(e.getClass.getSimpleName))
-    }
+    } catch { case e: Throwable => Left(errorMessage(e)) }
 
-  /** Execute a (possibly multi-statement, possibly FORMAT-suffixed) SQL
-    * script; encode the last statement's result as one byte array. The
-    * HTTP path streams via [[prepare]] + `Encoders.encodeTo` instead. */
-  def run(spark: SparkSession, sql: String, defaultFormat: String): Either[String, Result] =
-    prepare(spark, sql, defaultFormat).flatMap { p =>
-      try Right(Result(Encoders.encode(p.df, p.format, p.t0), -1L,
-        (System.nanoTime() - p.t0) / 1e9))
-      catch {
-        case e: Throwable =>
-          Left(Option(e.getMessage).map(_.trim).filter(_.nonEmpty)
-            .getOrElse(e.getClass.getSimpleName))
-      }
-    }
+  /** The error channel's text: the trimmed message, else the exception's
+    * class name. */
+  private[server] def errorMessage(e: Throwable): String =
+    Option(e.getMessage).map(_.trim).filter(_.nonEmpty).getOrElse(e.getClass.getSimpleName)
 
   /** HTTP POST `INSERT INTO <t>` with a JSONEachRow body (reference S3,
     * `handle_insert_query`, `/root/reference/main.py:196-211`): the body is
@@ -58,25 +42,15 @@ object QueryExecutor {
       case _ => None
     }
 
-  // per-table write serialization lives in Engine.tableWriteLock so the
-  // Flight ingest paths share the same locks (reference: DuckDB's
-  // single-writer transactions)
-  private def lockFor(table: String): Object = Engine.tableWriteLock(table)
-
-  def runInsert(spark: SparkSession, table: String, ndjsonBody: String): Either[String, Result] =
-    runInsertStream(spark, table, new java.io.ByteArrayInputStream(
-      ndjsonBody.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-
   /** NDJSON lines committed every `chunkLines` — the ingest body streams
     * straight off the socket and is never materialized driver-side (round-4;
     * the reference reads the whole body, main.py:196, which OOMs the server
     * at pipeline ingest rates). Each chunk is schema-inferred independently;
     * [[align]] casts it onto the target schema, so chunks with missing /
-    * all-null columns still land correctly. */
+    * all-null columns still land correctly. Returns the rows inserted. */
   def runInsertStream(spark: SparkSession, table: String, in: java.io.InputStream,
-      chunkLines: Int = 65536): Either[String, Result] =
+      chunkLines: Int = 65536): Either[String, Long] =
     try {
-      val t0 = System.nanoTime()
       val target = spark.table(table)
       val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8), 1 << 16)
@@ -86,7 +60,9 @@ object QueryExecutor {
         import spark.implicits._
         val df = spark.read.json(spark.createDataset(buf.toIndexedSeq))
         val aligned = align(df, target)
-        lockFor(table).synchronized {
+        // per-table write serialization shared with the Flight ingest paths
+        // (reference: DuckDB's single-writer transactions)
+        Engine.tableWriteLock(table).synchronized {
           aligned.write.mode("append").insertInto(table)
         }
         total += buf.length
@@ -102,10 +78,8 @@ object QueryExecutor {
       }
       commit()
       if (total == 0) Left("empty insert body")
-      else Right(Result(Array.emptyByteArray, total, (System.nanoTime() - t0) / 1e9))
-    } catch {
-      case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getSimpleName).trim)
-    }
+      else Right(total)
+    } catch { case e: Throwable => Left(errorMessage(e)) }
 
   /** Align an inferred NDJSON chunk with the target table: add missing
     * columns as typed NULLs, order and cast to the target schema. */

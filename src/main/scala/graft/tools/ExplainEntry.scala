@@ -59,7 +59,7 @@ object ExplainEntry {
       val counter = new Counter
       spark.sparkContext.addSparkListener(counter)
       val df = SparkEntry.queries(name)(spark, sfDir)
-      Thread.sleep(500) // let the listener bus drain the build-phase events
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext) // deliver the build-phase events
       val (bJobs, bStages, bTasks) = counter.snapshot
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -67,7 +67,7 @@ object ExplainEntry {
       // AQE finalizes the plan object we print below; materializes every
       // column of every row, like the bench's noop sink
       df.queryExecution.toRdd.foreach(_ => ())
-      Thread.sleep(500)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       val (tJobs, tStages, tTasks) = counter.snapshot
       spark.sparkContext.removeSparkListener(counter)
       val finalPlan = df.queryExecution.explainString(

@@ -84,14 +84,14 @@ object FloorProbe {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
         dropLeftoverBlocks()
         val runs = (1 to iters).map { _ =>
-          // listener events are async: settle before resetting/reading so
-          // task counts attribute to the right run (probe-grade accuracy)
-          Thread.sleep(300)
+          // listener events are async: drain the bus before resetting and
+          // reading so task counts attribute to the right run
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
           listener.reset()
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val t = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300)
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
           val st = (listener.stages.get, listener.tasks.get)
           dropLeftoverBlocks()
           (t, st._1, st._2)

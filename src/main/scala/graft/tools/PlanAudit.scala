@@ -486,7 +486,7 @@ object PlanAudit {
         bands = 5, targetBucket = 1, occupancyFactor = 0.0)
       val dl = System.nanoTime() + 3_000_000_000L
       while (System.nanoTime() < dl && plans.isEmpty) Thread.sleep(20)
-      Thread.sleep(300) // drain the async listener bus tail
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l2)
       import scala.jdk.CollectionConverters._
       val corpusScans = plans.asScala.filter(p =>
@@ -528,7 +528,7 @@ object PlanAudit {
         targetBucket = 1, occupancyFactor = 0.0)
       val dl = System.nanoTime() + 3_000_000_000L
       while (System.nanoTime() < dl && plans.isEmpty) Thread.sleep(20)
-      Thread.sleep(300)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l3)
       import scala.jdk.CollectionConverters._
       val corpusScans = plans.asScala.filter(p =>

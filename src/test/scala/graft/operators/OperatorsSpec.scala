@@ -1310,6 +1310,22 @@ class OperatorsSpec extends SparkTestBase {
     spark.sql("DROP TABLE graft_ret_t")
   }
 
+  test("RETURNING statements leave no view behind and their frames still collect") {
+    import spark.implicits._
+    spark.sql("DROP TABLE IF EXISTS graft_retv_t")
+    (1 to 4).map(i => (i.toLong, i * 10)).toDF("id", "n")
+      .write.format("parquet").saveAsTable("graft_retv_t")
+    val frames = Seq(
+      "DELETE FROM graft_retv_t WHERE n > 30 RETURNING id",
+      "UPDATE graft_retv_t SET n = n + 1 WHERE id = 1 RETURNING id",
+      "INSERT INTO graft_retv_t VALUES (9, 90) RETURNING id").map(Engine.sql(spark, _))
+    // every statement's view is gone before any of the frames runs
+    val views = spark.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.startsWith("graft_returning")), views.mkString(", "))
+    assert(frames.map(_.collect().map(_.getLong(0)).toSeq) == Seq(Seq(4L), Seq(1L), Seq(9L)))
+    spark.sql("DROP TABLE graft_retv_t")
+  }
+
   test("DELETE and UPDATE rewrite managed tables atomically with DuckDB Count results") {
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS graft_dml_t")

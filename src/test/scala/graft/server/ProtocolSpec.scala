@@ -15,7 +15,7 @@ class ProtocolSpec extends SparkTestBase {
 
   test("JSONCompact envelope has the reference shape") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val node = mapper.readTree(new String(Encoders.jsonCompact(df, System.nanoTime()), "UTF-8"))
+    val node = mapper.readTree(new String(Encoders.encode(df, "JSONCompact", System.nanoTime()), "UTF-8"))
     assert(node.get("meta").get(0).get("name").asText() == "k")
     assert(node.get("meta").get(0).get("type").asText() == "Int64")
     assert(node.get("meta").get(1).get("type").asText() == "String")
@@ -55,7 +55,7 @@ class ProtocolSpec extends SparkTestBase {
 
   test("JSON envelope uses row objects") {
     val df = Seq((1L, "a")).toDF("k", "v")
-    val node = mapper.readTree(new String(Encoders.json(df, System.nanoTime()), "UTF-8"))
+    val node = mapper.readTree(new String(Encoders.encode(df, "JSON", System.nanoTime()), "UTF-8"))
     assert(node.get("data").get(0).get("k").asLong() == 1L)
     assert(node.get("data").get(0).get("v").asText() == "a")
     assert(!node.has("rows_before_limit_at_least")) // main.py:163-181 omits it
@@ -63,14 +63,14 @@ class ProtocolSpec extends SparkTestBase {
 
   test("JSONEachRow is one object per line") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val lines = new String(Encoders.ndjson(df), "UTF-8").trim.split('\n')
+    val lines = new String(Encoders.encode(df, "JSONEachRow", System.nanoTime()), "UTF-8").trim.split('\n')
     assert(lines.length == 2)
     assert(mapper.readTree(lines(0)).get("k").asLong() == 1L)
   }
 
   test("JSONCompactColumns is column-oriented") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val node = mapper.readTree(new String(Encoders.jsonCompactColumns(df), "UTF-8"))
+    val node = mapper.readTree(new String(Encoders.encode(df, "JSONCompactColumns", System.nanoTime()), "UTF-8"))
     assert(node.get(0).get(0).asLong() == 1L)
     assert(node.get(0).get(1).asLong() == 2L)
     assert(node.get(1).get(0).asText() == "a")
@@ -78,7 +78,7 @@ class ProtocolSpec extends SparkTestBase {
 
   test("CSV/TSV with null and quoting rules") {
     val df = Seq((Some("x,y"), 1L), (None, 2L)).toDF("s", "k")
-    val csv = new String(Encoders.csvTsv(df, ",", withNames = true), "UTF-8")
+    val csv = new String(Encoders.encode(df, "CSVWithNames", System.nanoTime()), "UTF-8")
     val lines = csv.trim.split('\n')
     assert(lines(0) == "s,k")
     assert(lines(1) == "\"x,y\",1")
@@ -86,11 +86,25 @@ class ProtocolSpec extends SparkTestBase {
   }
 
   test("ResultCache evicts LRU beyond 10") {
-    val c = new ResultCache(10)
+    val c = new ResultCache
     (1 to 12).foreach(i => c.put(s"q$i", Array(i.toByte)))
     assert(c.size == 10)
     assert(c.get("q1").isEmpty && c.get("q2").isEmpty)
     assert(c.get("q12").nonEmpty)
+  }
+
+  test("ResultCache is bounded in bytes: LRU eviction past the cap, over-cap results not kept") {
+    val c = new ResultCache
+    val third = new Array[Byte]((ResultCache.maxBytes / 3).toInt)
+    Seq("a", "b", "c").foreach(c.put(_, third))
+    assert(c.size == 3)
+    c.get("a") // touch: b is now the least recently used
+    c.put("d", Array.fill(1024)(1.toByte))
+    assert(c.get("b").isEmpty && c.size == 3)
+    assert(Seq("a", "c", "d").forall(c.get(_).nonEmpty))
+    // a result over the cap is not kept, and drops an older value of its id
+    c.put("a", new Array[Byte]((ResultCache.maxBytes + 1).toInt))
+    assert(c.get("a").isEmpty && c.get("c").nonEmpty && c.get("d").nonEmpty)
   }
 
   test("tenant hash is deterministic and anonymous maps to default") {
@@ -238,18 +252,6 @@ class ProtocolSpec extends SparkTestBase {
     assert(back.count() == 3000)
   }
 
-  test("distributed arrow production equals driver-side production") {
-    graft.engine.Engine.registerTables(spark, sfDir)
-    val df = spark.table("orders")
-      .select("o_orderkey", "o_orderstatus", "o_totalprice").orderBy("o_orderkey")
-    val driverSide = ArrowIO.fromArrowStream(spark, ArrowIO.toArrowStream(df))
-      .orderBy("o_orderkey").collect().toSeq
-    val distributed = ArrowIO.fromArrowStream(spark, ArrowIO.toArrowStreamDistributed(df))
-      .orderBy("o_orderkey").collect().toSeq
-    assert(distributed == driverSide)
-    assert(distributed.nonEmpty)
-  }
-
   test("HTTP server end-to-end: query, formats, ping, cache, errors") {
     graft.engine.Engine.registerTables(spark, sfDir)
     val srv = new HttpServer(spark, 0) // port 0: ephemeral
@@ -296,6 +298,28 @@ class ProtocolSpec extends SparkTestBase {
       assert(head.headers().firstValue("Content-Length").orElse("") == "2") // "1\n"
       assert(head.headers().firstValue("Accept-Ranges").orElse("") == "bytes")
       assert(head.body().isEmpty)
+
+      // HEAD Content-Length equals the GET body length, including a result
+      // of more than one 1,024-row flush batch
+      def request(query: String, format: String) =
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/?query=" +
+          java.net.URLEncoder.encode(query, "UTF-8") + s"&default_format=$format"))
+      def headLength(query: String, format: String): String =
+        client.send(request(query, format)
+            .method("HEAD", java.net.http.HttpRequest.BodyPublishers.noBody()).build(),
+          HttpResponse.BodyHandlers.ofString()).headers().firstValue("Content-Length").orElse("")
+      def getLength(query: String, format: String): String = {
+        val r = client.send(request(query, format).build(), HttpResponse.BodyHandlers.ofByteArray())
+        assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
+        r.body().length.toString
+      }
+      val few = "SELECT o_orderkey, o_orderstatus, o_orderdate FROM orders ORDER BY o_orderkey LIMIT 7"
+      Seq("CSV", "TSV", "JSONEachRow", "JSONCompactColumns").foreach { f =>
+        assert(headLength(few, f) == getLength(few, f), f)
+      }
+      val many = "SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem " +
+        "ORDER BY l_orderkey, l_linenumber LIMIT 2500"
+      assert(headLength(many, "CSV") == getLength(many, "CSV"))
 
       // error channel: 400 + message
       val bad = get("/?query=" + java.net.URLEncoder.encode("SELECT * FROM nope_missing", "UTF-8"))
@@ -579,6 +603,10 @@ class ProtocolSpec extends SparkTestBase {
       assert(ArrowIO.fromArrowStream(spark, info.body()).columns.toSeq ==
         Seq("table_name", "schema_name", "catalog_name", "table_type"))
       assert(get("/flight/info?path=nope").statusCode() == 404)
+      // query mode answers through the same schema path
+      val byQuery = get("/flight/info?query=" + java.net.URLEncoder.encode("SHOW TABLES", "UTF-8"))
+      assert(byQuery.statusCode() == 200)
+      assert(byQuery.body().sameElements(info.body()))
     } finally srv.stop()
   }
 
@@ -609,6 +637,19 @@ class ProtocolSpec extends SparkTestBase {
       }
       assert(n == 1200000L, s"streamed $n rows")
       assert(first == "0" && last == "1199999")
+      // a query_id result over the cache's byte cap streams whole but is not
+      // cached: its replay answers 404, as after an eviction
+      val wide = client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/?query_id=graft_wide&query=" + java.net.URLEncoder.encode(
+            "SELECT repeat('x', 60000) AS s FROM graft_big_stream WHERE id < 1200 FORMAT CSV",
+            "UTF-8"))).build(),
+        HttpResponse.BodyHandlers.ofInputStream())
+      assert(wide.statusCode() == 200)
+      val wideBytes = wide.body().transferTo(java.io.OutputStream.nullOutputStream())
+      assert(wideBytes == 1200L * 60001 && wideBytes > ResultCache.maxBytes)
+      assert(client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/?query_id=graft_wide")).build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode() == 404)
       // errors before headers still use the 400 channel
       val bad = client.send(HttpRequest.newBuilder(URI.create(
           s"http://127.0.0.1:$port/?query=" + java.net.URLEncoder.encode(
@@ -872,7 +913,7 @@ class ProtocolSpec extends SparkTestBase {
     }
     val r = QueryExecutor.runInsertStream(spark, "graft_ndjson_big", gen)
     assert(r.isRight, s"insert failed: $r")
-    assert(r.toOption.get.rows == 1000000L)
+    assert(r.toOption.get == 1000000L)
     assert(spark.table("graft_ndjson_big").count() == 1000000L)
     // chunked commits → multiple parquet part files, not one
     assert(spark.table("graft_ndjson_big").inputFiles.length >= 16,
