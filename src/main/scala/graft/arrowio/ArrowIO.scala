@@ -85,12 +85,15 @@ object ArrowIO {
   def schemaIpc(schema: StructType): Array[Byte] = bytesOf(writeIpc(schema, Iterator.empty, _))
 
   /** DataFrame → Arrow IPC stream written to `out`, ≤1024-row batches,
-    * streamed from `toLocalIterator` — the ArrowStreamWriter pushes each
-    * record batch to the sink as it seals, so pairing this with a chunked
-    * HTTP response bounds driver memory at one batch regardless of result
-    * size. Returns the row count. */
+    * read from the serve path's one drain, [[graft.plans.SingleStream.drain]]:
+    * rows arrive one partition at a time, and the ArrowStreamWriter pushes
+    * each record batch to the sink as it seals, so with a chunked HTTP
+    * response the driver holds one partition and one batch, whatever the
+    * result size. A root `ORDER BY` is met on one partition, without the
+    * range partitioner's sampling job (the final stage runs one partition
+    * per job in sequence either way). Returns the row count. */
   def toArrowStreamTo(df: DataFrame, out: java.io.OutputStream): Long =
-    writeIpc(df.schema, df.toLocalIterator().asScala, out)
+    writeIpc(df.schema, graft.plans.SingleStream.drain(df), out)
 
   /** DataFrame → Arrow IPC stream bytes (one array; use [[toArrowStreamTo]]
     * on response paths). */

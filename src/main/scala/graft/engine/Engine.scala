@@ -2222,9 +2222,10 @@ object Engine {
     last
   }
 
-  /** Standard local session for tests/benchmarks: 32 shuffle partitions to
-    * match local[32] (not the 200 default sized for real clusters), AQE on so
-    * plans re-partition/de-skew at runtime the way they would at scale. */
+  /** Standard local session for tests/benchmarks: `local[cpus]` with as
+    * many shuffle partitions as cores (`cpus` is `SPARK_GRAFT_CPUS`, else
+    * 32 — not the 200 default sized for real clusters), AQE on so plans
+    * re-partition/de-skew at runtime the way they would at scale. */
   def localSession(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     // AQE on by default (the scale posture: runtime re-partitioning and skew
     // handling); SPARK_GRAFT_AQE=false trades it away for lower per-stage

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.plans.SingleStream
 import java.nio.charset.StandardCharsets
 
 /** ClickHouse wire-format encoders (reference S4–S7,
@@ -17,10 +18,15 @@ import java.nio.charset.StandardCharsets
   *    UI charting, `/root/reference/public/index.html:602-603`)
   *  - `CSV` / `TSV` / `*WithNames`
   *
-  * Rows are streamed via `toLocalIterator` so the driver never materializes
-  * more than a partition at a time (reference collects everything,
-  * `main.py:231` — at 100 TB the collection boundary is the one place
-  * bounded memory matters).
+  * Every format reads its rows from the serve path's one drain,
+  * [[graft.plans.SingleStream.drain]]: rows arrive one partition at a time
+  * (`toLocalIterator`), so the driver never holds more than a partition of
+  * the result (the reference collects everything, `main.py:231` — at
+  * 100 TB the collection boundary is the one place bounded memory
+  * matters). The drain meets a root `ORDER BY` on one partition instead of
+  * a sampled range partitioning: the final stage runs one partition per job
+  * in sequence either way, so the range partitioner's sampling job was
+  * pure overhead.
   */
 object Encoders {
 
@@ -137,7 +143,7 @@ object Encoders {
     val w = new java.io.OutputStreamWriter(out, StandardCharsets.UTF_8)
     header.foreach { h => w.write(h); w.write('\n') }
     var rows = 0L
-    val it = df.toLocalIterator()
+    val it = SingleStream.drain(df)
     while (it.hasNext) {
       w.write(line(it.next())); w.write('\n')
       rows += 1
@@ -170,7 +176,7 @@ object Encoders {
     mapper.writeTree(gen, metaNode(df.schema))
     gen.writeArrayFieldStart("data")
     var rows = 0L
-    val it = df.toLocalIterator()
+    val it = SingleStream.drain(df)
     while (it.hasNext) {
       val r = it.next()
       val node: com.fasterxml.jackson.databind.JsonNode =
@@ -203,7 +209,7 @@ object Encoders {
     val n = df.schema.fields.length
     val cols = Array.fill(n)(mapper.createArrayNode())
     var rows = 0L
-    val it = df.toLocalIterator()
+    val it = SingleStream.drain(df)
     while (it.hasNext) {
       val r = it.next()
       var i = 0

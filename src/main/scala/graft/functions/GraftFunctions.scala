@@ -265,6 +265,9 @@ object GraftFunctions {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ r
     }
+    if (!spark.experimental.extraStrategies.contains(graft.plans.SingleStreamStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.SingleStreamStrategy
   }
 
   /** Column-API forms (require [[register]] on the session first). */
@@ -311,6 +314,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (GlobalLimit(LocalLimit(Project(Sort)))) where neither the rule
     // nor the TakeOrderedAndProject planner pattern matches
     ext.injectPreCBORule(_ => graft.plans.ProjectAfterTopK)
+    // sessions cloned with newSession() (tenants) inherit extensions, not
+    // experimental strategies: the served-sort planner must come from here
+    ext.injectPlannerStrategy(_ => graft.plans.SingleStreamStrategy)
     // resolution-time, not optimizer-time: coercion-inserted casts around
     // literal branches constant-fold before user optimizer rules run, and
     // the fold must bake DUCK semantics (trunc downscale, duck double

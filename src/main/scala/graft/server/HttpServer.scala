@@ -146,10 +146,13 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
           else params.getOrElse("ticket", "").getBytes(StandardCharsets.UTF_8)
         if (ticket.isEmpty) respondText(ex, 400, "no ticket")
         else {
-          val df = graft.engine.Engine.sqlScript(session, FlightActions.parseTicket(ticket))
-          // each sealed record batch flushes to the client (gRPC do_get
-          // likewise sends a stream of batches)
-          respondStream(ex, arrowType)(ArrowIO.toArrowStreamTo(df, _))
+          // analysis runs here, so bad SQL answers 400 before any header,
+          // as on the query branch
+          scala.util.Try(graft.engine.Engine.sqlScript(session, FlightActions.parseTicket(ticket)))
+            .fold(e => respondText(ex, 400, QueryExecutor.errorMessage(e)),
+              // each sealed record batch flushes to the client (gRPC do_get
+              // likewise sends a stream of batches)
+              df => respondStream(ex, arrowType)(ArrowIO.toArrowStreamTo(df, _)))
         }
       case "/flight/do_put" | "/flight/do_exchange" =>
         params.get("table") match {

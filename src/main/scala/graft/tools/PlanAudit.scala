@@ -860,6 +860,55 @@ object PlanAudit {
       }
       Engine.sql(spark, "DROP TABLE IF EXISTS g_cow_audit")
     }
+    // served root sorts: every eligible perfbench entry with a root ORDER BY
+    // drains with that ordering met on one partition — its root loses the
+    // rangepartitioning exchange (and with it the sampling job), keeps any
+    // inner ORDER BY's range exchange the plain plan has too, and never
+    // has more exchanges than the plain plan. Compares AQE initial plans;
+    // nothing is executed.
+    locally {
+      import org.apache.spark.sql.DataFrame
+      import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+      import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.exchange.Exchange
+      def initial(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      def isRange(e: SparkPlan): Boolean = e.isInstanceOf[Exchange] &&
+        e.outputPartitioning.isInstanceOf[RangePartitioning]
+      def rootRange(p: SparkPlan): Boolean = p match {
+        case ProjectExec(_, c) => rootRange(c)
+        case SortExec(_, true, c, _) => isRange(c)
+        case _ => false
+      }
+      val eligible = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File("perfbench/manifest.json")).get("eligible")
+        .elements().asScala.map(_.get("name").asText()).toSeq
+      val served = eligible.flatMap { n =>
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val drained = graft.plans.SingleStream.frame(df)
+        if (drained eq df) None
+        else Some((n, initial(df), initial(drained)))
+      }
+      def count(p: SparkPlan, f: SparkPlan => Boolean): Int = p.collect { case e if f(e) => e }.size
+      val ranged = served.collect { case (n, plain, p) if count(p, isRange) !=
+          count(plain, isRange) - (if (rootRange(plain)) 1 else 0) => n }
+      val grown = served.collect { case (n, plain, p)
+          if count(p, _.isInstanceOf[Exchange]) > count(plain, _.isInstanceOf[Exchange]) => n }
+      val dropped = served.count { case (_, plain, _) => rootRange(plain) }
+      val inner = served.count { case (_, _, p) => count(p, isRange) > 0 }
+      if (served.nonEmpty && ranged.isEmpty && grown.isEmpty)
+        println(s"PLAN OK   served ORDER BY on one partition: ${served.size} of " +
+          s"${eligible.size} eligible entries have a root sort, $dropped lose its range " +
+          s"exchange, none gains an exchange ($inner keep an inner ORDER BY's)")
+      else {
+        failures += 1
+        println(s"PLAN BAD  served ORDER BY: ${served.size} root sorts, " +
+          s"root range exchange kept in $ranged, more exchanges in $grown")
+      }
+    }
     val q = SparkEntry.queries("q24_group_having")(spark, sfDir)
     val formatted = q.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -943,6 +943,28 @@ class ProtocolSpec extends SparkTestBase {
     spark.sql("DROP TABLE graft_put_soak")
   }
 
+  test("do_get answers bad SQL with 400 and the error text, a valid ticket with 200") {
+    graft.engine.Engine.registerTables(spark, sfDir)
+    val srv = new HttpServer(spark, 0)
+    val port = srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def doGet(sql: String): HttpResponse[Array[Byte]] =
+        client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/flight/do_get"))
+          .POST(HttpRequest.BodyPublishers.ofByteArray(sql.getBytes("UTF-8"))).build(),
+          HttpResponse.BodyHandlers.ofByteArray())
+      val bad = "SELECT no_such_column FROM region"
+      val err = intercept[Throwable](graft.engine.Engine.sqlScript(spark, bad))
+      val r = doGet(bad)
+      assert(r.statusCode() == 400)
+      assert(new String(r.body(), "UTF-8") == QueryExecutor.errorMessage(err) + "\n")
+      val ok = doGet("SELECT r_regionkey FROM region ORDER BY r_regionkey DESC")
+      assert(ok.statusCode() == 200)
+      assert(ArrowIO.fromArrowStream(spark, ok.body()).collect().map(_.get(0).toString).toSeq ==
+        Seq("4", "3", "2", "1", "0"))
+    } finally srv.stop()
+  }
+
   test("commandSchema resolves schema without executing") {
     graft.engine.Engine.registerTables(spark, sfDir)
     val schema = FlightActions.commandSchema(spark, "SELECT count() AS c, FROM orders")
