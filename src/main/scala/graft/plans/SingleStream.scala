@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode, WithCTE}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.internal.SQLConf
 import scala.jdk.CollectionConverters._
 
 /** Marks the root of a plan whose rows one consumer drains, in order,
@@ -23,6 +24,12 @@ import scala.jdk.CollectionConverters._
   * sampling pass is gone, and an input that already sits in one ordered
   * partition (a window without PARTITION BY) gets no exchange and no sort.
   *
+  * `toLocalIterator` fetches each partition whole, as one task result, so
+  * that one partition is the whole sorted reply: the marker is set only
+  * when the optimizer's size estimate fits the advisory partition size,
+  * the size AQE would coalesce the sorted output to anyway. Larger sorted
+  * results keep the range partitioning and arrive in several partitions.
+  *
   * The optimizer sees the marked plan's subtree exactly as it would see the
   * plain plan; only physical planning of the root sort changes. */
 final case class SingleStream(child: LogicalPlan) extends UnaryNode {
@@ -34,17 +41,28 @@ final case class SingleStream(child: LogicalPlan) extends UnaryNode {
 object SingleStream {
 
   /** The frame the serve path drains for `df`: a root global `ORDER BY`
-    * (under any `Project`s or a `WITH`) gets the [[SingleStream]] marker;
-    * any other root, or a session whose planner lacks
-    * [[SingleStreamStrategy]], keeps `df` as it is. */
+    * (under any `Project`s or a `WITH`) whose estimated size is at most
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` gets the
+    * [[SingleStream]] marker; any other root, a larger estimate, or a
+    * session whose planner lacks [[SingleStreamStrategy]] keeps `df` as it
+    * is. The estimate comes from the marked frame's optimized plan, which
+    * its drain reuses, so a marked reply is optimized once. */
   def frame(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.analyzed
-    if (rootSort(plan) && planned(df)) GraftFrames.ofAnalyzed(df, SingleStream(plan)) else df
+    val state = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    if (!rootSort(plan) || !state.planner.strategies.contains(SingleStreamStrategy)) df
+    else {
+      val marked = GraftFrames.ofAnalyzed(df, SingleStream(plan))
+      val limit = state.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      if (marked.queryExecution.optimizedPlan.stats.sizeInBytes <= limit) marked else df
+    }
   }
 
   /** The one drain of the serve path: every reply's rows come from here,
-    * one partition at a time (`toLocalIterator`), so the driver never holds
-    * more than a partition of the result. */
+    * one partition at a time (`toLocalIterator`). The driver holds one
+    * partition at a time: a partition of Spark's own partitioning, or, for
+    * a marked root sort, the whole reply, estimated at no more than the
+    * advisory partition size. */
   def drain(df: DataFrame): Iterator[Row] = frame(df).toLocalIterator().asScala
 
   private def rootSort(p: LogicalPlan): Boolean = p match {
@@ -53,10 +71,6 @@ object SingleStream {
     case s: Sort => s.global
     case _ => false
   }
-
-  private def planned(df: DataFrame): Boolean =
-    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.planner.strategies.contains(SingleStreamStrategy)
 }
 
 /** Plans [[SingleStream]]: `Project`s above the root sort plan as usual, the

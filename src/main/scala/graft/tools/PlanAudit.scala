@@ -860,13 +860,20 @@ object PlanAudit {
       }
       Engine.sql(spark, "DROP TABLE IF EXISTS g_cow_audit")
     }
-    // served root sorts: every eligible perfbench entry with a root ORDER BY
-    // drains with that ordering met on one partition — its root loses the
-    // rangepartitioning exchange (and with it the sampling job), keeps any
-    // inner ORDER BY's range exchange the plain plan has too, and never
-    // has more exchanges than the plain plan. Compares AQE initial plans;
-    // nothing is executed.
-    locally {
+    // served root sorts: every eligible perfbench entry whose root ORDER BY
+    // the drain meets on one partition (those estimated to fit the advisory
+    // partition size) loses the root rangepartitioning exchange (and with
+    // it the sampling job), keeps any inner ORDER BY's range exchange the
+    // plain plan has too, and never has more exchanges than the plain plan.
+    // Compares AQE initial plans; nothing is executed. The manifest is the
+    // second argument, by default perfbench/manifest.json under the working
+    // directory; a missing manifest fails this check alone.
+    val manifest = new java.io.File(args.lift(1).getOrElse("perfbench/manifest.json"))
+    if (!manifest.isFile) {
+      failures += 1
+      println(s"PLAN BAD  served ORDER BY: no manifest at ${manifest.getAbsolutePath} " +
+        "(run from the repo root or pass its path as the second argument)")
+    } else {
       import org.apache.spark.sql.DataFrame
       import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
       import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
@@ -884,7 +891,7 @@ object PlanAudit {
         case _ => false
       }
       val eligible = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new java.io.File("perfbench/manifest.json")).get("eligible")
+        .readTree(manifest).get("eligible")
         .elements().asScala.map(_.get("name").asText()).toSeq
       val served = eligible.flatMap { n =>
         val df = SparkEntry.queries(n)(spark, sfDir)
@@ -901,11 +908,11 @@ object PlanAudit {
       val inner = served.count { case (_, _, p) => count(p, isRange) > 0 }
       if (served.nonEmpty && ranged.isEmpty && grown.isEmpty)
         println(s"PLAN OK   served ORDER BY on one partition: ${served.size} of " +
-          s"${eligible.size} eligible entries have a root sort, $dropped lose its range " +
+          s"${eligible.size} eligible entries drain a root sort there, $dropped lose its range " +
           s"exchange, none gains an exchange ($inner keep an inner ORDER BY's)")
       else {
         failures += 1
-        println(s"PLAN BAD  served ORDER BY: ${served.size} root sorts, " +
+        println(s"PLAN BAD  served ORDER BY: ${served.size} served root sorts, " +
           s"root range exchange kept in $ranged, more exchanges in $grown")
       }
     }

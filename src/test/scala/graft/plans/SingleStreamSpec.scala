@@ -110,6 +110,22 @@ class SingleStreamSpec extends SparkTestBase {
     assert(SingleStream.frame(plain) eq plain)
   }
 
+  test("a root ORDER BY estimated over the advisory partition size keeps its range partitioning") {
+    view()
+    val q = "SELECT k, v FROM ss_t ORDER BY v DESC NULLS FIRST"
+    try {
+      // ss_t's estimate is tens of kilobytes; one kilobyte makes it too big
+      // to be drained as a single partition
+      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
+      val df = spark.sql(q)
+      assert(SingleStream.frame(df) eq df)
+      assert(exchanges(df).exists(isRange), initialPlan(df).toString)
+      assert(SingleStream.drain(spark.sql(q)).toSeq == df.collect().toSeq)
+    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val df = spark.sql(q)
+    assert(SingleStream.frame(df) ne df)
+  }
+
   test("a tenant session (newSession) drains a root ORDER BY on one partition") {
     val s = new graft.server.TenantManager(spark).sessionFor(Some(("single_stream", "pw")))
     assert(s ne spark)
