@@ -89,11 +89,11 @@ object ArrowIO {
     * rows arrive one partition at a time, and the ArrowStreamWriter pushes
     * each record batch to the sink as it seals, so with a chunked HTTP
     * response the driver holds one partition and one batch. A root
-    * `ORDER BY` whose estimated size fits the advisory partition size is
-    * met on one partition, without the range partitioner's sampling job
-    * (the final stage runs one partition per job in sequence either way);
-    * that partition is the whole reply, so larger sorted results keep the
-    * range partitioning. Returns the row count. */
+    * `ORDER BY` whose size, as Spark estimates or measures it, fits the
+    * advisory partition size is met on one partition, without the range
+    * partitioner's sampling job (the final stage runs one partition per job
+    * in sequence either way); that partition is the whole reply, so larger
+    * sorted results keep the range partitioning. Returns the row count. */
   def toArrowStreamTo(df: DataFrame, out: java.io.OutputStream): Long =
     writeIpc(df.schema, graft.plans.SingleStream.drain(df), out)
 

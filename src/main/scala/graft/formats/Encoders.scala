@@ -23,12 +23,13 @@ import java.nio.charset.StandardCharsets
   * (`toLocalIterator`), so the driver holds one partition of the result,
   * not all of it (the reference collects everything, `main.py:231` — at
   * 100 TB the collection boundary is the one place bounded memory
-  * matters). The drain meets a root `ORDER BY` whose estimated size fits
-  * the advisory partition size on one partition instead of a sampled range
-  * partitioning: the final stage runs one partition per job in sequence
-  * either way, so for such a reply the range partitioner's sampling job is
-  * pure overhead. That one partition is then the whole reply, which is why
-  * larger sorted results keep the range partitioning.
+  * matters). The drain meets a root `ORDER BY` whose size, as Spark
+  * estimates or measures it, fits the advisory partition size on one
+  * partition instead of a sampled range partitioning: the final stage runs
+  * one partition per job in sequence either way, so for such a reply the
+  * range partitioner's sampling job is pure overhead. That one partition
+  * is then the whole reply, which is why larger sorted results keep the
+  * range partitioning.
   */
 object Encoders {
 

@@ -25,10 +25,10 @@ import scala.jdk.CollectionConverters._
   * partition (a window without PARTITION BY) gets no exchange and no sort.
   *
   * `toLocalIterator` fetches each partition whole, as one task result, so
-  * that one partition is the whole sorted reply: the marker is set only
-  * when the optimizer's size estimate fits the advisory partition size,
-  * the size AQE would coalesce the sorted output to anyway. Larger sorted
-  * results keep the range partitioning and arrive in several partitions.
+  * that one partition is the whole sorted reply: the strategy plans it only
+  * when the marked plan's size fits the advisory partition size, the size
+  * AQE would coalesce the sorted output to anyway. Larger sorted results
+  * keep the range partitioning and arrive in several partitions.
   *
   * The optimizer sees the marked plan's subtree exactly as it would see the
   * plain plan; only physical planning of the root sort changes. */
@@ -41,28 +41,20 @@ final case class SingleStream(child: LogicalPlan) extends UnaryNode {
 object SingleStream {
 
   /** The frame the serve path drains for `df`: a root global `ORDER BY`
-    * (under any `Project`s or a `WITH`) whose estimated size is at most
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` gets the
-    * [[SingleStream]] marker; any other root, a larger estimate, or a
-    * session whose planner lacks [[SingleStreamStrategy]] keeps `df` as it
-    * is. The estimate comes from the marked frame's optimized plan, which
-    * its drain reuses, so a marked reply is optimized once. */
+    * (under any `Project`s or a `WITH`) gets the [[SingleStream]] marker;
+    * any other root, or a session whose planner lacks
+    * [[SingleStreamStrategy]], keeps `df` as it is. */
   def frame(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.analyzed
-    val state = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    if (!rootSort(plan) || !state.planner.strategies.contains(SingleStreamStrategy)) df
-    else {
-      val marked = GraftFrames.ofAnalyzed(df, SingleStream(plan))
-      val limit = state.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-      if (marked.queryExecution.optimizedPlan.stats.sizeInBytes <= limit) marked else df
-    }
+    if (rootSort(plan) && planned(df)) GraftFrames.ofAnalyzed(df, SingleStream(plan)) else df
   }
 
   /** The one drain of the serve path: every reply's rows come from here,
     * one partition at a time (`toLocalIterator`). The driver holds one
     * partition at a time: a partition of Spark's own partitioning, or, for
-    * a marked root sort, the whole reply, estimated at no more than the
-    * advisory partition size. */
+    * a root sort planned on one partition, the whole reply, which Spark
+    * sized at no more than the advisory partition size when it planned
+    * that partition (see [[SingleStreamStrategy]]). */
   def drain(df: DataFrame): Iterator[Row] = frame(df).toLocalIterator().asScala
 
   private def rootSort(p: LogicalPlan): Boolean = p match {
@@ -71,18 +63,37 @@ object SingleStream {
     case s: Sort => s.global
     case _ => false
   }
+
+  private def planned(df: DataFrame): Boolean =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner.strategies.contains(SingleStreamStrategy)
 }
 
-/** Plans [[SingleStream]]: `Project`s above the root sort plan as usual, the
-  * global sort becomes a local one over [[SingleStreamExec]], and a marker
-  * whose root sort the optimizer removed plans as its child alone. */
+/** Plans [[SingleStream]]. When the marked plan's size is at most
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, `Project`s above the
+  * root sort plan as usual and the global sort becomes a local one over
+  * [[SingleStreamExec]]; a larger plan, or one whose root sort the
+  * optimizer removed, plans as the marker's child alone. The size is
+  * Spark's: the optimizer's estimate when the query is first planned and,
+  * under AQE, which plans the marker again each time a stage finishes, the
+  * sizes measured so far. A result estimated large but measured small below
+  * the root exchange still drains from one partition, and one estimated
+  * small but measured large before that exchange runs keeps the range
+  * partitioning. Estimates can under-read (a generator's output is
+  * estimated at its input's size), so the bound is only as good as the
+  * size Spark has when it plans the root exchange. */
 object SingleStreamStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case SingleStream(Project(list, c)) => ProjectExec(list, planLater(SingleStream(c))) :: Nil
-    case SingleStream(Sort(order, true, c, _)) =>
-      SortExec(order, global = false, SingleStreamExec(planLater(c))) :: Nil
-    case SingleStream(c) => planLater(c) :: Nil
+    case s @ SingleStream(c) =>
+      val fits = s.stats.sizeInBytes <= SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      (if (fits) single(c) else planLater(c)) :: Nil
     case _ => Nil
+  }
+
+  private def single(p: LogicalPlan): SparkPlan = p match {
+    case Project(list, c) => ProjectExec(list, single(c))
+    case Sort(order, true, c, _) => SortExec(order, global = false, SingleStreamExec(planLater(c)))
+    case c => planLater(c)
   }
 }
 

@@ -861,7 +861,7 @@ object PlanAudit {
       Engine.sql(spark, "DROP TABLE IF EXISTS g_cow_audit")
     }
     // served root sorts: every eligible perfbench entry whose root ORDER BY
-    // the drain meets on one partition (those estimated to fit the advisory
+    // the drain plans on one partition (those estimated to fit the advisory
     // partition size) loses the root rangepartitioning exchange (and with
     // it the sampling job), keeps any inner ORDER BY's range exchange the
     // plain plan has too, and never has more exchanges than the plain plan.
@@ -895,9 +895,9 @@ object PlanAudit {
         .elements().asScala.map(_.get("name").asText()).toSeq
       val served = eligible.flatMap { n =>
         val df = SparkEntry.queries(n)(spark, sfDir)
-        val drained = graft.plans.SingleStream.frame(df)
-        if (drained eq df) None
-        else Some((n, initial(df), initial(drained)))
+        val drained = initial(graft.plans.SingleStream.frame(df))
+        if (drained.exists(_.isInstanceOf[graft.plans.SingleStreamExec])) Some((n, initial(df), drained))
+        else None
       }
       def count(p: SparkPlan, f: SparkPlan => Boolean): Int = p.collect { case e if f(e) => e }.size
       val ranged = served.collect { case (n, plain, p) if count(p, isRange) !=

@@ -5,7 +5,7 @@ import graft.arrowio.ArrowIO
 import graft.formats.Encoders
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import scala.jdk.CollectionConverters._
@@ -19,7 +19,7 @@ class SingleStreamSpec extends SparkTestBase {
       .selectExpr("id AS k", "CASE WHEN id = 7 THEN NULL ELSE id * 7919 % 3001 END AS v")
       .createOrReplaceTempView("ss_t")
 
-  /** The physical plan before execution (AQE's initial plan). */
+  /** AQE's current physical plan: the initial one before execution. */
   private def initialPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
     case p => p
@@ -110,20 +110,39 @@ class SingleStreamSpec extends SparkTestBase {
     assert(SingleStream.frame(plain) eq plain)
   }
 
-  test("a root ORDER BY estimated over the advisory partition size keeps its range partitioning") {
+  test("a root ORDER BY sized over the advisory partition size keeps its range partitioning") {
     view()
     val q = "SELECT k, v FROM ss_t ORDER BY v DESC NULLS FIRST"
     try {
-      // ss_t's estimate is tens of kilobytes; one kilobyte makes it too big
-      // to be drained as a single partition
+      // ss_t is tens of kilobytes, estimated and measured; one kilobyte
+      // makes it too big to drain as a single partition
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
-      val df = spark.sql(q)
-      assert(SingleStream.frame(df) eq df)
-      assert(exchanges(df).exists(isRange), initialPlan(df).toString)
-      assert(SingleStream.drain(spark.sql(q)).toSeq == df.collect().toSeq)
+      val drained = SingleStream.frame(spark.sql(q))
+      assert(exchanges(drained).exists(isRange), initialPlan(drained).toString)
+      assert(!initialPlan(drained).exists(_.isInstanceOf[SingleStreamExec]))
+      assert(drained.toLocalIterator().asScala.toSeq == spark.sql(q).collect().toSeq)
     } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val df = spark.sql(q)
-    assert(SingleStream.frame(df) ne df)
+  }
+
+  test("AQE drains a root ORDER BY estimated large but measured small from one partition") {
+    view()
+    // the join's estimate is the product of its sides' sizes, far over the
+    // advisory size; the aggregate's shuffle stage below the root measures
+    // a few kilobytes, and AQE plans the root again from that
+    val q = "SELECT a.k % 50 AS g, count(*) AS c FROM ss_t a JOIN ss_t b ON a.k = b.k " +
+      "GROUP BY a.k % 50 ORDER BY g"
+    val drained = SingleStream.frame(spark.sql(q))
+    val before = initialPlan(drained)
+    assert(!before.exists(_.isInstanceOf[SingleStreamExec]), before.toString)
+    assert(exchanges(drained).exists(isRange), before.toString)
+    assert(drained.toLocalIterator().asScala.toSeq == spark.sql(q).collect().toSeq)
+    // AQE's current plan is the final one now that it has run, wrapped in
+    // the result stage
+    val after = initialPlan(drained) match {
+      case r: QueryStageExec => r.plan
+      case p => p
+    }
+    assert(after.exists(_.isInstanceOf[SingleStreamExec]), after.toString)
   }
 
   test("a tenant session (newSession) drains a root ORDER BY on one partition") {
