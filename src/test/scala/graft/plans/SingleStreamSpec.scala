@@ -145,6 +145,25 @@ class SingleStreamSpec extends SparkTestBase {
     assert(after.exists(_.isInstanceOf[SingleStreamExec]), after.toString)
   }
 
+  test("AQE moves a root ORDER BY estimated small but measured large back to range partitioning") {
+    // a generator's output is estimated at its input's size (ten rows); the
+    // aggregate's shuffle stage measures 2,000 groups, over ten kilobytes
+    val q = "SELECT x, count(*) AS c FROM (SELECT explode(sequence(1, 2000)) AS x " +
+      "FROM range(0, 10, 1, 4)) GROUP BY x ORDER BY x"
+    try {
+      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "10k")
+      val drained = SingleStream.frame(spark.sql(q))
+      assert(initialPlan(drained).exists(_.isInstanceOf[SingleStreamExec]))
+      assert(drained.toLocalIterator().asScala.toSeq == spark.sql(q).collect().toSeq)
+      val after = initialPlan(drained) match {
+        case r: QueryStageExec => r.plan
+        case p => p
+      }
+      assert(!after.exists(_.isInstanceOf[SingleStreamExec]), after.toString)
+      assert(after.toString.contains("rangepartitioning"), after.toString)
+    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+  }
+
   test("a tenant session (newSession) drains a root ORDER BY on one partition") {
     val s = new graft.server.TenantManager(spark).sessionFor(Some(("single_stream", "pw")))
     assert(s ne spark)
