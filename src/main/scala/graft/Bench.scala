@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.Engine
+import graft.tools.Measure
 
 /** Benchmark main (driver contract): runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, forcing full materialization through the `noop`
-  * sink (not `count()`, which lets Catalyst prune the whole plan to a
-  * metadata scan), and prints ONE JSON line.
+  * sink ([[Measure.runNoop]]), and prints two JSON lines ([[lines]]).
   */
 object Bench {
   /** (steal, total) jiffies from /proc/stat's aggregate cpu line — field 8
@@ -23,35 +22,28 @@ object Bench {
       } finally src.close()
     } catch { case _: Throwable => None }
 
+  /** The two stdout lines, detail first and compact summary last. Each
+    * entry's value is its min-of-N seconds, or None when one of its timed
+    * runs failed: a failed entry is `null` in `queries`, is left out of
+    * `total`, and counts in `failed`. */
+  def lines(results: Seq[(String, Option[Double])], sfDir: String,
+      stealPct: Option[Double]): (String, String) = {
+    val qs = results.map {
+      case (k, Some(v)) => "\"" + k + f"\":$v%.4f"
+      case (k, None) => "\"" + k + "\":null"
+    }.mkString("{", ",", "}")
+    val total = results.flatMap(_._2).sum
+    val failed = results.count(_._2.isEmpty)
+    val steal = stealPct.fold("")(p => f""","steal_pct":$p%.2f""")
+    (f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"$steal}""",
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","n":${results.length},"failed":$failed,"sf":"$sfDir"$steal}""")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Engine.localSession(cpus)
     Engine.registerTables(spark, sfDir)
-
-    // Checkpoint-heavy operators (minhash/simhash/embedding dedup, prefix
-    // bucketing, components) persist localCheckpoint blocks into the shared
-    // session and never release them — left alone, a full sweep accumulates
-    // gigabytes of dead blocks and the 8g driver heap thrashes, inflating
-    // UNRELATED queries late in the run 10-20× (measured at sf≈1). Dropping
-    // persisted RDDs between entries keeps each timing honest: a query
-    // still pays for its own checkpoints inside its own interval.
-    def dropLeftoverBlocks(): Unit = {
-      // blocking: async eviction would otherwise bleed into the next
-      // query's timed interval
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      // Broadcast blocks have no direct drop API — ContextCleaner reaps
-      // them only after their driver-side references are GC'd. Queries
-      // that broadcast big hashed relations (the r5 Q18/Q21 heavies: a
-      // ~1.5M-key IN-subquery side at sf≈1) otherwise pin hundreds of MB
-      // in the shared 8g heap and inflate every LATER entry's timing
-      // (measured: entries after q130 ran at a median 1.71× of their
-      // standalone time; entries before it 1.09×). Runs outside the
-      // timed interval.
-      System.gc()
-    }
 
     // Warmup pass: whole-stage codegen compilation, JIT, parquet footer
     // caches. First execution of each distinct query shape costs 2-4× its
@@ -70,12 +62,8 @@ object Bench {
     val trace = sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1")
     Engine.tableNames.foreach(t => spark.table(t).count())
     ordered.foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      dropLeftoverBlocks()
-      if (trace) System.err.println(
-        f"[bench-trace] warmup $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      val w = Measure.timed(spark)(Measure.runNoop(fn(spark, sfDir)))
+      if (trace) System.err.println(f"[bench-trace] warmup $name ${w.seconds}%.2fs")
     }
 
     // min of N timed runs per query: a single measurement is hostage to a
@@ -85,28 +73,21 @@ object Bench {
     val timedIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     val jiffies0 = cpuJiffies()
     val results = ordered.map { case (name, fn) =>
-      val dt = (1 to timedIters).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        dropLeftoverBlocks()
-        t
-      }.min
-      name -> dt
+      val runs = (1 to timedIters).map { _ =>
+        val r = Measure.timed(spark)(Measure.runNoop(fn(spark, sfDir)))
+        r.failure.foreach(e =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+        r
+      }
+      name -> (if (runs.exists(_.failure.nonEmpty)) None
+        else Some(runs.map(_.seconds).min))
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.4f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
     // steal% over the timed window: jiffy deltas machine-flag a noisy run
     // (cross-round comparisons on this box are only valid as ratios)
     val stealPct = (jiffies0, cpuJiffies()) match {
       case (Some((s0, t0)), Some((s1, t1))) if t1 > t0 =>
-        f""","steal_pct":${100.0 * (s1 - s0) / (t1 - t0)}%.2f"""
-      case _ => ""
+        Some(100.0 * (s1 - s0) / (t1 - t0))
+      case _ => None
     }
     // Detail line first, compact summary line LAST: the driver keeps a
     // 2000-char tail of stdout, which used to truncate the per-query dict
@@ -130,8 +111,9 @@ object Bench {
       out.write((s + "\n").getBytes("UTF-8"))
       out.flush() // deliberately NOT closed: closing would close fd 1
     }
-    rawStdoutLine(f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sfDir"$stealPct}""")
-    rawStdoutLine(f"""{"metric":"total","value":$total%.4f,"unit":"sec","n":${results.length},"sf":"$sfDir"$stealPct}""")
+    val (detail, summary) = lines(results, sfDir, stealPct)
+    rawStdoutLine(detail)
+    rawStdoutLine(summary)
     spark.stop()
   }
 }

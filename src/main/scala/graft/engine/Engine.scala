@@ -1907,17 +1907,19 @@ object Engine {
     // catalog lookup for COLUMNS('regex') expansion — only invoked when the
     // statement actually contains a COLUMNS call
     val isMapCol: String => Boolean =
-      if (duckSql.contains("[")) mapColumnNames(spark).contains(_)
+      if (duckSql.contains("[")) colTypeInfo(spark).hasClass(_, "map")
       else _ => false
-    // ARRAY/MAP column set for collection-shape dispatch (empty/len/
+    // ARRAY/MAP columns for collection-shape dispatch (empty/len/
     // length size-vs-length, concat list-vs-string, …). Always on: the
     // translator only invokes the lambda when a rewrite actually needs a
-    // shape decision, and collectionColumnNames is cached per DDL
-    // version, so the steady-state cost is one Set lookup (a statement
-    // substring gate here silently disabled the named-column dispatch
-    // for len()/concat — advice r8).
-    val isCollectionCol: String => Boolean =
-      name => collectionColumnNames(spark).contains(name)
+    // shape decision, and the snapshot is cached per DDL version, so the
+    // steady-state cost is one Map lookup (a statement substring gate
+    // here silently disabled the named-column dispatch for len()/concat
+    // — advice r8).
+    val isCollectionCol: String => Boolean = { name =>
+      val info = colTypeInfo(spark)
+      info.hasClass(name, "array") || info.hasClass(name, "map")
+    }
     // typed-column resolvers (r11/r12): DATE drives the schema-aware
     // `date_col ± INTERVAL` TIMESTAMP cast (loose), the `date_col −
     // date_col` integer-days and date_trunc/time_bucket DATE-shape
@@ -1983,8 +1985,8 @@ object Engine {
     * r17, VERDICT r16 #5): user views must re-resolve (the COW swap
     * replaces the table's files, so a resolved temp-view plan would read
     * the old ones), but every ddlVersion-keyed snapshot (colTypeInfo,
-    * map/collection column sets, information_schema) depends only on
-    * SCHEMAS, which pure DML cannot change — re-collecting them per
+    * information_schema) depends only on SCHEMAS, which pure DML cannot
+    * change — re-collecting them per
     * statement cost a listTables Spark job plus a full catalog schema
     * walk after every statement of a DML script (measured: q216 paid 2
     * extra listTables jobs + 3 snapshot rebuilds per run). */
@@ -1992,68 +1994,14 @@ object Engine {
     userViewsDirty.set(true)
   }
 
-  // lower-cased names of MAP-typed columns across the visible catalog —
-  // feeds the translator's schema-aware subscript pass (r7). Cached per
-  // (session, DDL version) like the information_schema snapshot: catalog
-  // listing + schema walks are too slow to pay per statement, and the set
-  // is only consulted for statements containing '['.
-  private val mapColsCache: java.util.Map[SparkSession, (Long, Set[String])] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, (Long, Set[String])]())
-
-  private def mapColumnNames(spark: SparkSession): Set[String] = {
-    val v = ddlVersion.get()
-    val cached = mapColsCache.get(spark)
-    if (cached != null && cached._1 == v) cached._2
-    else {
-      val names = scala.util.Try {
-        spark.catalog.listTables().collect().toSeq.flatMap { t =>
-          scala.util.Try(spark.table(t.name).schema.fields.toSeq)
-            .getOrElse(Seq.empty)
-            .collect {
-              case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
-                f.name.toLowerCase
-            }
-        }.toSet
-      }.getOrElse(Set.empty[String])
-      mapColsCache.put(spark, (v, names))
-      names
-    }
-  }
-
-  /** ARRAY/MAP-typed visible column names (r8) — drives the schema-aware
-    * empty()/notEmpty() size-vs-length dispatch (the isMapCol precedent);
-    * cached per (session, DDL version) like mapColumnNames. */
-  private val collColsCache: java.util.Map[SparkSession, (Long, Set[String])] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, (Long, Set[String])]())
-
-  private def collectionColumnNames(spark: SparkSession): Set[String] = {
-    val v = ddlVersion.get()
-    val cached = collColsCache.get(spark)
-    if (cached != null && cached._1 == v) cached._2
-    else {
-      val names = scala.util.Try {
-        spark.catalog.listTables().collect().toSeq.flatMap { t =>
-          scala.util.Try(spark.table(t.name).schema.fields.toSeq)
-            .getOrElse(Seq.empty)
-            .collect {
-              case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
-                  f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
-                f.name.toLowerCase
-            }
-        }.toSet
-      }.getOrElse(Set.empty[String])
-      collColsCache.put(spark, (v, names))
-      names
-    }
-  }
-
   /** Visible-catalog column-type snapshot (r12, upgrading r11's DATE-only
     * set after the r11 advisor finding): per-TABLE class map plus the
-    * cross-table class sets, cached per (session, DDL version) like
-    * mapColumnNames. Drives three resolvers:
+    * cross-table class sets, cached per (session, DDL version): catalog
+    * listing + schema walks are too slow to pay per statement. Drives
+    * every schema-aware translator resolver:
     *
+    *   - MAP (the subscript pass, r7) and ARRAY-or-MAP (empty()/
+    *     notEmpty()/len() size-vs-length dispatch, r8): loose.
     *   - DATE (`date_col ± INTERVAL`, `date_col − date_col`, date_trunc/
     *     time_bucket result shape): table-exact when the ident chain is
     *     qualified by a name the catalog knows; otherwise LOOSE for the
@@ -2070,7 +2018,10 @@ object Engine {
     *     error. */
   private final case class ColTypeInfo(
       byTable: Map[String, Map[String, String]],
-      classesOf: Map[String, Set[String]])
+      classesOf: Map[String, Set[String]]) {
+    def hasClass(col: String, cls: String): Boolean =
+      classesOf.get(col).exists(_.contains(cls))
+  }
 
   private val colTypeCache: java.util.Map[SparkSession, (Long, ColTypeInfo)] =
     java.util.Collections.synchronizedMap(
@@ -2086,6 +2037,8 @@ object Engine {
         case DateType => "date"
         case StringType => "string"
         case _: DecimalType => "decimal"
+        case _: MapType => "map"
+        case _: ArrayType => "array"
         case _ => "other"
       }
       val byTable = scala.util.Try {
@@ -2237,22 +2190,10 @@ object Engine {
       // (DecDownscaleCast, DoubleCastToDuckStr) must run at RESOLUTION so
       // coercion-inserted casts fold with duck semantics — runtime
       // injection can only reach the optimizer batch, after folding.
-      // GRAFT_NO_EXTENSIONS=1 is a perf-bisection escape hatch (dev only).
-      .config("spark.sql.extensions",
-        if (sys.env.get("GRAFT_NO_EXTENSIONS").contains("1")) ""
-        else "graft.functions.GraftExtensions")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", aqe)
       .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      // r16 A/B knobs (guide §3.1): AQE runtime SMJ→SHJ conversion when
-      // every post-shuffle build partition is under the threshold
-      // (runtime-informed, so at scale oversized partitions keep SMJ and
-      // its graceful spill), and the static preferSortMergeJoin planner
-      // preference. Defaults = Spark defaults; env for measurement.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       // r10 fuzz batch 7: DuckDB string literals carry NO backslash
       // escaping — Spark's default parser ate one level, silently

@@ -83,72 +83,6 @@ object Grisu32 {
     if (d == 0) 1 else d
   }
 
-  /** Dev-only (Grisu32Tune): the stop-state of the last shortest() call
-    * — (phase, remainder, error, diff, unit, exp) — for aligning the
-    * certification band with duck's observed failure set. */
-  @volatile var lastState: String = ""
-  def debugState(f: Float): String = { shortest(Math.abs(f)); lastState }
-
-  /** Dev-only: raw digit stream from the scaled UPPER boundary with the
-    * per-step stop-state, no rounding/certification — one line per step:
-    * `digit,rem,err,unit,div,exp` plus a header `k,diff,oneF`. The
-    * condition-fitting harness (dev/grisu_fit.py) learns duck's stop
-    * rule from these. */
-  def trace(fl: Float, maxDigits: Int = 14): String = {
-    val bits = java.lang.Float.floatToRawIntBits(fl)
-    val mant = (bits & 0x7fffff).toLong
-    val biased = (bits >>> 23) & 0xff
-    var vf = 0L; var ve = 0
-    if (biased != 0) { vf = mant | 0x800000L; ve = biased.toInt - 127 - 23 }
-    else { vf = mant; ve = -126 - 23 }
-    var upF = (vf << 1) + 1; var upE = ve - 1
-    var loF = if (vf == 0x800000L) (vf << 2) - 1 else (vf << 1) - 1
-    var loE = if (vf == 0x800000L) ve - 2 else ve - 1
-    var sh = java.lang.Long.numberOfLeadingZeros(upF)
-    upF <<= sh; upE -= sh
-    loF <<= loE - upE; loE = upE
-    var wF = vf; var wE = ve
-    sh = java.lang.Long.numberOfLeadingZeros(wF)
-    wF <<= sh; wE -= sh
-    val (cF, cE, k) = cachedPower(-60 - (upE + 64))
-    wF = mulF(wF, cF); wE = wE + cE + 64
-    upF = mulF(upF, cF); upE = upE + cE + 64
-    loF = mulF(loF, cF)
-    loF += 1; upF -= 1
-    val diff = upF - wF
-    val delta = upF - loF
-    val oneF = 1L << -upE
-    val mask = oneF - 1L
-    // W-stream (r14 fit: duck generates digits from the VALUE, not the
-    // upper boundary — 9-digit outputs match W's digits exactly where
-    // the upper stream diverges at the boundary-gap digit)
-    var integral = wF >>> -upE
-    var fractional = wF & mask
-    var exp = countDigits(integral)
-    val out = new StringBuilder(s"H,$k,$diff,$delta,$oneF,${-upE}\n")
-    var error = delta
-    var steps = 0
-    while (steps < maxDigits && exp > 0) {
-      val div = POW10(exp - 1)
-      val digit = java.lang.Long.divideUnsigned(integral, div).toInt
-      integral = java.lang.Long.remainderUnsigned(integral, div)
-      exp -= 1
-      val remainder = (integral << -upE) + fractional
-      out.append(s"$digit,$remainder,$error,1,${POW10(exp) << -upE},$exp\n")
-      steps += 1
-    }
-    while (steps < maxDigits) {
-      fractional *= 10L
-      error *= 10L
-      val digit = (fractional >>> -upE).toInt
-      fractional &= mask
-      exp -= 1
-      out.append(s"$digit,$fractional,$error,${POW10(-exp)},$oneF,$exp\n")
-      steps += 1
-    }
-    out.toString
-  }
-
   /** Shortest certified digits for a positive, finite, nonzero float.
     * Returns (digits, pointExp) with value = digits_as_int × 10^pointExp,
     * or None when grisu cannot certify (the duck fallback renders the
@@ -211,7 +145,6 @@ object Grisu32 {
         buf.setCharAt(buf.length - 1, (buf.charAt(buf.length - 1) - 1).toChar)
         rest += tenKappa
       }
-      lastState = s"rest=$rest unsafe=$unsafeF dist=$distHiW unit=$u tk=$tenKappa"
       if (java.lang.Long.compareUnsigned(rest, big) < 0 &&
           java.lang.Long.compareUnsigned(unsafeF - rest, tenKappa) >= 0 &&
           (java.lang.Long.compareUnsigned(rest + tenKappa, big) < 0 ||

@@ -18,12 +18,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *     the same plan can run in local[32]
   *
   * and records stage count × task count × wall seconds (Bench's own
-  * warmup + min-of-N + block-drop protocol, so rows are comparable to
-  * the sf≈1 artifact). If the floor config is materially faster, the
-  * shipped tuning is leaving single-node latency on the table; if it is
-  * flat-to-slower, the gap to DuckDB is stage-graph depth (shuffle
-  * count), not partition fan-out — which at 1000 executors is exactly
-  * the layout you want, and the decomposition is on the record.
+  * warmup + min-of-N + block-drop protocol, [[Measure]], so rows are
+  * comparable to the sf≈1 artifact). If the floor config is materially
+  * faster, the shipped tuning is leaving single-node latency on the
+  * table; if it is flat-to-slower, the gap to DuckDB is stage-graph
+  * depth (shuffle count), not partition fan-out — which at 1000
+  * executors is exactly the layout you want, and the decomposition is
+  * on the record.
   *
   * Run: `sbt "runMain graft.tools.FloorProbe [sfDir] [entries] [iters]"`
   * (defaults: /tmp/graft_sf1 if present else sf0.1; the four weak TPC-H
@@ -69,32 +70,22 @@ object FloorProbe {
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512m")
       }))
 
-    def dropLeftoverBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
-    }
-
     entries.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown entry $name"))
+      def run(): Double =
+        Measure.timed(spark)(Measure.runNoop(fn(spark, sfDir))).orThrow
       configs.foreach { case (cfg, apply) =>
         apply()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
-        dropLeftoverBlocks()
+        run() // warmup
         val runs = (1 to iters).map { _ =>
           // listener events are async: drain the bus before resetting and
           // reading so task counts attribute to the right run
           org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
           listener.reset()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - t0) / 1e9
+          val t = run()
           org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-          val st = (listener.stages.get, listener.tasks.get)
-          dropLeftoverBlocks()
-          (t, st._1, st._2)
+          (t, listener.stages.get, listener.tasks.get)
         }
         val ts = runs.map(_._1).sorted
         val best = runs.minBy(_._1)

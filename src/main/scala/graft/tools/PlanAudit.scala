@@ -593,20 +593,28 @@ object PlanAudit {
     // when the declared-query set and the sf≈1 artifacts diverge, so new
     // entries can't drift in unmeasured. Skip list = the five O(n²)
     // brute-force pair-set oracles (documented in dev/duckdb_bench.py).
-    locally {
-      def keysOf(path: String): Set[String] = {
-        val txt = scala.io.Source.fromFile(path).mkString
-        // {"queries":{"name":1.23,...}} — names are the quoted keys of the
-        // queries object; values are numbers or null
-        val qStart = txt.indexOf("\"queries\"")
-        val obj = txt.substring(txt.indexOf('{', qStart) + 1)
-        val nullKeys = "\"([^\"]+)\":\\s*null".r
-          .findAllMatchIn(obj).map(_.group(1)).toSet
-        val allKeys = "\"([^\"]+)\":".r
-          .findAllMatchIn(obj).map(_.group(1)).toSet - "sf" - "steal_pct" -
-          "metric" - "value" - "unit" - "n"
-        allKeys -- nullKeys
+    //
+    // Both checks read the sf≈1 artifacts by paths relative to the working
+    // directory, each file once: `queries` maps an entry to its seconds,
+    // or to null when it was not measured. A missing file fails once, with
+    // its absolute path, and skips the two checks.
+    def sf1Seconds(path: String): Option[Map[String, Double]] = {
+      val f = new java.io.File(path)
+      if (f.isFile)
+        Some(new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+          .get("queries").properties().asScala
+          .collect { case e if !e.getValue.isNull => e.getKey -> e.getValue.asDouble() }
+          .toMap)
+      else {
+        failures += 1
+        println(s"PLAN BAD  sf1 artifact: no file at ${f.getAbsolutePath} " +
+          "(run from the repo root)")
+        None
       }
+    }
+    val sparkSf1 = sf1Seconds("dev/bench_sf1.json")
+    val duckSf1 = sf1Seconds("dev/duckdb_baseline_sf1.json")
+    for (sv <- sparkSf1; dv <- duckSf1) {
       val duckSkip = Set("p03_dedup_minhash", "p04_dedup_simhash",
         "p05_dedup_embedding", "p39_semantic_clusters", "p44_multimodal_neardup",
         // r9: the incremental oracles brute-force the cross pair set —
@@ -617,8 +625,8 @@ object PlanAudit {
       // (p67 is NOT skipped: its annAudit oracle is p21's, which runs
       // at sf1 in 0.34 s — measured r14)
       val gate = SparkEntry.queries.keySet
-      val sparkMissing = gate -- keysOf("dev/bench_sf1.json")
-      val duckMissing = gate -- keysOf("dev/duckdb_baseline_sf1.json") -- duckSkip
+      val sparkMissing = gate -- sv.keySet
+      val duckMissing = gate -- dv.keySet -- duckSkip
       if (sparkMissing.isEmpty && duckMissing.isEmpty)
         println(s"PLAN OK   sf1 bench coverage complete: ${gate.size} gate entries, " +
           s"${duckSkip.size} documented O(n^2)-oracle skips")
@@ -627,23 +635,13 @@ object PlanAudit {
         println(s"PLAN BAD  sf1 bench coverage gap: spark-side missing=" +
           s"${sparkMissing.toSeq.sorted}, duck-side missing=${duckMissing.toSeq.sorted}")
       }
-    }
-    // r9 (VERDICT r8 #7): weak-set audit. The >2×-DuckDB-AND->1 s-absolute
-    // list was recomputed by hand each round from dev/bench_sf1.json; this
-    // emits it and fails on NEW entrants beyond the known-by-design
-    // allowlist (deliberate skew insurance, digest-shuffle designs, the
-    // all-broadcast TPC-H per-stage scheduling-floor shapes, composite
-    // multi-pass ops whose oracle is a single pass). A new name here means
-    // an edit regressed a query's scale posture — triage before shipping.
-    locally {
-      def valuesOf(path: String): Map[String, Double] = {
-        val txt = scala.io.Source.fromFile(path).mkString
-        val qStart = txt.indexOf("\"queries\"")
-        val obj = txt.substring(txt.indexOf('{', qStart) + 1,
-          txt.indexOf('}', qStart))
-        "\"([^\"]+)\":\\s*([0-9.eE+-]+)".r.findAllMatchIn(obj)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+      // r9 (VERDICT r8 #7): weak-set audit. The >2×-DuckDB-AND->1 s-absolute
+      // list was recomputed by hand each round from dev/bench_sf1.json; this
+      // emits it and fails on NEW entrants beyond the known-by-design
+      // allowlist (deliberate skew insurance, digest-shuffle designs, the
+      // all-broadcast TPC-H per-stage scheduling-floor shapes, composite
+      // multi-pass ops whose oracle is a single pass). A new name here means
+      // an edit regressed a query's scale posture — triage before shipping.
       val byDesign = Set(
         "q188_joined_dml",      // 5-statement DML script at the per-action
                                 // floor; the full-rewrite trap is gone
@@ -679,8 +677,6 @@ object PlanAudit {
       // detector. They are reported, never weak-listed.
       val maintLane = Set("p65_embedding_index_maint",
         "p66_minhash_index_maint", "p67_ivf_index_maint")
-      val sv = valuesOf("dev/bench_sf1.json")
-      val dv = valuesOf("dev/duckdb_baseline_sf1.json")
       val common = sv.keySet.intersect(dv.keySet)
       common.intersect(maintLane).toSeq.sorted.foreach(k =>
         println(f"          maint: $k%-28s spark=${sv(k)}%6.2f " +

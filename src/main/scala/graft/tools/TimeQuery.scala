@@ -3,11 +3,12 @@ package graft.tools
 import graft.SparkEntry
 import graft.engine.Engine
 
-/** Dev-loop micro-bench: time ONE registered query without paying the full
-  * Bench sweep. Warms up once (codegen/JIT), then times `iters` runs
-  * through the same noop sink Bench uses.
+/** Dev-loop micro-bench: time registered queries without paying the full
+  * Bench sweep. Warms each up once (codegen/JIT), then times `iters` runs
+  * with Bench's protocol ([[Measure]]), so TimeQuery numbers predict
+  * Bench numbers.
   *
-  * Run: `sbt "runMain graft.tools.TimeQuery <sfDir> <name> [iters]"`.
+  * Run: `sbt "runMain graft.tools.TimeQuery <sfDir> <name[,name…]> [iters]"`.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -16,28 +17,12 @@ object TimeQuery {
     val iters = if (args.length > 2) args(2).toInt else 3
     val spark = Engine.localSession()
     Engine.registerTables(spark, sfDir)
-    // Mirror Bench's between-entry hygiene (r5): without dropping cached/
-    // persisted blocks between iterations, a query that persists (e.g.
-    // p34's token-stream cache) gets its later iterations flattered by
-    // reuse, and leftover broadcast blocks from one query inflate the
-    // next — TimeQuery numbers must predict Bench numbers.
-    def dropLeftoverBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      System.gc()
-    }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
-      dropLeftoverBlocks()
-      val times = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        dropLeftoverBlocks()
-        t
-      }
+      def run(): Double =
+        Measure.timed(spark)(Measure.runNoop(fn(spark, sfDir))).orThrow
+      run() // warmup
+      val times = Seq.fill(iters)(run())
       println(f"[time] $name: min ${times.min}%.3f s  median ${times.sorted.apply(times.length / 2)}%.3f s over $iters runs")
     }
     spark.stop()

@@ -221,6 +221,22 @@ class ExpressionsSpec extends SparkTestBase {
     }
   }
 
+  test("spark.sql.extensions alone resolves the graft functions in a new session") {
+    // the deployment path: a session from newSession() gets the injected
+    // functions from GraftExtensions, never from a runtime register()
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraOptimizations.isEmpty,
+      "register() ran on the new session")
+    val q = "SELECT graft_version() AS v, " +
+      "cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
+      "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c, " +
+      "simhash64(array('a', 'b')) AS sh"
+    val r = fresh.sql(q).head
+    assert(r.getString(0) == "graft-spark 0.1.0")
+    assert(r.getDouble(1) == 1.0)
+    assert(r.getLong(2) == withFns(spark.sql(q).head.getLong(2)))
+  }
+
   test("cosine_sim matches a reference computation") {
     withFns {
       val a = Array(1.0f, 2.0f, 3.0f)

@@ -1010,6 +1010,31 @@ class OperatorsSpec extends SparkTestBase {
     assert(!Engine.infoSnapshot(spark).tables.exists(_._3 == "graft_snap_probe"))
   }
 
+  test("one column-type snapshot feeds every schema-aware resolver after DDL") {
+    Engine.registerTables(spark, sfDir)
+    // warm the (session, DDL version) snapshot before the table exists
+    Engine.sql(spark, "SELECT len(n_name) AS x, n_name[1] AS y FROM nation").collect()
+    Engine.sql(spark, "DROP TABLE IF EXISTS graft_coltype_snap")
+    Engine.sql(spark, "CREATE TABLE graft_coltype_snap USING parquet AS SELECT " +
+      "map('k', 7) AS snap_m, array(1, 2, 3) AS snap_arr, " +
+      "DATE '2024-01-02' AS snap_d, 'abc' AS snap_s, " +
+      "CAST(7.50 AS DECIMAL(10, 2)) AS snap_dec")
+    try {
+      val df = Engine.sql(spark, "SELECT snap_m['k'] AS m, len(snap_arr) AS n, " +
+        "snap_d - snap_d AS days, snap_s[2] AS c, snap_dec / snap_dec AS q " +
+        "FROM graft_coltype_snap")
+      val r = df.head
+      val plan = df.queryExecution.analyzed.toString
+      assert(r.getSeq[Int](0) == Seq(7)) // MAP: duck's list-valued subscript
+      // ARRAY: len() is size(), not the type-dispatched graft_len()
+      assert(r.getInt(1) == 3 && plan.contains("size(snap_arr"), plan)
+      assert(r.getInt(2) == 0) // DATE: minus is integer days
+      assert(r.getString(3) == "b") // VARCHAR: character subscript
+      // DECIMAL: the division stays a plain `/`, no try_divide
+      assert("""\(snap_dec#\d+ / snap_dec#\d+\)""".r.findFirstIn(plan).nonEmpty, plan)
+    } finally Engine.sql(spark, "DROP TABLE IF EXISTS graft_coltype_snap")
+  }
+
   test("CREATE MACRO: scalar macros expand with defaults, nesting, and redefinition") {
     Engine.registerTables(spark, sfDir)
     Engine.sql(spark, "CREATE MACRO add1(x) AS x + 1")
