@@ -250,24 +250,36 @@ object GraftFunctions {
         "graft-spark 0.1.0", org.apache.spark.sql.types.StringType)),
   )
 
-  /** Idempotent runtime registration into a (classic) SparkSession. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    all.foreach { case (name, usage, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
+  /** The optimizer rules [[register]] appends to `experimental.extraOptimizations`. */
+  val optimizerRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     Seq(graft.plans.DateTruncToDateCast, graft.plans.ProjectAfterTopK,
-        graft.plans.DoubleCastToDuckStr, graft.plans.DecDownscaleCast,
-        graft.plans.FloorCeilToDbl, graft.plans.StringReverseGrapheme,
-        graft.plans.NestedCompare).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
+      graft.plans.DoubleCastToDuckStr, graft.plans.DecDownscaleCast,
+      graft.plans.FloorCeilToDbl, graft.plans.StringReverseGrapheme,
+      graft.plans.NestedCompare)
+
+  /** Idempotent runtime registration into a (classic) SparkSession. The
+    * strategy is appended last, so once the session's experimental
+    * strategies hold it the registration is complete and a later call
+    * returns at once; the first run is serialized per session, because
+    * the rule-list appends are check-then-set on shared session state. */
+  def register(spark: SparkSession): Unit = {
+    val methods = spark.experimental
+    if (methods.extraStrategies.contains(graft.plans.SingleStreamStrategy)) return
+    methods.synchronized {
+      if (!methods.extraStrategies.contains(graft.plans.SingleStreamStrategy)) {
+        val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .sessionState.functionRegistry
+        all.foreach { case (name, usage, builder) =>
+          registry.createOrReplaceTempFunction(name, builder, "built-in")
+        }
+        optimizerRules.foreach { r =>
+          if (!methods.extraOptimizations.contains(r))
+            methods.extraOptimizations = methods.extraOptimizations :+ r
+        }
+        methods.extraStrategies = methods.extraStrategies :+ graft.plans.SingleStreamStrategy
+      }
     }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.SingleStreamStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.SingleStreamStrategy
   }
 
   /** Column-API forms (require [[register]] on the session first). */
@@ -320,18 +332,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // resolution-time, not optimizer-time: coercion-inserted casts around
     // literal branches constant-fold before user optimizer rules run, and
     // the fold must bake DUCK semantics (trunc downscale, duck double
-    // rendering) — r13 dec fuzz seed-21. GRAFT_NO_RESOLUTION_RULES=1 is a
-    // perf-bisection escape hatch (dev only).
-    if (!sys.env.get("GRAFT_NO_RESOLUTION_RULES").contains("1")) {
-      ext.injectResolutionRule(_ => graft.plans.DecDownscaleCast)
-      ext.injectResolutionRule(_ => graft.plans.DoubleCastToDuckStr)
-      ext.injectResolutionRule(_ => graft.plans.FloorCeilToDbl)
-      // type-dispatched: string reverse → grapheme clusters (r14)
-      ext.injectResolutionRule(_ => graft.plans.StringReverseGrapheme)
-      // nested-type comparisons → duck's three-valued walk (r15); must
-      // run at resolution so map compares rewrite before CheckAnalysis
-      // refuses them and foldable nested compares fold with duck 3VL
-      ext.injectResolutionRule(_ => graft.plans.NestedCompare)
-    }
+    // rendering) — r13 dec fuzz seed-21
+    ext.injectResolutionRule(_ => graft.plans.DecDownscaleCast)
+    ext.injectResolutionRule(_ => graft.plans.DoubleCastToDuckStr)
+    ext.injectResolutionRule(_ => graft.plans.FloorCeilToDbl)
+    // type-dispatched: string reverse → grapheme clusters (r14)
+    ext.injectResolutionRule(_ => graft.plans.StringReverseGrapheme)
+    // nested-type comparisons → duck's three-valued walk (r15); must
+    // run at resolution so map compares rewrite before CheckAnalysis
+    // refuses them and foldable nested compares fold with duck 3VL
+    ext.injectResolutionRule(_ => graft.plans.NestedCompare)
   }
 }

@@ -19,6 +19,19 @@ import scala.jdk.CollectionConverters._
   * so concurrent queries and inserts don't share mutable session state —
   * the reference's "concurrent inserts and querying" claim
   * (`README.md:14`) maps to Spark's natural multi-session concurrency.
+  *
+  * Every reply is two writes on the socket: `sendResponseHeaders` flushes
+  * the status line and headers, then the body follows (`respond` writes
+  * the whole array, `respondStream` its chunks). With Nagle's algorithm on,
+  * a small body waits behind the unacknowledged header segment until the
+  * client's delayed ACK arrives (~40 ms on Linux), so every small reply on
+  * a kept-alive connection (`/ping`, cache replays, `/flight/info`, ingest
+  * acks, errors) took ~44 ms. `start` therefore turns `TCP_NODELAY` on for
+  * every accepted connection. The JDK exposes this only as the system
+  * property `sun.net.httpserver.nodelay`, which it reads once per process
+  * when its first server is created, so the property must be set before
+  * the first JDK `HttpServer` of the process starts: a server started
+  * earlier without it fixes Nagle on for the whole process.
   */
 final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[String] = None) {
 
@@ -27,6 +40,9 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
   private var server: JdkHttpServer = _
 
   def start(): Int = {
+    // before the first create: the JDK reads it once per process (see the
+    // class doc — without it each small reply waits for a delayed ACK)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = JdkHttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", handle _)
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))

@@ -237,6 +237,25 @@ class ExpressionsSpec extends SparkTestBase {
     assert(r.getLong(2) == withFns(spark.sql(q).head.getLong(2)))
   }
 
+  test("concurrent Engine.sql on a fresh session registers each graft rule and the strategy once") {
+    val fresh = spark.newSession()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 50).foreach { i =>
+            graft.engine.Engine.sql(fresh, s"SELECT graft_version() AS v, ${t * 50 + i} AS i")
+          }
+        })
+      }
+      runs.foreach(_.get())
+    } finally pool.shutdown()
+    assert(fresh.experimental.extraOptimizations == GraftFunctions.optimizerRules)
+    assert(fresh.experimental.extraStrategies == Seq(graft.plans.SingleStreamStrategy))
+    assert(graft.engine.Engine.sql(fresh, "SELECT graft_version() AS v").head.getString(0) ==
+      "graft-spark 0.1.0")
+  }
+
   test("cosine_sim matches a reference computation") {
     withFns {
       val a = Array(1.0f, 2.0f, 3.0f)

@@ -335,6 +335,40 @@ class ProtocolSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("small replies on a kept-alive connection do not wait for a delayed ACK") {
+    // a reply is headers then body; with Nagle on, the body of a small
+    // reply waits for the client's delayed ACK and each request takes ~44 ms
+    graft.engine.Engine.registerTables(spark, sfDir)
+    val srv = new HttpServer(spark, 0)
+    val port = srv.start()
+    try {
+      val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      def send(b: HttpRequest.Builder): Unit = {
+        val r = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
+        assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
+      }
+      def at(p: String) = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$p"))
+      val q = java.net.URLEncoder.encode("SELECT count() AS c FROM region FORMAT CSV", "UTF-8")
+      send(at(s"/?query=$q&query_id=stall1"))
+      val kinds = Seq[(String, () => HttpRequest.Builder)](
+        "ping" -> (() => at("/ping")),
+        "query_id replay" -> (() => at("/?query_id=stall1")),
+        "flight/info" -> (() => at("/flight/info").POST(HttpRequest.BodyPublishers
+          .ofString("SELECT 1 AS c"))))
+      val medians = kinds.map { case (name, req) =>
+        (0 until 10).foreach(_ => send(req()))
+        val ms = (0 until 30).map { _ =>
+          val t0 = System.nanoTime()
+          send(req())
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        name -> (ms(14) + ms(15)) / 2
+      }
+      val report = medians.map { case (n, m) => f"$n $m%.1f ms" }.mkString(", ")
+      medians.foreach { case (name, m) => assert(m < 20.0, s"$name; medians of 30: $report") }
+    } finally srv.stop()
+  }
+
   test("concurrent anonymous ?database= requests never cross-talk") {
     graft.engine.Engine.registerTables(spark, sfDir)
     val srv = new HttpServer(spark, 0)
