@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,27 +9,16 @@ object Verify {
     // (driver always calls with 2 args → full run)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the r13 resolution rules (DecDownscaleCast, DoubleCastToDuckStr)
-      // must be active in the gate session — they fold coercion-inserted
-      // casts with duck semantics (q224's CASE branch)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // dev-only replica hook (r14/r15): SPARK_GRAFT_DEC_TRUNC=true pins
-      // BOTH version-sensitive decimal surfaces (downscale → truncate,
-      // double→decimal → 1e-9-epsilon) to the local DuckDB 1.0.0 oracle
-      // replica so it stays bit-comparable; the driver never sets it, so
-      // driver runs take the r16 MEASURED defaults (trunc, render —
-      // VERDICT r15 #1: read off the q236-q247 fingerprint)
-      .config("spark.graft.replicaMode",
-        sys.env.getOrElse("SPARK_GRAFT_DEC_TRUNC", "false"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parser.escapedStringLiterals", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    // dev-only replica hook (r14/r15): SPARK_GRAFT_DEC_TRUNC=true pins
+    // BOTH version-sensitive decimal surfaces (downscale → truncate,
+    // double→decimal → 1e-9-epsilon) to the local DuckDB 1.0.0 oracle
+    // replica so it stays bit-comparable; the driver never sets it, so
+    // driver runs take the r16 MEASURED defaults (trunc, render —
+    // VERDICT r15 #1: read off the q236-q247 fingerprint). DecCast reads
+    // it from SQLConf.get when it plans, so a runtime set is enough.
+    spark.conf.set("spark.graft.replicaMode",
+      sys.env.getOrElse("SPARK_GRAFT_DEC_TRUNC", "false"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

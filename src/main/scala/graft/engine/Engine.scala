@@ -284,7 +284,6 @@ object Engine {
     import org.apache.spark.sql.functions.col
     name.toLowerCase match {
       case "version" =>
-        graft.functions.GraftFunctions.register(spark)
         spark.sql("SELECT graft_version() AS library_version, 'spark' AS source_id")
       case "show_tables" =>
         spark.sql("SHOW TABLES").select(col("tableName").as("name")).orderBy("name")
@@ -1903,7 +1902,6 @@ object Engine {
         tryAsofMerge(spark, s).foreach(df => return df)
       case _ =>
     }
-    graft.functions.GraftFunctions.register(spark) // idempotent; version() etc.
     // catalog lookup for COLUMNS('regex') expansion — only invoked when the
     // statement actually contains a COLUMNS call
     val isMapCol: String => Boolean =
@@ -2175,25 +2173,21 @@ object Engine {
     last
   }
 
-  /** Standard local session for tests/benchmarks: `local[cpus]` with as
-    * many shuffle partitions as cores (`cpus` is `SPARK_GRAFT_CPUS`, else
-    * 32 — not the 200 default sized for real clusters), AQE on so plans
-    * re-partition/de-skew at runtime the way they would at scale. */
+  /** The one session builder (server, tools, Verify, Bench, specs):
+    * `local[cpus]` with as many shuffle partitions as cores (`cpus` is
+    * `SPARK_GRAFT_CPUS`, else 32 — not the 200 default sized for real
+    * clusters). AQE and its partition coalescing keep Spark's defaults
+    * (on), so plans re-partition/de-skew at runtime the way they would at
+    * scale. */
   def localSession(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
-    // AQE on by default (the scale posture: runtime re-partitioning and skew
-    // handling); SPARK_GRAFT_AQE=false trades it away for lower per-stage
-    // latency on interactive/small workloads.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      // extensions, not only runtime register(): the r13 dec-fuzz rules
-      // (DecDownscaleCast, DoubleCastToDuckStr) must run at RESOLUTION so
-      // coercion-inserted casts fold with duck semantics — runtime
-      // injection can only reach the optimizer batch, after folding.
+      // graft's functions, rules and strategy install only here: the r13
+      // dec-fuzz rules (DecDownscaleCast, DoubleCastToDuckStr) must run at
+      // RESOLUTION so coercion-inserted casts fold with duck semantics, and
+      // newSession() tenants inherit extensions
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
       .config("spark.sql.session.timeZone", "UTC")
       // r10 fuzz batch 7: DuckDB string literals carry NO backslash
       // escaping — Spark's default parser ate one level, silently

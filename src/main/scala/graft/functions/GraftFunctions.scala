@@ -4,13 +4,15 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration of graft's custom Catalyst expressions.
+/** Registration of graft's custom Catalyst expressions, optimizer rules
+  * and planner strategy.
   *
-  * Two paths:
-  *  - `spark.sql.extensions=graft.functions.GraftExtensions` for deployments
-  *    (the idiomatic [[SparkSessionExtensions]] route);
-  *  - [[GraftFunctions.register]] for runtime injection into an existing
-  *    session (the driver hands us its own session).
+  * One path: `spark.sql.extensions=graft.functions.GraftExtensions`, the
+  * idiomatic [[SparkSessionExtensions]] route. Every session built by
+  * [[graft.engine.Engine.localSession]] carries it, and sessions cloned
+  * with `newSession()` (the server's tenants) inherit it.
+  * [[register]] installs nothing; it only checks that a session was
+  * built with the extensions.
   *
   * The reference's equivalent surface is the chsql extension auto-load
   * (`/root/reference/main.py:83-86`) — engine-level function registration at
@@ -250,39 +252,22 @@ object GraftFunctions {
         "graft-spark 0.1.0", org.apache.spark.sql.types.StringType)),
   )
 
-  /** The optimizer rules [[register]] appends to `experimental.extraOptimizations`. */
-  val optimizerRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    Seq(graft.plans.DateTruncToDateCast, graft.plans.ProjectAfterTopK,
-      graft.plans.DoubleCastToDuckStr, graft.plans.DecDownscaleCast,
-      graft.plans.FloorCeilToDbl, graft.plans.StringReverseGrapheme,
-      graft.plans.NestedCompare)
+  /** Fails unless the session was built with [[GraftExtensions]]. Graft
+    * installs its functions, rules and strategy only through
+    * `spark.sql.extensions`: the resolution-time rules cannot be added to
+    * a session after it is built. */
+  def register(spark: SparkSession): Unit =
+    requireExtensions(spark.conf.getOption("spark.sql.extensions"))
 
-  /** Idempotent runtime registration into a (classic) SparkSession. The
-    * strategy is appended last, so once the session's experimental
-    * strategies hold it the registration is complete and a later call
-    * returns at once; the first run is serialized per session, because
-    * the rule-list appends are check-then-set on shared session state. */
-  def register(spark: SparkSession): Unit = {
-    val methods = spark.experimental
-    if (methods.extraStrategies.contains(graft.plans.SingleStreamStrategy)) return
-    methods.synchronized {
-      if (!methods.extraStrategies.contains(graft.plans.SingleStreamStrategy)) {
-        val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          .sessionState.functionRegistry
-        all.foreach { case (name, usage, builder) =>
-          registry.createOrReplaceTempFunction(name, builder, "built-in")
-        }
-        optimizerRules.foreach { r =>
-          if (!methods.extraOptimizations.contains(r))
-            methods.extraOptimizations = methods.extraOptimizations :+ r
-        }
-        methods.extraStrategies = methods.extraStrategies :+ graft.plans.SingleStreamStrategy
-      }
-    }
+  /** Checks a `spark.sql.extensions` value (comma-separated class names). */
+  def requireExtensions(conf: Option[String]): Unit = {
+    val name = classOf[GraftExtensions].getName
+    require(conf.exists(_.split(',').map(_.trim).contains(name)),
+      s"spark.sql.extensions must name $name but is ${conf.getOrElse("unset")}; " +
+        "build the session with graft.engine.Engine.localSession")
   }
 
-  /** Column-API forms (require [[register]] on the session first). */
+  /** Column-API forms. */
   def cosine_sim(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
   def simhash64(tokens: Column): Column =
@@ -320,14 +305,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     ext.injectOptimizerRule(_ => graft.plans.DateTruncToDateCast)
-    // preCBO, not the operator batch: ProjectAfterTopK moves a Project
-    // ABOVE the limit, and the operator fixed-point's own project
-    // push-down fights it — the plan wedges half-way
-    // (GlobalLimit(LocalLimit(Project(Sort)))) where neither the rule
-    // nor the TakeOrderedAndProject planner pattern matches
+    // preCBO (Once), not the operator batch: ProjectAfterTopK moves a
+    // Project ABOVE the limit, and the operator fixed-point's own project
+    // push-down is its inverse. A later batch pushes the Project back onto
+    // the narrowed Sort, and the planner turns that
+    // GlobalLimit(LocalLimit(Project(Sort))) into TakeOrderedAndProject
+    // with the deferred aliases in its project list
     ext.injectPreCBORule(_ => graft.plans.ProjectAfterTopK)
-    // sessions cloned with newSession() (tenants) inherit extensions, not
-    // experimental strategies: the served-sort planner must come from here
+    // the served-sort planner (newSession() tenants inherit it)
     ext.injectPlannerStrategy(_ => graft.plans.SingleStreamStrategy)
     // resolution-time, not optimizer-time: coercion-inserted casts around
     // literal branches constant-fold before user optimizer rules run, and

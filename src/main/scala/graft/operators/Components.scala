@@ -140,7 +140,6 @@ object Components {
   def dedupClustersBestQuality(spark: SparkSession, docs: DataFrame,
       minJacBp: Long = 5000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val labels = dedupClusters(spark, docs, minJacBp)
       .select(col("doc_id"), col("component"))
     val scored = docs.select(col("doc_id"),

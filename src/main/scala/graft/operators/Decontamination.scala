@@ -69,7 +69,6 @@ object Decontamination {
     */
   def scrubEvalSpans(train: DataFrame, evalDocs: DataFrame, k: Int = 16,
       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.GraftFunctions.register(train.sparkSession)
     val t = train.select(col(idCol).as("doc_id"), col("text"))
     val evalW = broadcast(evalDocs
       .select(explode(call_function("window_md5s", col("text"), lit(k)))
@@ -116,7 +115,6 @@ object Decontamination {
   def semanticContaminated(corpus: DataFrame, evals: DataFrame,
       minCosine: Double, idCol: String = "vec_id",
       evalIdCol: String = "eval_id"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val ev = broadcast(evals.select(col(evalIdCol),
       col("embedding").as("__ev")))
     corpus.crossJoin(ev)
@@ -153,7 +151,6 @@ object Decontamination {
     * whose square fits in a result table. */
   def crossCorpusOverlap(docs: DataFrame, k: Int = 8,
       textCol: String = "text", groupCol: String = "source"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val d = docs.select(col(groupCol).as("__grp"),
       explode(call_function("window_md5s", col(textCol), lit(k))).as("wh"))
       .distinct()

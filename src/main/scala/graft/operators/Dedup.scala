@@ -88,7 +88,6 @@ object Dedup {
       idCol: String = "doc_id",
       collapseExact: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(docs.sparkSession)
     val toks = filter(split(lower(col(textCol)), " "), t => t =!= "")
     // ONE corpus tokenize+hash pass (round 4): the distinct window-hash
     // sets feed BOTH the banding signature (MIN is duplicate-insensitive,
@@ -221,7 +220,6 @@ object Dedup {
       collapseExact: Boolean = true,
       portable: Boolean = false): DataFrame = {
     require(maxHamming < bands, "pigeonhole needs maxHamming < bands")
-    GraftFunctions.register(docs.sparkSession)
     val toks = filter(split(lower(col(textCol)), " "), t => t =!= "")
     val sig = if (portable) GraftFunctions.simhash_md5(toks)
       else GraftFunctions.simhash64(toks)
@@ -300,7 +298,6 @@ object Dedup {
     * (q57/p02) is unaffected. */
   def ngramJaccardPairs(docs: DataFrame, prefixLen: Int = 40,
       bucketCap: Int = 1000, overflowMinJaccard: Double = 0.5): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // tokenize each doc ONCE (per-pair tokenization goes quadratic on
     // duplicate clusters — same fix as minhashPairs' verify step); union
     // size via |A∪B| = |A|+|B|−|A∩B|, value-identical to the two-sided form.
@@ -386,7 +383,6 @@ object Dedup {
       collapseExact: Boolean = true): DataFrame = {
     require(planesPerBand >= 1 && bands >= 1 && planesPerBand * bands <= 64,
       "need 1 <= planesPerBand * bands <= 64")
-    GraftFunctions.register(emb.sparkSession)
     val totalPlanes = planesPerBand * bands
     val mask = if (planesPerBand == 64) -1L else (1L << planesPerBand) - 1
     if (collapseExact) {
@@ -480,7 +476,6 @@ object Dedup {
       numBuckets: Int = 16): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = docs.sparkSession
-    GraftFunctions.register(spark)
     Similarity.dropStaleWarehouseDir(spark, indexTable)
     Similarity.dropStaleWarehouseDir(spark, indexTable + "_bands")
     val scanned =
@@ -511,7 +506,6 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = newDocs.sparkSession
-    GraftFunctions.register(spark)
     val bandsTable = indexTable + "_bands"
     // r14: probe geometry comes from the band table itself when embedded
     // (post-maintenance the stored geometry may differ from the caller's
@@ -596,7 +590,6 @@ object Dedup {
     require(planesPerBand >= 1 && bands >= 1 && planesPerBand * bands <= 64,
       "need 1 <= planesPerBand * bands <= 64")
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     Similarity.dropStaleWarehouseDir(spark, indexTable)
     Similarity.dropStaleWarehouseDir(spark, indexTable + "_bands")
     val sigDf = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
@@ -625,7 +618,6 @@ object Dedup {
     require(planesPerBand >= 1 && bands >= 1 && planesPerBand * bands <= 64,
       "need 1 <= planesPerBand * bands <= 64")
     val spark = newEmb.sparkSession
-    GraftFunctions.register(spark)
     val bandsTable = indexTable + "_bands"
     // r14: probe geometry from the band table itself when embedded —
     // post-maintenance indexes carry a different width than the build
@@ -749,7 +741,6 @@ object Dedup {
   def maintainEmbeddingIndex(spark: SparkSession, indexTable: String,
       bands: Int = 4, targetBucket: Int = 32, occupancyFactor: Double = 4.0,
       currentPlanesPerBand: Int = 12, numBuckets: Int = 16): IndexHealth = {
-    GraftFunctions.register(spark)
     // lazy (r16): the meta read is a Spark job; the band table's embedded
     // geometry is the authority (r14) and answers on every post-r14 index,
     // so only pre-r14 layouts pay for the fallback read
@@ -817,7 +808,6 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 16, targetBucket: Int = 32,
       occupancyFactor: Double = 4.0, numBuckets: Int = 16): IndexHealth = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(spark)
     // lazy (r16): see maintainEmbeddingIndex — band-table geometry is the
     // authority, the meta job only runs on pre-r14 layouts
     lazy val meta = readMeta(spark, indexTable)
@@ -909,7 +899,6 @@ object Dedup {
     */
   def spanDedup(docs: DataFrame, k: Int = 16,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val d = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val occ = d.select(col("doc_id"),
       posexplode(call_function("window_md5s", col("text"), lit(k)))
@@ -959,7 +948,6 @@ object Dedup {
   def boilerplateSpans(docs: DataFrame, k: Int = 16, minDocs: Int = 4,
       textCol: String = "text", idCol: String = "doc_id",
       groupCol: String = "source"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val d = docs.select(col(idCol).as("doc_id"), col(groupCol).as("__grp"),
       col(textCol).as("text"))
     // r17 (guide §2.4 — one exchange, one kernel scan): the r7-r16 form
@@ -1064,7 +1052,6 @@ object Dedup {
     * full exchange of ~the same rows beats two of slightly fewer. */
   def sourceNovelty(docs: DataFrame, k: Int = 8,
       textCol: String = "text", groupCol: String = "source"): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val sw = docs.select(col(groupCol).as("source"),
         explode(call_function("window_md5s", col(textCol), lit(k))).as("wh"))
       .repartition(col("wh"))

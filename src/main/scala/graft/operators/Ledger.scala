@@ -32,7 +32,6 @@ object Ledger {
   /** Exact-duplicate collapse (p01's op), ledgered: keeps the min-id doc
     * per content hash; every other copy is ledgered with its keeper id. */
   def exactDedup(docs: DataFrame): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = Window.partitionBy(col("__h"))
     val marked = docs
       .withColumn("__h", md5(col("text")))
@@ -49,7 +48,6 @@ object Ledger {
   /** Minimum-token gate (the p31/p53 family), ledgered: documents under
     * the threshold are removed whole and ledgered with their count. */
   def minTokenGate(docs: DataFrame, minTokens: Int): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val withN = docs.withColumn("__nt", tokens(col("text")))
     val kept = withN.filter(col("__nt") >= minTokens).select("doc_id", "text")
     val ledger = withN.filter(col("__nt") < minTokens)
@@ -77,7 +75,6 @@ object Ledger {
     * keep-first) are cut; the ledger row carries the cut token count and
     * the number of removed lines as detail. */
   def lineDedup(docs: DataFrame, sep: String = "\n"): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // token counts treat the line separator as whitespace (the kernel
     // splits on ' ' only), so a removed line's tokens are counted the
     // same whether it sat mid-document or at an edge

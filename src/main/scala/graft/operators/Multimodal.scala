@@ -87,7 +87,6 @@ object Multimodal {
   def binarySimhashPairs(items: DataFrame, shingle: Int = 4,
       maxHamming: Int = 3, bands: Int = 4,
       idCol: String = "id", payloadCol: String = "payload"): DataFrame = {
-    graft.functions.GraftFunctions.register(items.sparkSession)
     val sigs = items.select(col(idCol).as("id"),
       md5(col(payloadCol)).as("__h"),
       call_function("byte_shingle_simhash", col(payloadCol), lit(shingle))

@@ -20,7 +20,6 @@ object PipelineQueries {
   private def q(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (spark, dir) => {
       Engine.registerTables(spark, dir)
-      GraftFunctions.register(spark)
       f(spark, dir)
     }
 

@@ -99,7 +99,6 @@ object Sampling {
     * one nShards-group agg — map-side combined, no wide shuffle. */
   def shardStats(docs: DataFrame, nShards: Int,
       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val shard = (conv(substring(md5(col(idCol).cast("string")), 1, 6), 16, 10)
       .cast("long") % nShards).as("shard")
     docs.select(shard,
@@ -125,7 +124,6 @@ object Sampling {
   def tokenBudgetSample(docs: DataFrame, budgetTokens: Long,
       idCol: String = "doc_id", srcCol: String = "source"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = Window.partitionBy(srcCol)
       .orderBy(md5(col(idCol).cast("string")), col(idCol))
     docs.select(col(idCol), col(srcCol),

@@ -39,7 +39,6 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     emb.crossJoin(broadcast(queryVec))
       .select(col(idCol), GraftFunctions.cosine_sim(col(vecCol), col("qv")).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
@@ -56,7 +55,6 @@ object Similarity {
       probes: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val q = queryVec.select(col("qv"), hyperplaneSignature(col("qv"), planes).as("qsig"))
     val flips = (0 until math.min(probes, planes)).map(j =>
       col("qsig").bitwiseXOR(lit(1L << j)))
@@ -94,7 +92,6 @@ object Similarity {
       numBuckets: Int = 16,
       vecCol: String = "embedding"): Unit = {
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     dropStaleWarehouseDir(spark, indexTable)
     Partitioning.writeBucketed(
       emb.withColumn("sig", hyperplaneSignature(col(vecCol), planes)),
@@ -115,7 +112,6 @@ object Similarity {
       probes: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(spark)
     val qsig = HyperplaneSig.signatureOf(queryVec, planes)
     val sigs = (qsig +: (0 until math.min(probes, planes)).map(j => qsig ^ (1L << j))).distinct
     // DisableUnnecessaryBucketedScan would demote the scan (no join wants
@@ -127,7 +123,6 @@ object Similarity {
     // per-base-session CLONE (shared catalog and executor pools, its own
     // SQLConf) that pins the conf off permanently.
     val s2 = indexScanSession(spark)
-    GraftFunctions.register(s2)
     s2.table(indexTable)
       .filter(col("sig").isin(sigs: _*))
       .select(col(idCol),
@@ -227,7 +222,6 @@ object Similarity {
       vecCol: String = "embedding",
       trainIters: Int = 8): Unit = {
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     // nCentroids = 0 → auto-size from the corpus row count ([[centroidsFor]]);
     // metadata stats when available, a one-time count job at ingest otherwise
     val k =
@@ -296,7 +290,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       trainIters: Int = 8): Dedup.IndexHealth = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val idx = spark.table(indexTable)
     // headOption: a zero-row index (empty build input) reads as gen 0
@@ -373,7 +366,6 @@ object Similarity {
       cents: Array[Array[Float]],
       vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     val dim = cents.headOption.map(_.length).getOrElse(0)
     val flat: Array[Float] = cents.flatten
     import spark.implicits._
@@ -417,7 +409,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(queries.nonEmpty, "ivfTopKIndexedMany needs at least one query")
-    GraftFunctions.register(spark)
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < math.min(a.length, b.length)) {
@@ -446,7 +437,6 @@ object Similarity {
     val cents = centRows.map(r => (r.getAs[Int]("cid"),
       r.getAs[scala.collection.Seq[Float]]("centroid").toArray))
     val s2 = indexScanSession(spark)
-    GraftFunctions.register(s2)
     queries.map { case (qid, queryVec) =>
       val probes = cents
         .map { case (cid, c) => (cid, cos(queryVec, c)) }

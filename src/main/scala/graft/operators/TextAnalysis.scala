@@ -95,7 +95,6 @@ object TextAnalysis {
     // interpreted per element. Total kernel output is ~window/stride ≈
     // 1.33× the input — linear. n_toks of a clean single-space chunk is
     // spaces+1; the tokenless doc's single empty chunk is 0.
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         posexplode(call_function("chunk_windows",
           col("text"), lit(window), lit(stride))).as(Seq("chunk_idx", "ck")))
@@ -112,7 +111,6 @@ object TextAnalysis {
     * window partitioning, so it is one exchange + one sort at any scale. */
   def topQualityPerSource(docs: DataFrame, frac: Double = 0.25): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val scored = docs.select(col("doc_id"), col("source"),
         tokenSetHits(col("text"), Seq(defaultStopwords)).as("__h"))
       .select(col("doc_id"), col("source"),
@@ -177,7 +175,7 @@ object TextAnalysis {
 
   /** Scrubbed text via the linear-scan [[graft.functions.PiiScrub]] kernel
     * (property-checked byte-identical to the two-regexp_replace form it
-    * replaced; ~13× faster at sf≈1). Requires GraftFunctions.register. */
+    * replaced; ~13× faster at sf≈1). */
   def scrubPii(text: Column): Column =
     element_at(call_function("pii_scrub", text), 1)
 
@@ -203,7 +201,6 @@ object TextAnalysis {
   def repetitionSignals(docs: DataFrame): DataFrame = {
     // one-scan kernel (n_grams, n_distinct) instead of materializing a
     // string per gram + array_distinct: 5.0 s -> sub-second at sf≈1
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         call_function("dup_gram_stats", lower(col("text"))).as("__s"))
       .select(col("doc_id"),
@@ -263,7 +260,6 @@ object TextAnalysis {
       textCol: String = "text", idCol: String = "doc_id",
       groupCol: String = "source"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val d = docs.select(col(idCol).as("doc_id"), col(groupCol).as("source"),
       element_at(tokenSetHits(col(textCol), Nil), 1).cast("long").as("n_tok"))
     val byLen = Window.partitionBy("source").orderBy(col("n_tok"), col("doc_id"))

@@ -38,6 +38,7 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
   private val tenants = new TenantManager(spark)
   private val cache = new ResultCache
   private var server: JdkHttpServer = _
+  private var workers: java.util.concurrent.ExecutorService = _
 
   def start(): Int = {
     // before the first create: the JDK reads it once per process (see the
@@ -45,12 +46,22 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     System.setProperty("sun.net.httpserver.nodelay", "true")
     server = JdkHttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", handle _)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    workers = java.util.concurrent.Executors.newFixedThreadPool(8)
+    server.setExecutor(workers)
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stops accepting, then ends the worker threads (they are not daemons,
+    * so a pool left running keeps the JVM alive), waiting up to 10 s for
+    * requests still in flight. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (workers != null) {
+      workers.shutdown()
+      workers.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+    }
+  }
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).map(_.split('&').toIndexedSeq.flatMap { kv =>
@@ -336,7 +347,6 @@ object HttpServerMain {
     val port = sys.env.getOrElse("GRAFT_HTTP_PORT", "8123").toInt
     val spark = graft.engine.Engine.localSession()
     sys.env.get("SPARK_GRAFT_SF_DIR").foreach(d => graft.engine.Engine.registerTables(spark, d))
-    graft.functions.GraftFunctions.register(spark)
     val s = new HttpServer(spark, port, sys.env.get("GRAFT_UI_DIR"))
     val actual = s.start()
     println(s"graft-spark HTTP listening on :$actual")

@@ -61,7 +61,6 @@ object Streaming {
       shingleSize: Int = 3,
       numHashes: Int = 16,
       watermark: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = filter(split(lower(col(textCol)), " "), t => t =!= "")
     docs
       .withColumn("__graft_sig", xxhash64(
@@ -81,7 +80,6 @@ object Streaming {
       urlCol: String = "url",
       tsCol: String = "ts",
       watermark: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.register(pages.sparkSession)
     pages
       .withColumn("__graft_canon",
         graft.operators.UrlOps.canonicalUrl(col(urlCol)))
@@ -166,7 +164,6 @@ object Streaming {
     * pick), whose byte-identical output is spec-asserted. */
   def scrubStream(docs: DataFrame, evalDocs: DataFrame, k: Int = 16,
       textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val evalW = evalDocs
       .select(explode(call_function("window_md5s", col(textCol), lit(k))).as("wh"))
       .distinct().collect().map(_.getAs[Array[Byte]]("wh"))
@@ -198,7 +195,6 @@ object Streaming {
     * once, cache/persist, reuse across micro-batches. */
   def scrubEvalDigests(evalDocs: DataFrame, k: Int = 16,
       textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(evalDocs.sparkSession)
     evalDocs
       .select(explode(call_function("window_md5s", col(textCol), lit(k))).as("wh"))
       .distinct()
@@ -222,7 +218,6 @@ object Streaming {
   def scrubBatchBroadcast(batch: DataFrame, evalDigests: DataFrame,
       k: Int = 16, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val starts = batch
       .select(col(idCol).as("__sid"),
         posexplode(call_function("window_md5s", col(textCol), lit(k)))
@@ -275,7 +270,6 @@ object Streaming {
   def scrubStreamLedgered(docs: DataFrame, evalDocs: DataFrame, k: Int = 16,
       textCol: String = "text", idCol: String = "doc_id")
       : (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val evalW = evalDocs
       .select(explode(call_function("window_md5s", col(textCol), lit(k))).as("wh"))
       .distinct().collect().map(_.getAs[Array[Byte]]("wh"))
@@ -314,7 +308,6 @@ object Streaming {
     * per-group state); the streaming card carries the algebraic subset. */
   def datasetCardStream(docs: DataFrame, textCol: String = "text",
       sourceCol: String = "source"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sets = graft.operators.TextAnalysis.langStopwords
     val h = graft.operators.TextAnalysis.tokenSetHits(
       lower(col(textCol)), sets.map(_._2))
@@ -345,7 +338,6 @@ object Streaming {
     * entropy so downstream sinks can audit the gate. */
   def entropyGateStream(docs: DataFrame, minBits: Double = 4.0,
       textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("ent_bits", call_function("char_entropy", col(textCol)))
       .filter(col("ent_bits") >= minBits)

@@ -11,19 +11,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
+  // the production builder, so specs run with the same extensions and
+  // parser/time-zone confs as every other session
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      // match Engine.localSession: the r13 resolution rules
-      // (DecDownscaleCast, DoubleCastToDuckStr) must fold literals with
-      // duck semantics in specs exactly as in production sessions
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parser.escapedStringLiterals", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
+    val s = graft.engine.Engine.localSession("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

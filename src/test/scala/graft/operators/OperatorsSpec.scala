@@ -68,7 +68,6 @@ class OperatorsSpec extends SparkTestBase {
     val docs = spark.table("documents")
     val banded = Dedup.simhashPairs(docs, maxHamming = 3, portable = true)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    graft.functions.GraftFunctions.register(spark)
     val sigs = docs.select(col("doc_id"),
         expr("simhash_md5(filter(split(lower(text), ' '), t -> t != ''))").as("sh"))
     val brute = sigs.as("a").join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
@@ -172,7 +171,6 @@ class OperatorsSpec extends SparkTestBase {
 
   test("simhash banding is lossless vs brute-force hamming; near-dup recall holds") {
     Engine.registerTables(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.table("documents")
     val toks = filter(split(lower(col("text")), " "), t => t =!= "")
     val base = docs.select(col("doc_id"),
@@ -206,7 +204,6 @@ class OperatorsSpec extends SparkTestBase {
 
   test("banded embedding LSH: recall >= 0.95 and precision 1.0 on duplicate-grade vectors") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val bases = Array.fill(100)(Array.fill(16)(rnd.nextGaussian().toFloat))
     // 100 groups of 3 noisy copies — the exact near-dup pair set is known
@@ -984,7 +981,6 @@ class OperatorsSpec extends SparkTestBase {
     // snapshot is invalidated; raw spark.sql DDL must bumpCatalogVersion
     Engine.sql(spark, "DROP TABLE IF EXISTS graft_info_probe")
     Engine.sql(spark, "CREATE TABLE graft_info_probe (a BIGINT, b STRING) USING parquet")
-    graft.functions.GraftFunctions.register(spark)
     val schemas = Engine.sql(spark,
       "SELECT schema_name FROM information_schema.schemata ORDER BY schema_name")
       .collect().map(_.getString(0))
@@ -1890,7 +1886,6 @@ class OperatorsSpec extends SparkTestBase {
     // coalesce(cosine_sim(vec, typedLit(c)), -2.0) + array_position(
     // array_max) formula exactly, per row, on the real fixture.
     Engine.registerTables(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.table("embeddings").select(col("vec_id"), col("embedding"))
     spark.sql("DROP TABLE IF EXISTS sp_ivf_k")
     spark.sql("DROP TABLE IF EXISTS sp_ivf_k_centroids")

@@ -38,7 +38,7 @@ class SingleStreamSpec extends SparkTestBase {
 
   test("drain: a root ORDER BY over several partitions streams collect()'s rows in order") {
     view()
-    // with AQE off (SPARK_GRAFT_AQE=false) as well as on
+    // with AQE off as well as on (the session conf, set per run below)
     for (aqe <- Seq("true", "false"); q <- Seq("SELECT k, v FROM ss_t ORDER BY v DESC NULLS FIRST",
         "SELECT k FROM ss_t ORDER BY v", // Project over Sort
         "SELECT k, v FROM ss_t ORDER BY v ASC NULLS LAST",

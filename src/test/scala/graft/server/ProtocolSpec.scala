@@ -369,6 +369,23 @@ class ProtocolSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("stop() ends the server's worker threads") {
+    import scala.jdk.CollectionConverters._
+    def live(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+    val before = live()
+    val srv = new HttpServer(spark, 0)
+    val port = srv.start()
+    val r = try HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ping")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      finally srv.stop()
+    assert(r.statusCode() == 200)
+    // the client's threads are daemons; the server's workers are not, and
+    // a worker still alive keeps the JVM from exiting
+    val left = (live() -- before).filter { t => !t.isDaemon && { t.join(1000); t.isAlive } }
+    assert(left.isEmpty, s"still alive after stop(): ${left.map(_.getName).mkString(", ")}")
+  }
+
   test("concurrent anonymous ?database= requests never cross-talk") {
     graft.engine.Engine.registerTables(spark, sfDir)
     val srv = new HttpServer(spark, 0)
