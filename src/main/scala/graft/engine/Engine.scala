@@ -349,15 +349,34 @@ object Engine {
     Seq(n).toDF("Count")
   }
 
-  // ---- DML rewrite ------------------------------------------------------
+  // ---- DML: one copy-on-write driver -----------------------------------
   //
-  // The reference passes DELETE/UPDATE straight to DuckDB; Spark parquet
-  // tables have no in-place DML, so both are implemented as an atomic
-  // rewrite: the surviving/updated rows land in a tmp table that is swapped
-  // in via catalog rename (readers never observe a half-written table; a
-  // crashed run leaves the original untouched). Managed catalog tables
-  // only — the fixture parquet views are read-only inputs. Returns the
-  // 1-row `Count` result DuckDB produces.
+  // The reference passes DELETE/UPDATE straight to DuckDB (`main.py:231`);
+  // Spark parquet tables have no in-place DML. Every form — DELETE, UPDATE,
+  // DELETE … USING, UPDATE … FROM — runs `copyOnWrite`, which holds the
+  // table's write lock from the file listing through the rename (an append
+  // committing in between would otherwise land in neither the linked nor
+  // the rewritten set and be deleted with the old directory) and does each
+  // step once:
+  //   1. check the target: a managed catalog table whose rows carry
+  //      `_metadata.file_path` (the COW row identity);
+  //   2. list its data files;
+  //   3. run the form's per-file matched counts — no job on a table with
+  //      no files — and return `Count 0` / an empty RETURNING frame with
+  //      no swap when nothing matches;
+  //   4. split the files into affected (holding a match) and untouched;
+  //   5. build the affected-file prune (`filePrune`). A DML touching every
+  //      file, or a table whose files are not local, gets no prune and
+  //      links nothing: the full rewrite is this same path;
+  //   6. capture the RETURNING rows, pinned, before the swap;
+  //   7. swap the form's rewrite of the affected rows in, hard-linking the
+  //      untouched files forward (`swap`);
+  //   8. set `lastCowStats` and build the `Count` (DuckDB's 1-row result:
+  //      rows deleted / updated) or RETURNING result.
+  // A form supplies only its `CowForm`. Plain forms count with one
+  // pushed-filter scan grouped by file and rewrite through the predicate;
+  // joined forms checkpoint their matched (file, row) ids once and rewrite
+  // through a join on them, so the source is scanned once.
 
   private val deleteRe =
     "(?is)^\\s*DELETE\\s+FROM\\s+([\\w.`\"]+)(?:\\s+WHERE\\s+(.+?))?(?:\\s+RETURNING\\s+(.+?))?\\s*$".r
@@ -421,30 +440,78 @@ object Engine {
   private val truncateBareRe =
     "(?is)^\\s*TRUNCATE\\s+(?!TABLE\\b)([\\w.`\"]+)\\s*;?\\s*$".r
 
-  /** `UPDATE t SET … FROM src WHERE cond` — the joined-update form.
-    * Rewrites the table through one LEFT JOIN against the source: each
-    * target row takes the SET expressions from its FIRST matching source
-    * row (a row_number over a synthetic row id — DuckDB's own multi-match
-    * pick is likewise unspecified), unmatched rows pass through. SET and
-    * WHERE see both the target name and the source alias, exactly
-    * DuckDB's scoping. */
+  /** What one DML form hands `copyOnWrite`:
+    *   - `perFile`: (file path as `_metadata.file_path` spells it, matched
+    *     rows) for each file holding a match — built, not yet run;
+    *   - `rewrite`: the new rows of the files the prune predicate keeps
+    *     (`"true"` keeps every file);
+    *   - `returned`: the RETURNING rows under the prune, pinned so they
+    *     survive the swap. */
+  private final case class CowForm(perFile: DataFrame,
+      rewrite: String => DataFrame, returned: String => DataFrame)
+
+  /** The target scan tagged with each row's COW identity. */
+  private def idScan(table: String): String =
+    s"SELECT *, _metadata.file_path AS __g_f, _metadata.row_index AS __g_r FROM $table"
+
+  /** Per-file matched counts of a plain (unjoined) DML: one pushed-filter
+    * scan grouped by file, which is also the matched-row count. */
+  private def perFileMatches(spark: SparkSession, table: String,
+      where: Option[String]): DataFrame =
+    sql(spark, s"SELECT _metadata.file_path AS f, CAST(count(*) AS BIGINT) AS c " +
+      s"FROM $table${where.fold("")(w => s" WHERE ($w)")} GROUP BY _metadata.file_path")
+
+  /** The copy-on-write driver (steps in the section comment above). `form`
+    * is built under the lock, after the listing, so its frames see exactly
+    * the listed files; an analysis error in it surfaces before any job. */
+  private def copyOnWrite(spark: SparkSession, table: String,
+      returning: Option[String])(form: => CowForm): DataFrame =
+    tableWriteLock(table).synchronized {
+      requireDmlTarget(spark, table)
+      val files = spark.table(table).inputFiles.toSeq
+      val f = form
+      val perFile = if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else f.perFile.collect()
+      val matched = perFile.map(_.getLong(1)).sum
+      val affected = perFile.map(_.getString(0)).toSeq
+      val affectedSet = affected.map(fsPath).toSet
+      val untouched = files.filterNot(p => affectedSet.contains(fsPath(p)))
+      // hard links need the local filesystem (an hdfs:// or s3a:// path's
+      // URI path also starts with "/", so test the spelling itself)
+      val link =
+        if (matched == 0L || files.forall(p => p.startsWith("/") || p.startsWith("file:")))
+          untouched
+        else Nil
+      val rows =
+        if (matched == 0L) returning.map(_ => sql(spark, s"SELECT * FROM $table WHERE false"))
+        else withViews(spark) { views =>
+          val prune = if (link.isEmpty) "true" else filePrune(spark, views, affected)
+          val pinned = returning.map(_ => f.returned(prune))
+          swap(spark, table, f.rewrite(prune), link)
+          pinned
+        }
+      lastCowStats.set((files.length, files.length - link.length, link.length))
+      (rows, returning) match {
+        case (Some(r), Some(proj)) => returningFrame(spark, r, proj)
+        case _ =>
+          import spark.implicits._
+          Seq(matched).toDF("Count")
+      }
+    }
+
+  /** `UPDATE t SET … FROM src WHERE cond` — the joined-update form. One
+    * inner join against the source emits only the matched target rows —
+    * their post-SET values plus their (file, row) identity — checkpointed
+    * once (size = matched rows, not the table). The counts, the RETURNING
+    * rows and the rewrite all derive from that checkpoint: affected files
+    * are re-read and LEFT-joined against it on the (file, row) key
+    * (broadcast when small). Each target row takes the SET expressions
+    * from its FIRST matching source row; SET and WHERE see both the target
+    * name and the source alias, exactly DuckDB's scoping. */
   private def runUpdateFrom(spark: SparkSession, table0: String,
       setClause: String, fromSrc: String, where: String,
       returning: Option[String]): DataFrame = {
     val table = table0.replaceAll("[`\"]", "")
-    requireDmlTarget(spark, table)
-    val sets = splitAssignments(setClause)
-    val fields = spark.table(table).schema.fields
-    sets.foreach { case (c, _) =>
-      require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
-    }
-    val selectList = fields.map { f =>
-      sets.find(_._1.equalsIgnoreCase(f.name)) match {
-        case Some((_, e)) =>
-          s"CAST(CASE WHEN __g_m THEN ($e) ELSE $table.${f.name} END AS ${f.dataType.sql}) AS ${f.name}"
-        case None => s"$table.${f.name} AS ${f.name}"
-      }
-    }
     // the source gets the __g_m match marker inside a derived table that
     // is RE-ALIASED under the user's own alias (or the bare relation
     // name), so SET and WHERE resolve exactly as written
@@ -460,13 +527,13 @@ object Engine {
     // row in scan order (no error; probed {(1,200),(1,100)} → 200,
     // range(5) → 0). For file-backed sources, (file write order,
     // _metadata.row_index) IS insertion order (file bin-packing reorders
-    // read partitions by size, so monotonically_increasing_id is NOT).
+    // read partitions by size, so a generated row id is NOT).
     // When every source file is a standard part-NNNNN, the part number
     // packs with row_index into ONE bigint — a 60-byte path string per
     // joined row through the exchange+sort measured q188 2.4 → 3.1 s;
-    // non-part file names keep the exact (path, row_index) pair; non-file
-    // sources (subqueries) fall back to the monotonic id — deterministic
-    // per layout, order engine-defined (documented).
+    // non-part file names keep the exact (path, row_index) pair. A source
+    // with no file identity (a subquery, a view over a join) has no scan
+    // order to honour: its pick among several matches is engine-defined.
     val partFileRe = ".*/part-(\\d+)[^/]*".r
     val srcFiles: Option[Array[String]] =
       if (bareNameRe.pattern.matcher(srcRel.trim).matches())
@@ -506,174 +573,69 @@ object Engine {
         s"((CAST(regexp_extract(_metadata.file_path, 'part-(\\d+)', 1) AS BIGINT) * ${1L << 40}) + _metadata.row_index) AS __g_srow"
       case Some(_) =>
         "_metadata.file_path AS __g_sfile, _metadata.row_index AS __g_srow"
-      case None =>
-        "monotonically_increasing_id() AS __g_srow"
+      case None => "0 AS __g_srow"
     }
     val sfileSort = if (sidCols.contains("__g_sfile")) "__g_sfile, " else ""
-    // r9 one-pass copy-on-write: ONE inner join against the source emits
-    // only the matched target rows — their post-SET values plus their
-    // (_metadata.file_path, row_index) identity — checkpointed once (size
-    // = matched rows, not the table). The matched count, the RETURNING
-    // frame, the affected-file set, AND the rewrite all derive from that
-    // checkpoint: affected files are re-read and LEFT-joined against it
-    // on the (file, row) key (broadcast when small), untouched files are
-    // linked forward byte-identical, and the source is never scanned a
-    // second time — at 100 TB a selective joined UPDATE costs one
-    // source scan + one target scan + a rewrite of the affected files.
     // The predicate is NOT coalesce-wrapped: in JOIN ON a NULL condition
     // already means no-match, and the naked conjunction lets Catalyst
     // split it, push source-only filters into the scan, and detect
-    // equi-join keys (→ broadcast). coalesce(p, false) is kept ONLY under
-    // NOT (the DELETE keep-side fallback), where NULL must surface as
-    // false rather than poison the negation.
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, when}
-    localFiles(spark, table) match {
-      case Some(allFiles) =>
-        val matchedSql =
-          s"SELECT ${fields.map(_.name).mkString(", ")}, __g_f, __g_r FROM (" +
-            s"SELECT ${selectList.mkString(", ")}, __g_f, __g_r, " +
-            s"row_number() OVER (PARTITION BY __g_f, __g_r ORDER BY ${sfileSort}__g_srow) AS __g_rn " +
-            s"FROM (SELECT *, _metadata.file_path AS __g_f, _metadata.row_index AS __g_r FROM $table) $table " +
-            s"JOIN (SELECT *, true AS __g_m, $sidCols FROM $srcRel) $srcAlias " +
-            s"ON ($where)) WHERE __g_rn = 1"
-        // lazy checkpoint: materialized by the per-file agg action right
-        // below (one job, not two); pinned before the swap either way
-        val matched = sql(spark, matchedSql).localCheckpoint(false)
-        // ONE action yields both the matched count and the affected files
-        val perFile = matched.groupBy("__g_f").count().collect()
-        val matchedN = perFile.map(_.getLong(1)).sum
-        if (matchedN == 0L) {
-          // no target row matches: the table is untouched — no swap
-          lastCowStats.set((allFiles.length, 0, allFiles.length))
-          return returning match {
-            case Some(proj) => returningFrame(spark, matched.drop("__g_f", "__g_r"), proj)
-            case None => Seq(0L).toDF("Count")
-          }
+    // equi-join keys (→ broadcast).
+    copyOnWrite(spark, table, returning) {
+      val sets = splitAssignments(setClause)
+      val fields = spark.table(table).schema.fields
+      sets.foreach { case (c, _) =>
+        require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
+      }
+      val selectList = fields.map { f =>
+        sets.find(_._1.equalsIgnoreCase(f.name)) match {
+          case Some((_, e)) =>
+            s"CAST(CASE WHEN __g_m THEN ($e) ELSE $table.${f.name} END AS ${f.dataType.sql}) AS ${f.name}"
+          case None => s"$table.${f.name} AS ${f.name}"
         }
-        val affected = perFile.map(_.getString(0)).toSeq
-        val affectedSet = affected.map(fsPath).toSet
-        val untouched = allFiles.filterNot(f => affectedSet.contains(fsPath(f)))
-        val target = sql(spark,
-          s"SELECT *, _metadata.file_path AS __g_f, _metadata.row_index AS __g_r " +
-            s"FROM $table" + (if (untouched.nonEmpty)
-              s" WHERE ${filePrune(spark, affected)}" else ""))
-        val mPref = matched.select(
-          fields.toSeq.map(f => matched(f.name).as(s"__g_n_${f.name}")) ++
-            Seq(matched("__g_f"), matched("__g_r"), lit(true).as("__g_hit")): _*)
-        val newRows = target.join(mPref, Seq("__g_f", "__g_r"), "left")
+      }
+      // lazy checkpoint: materialized by the per-file count (one job, not two)
+      val matched = sql(spark,
+        s"SELECT ${fields.map(_.name).mkString(", ")}, __g_f, __g_r FROM (" +
+          s"SELECT ${selectList.mkString(", ")}, __g_f, __g_r, " +
+          s"row_number() OVER (PARTITION BY __g_f, __g_r ORDER BY ${sfileSort}__g_srow) AS __g_rn " +
+          s"FROM (${idScan(table)}) $table " +
+          s"JOIN (SELECT *, true AS __g_m, $sidCols FROM $srcRel) $srcAlias " +
+          s"ON ($where)) WHERE __g_rn = 1").localCheckpoint(false)
+      import org.apache.spark.sql.functions.{col, lit, when}
+      val mPref = matched.select(
+        fields.toSeq.map(f => matched(f.name).as(s"__g_n_${f.name}")) ++
+          Seq(matched("__g_f"), matched("__g_r"), lit(true).as("__g_hit")): _*)
+      CowForm(matched.groupBy("__g_f").count(),
+        prune => sql(spark, s"${idScan(table)} WHERE $prune")
+          .join(mPref, Seq("__g_f", "__g_r"), "left")
           .select(fields.toSeq.map(f =>
             when(col("__g_hit"), col(s"__g_n_${f.name}"))
-              .otherwise(col(f.name)).as(f.name)): _*)
-        if (untouched.nonEmpty) cowSwapInto(spark, table, newRows, untouched)
-        else swapInto(spark, table, newRows)
-        lastCowStats.set((allFiles.length, affected.length, untouched.length))
-        returning match {
-          case Some(proj) => returningFrame(spark, matched.drop("__g_f", "__g_r"), proj)
-          case None => Seq(matchedN).toDF("Count")
-        }
-      case None =>
-        // non-file-backed target: the single-statement LEFT JOIN full
-        // rewrite (row identity via monotonic id — order engine-defined)
-        val joinSql =
-          s"SELECT ${selectList.mkString(", ")}, __g_rid, __g_m, " +
-            s"row_number() OVER (PARTITION BY __g_rid ORDER BY __g_m DESC, ${sfileSort}__g_srow) AS __g_rn " +
-            s"FROM (SELECT *, monotonically_increasing_id() AS __g_rid FROM $table) $table " +
-            s"LEFT JOIN (SELECT *, true AS __g_m, $sidCols FROM $srcRel) $srcAlias " +
-            s"ON ($where)"
-        val newRows = sql(spark,
-          s"SELECT ${fields.map(_.name).mkString(", ")} FROM ($joinSql) WHERE __g_rn = 1")
-        val ret = returning.map { proj =>
-          val matchedNew = sql(spark,
-            s"SELECT ${fields.map(_.name).mkString(", ")} FROM ($joinSql) " +
-              "WHERE __g_rn = 1 AND coalesce(__g_m, false)").localCheckpoint(true)
-          (matchedNew, proj)
-        }
-        // matched-row count against the OLD table, BEFORE the swap
-        val matched =
-          if (returning.isEmpty)
-            sql(spark, s"SELECT CAST(count(*) AS BIGINT) AS n FROM ($joinSql) " +
-              "WHERE __g_rn = 1 AND coalesce(__g_m, false)").head.getLong(0)
-          else 0L
-        swapInto(spark, table, newRows)
-        ret match {
-          case Some((matchedNew, proj)) => returningFrame(spark, matchedNew, proj)
-          case None => Seq(matched).toDF("Count")
-        }
+              .otherwise(col(f.name)).as(f.name)): _*),
+        _ => matched.drop("__g_f", "__g_r"))
     }
   }
 
   /** `DELETE FROM t USING src WHERE cond` — rows with ANY match are
-    * removed (EXISTS anti-join; NULL/FALSE conditions keep the row, the
-    * plain-DELETE contract). */
+    * removed (NULL/FALSE conditions keep the row, the plain-DELETE
+    * contract). One join against the source emits the (file, row) ids of
+    * the removed rows, checkpointed once; the rewrite anti-joins the
+    * affected files against them, RETURNING semi-joins. */
   private def runDeleteUsing(spark: SparkSession, table0: String,
       using: String, where: String, returning: Option[String]): DataFrame = {
     val table = table0.replaceAll("[`\"]", "")
-    requireDmlTarget(spark, table)
-    val existsCond = s"EXISTS (SELECT 1 FROM $using WHERE ($where))"
-    // r9 one-pass copy-on-write (see runUpdateFrom): ONE semi-join pass
-    // against the source emits only the (_metadata.file_path, row_index)
-    // ids of removed rows — checkpointed once (16 bytes+path per removed
-    // row, not the table). The removed count, affected files, RETURNING
-    // frame, and the survivors-of-affected rewrite (an anti-join against
-    // the small checkpoint, broadcast when small) all derive from it; the
-    // source is never scanned twice, untouched files link forward.
-    import spark.implicits._
-    localFiles(spark, table) match {
-      case Some(allFiles) =>
-        // INNER JOIN + DISTINCT, not LEFT SEMI: a semi join can only
-        // broadcast-build its right (source) side, while the inner form
-        // lets AQE broadcast whichever side is smaller — usually the
-        // pruned target probe, with the source streaming past it.
-        val matched = sql(spark,
-          s"SELECT DISTINCT __g_f, __g_r FROM " +
-            s"(SELECT *, _metadata.file_path AS __g_f, _metadata.row_index AS __g_r FROM $table) $table " +
-            s"JOIN $using ON ($where)").localCheckpoint(false)
-        // ONE action yields both the removed count and the affected files
-        val perFile = matched.groupBy("__g_f").count().collect()
-        val removed = perFile.map(_.getLong(1)).sum
-        if (removed == 0L) {
-          lastCowStats.set((allFiles.length, 0, allFiles.length))
-          returning match {
-            case Some(proj) =>
-              returningFrame(spark, sql(spark, s"SELECT * FROM $table WHERE false"), proj)
-            case None => Seq(0L).toDF("Count")
-          }
-        } else {
-          val affected = perFile.map(_.getString(0)).toSeq
-          val affectedSet = affected.map(fsPath).toSet
-          val untouched = allFiles.filterNot(f => affectedSet.contains(fsPath(f)))
-          val target = sql(spark,
-            s"SELECT *, _metadata.file_path AS __g_f, _metadata.row_index AS __g_r " +
-              s"FROM $table" + (if (untouched.nonEmpty)
-                s" WHERE ${filePrune(spark, affected)}" else ""))
-          val deleted = returning.map { _ =>
-            target.join(matched, Seq("__g_f", "__g_r"), "semi")
-              .drop("__g_f", "__g_r").localCheckpoint(true)
-          }
-          val kept = target.join(matched, Seq("__g_f", "__g_r"), "anti")
-            .drop("__g_f", "__g_r")
-          if (untouched.nonEmpty) cowSwapInto(spark, table, kept, untouched)
-          else swapInto(spark, table, kept)
-          lastCowStats.set((allFiles.length, affected.length, untouched.length))
-          (returning, deleted) match {
-            case (Some(proj), Some(d)) => returningFrame(spark, d, proj)
-            case _ => Seq(removed).toDF("Count")
-          }
-        }
-      case None =>
-        val deleted = returning.map { _ =>
-          sql(spark, s"SELECT * FROM $table WHERE $existsCond").localCheckpoint(true)
-        }
-        val total = spark.table(table).count()
-        val kept = sql(spark, s"SELECT * FROM $table WHERE NOT $existsCond")
-        val keptN = swapInto(spark, table, kept)
-        (returning, deleted) match {
-          case (Some(proj), Some(d)) => returningFrame(spark, d, proj)
-          case _ =>
-            // the plain-DELETE Count contract: removed rows
-            Seq(total - keptN).toDF("Count")
-        }
+    copyOnWrite(spark, table, returning) {
+      // INNER JOIN + DISTINCT, not LEFT SEMI: a semi join can only
+      // broadcast-build its right (source) side, while the inner form
+      // lets AQE broadcast whichever side is smaller — usually the
+      // pruned target probe, with the source streaming past it.
+      val matched = sql(spark,
+        s"SELECT DISTINCT __g_f, __g_r FROM (${idScan(table)}) $table " +
+          s"JOIN $using ON ($where)").localCheckpoint(false)
+      def target(prune: String, how: String) =
+        sql(spark, s"${idScan(table)} WHERE $prune")
+          .join(matched, Seq("__g_f", "__g_r"), how).drop("__g_f", "__g_r")
+      CowForm(matched.groupBy("__g_f").count(),
+        target(_, "anti"), target(_, "semi").localCheckpoint(true))
     }
   }
   // INSERT … RETURNING (r7): DuckDB returns the inserted rows (after
@@ -721,26 +683,46 @@ object Engine {
     * pays at most ONE rewrite (the r8 coalescer contract). */
   private[graft] val swapCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Rewrite `table` to df's rows atomically; returns the new row count.
-    * `schemaChanged` = true only for the ALTER column-op callers — pure
-    * DML rewrites keep the schema and take the cheaper data-version bump
-    * (r17, VERDICT r16 #5). */
-  private def swapInto(spark: SparkSession, table: String,
-      df: DataFrame, schemaChanged: Boolean = false): Long = {
+  /** Replace `table` by `rows` atomically — the one swap behind DML, the
+    * ALTER column ops and compaction. The rows land in a tmp table; each
+    * file in `link` (the untouched files of a COW DML) is hard-linked into
+    * its directory (copy fallback for filesystems without links); then the
+    * original is dropped and the tmp renamed over it, all under the
+    * table's write lock. Parquet files are never mutated in place, so
+    * sharing inodes is safe, and the original directory is untouched
+    * until the rename: a crash leaves the table intact. A selective DML on
+    * a 100 TB table therefore costs O(affected files) — the single-node
+    * equivalent of a manifest commit carrying immutable files forward.
+    * `schemaChanged` = true only for the ALTER callers — row rewrites
+    * keep the schema and take the cheaper data-version bump (r17). */
+  private[graft] def swap(spark: SparkSession, table: String, rows: DataFrame,
+      link: Seq[String] = Nil, schemaChanged: Boolean = false): Unit = {
     swapCount.incrementAndGet()
     val tmp = table + "__rewriting"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs,
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"))
     tableWriteLock(table).synchronized {
-      observed.write.format("parquet").saveAsTable(tmp)
+      spark.sql(s"DROP TABLE IF EXISTS $tmp")
+      rows.write.format("parquet").saveAsTable(tmp)
+      if (link.nonEmpty) {
+        val dir = java.nio.file.Paths.get(fsPath(
+          spark.sessionState.catalog.getTableMetadata(
+            spark.sessionState.sqlParser.parseTableIdentifier(tmp)).location.toString))
+        link.zipWithIndex.foreach { case (f, i) =>
+          val src = java.nio.file.Paths.get(fsPath(f))
+          val dst0 = dir.resolve(src.getFileName)
+          val dst = if (java.nio.file.Files.exists(dst0))
+            dir.resolve(s"link-$i-${src.getFileName}") else dst0
+          try java.nio.file.Files.createLink(dst, src)
+          catch {
+            case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+              java.nio.file.Files.copy(src, dst)
+          }
+        }
+      }
       spark.sql(s"DROP TABLE $table")
       spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
     }
-    dropCowPruneView(spark)
+    spark.catalog.refreshTable(table)
     if (schemaChanged) bumpCatalogVersion() else bumpDataVersion()
-    obs.get("n").asInstanceOf[Long]
   }
 
   /** File stats of the last copy-on-write DML — PlanAudit asserts a
@@ -756,233 +738,69 @@ object Engine {
       if (p == null || p.isEmpty) s else p
     } catch { case _: Exception => s }
 
-  /** SQL literal list for a `_metadata.file_path IN (…)` prune. */
-  private def fileInList(files: Seq[String]): String =
-    files.map(f => "'" + f.replace("'", "''") + "'").mkString("(", ", ", ")")
-
   /** Which prune shape the last COW DML built — "literal" below the
     * threshold, "semijoin" above. PlanAudit and the COW spec assert the
     * switch actually fires. */
   private[graft] val lastCowPrune =
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
-  /** Per-call unique semijoin-prune view (r11 advisor fix): a FIXED name
-    * would let two concurrent COW DMLs on one session overwrite each
-    * other's path list between view creation and execution, pruning
-    * against the wrong file set — and leak into the session catalog.
-    * Name is unique per call; the thread's view is dropped at the end of
-    * its swap (all consumers have executed by then: RETURNING frames are
-    * eagerly checkpointed, the rewrite runs inside the swap). */
-  private val cowPruneSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private val cowPruneView = new ThreadLocal[String]()
-  private def dropCowPruneView(spark: SparkSession): Unit = {
-    val v = cowPruneView.get()
-    if (v != null) {
-      try spark.catalog.dropTempView(v) catch { case _: Exception => }
-      cowPruneView.remove()
-    }
-  }
-
-  /** A DML's RETURNING projection over `rows`. Same per-call naming as the
-    * prune view above: a fixed view name would let two concurrent
-    * RETURNING statements on one session overwrite each other's rows
-    * between registration and analysis. The view is dropped as soon as the
-    * frame is analyzed, so none is left in the session catalog. */
-  private val returningSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private def returningFrame(spark: SparkSession, rows: DataFrame, proj: String): DataFrame = {
-    val vn = s"graft_returning_${returningSeq.incrementAndGet()}"
-    rows.createOrReplaceTempView(vn)
-    try sql(spark, s"SELECT $proj FROM $vn")
-    finally spark.catalog.dropTempView(vn)
-  }
+  /** A DML's RETURNING projection over `rows`, through a statement-scoped
+    * view: dropped as soon as the frame is analyzed. */
+  private def returningFrame(spark: SparkSession, rows: DataFrame, proj: String): DataFrame =
+    withViews(spark)(v => sql(spark, s"SELECT $proj FROM ${v.add("returning", rows)}"))
 
   /** Affected-file scan prune (r10, VERDICT r9 #5). Below
     * `graft.cow.inlist.max` files (default 1000): a literal IN list —
     * Catalyst converts it to an O(1) InSet and statically prunes the file
     * index, so a selective DML reads only affected bytes. Above it: an
-    * IN-subquery against a LocalRelation of paths, planned as a broadcast
-    * semi-join — a broad UPDATE touching 10⁵–10⁶ files of a 100 TB table
-    * would otherwise build a multi-MB SQL literal with a matching parse
-    * bill (measured on this box: 10⁵ paths ≈ 8.5 MB SQL, 1.74 s
-    * parse+optimize vs 0.22 s via the subquery; at 10³–10⁴ both are
-    * noise, and the literal's static file pruning wins there). */
-  private def filePrune(spark: SparkSession, files: Seq[String]): String = {
+    * IN-subquery against a LocalRelation of paths (a statement-scoped
+    * view), planned as a broadcast semi-join — a broad UPDATE touching
+    * 10⁵–10⁶ files of a 100 TB table would otherwise build a multi-MB SQL
+    * literal with a matching parse bill (measured on this box: 10⁵ paths
+    * ≈ 8.5 MB SQL, 1.74 s parse+optimize vs 0.22 s via the subquery; at
+    * 10³–10⁴ both are noise, and the literal's static file pruning wins
+    * there). */
+  private def filePrune(spark: SparkSession, views: StatementViews,
+      files: Seq[String]): String = {
     val max = try spark.conf.get("graft.cow.inlist.max", "1000").toInt
       catch { case _: Exception => 1000 }
     if (files.length <= max) {
       lastCowPrune.set("literal")
-      s"_metadata.file_path IN ${fileInList(files)}"
+      "_metadata.file_path IN " +
+        files.map(f => "'" + f.replace("'", "''") + "'").mkString("(", ", ", ")")
     } else {
       lastCowPrune.set("semijoin")
       import spark.implicits._
-      // self-heal: a prior DML on this thread that failed before its swap
-      // leaves its view behind — drop it before registering a fresh one
-      dropCowPruneView(spark)
-      val vn = s"graft_cow_affected_${cowPruneSeq.incrementAndGet()}"
-      files.toDF("__g_path").createOrReplaceTempView(vn)
-      cowPruneView.set(vn)
-      s"_metadata.file_path IN (SELECT __g_path FROM $vn)"
+      s"_metadata.file_path IN (SELECT __g_path FROM ${views.add("cow_affected", files.toDF("__g_path"))})"
     }
   }
 
-  /** All data files of a local file-backed table — the precondition for
-    * the one-pass joined-DML COW path, whose row identity is
-    * (_metadata.file_path, row_index). None when the table is not
-    * file-backed or not local (callers take the full-rewrite path). */
-  private def localFiles(spark: SparkSession, table: String): Option[Seq[String]] =
-    try {
-      val all = spark.table(table).inputFiles.toSeq
-      // _metadata must resolve for the (file, row) identity to exist;
-      // select() analyzes eagerly and throws exactly when it would not
-      spark.table(table).select(
-        org.apache.spark.sql.functions.col("_metadata.file_path"),
-        org.apache.spark.sql.functions.col("_metadata.row_index"))
-      if (all.isEmpty || all.exists(f => !fsPath(f).startsWith("/"))) None
-      else Some(all)
-    } catch { case _: Exception => None }
-
-  /** Copy-on-write file split for a DML (r9): `matchSql` must be one
-    * pushed-filter scan returning (file_path, matched_count) per file that
-    * holds at least one matched row. Returns (affected file paths as
-    * `_metadata.file_path` spells them, untouched files as inputFiles
-    * spells them, matched row count); None when the table is not
-    * file-backed or the probe fails (caller then takes the full-rewrite
-    * path). affected empty ⇒ the DML is a no-op; untouched empty ⇒ every
-    * file holds a match and COW degenerates to the full rewrite. */
-  private def cowSplit(spark: SparkSession, table: String,
-      matchSql: String): Option[(Seq[String], Seq[String], Long)] =
-    try {
-      val all = spark.table(table).inputFiles.toSeq
-      if (all.isEmpty || all.exists(f => !fsPath(f).startsWith("/"))) None
-      else {
-        val perFile = sql(spark, matchSql).collect()
-        val affected = perFile.map(_.getString(0)).toSeq
-        val matched = perFile.map(_.getLong(1)).sum
-        val affectedSet = affected.map(fsPath).toSet
-        val untouched = all.filterNot(f => affectedSet.contains(fsPath(f)))
-        Some((affected, untouched, matched))
-      }
-    } catch { case _: Exception => None }
-
-  /** File-level copy-on-write rewrite (r9, the 100 TB DML posture): only
-    * the rows of the affected files are decoded and re-encoded through
-    * `rewritten`; every untouched parquet file is hard-linked (copy
-    * fallback for filesystems without links) into the replacement table's
-    * directory before the same atomic drop+rename swap `swapInto` does.
-    * A selective UPDATE on a 100 TB table therefore costs O(affected
-    * files), not one full-corpus rewrite — the hard link is the
-    * single-node equivalent of a manifest commit that carries an
-    * immutable data file forward (parquet files are never mutated in
-    * place, so sharing inodes is safe, and the original directory is
-    * untouched until the final rename: a crash leaves the table intact).
-    * The reference delegates DML to its embedded engine
-    * (`main.py:231`); file-granular rewrite is this engine's own scale
-    * design. Returns the rewritten-row count. */
-  private def cowSwapInto(spark: SparkSession, table: String,
-      rewritten: DataFrame, untouched: Seq[String]): Long = {
-    swapCount.incrementAndGet()
-    val tmp = table + "__rewriting"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    val obs = org.apache.spark.sql.Observation()
-    val observed = rewritten.observe(obs,
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"))
-    tableWriteLock(table).synchronized {
-      observed.write.format("parquet").saveAsTable(tmp)
-      val dir = java.nio.file.Paths.get(fsPath(
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(tmp)).location.toString))
-      untouched.zipWithIndex.foreach { case (f, i) =>
-        val src = java.nio.file.Paths.get(fsPath(f))
-        val dst0 = dir.resolve(src.getFileName)
-        val dst = if (java.nio.file.Files.exists(dst0))
-          dir.resolve(s"link-$i-${src.getFileName}") else dst0
-        try java.nio.file.Files.createLink(dst, src)
-        catch {
-          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-            java.nio.file.Files.copy(src, dst)
-        }
-      }
-      spark.sql(s"DROP TABLE $table")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    }
-    dropCowPruneView(spark)
-    spark.catalog.refreshTable(table)
-    bumpDataVersion() // COW UPDATE/DELETE: schema unchanged (r17)
-    obs.get("n").asInstanceOf[Long]
-  }
-
-  /** DML requires a real (managed/external) catalog table — tableExists is
-    * true for temp views too, and a DELETE against a fixture view would
-    * otherwise drop the view and swap a managed table in over it. */
+  /** DML requires a real (managed/external) catalog table whose rows carry
+    * `_metadata.file_path` — the COW row identity. tableExists is true for
+    * temp views too, and a DELETE against a fixture view would otherwise
+    * drop the view and swap a managed table in over it. */
   private def requireDmlTarget(spark: SparkSession, table: String): Unit = {
     val ok = try {
       val t = spark.catalog.getTable(table)
-      t.tableType == "MANAGED" || t.tableType == "EXTERNAL"
+      // select() analyzes eagerly: it throws when _metadata does not resolve
+      (t.tableType == "MANAGED" || t.tableType == "EXTERNAL") && {
+        spark.table(table).select(org.apache.spark.sql.functions.col("_metadata.file_path"))
+        true
+      }
     } catch { case _: Exception => false }
-    require(ok, s"DML target '$table' is not a managed catalog table")
+    require(ok, s"DML target '$table' is not a file-backed managed catalog table")
   }
 
   private def runDelete(spark: SparkSession, table0: String,
-      where: String, returning: Option[String] = None): DataFrame = {
+      where0: String, returning: Option[String]): DataFrame = {
     val table = table0.replaceAll("[`\"]", "")
-    requireDmlTarget(spark, table)
-    val hasWhere = where != null && where.trim.nonEmpty
-    // r9 copy-on-write: one pushed-filter scan finds the files that hold
-    // matched rows (and the removed-row count for free); only those files
-    // are rewritten, the rest are linked forward byte-identical.
-    val split = if (hasWhere) cowSplit(spark, table,
-      s"SELECT _metadata.file_path AS f, CAST(count(*) AS BIGINT) AS c " +
-        s"FROM $table WHERE ($where) " +
-        "GROUP BY _metadata.file_path") else None
-    split match {
-      case Some((affected, untouched, matched)) if untouched.nonEmpty =>
-        import spark.implicits._
-        if (matched == 0L) {
-          // no row matches: the table is untouched — no rewrite at all
-          lastCowStats.set((untouched.length, 0, untouched.length))
-          return returning match {
-            case Some(proj) =>
-              returningFrame(spark, sql(spark, s"SELECT * FROM $table WHERE false"), proj)
-            case None => Seq(0L).toDF("Count")
-          }
-        }
-        val prune = filePrune(spark, affected)
-        val deleted = returning.map { _ =>
-          sql(spark, s"SELECT * FROM $table WHERE $prune " +
-            s"AND ($where)").localCheckpoint(true)
-        }
-        cowSwapInto(spark, table, sql(spark,
-          s"SELECT * FROM $table WHERE $prune " +
-            s"AND NOT coalesce(($where), false)"), untouched)
-        lastCowStats.set((affected.length + untouched.length,
-          affected.length, untouched.length))
-        returning match {
-          case Some(proj) => returningFrame(spark, deleted.get, proj)
-          case None => Seq(matched).toDF("Count")
-        }
-      case _ =>
-        val total = spark.table(table).count()
-        // DELETE … RETURNING (r7): the deleted rows, captured (and pinned
-        // via localCheckpoint) BEFORE the swap rewrites the table
-        val deleted = returning.map { _ =>
-          val delSql =
-            if (!hasWhere) s"SELECT * FROM $table"
-            else s"SELECT * FROM $table WHERE ($where)"
-          sql(spark, delSql).localCheckpoint(true)
-        }
-        // SQL DELETE removes rows where the predicate is TRUE; FALSE and
-        // NULL survive — hence NOT coalesce(pred, false)
-        val keepSql =
-          if (!hasWhere) s"SELECT * FROM $table WHERE false"
-          else s"SELECT * FROM $table WHERE NOT coalesce(($where), false)"
-        val keptN = swapInto(spark, table, sql(spark, keepSql))
-        returning match {
-          case Some(proj) => returningFrame(spark, deleted.get, proj)
-          case None =>
-            import spark.implicits._
-            Seq(total - keptN).toDF("Count")
-        }
-    }
+    val where = Option(where0).filter(_.trim.nonEmpty)
+    // SQL DELETE removes rows where the predicate is TRUE; FALSE and NULL
+    // survive — hence NOT coalesce(pred, false)
+    val hit = where.fold("true")(w => s"coalesce(($w), false)")
+    copyOnWrite(spark, table, returning)(CowForm(perFileMatches(spark, table, where),
+      prune => sql(spark, s"SELECT * FROM $table WHERE $prune AND NOT $hit"),
+      prune => sql(spark, s"SELECT * FROM $table WHERE $prune AND $hit").localCheckpoint(true)))
   }
 
   /** Top-level comma split honoring parens/brackets and string literals. */
@@ -1010,92 +828,31 @@ object Engine {
   }
 
   private def runUpdate(spark: SparkSession, table0: String, setClause: String,
-      where: Option[String], returning: Option[String] = None): DataFrame = {
+      where: Option[String], returning: Option[String]): DataFrame = {
     val table = table0.replaceAll("[`\"]", "")
-    requireDmlTarget(spark, table)
-    val sets = splitAssignments(setClause)
-    val fields = spark.table(table).schema.fields
-    sets.foreach { case (c, _) =>
-      require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
-    }
-    // r9 copy-on-write: the matched-row count scan doubles as the
-    // file-granular probe — only files holding matched rows get rewritten
-    // (SET-projected), untouched ones are linked forward byte-identical.
-    val split = where.flatMap(w => cowSplit(spark, table,
-      s"SELECT _metadata.file_path AS f, CAST(count(*) AS BIGINT) AS c " +
-        s"FROM $table WHERE ($w) " +
-        "GROUP BY _metadata.file_path"))
-    val matched = split match {
-      case Some((_, _, m)) => m
-      case None => where match {
-        case Some(w) => sql(spark,
-          s"SELECT CAST(count(*) AS BIGINT) AS n FROM $table WHERE ($w)")
-          .head.getLong(0)
-        case None => spark.table(table).count()
+    copyOnWrite(spark, table, returning) {
+      val sets = splitAssignments(setClause)
+      val fields = spark.table(table).schema.fields
+      sets.foreach { case (c, _) =>
+        require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
       }
-    }
-    // `cow` is filtered on m > 0, so a no-op UPDATE (matched == 0) never
-    // reaches filePrune here — no semijoin view is registered on the
-    // early-return path below (adjudicated against advice r12; the COW
-    // spec pins it with graft.cow.inlist.max = 0)
-    val cow = split.filter { case (a, u, m) => m > 0 && u.nonEmpty && a.nonEmpty }
-    val prune = cow.map { case (a, _, _) => filePrune(spark, a) }
-    if (split.isDefined && matched == 0L) {
-      // no row matches: the table is untouched — no rewrite at all
-      val (_, u, _) = split.get
-      lastCowStats.set((u.length, 0, u.length))
-      return returning match {
-        case Some(proj) =>
-          returningFrame(spark, sql(spark, s"SELECT * FROM $table WHERE false"), proj)
-        case None =>
-          import spark.implicits._
-          Seq(0L).toDF("Count")
-      }
-    }
-    val selectList = fields.map { f =>
-      sets.find(_._1.equalsIgnoreCase(f.name)) match {
-        case Some((_, e)) =>
-          // cast to the column's type (DuckDB UPDATE coerces the same way)
-          val guarded = where match {
-            case Some(w) => s"CASE WHEN coalesce(($w), false) THEN ($e) ELSE ${f.name} END"
-            case None => s"($e)"
-          }
-          s"CAST($guarded AS ${f.dataType.sql}) AS ${f.name}"
-        case None => f.name
-      }
-    }
-    // UPDATE … RETURNING (r7): DuckDB returns the NEW (post-SET) rows of
-    // the matched set — built unconditionally over the matched rows and
-    // pinned BEFORE the swap
-    val updatedRows = returning.map { _ =>
-      val newList = fields.map { f =>
+      val hit = where.fold("true")(w => s"coalesce(($w), false)")
+      // cast to the column's type (DuckDB UPDATE coerces the same way);
+      // the rewrite guards each SET by the predicate, RETURNING (DuckDB's
+      // NEW rows of the matched set) reads matched rows only
+      def setList(guard: Boolean): String = fields.map { f =>
         sets.find(_._1.equalsIgnoreCase(f.name)) match {
-          case Some((_, e)) => s"CAST(($e) AS ${f.dataType.sql}) AS ${f.name}"
+          case Some((_, e)) =>
+            val v = if (guard && where.isDefined)
+              s"CASE WHEN $hit THEN ($e) ELSE ${f.name} END" else s"($e)"
+            s"CAST($v AS ${f.dataType.sql}) AS ${f.name}"
           case None => f.name
         }
-      }
-      val w = (prune.toSeq ++ where.map(w0 => s"coalesce(($w0), false)"))
-        .mkString(" AND ")
-      val wc = if (w.isEmpty) "" else s" WHERE $w"
-      sql(spark, s"SELECT ${newList.mkString(", ")} FROM $table$wc")
-        .localCheckpoint(true)
-    }
-    cow match {
-      case Some((affected, untouched, _)) =>
-        cowSwapInto(spark, table, sql(spark,
-          s"SELECT ${selectList.mkString(", ")} FROM $table WHERE ${prune.get}"),
-          untouched)
-        lastCowStats.set((affected.length + untouched.length,
-          affected.length, untouched.length))
-      case None =>
-        swapInto(spark, table,
-          sql(spark, s"SELECT ${selectList.mkString(", ")} FROM $table"))
-    }
-    returning match {
-      case Some(proj) => returningFrame(spark, updatedRows.get, proj)
-      case None =>
-        import spark.implicits._
-        Seq(matched).toDF("Count")
+      }.mkString(", ")
+      CowForm(perFileMatches(spark, table, where),
+        prune => sql(spark, s"SELECT ${setList(guard = true)} FROM $table WHERE $prune"),
+        prune => sql(spark, s"SELECT ${setList(guard = false)} FROM $table " +
+          s"WHERE $prune AND $hit").localCheckpoint(true))
     }
   }
 
@@ -1169,7 +926,7 @@ object Engine {
   // EXISTS; DROP of a missing column errors unless IF EXISTS; RENAME
   // [COLUMN] a TO b; ALTER [COLUMN] c [SET DATA] TYPE T [USING expr].
   // Spark's v1 parquet tables can only ADD; everything else rewrites the
-  // table through swapInto (the UPDATE/DELETE machinery) — column ops on
+  // table through `swap` (the UPDATE/DELETE machinery) — column ops on
   // a warehouse table are full rewrites at any scale, same as DuckDB's
   // own storage-level behavior for type changes.
   private val alterAddColRe =
@@ -1361,7 +1118,7 @@ object Engine {
           try sql(spark, s"SELECT $proj2 FROM $table")
           catch { case e: Throwable =>
             if (k > 0) throw e else return false }
-        swapInto(spark, table, projected2, schemaChanged = true)
+        swap(spark, table, projected2, schemaChanged = true)
         return true
       }
     }
@@ -1374,7 +1131,7 @@ object Engine {
     // still intact here
     val projected = try sql(spark, s"SELECT $proj FROM $table")
       catch { case _: Throwable => return false }
-    swapInto(spark, table, projected, schemaChanged = true)
+    swap(spark, table, projected, schemaChanged = true)
     true
   }
 
@@ -1401,7 +1158,7 @@ object Engine {
           val proj = cols.map { case (n, e) =>
             if (e == n) n else s"($e) AS $n"
           }.mkString(", ")
-          swapInto(spark, t, sql(spark, s"SELECT $proj FROM $t"),
+          swap(spark, t, sql(spark, s"SELECT $proj FROM $t"),
             schemaChanged = true)
       }
       spark.emptyDataFrame
@@ -1422,7 +1179,7 @@ object Engine {
     "(?is)^\\s*DROP\\s+VIEW\\s+(?:IF\\s+EXISTS\\s+)?([\\w.`\"]+)\\s*;?\\s*$".r
 
   // user views are temp views over a LAZY plan, which pins file indexes —
-  // a swapInto/ALTER that rewrites an underlying table would leave them
+  // a DML/ALTER swap that rewrites an underlying table would leave them
   // stale or broken where DuckDB re-resolves per query. The DEFINITIONS
   // live here and are re-registered after any catalog change.
   private val userViews =
@@ -1560,16 +1317,14 @@ object Engine {
   }
 
   /** `FROM pragma_table_info('t')`-style table-function forms — each
-    * occurrence computed via runPragma into a temp view and the call text
-    * replaced by the view name (the SUMMARIZE-splice pattern). Occurrences
-    * inside string literals are left as data, not executed. */
-  private def rewriteTableFnPragmas(spark: SparkSession, sql0: String): String =
+    * occurrence computed via runPragma into a statement-scoped view and
+    * the call text replaced by the view name (the SUMMARIZE-splice
+    * pattern). Occurrences inside string literals are left as data, not
+    * executed. */
+  private def rewriteTableFnPragmas(spark: SparkSession, views: StatementViews,
+      sql0: String): String =
     replaceOutsideQuotes(tableFnPragmaRe, sql0) { m =>
-      val df = runPragma(spark, m.group(1), Option(m.group(2)))
-      val tv = "graft_pragma_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(m.matched.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      df.createOrReplaceTempView(tv)
-      tv
+      views.add("pragma", runPragma(spark, m.group(1), Option(m.group(2))))
     }
 
   private val duckdbTablesFnRe = "(?i)duckdb_tables\\s*\\(\\s*\\)".r
@@ -1606,10 +1361,10 @@ object Engine {
   }
 
   /** Derived-table form `FROM (SUMMARIZE <inner>)` — each occurrence is
-    * computed into a temp view (the rewriteTableFunctions precedent) and
-    * the parenthesized span replaced by the view name, so the outer query
-    * translates normally. */
-  private def rewriteEmbeddedSummarize(spark: SparkSession, sql0: String): String = {
+    * computed into a statement-scoped view and the parenthesized span
+    * replaced by the view name, so the outer query translates normally. */
+  private def rewriteEmbeddedSummarize(spark: SparkSession, views: StatementViews,
+      sql0: String): String = {
     val openRe = "(?is)\\(\\s*SUMMARIZE\\b".r
     var out = sql0
     var m = openRe.findFirstMatchIn(out)
@@ -1635,9 +1390,7 @@ object Engine {
         if (bareNameRe.pattern.matcher(inner).matches())
           s"SELECT * FROM $inner"
         else inner
-      val tv = "graft_summarize_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(innerSql.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      duckdbSummarize(spark, innerSql).createOrReplaceTempView(tv)
+      val tv = views.add("summarize", duckdbSummarize(spark, innerSql))
       out = out.substring(0, open) + tv + out.substring(close + 1)
       m = openRe.findFirstMatchIn(out)
       guard += 1
@@ -1681,21 +1434,48 @@ object Engine {
           val joined = graft.operators.AsOfJoin.asof(left0, right,
             sp.leftKey, sp.rightKey, sp.leftTime, sp.rightTime,
             rightPayload, sp.direction, inner = !sp.isLeftJoin, strict = sp.strict)
-          // md5 of the statement, not hashCode: 32-bit collisions between
-          // different SQLs on a shared session would cross-bind projections
-          val tv = "graft_asof_" + java.security.MessageDigest.getInstance("MD5")
-            .digest(duckSql.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          joined.createOrReplaceTempView(tv)
           val proj = sp.selects.map { case (_, c, o) =>
             if (c == o) c else s"$c AS $o"
           }.mkString(", ")
           val post = if (sp.postWhereSql.nonEmpty) s" WHERE ${sp.postWhereSql}" else ""
           // back through the dialect layer: null-order injection etc. apply
           // to the tail exactly as they would have on the original statement
-          Some(sql(spark, s"SELECT $proj FROM $tv$post ${sp.tailSql}".trim))
+          Some(withViews(spark)(v => sql(spark,
+            s"SELECT $proj FROM ${v.add("asof", joined)}$post ${sp.tailSql}".trim)))
         }
       } catch { case _: Throwable => None }
     }
+
+  // ---- statement-scoped temp views -------------------------------------
+  //
+  // Frames the engine splices into a statement — the pragma, SUMMARIZE and
+  // duckdb_tables()/duckdb_columns() splices, the ASOF merge, RETURNING
+  // rows, the COW semijoin prune list — are registered under a unique
+  // per-call name and dropped once the statement using them is analyzed
+  // (`withViews`). An analyzed plan has already inlined the view, so the
+  // returned frame still runs, nothing is left in the session catalog
+  // (SHOW TABLES, information_schema, duckdb_tables(), Flight listings),
+  // and concurrent statements on one session never share a name.
+
+  private val viewSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private final class StatementViews(spark: SparkSession) {
+    private val names = scala.collection.mutable.ArrayBuffer[String]()
+    /** Register `df` as `graft_<kind>_<n>`; returns the name. */
+    def add(kind: String, df: DataFrame): String = {
+      val name = s"graft_${kind}_${viewSeq.incrementAndGet()}"
+      df.createOrReplaceTempView(name)
+      names += name
+      name
+    }
+    def dropAll(): Unit =
+      names.foreach(n => try spark.catalog.dropTempView(n) catch { case _: Exception => })
+  }
+
+  private def withViews[T](spark: SparkSession)(body: StatementViews => T): T = {
+    val views = new StatementViews(spark)
+    try body(views) finally views.dropAll()
+  }
 
   /** Translate one DuckDB-dialect statement and run it. */
   def sql(spark: SparkSession, duckSql0: String): DataFrame = {
@@ -1704,42 +1484,40 @@ object Engine {
     // any other routing (so ASOF/COPY/DML shapes see the expanded SQL)
     if (graft.dialect.Macros.tryDdl(spark, duckSql0)) return spark.emptyDataFrame
     refreshUserViews(spark)
-    val duckSql = {
-      val expanded = graft.dialect.Macros.expand(spark, duckSql0)
-      // PREPARE stores the RAW body: the splice pre-passes below compute
-      // results eagerly, and a prepared statement must re-evaluate its
-      // SUMMARIZE/pragma snapshots at EXECUTE time, not PREPARE time
-      if (prepareRe.pattern.matcher(expanded).matches()) expanded
-      else {
-        // derived-table SUMMARIZE: `FROM (SUMMARIZE …)` → temp view splice
-        val s1 = if (expanded.toUpperCase.contains("SUMMARIZE"))
-          rewriteEmbeddedSummarize(spark, expanded)
-        else expanded
-        // table-function pragmas: `FROM pragma_table_info('t')` → temp view
-        // (CALL statements keep their text — the CALL matcher below routes
-        // them to runPragma directly)
-        val s2 = if (s1.toLowerCase.contains("pragma_") &&
-            !callPragmaRe.pattern.matcher(s1).matches())
-          rewriteTableFnPragmas(spark, s1)
-        else s1
-        // duckdb_tables()/duckdb_columns() catalog fns → temp-view splice
-        // (quote-aware: occurrences inside string literals stay data)
-        val s3 = if (s2.toLowerCase.contains("duckdb_tables")) {
-          lazy val registered = {
-            duckdbTablesDf(spark).createOrReplaceTempView("graft_duckdb_tables")
-            "graft_duckdb_tables"
-          }
-          replaceOutsideQuotes(duckdbTablesFnRe, s2)(_ => registered)
-        } else s2
-        if (s3.toLowerCase.contains("duckdb_columns")) {
-          lazy val registered = {
-            duckdbColumnsDf(spark).createOrReplaceTempView("graft_duckdb_columns")
-            "graft_duckdb_columns"
-          }
-          replaceOutsideQuotes(duckdbColumnsFnRe, s3)(_ => registered)
-        } else s3
-      }
-    }
+    val expanded = graft.dialect.Macros.expand(spark, duckSql0)
+    // PREPARE and CREATE VIEW store the RAW body: the splices compute
+    // results eagerly into views this statement drops, and a prepared
+    // statement or a user view must re-evaluate its SUMMARIZE/pragma/
+    // catalog snapshots each time it runs
+    if (prepareRe.pattern.matcher(expanded).matches() ||
+        createViewRe.pattern.matcher(expanded).matches()) run(spark, expanded)
+    else withViews(spark)(views => run(spark, splice(spark, views, expanded)))
+  }
+
+  /** Replace the statement's engine-computed relations by statement-scoped
+    * views: `(SUMMARIZE …)`, `pragma_*(…)` table functions (CALL keeps its
+    * text — `run` routes it to runPragma directly) and the
+    * duckdb_tables()/duckdb_columns() catalog functions. Quote-aware:
+    * occurrences inside string literals stay data. */
+  private def splice(spark: SparkSession, views: StatementViews, s0: String): String = {
+    val s1 = if (s0.toUpperCase.contains("SUMMARIZE"))
+      rewriteEmbeddedSummarize(spark, views, s0)
+    else s0
+    val s2 = if (s1.toLowerCase.contains("pragma_") &&
+        !callPragmaRe.pattern.matcher(s1).matches())
+      rewriteTableFnPragmas(spark, views, s1)
+    else s1
+    val s3 = if (s2.toLowerCase.contains("duckdb_tables")) {
+      lazy val name = views.add("duckdb_tables", duckdbTablesDf(spark))
+      replaceOutsideQuotes(duckdbTablesFnRe, s2)(_ => name)
+    } else s2
+    if (s3.toLowerCase.contains("duckdb_columns")) {
+      lazy val name = views.add("duckdb_columns", duckdbColumnsDf(spark))
+      replaceOutsideQuotes(duckdbColumnsFnRe, s3)(_ => name)
+    } else s3
+  }
+
+  private def run(spark: SparkSession, duckSql: String): DataFrame = {
     duckSql match {
       case pragmaRe(name, callArg, eqArg) =>
         return runPragma(spark, name, Option(callArg).orElse(Option(eqArg)))

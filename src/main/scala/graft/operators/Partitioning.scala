@@ -68,10 +68,11 @@ object Partitioning {
     * one parquet file per commit, and a long-lived table degrades into
     * thousands of KB-sized files whose per-file open/footer cost dominates
     * scans (and whose count explodes driver-side listing at 100 TB).
-    * Rewrites the table into `ceil(bytes / targetBytesPerFile)` files via a
-    * tmp table + catalog rename, so readers never observe a half-compacted
-    * table and the operation is safe to re-run after a crash (the tmp is
-    * overwritten).
+    * Rewrites the table into `ceil(bytes / targetBytesPerFile)` files
+    * through the engine's atomic swap, so readers never observe a
+    * half-compacted table and the operation is safe to re-run after a
+    * crash. The read and the swap hold the table's write lock: an append
+    * committing in between would otherwise be dropped with the old files.
     *
     * Returns (filesBefore, filesAfter). */
   def compactTable(
@@ -86,16 +87,13 @@ object Partitioning {
       val d = new java.io.File(loc.getPath)
       Option(d.listFiles()).toSeq.flatten.filter(f => f.getName.endsWith(".parquet"))
     }
-    val before = tableFiles(table)
-    val bytes = before.map(_.length()).sum
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
-    val tmp = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    spark.table(table).repartition(nFiles)
-      .write.format("parquet").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    (before.size, tableFiles(table).size)
+    graft.engine.Engine.tableWriteLock(table).synchronized {
+      val before = tableFiles(table)
+      val bytes = before.map(_.length()).sum
+      val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
+      graft.engine.Engine.swap(spark, table, spark.table(table).repartition(nFiles))
+      (before.size, tableFiles(table).size)
+    }
   }
 
   /** Bucketed table layout: co-locates both sides of a recurring join so

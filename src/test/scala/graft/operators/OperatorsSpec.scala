@@ -2154,7 +2154,88 @@ class OperatorsSpec extends SparkTestBase {
     assert(ur.toSeq == Seq((10L, 1.5), (11L, 1.5)))
     assert(Engine.lastCowPrune.get() == "literal",
       s"selective DML should use the literal prune, got ${Engine.lastCowPrune.get()}")
+
+    // every form runs one driver, so the edge cases agree across forms.
+    // Spark jobs a statement starts, counted once the listener bus drains:
+    def jobsOf(stmt: => Any): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try { stmt; org.apache.spark.GraftListenerBus.drain(spark.sparkContext); jobs.get() }
+      finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // a WHERE naming a missing column fails at analysis, before any job
+    val missingJobs = jobsOf(intercept[Exception](
+      Engine.sql(spark, "DELETE FROM g_cow_t WHERE no_such_col = 1")))
+    assert(missingJobs == 0, s"missing-column DELETE ran $missingJobs jobs")
+    // a table with no data files: Count 0 and no swap, for DELETE and UPDATE
+    spark.sql("DROP TABLE IF EXISTS g_cow_empty")
+    spark.sql("CREATE TABLE g_cow_empty (id BIGINT, price DOUBLE) USING parquet")
+    val swapsEmpty = Engine.swapCount.get()
+    assert(Engine.sql(spark, "DELETE FROM g_cow_empty WHERE id = 1").head.getLong(0) == 0L)
+    assert(Engine.sql(spark,
+      "UPDATE g_cow_empty SET price = 0 WHERE id = 1").head.getLong(0) == 0L)
+    assert(Engine.swapCount.get() == swapsEmpty, "zero-file DML paid a swap")
+    spark.sql("DROP TABLE g_cow_empty")
+    // a DELETE matching rows in every file rewrites them all and says so
+    val nFiles = spark.table("g_cow_t").inputFiles.length
+    val perFile = spark.table("g_cow_t").where("id % 5 = 0")
+      .groupBy(col("_metadata.file_path")).count().count()
+    assert(perFile == nFiles, s"fixture: id % 5 = 0 hits $perFile of $nFiles files")
+    val left = spark.table("g_cow_t").where("id % 5 <> 0").count()
+    Engine.sql(spark, "DELETE FROM g_cow_t WHERE id % 5 = 0")
+    assert(Engine.lastCowStats.get() == ((nFiles, nFiles, 0)),
+      s"every-file DELETE stats: ${Engine.lastCowStats.get()}")
+    assert(spark.table("g_cow_t").count() == left)
     spark.sql("DROP TABLE g_cow_t")
+  }
+
+  test("COW DML holds the table's write lock from its file listing to its swap") {
+    spark.sql("DROP TABLE IF EXISTS g_cow_lock")
+    spark.range(0, 100).selectExpr("id", "id * 2 AS v").repartition(4)
+      .write.format("parquet").saveAsTable("g_cow_lock")
+    // only the DELETE thread's jobs count: it runs under its own job group
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == "g_cow_lock") jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new Thread(() => Engine.tableWriteLock("g_cow_lock").synchronized {
+      held.countDown(); release.await()
+    })
+    val deleted = new java.util.concurrent.CompletableFuture[java.lang.Long]()
+    val dml = new Thread(() => {
+      spark.sparkContext.setJobGroup("g_cow_lock", "lock-scope DELETE")
+      try deleted.complete(Engine.sql(spark, "DELETE FROM g_cow_lock WHERE id < 10").head.getLong(0))
+      catch { case e: Throwable => deleted.completeExceptionally(e) }
+    })
+    try {
+      holder.start()
+      held.await()
+      dml.start()
+      Thread.sleep(1000)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      assert(jobs.get() == 0, s"DELETE started ${jobs.get()} jobs while the table was locked")
+      assert(!deleted.isDone, "DELETE finished while the table was locked")
+    } finally {
+      release.countDown()
+      holder.join()
+    }
+    try {
+      assert(deleted.get(120, java.util.concurrent.TimeUnit.SECONDS) == 10L)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      assert(jobs.get() > 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.table("g_cow_lock").count() == 90)
+    spark.sql("DROP TABLE g_cow_lock")
   }
 
   test("r10: broad COW DML prunes via semi-join above the IN-list threshold") {
@@ -2212,37 +2293,79 @@ class OperatorsSpec extends SparkTestBase {
 
   test("r12 advice pin: no-op COW DML leaks no semijoin prune view") {
     // advice r12 claimed a no-op UPDATE above the IN-list threshold leaks
-    // its graft_cow_affected_N temp view (filePrune before the matched==0
-    // early return). Adjudicated FALSE for UPDATE/DELETE — the prune is
-    // derived from the m > 0 split / computed after the early return —
-    // but the invariant deserves a pin: with the semijoin path forced,
-    // no-op and matched DMLs alike must leave the session catalog free of
-    // prune views once they return.
+    // its graft_cow_affected_N temp view. The invariant now covers every
+    // view the engine registers for one statement — the semijoin prune
+    // list, RETURNING rows, the pragma / SUMMARIZE / duckdb_tables() /
+    // duckdb_columns() splices and the ASOF merge: each is dropped once its
+    // statement is analyzed, so no-op and matched statements alike leave
+    // the session catalog as they found it.
     Engine.registerTables(spark, sfDir)
     spark.sql("DROP TABLE IF EXISTS g_cow_noop")
     spark.sql("SELECT o_orderkey AS id, o_totalprice AS price " +
         "FROM orders WHERE o_orderkey < 400")
       .repartitionByRange(4, col("id")).write.format("parquet")
       .saveAsTable("g_cow_noop")
-    def pruneViews(): Seq[String] =
-      spark.catalog.listTables().collect().toSeq.map(_.name)
-        .filter(_.startsWith("graft_cow_affected_"))
+    // the engine's statement-scoped kinds; graft_infoschema_* (a per-session
+    // cache) and the translator's file views are not statement-scoped
+    val scoped =
+      "^graft_(cow_affected|returning|pragma|summarize|duckdb_tables|duckdb_columns|asof)_.*"
+    def tempViews(): Seq[String] =
+      spark.catalog.listTables().collect().toSeq
+        .filter(_.tableType == "TEMPORARY").map(_.name)
+    def leaked(names: Seq[String]): Seq[String] = names.filter(_.matches(scoped))
+    def run(stmt: String): Unit = {
+      Engine.sql(spark, stmt).collect()
+      assert(leaked(tempViews()).isEmpty, s"$stmt leaked: ${leaked(tempViews())}")
+    }
     try {
       spark.conf.set("graft.cow.inlist.max", "0")
       // no-op UPDATE / DELETE: matched == 0 → early return, no view
       assert(Engine.sql(spark,
         "UPDATE g_cow_noop SET price = 0 WHERE id < 0").head.getLong(0) == 0L)
-      assert(pruneViews().isEmpty, s"no-op UPDATE leaked: ${pruneViews()}")
+      assert(leaked(tempViews()).isEmpty, s"no-op UPDATE leaked: ${leaked(tempViews())}")
       assert(Engine.sql(spark,
         "DELETE FROM g_cow_noop WHERE id < 0").head.getLong(0) == 0L)
-      assert(pruneViews().isEmpty, s"no-op DELETE leaked: ${pruneViews()}")
-      // matched semijoin DML: view registered during the rewrite, dropped
-      // by the swap before the statement returns
+      assert(leaked(tempViews()).isEmpty, s"no-op DELETE leaked: ${leaked(tempViews())}")
+      // matched semijoin DML: the view lives while the rewrite runs only
       assert(Engine.sql(spark,
         "UPDATE g_cow_noop SET price = price + 1 WHERE id < 100")
         .head.getLong(0) > 0L)
       assert(Engine.lastCowPrune.get() == "semijoin")
-      assert(pruneViews().isEmpty, s"matched UPDATE leaked: ${pruneViews()}")
+      assert(leaked(tempViews()).isEmpty, s"matched UPDATE leaked: ${leaked(tempViews())}")
+      Seq(
+        "UPDATE g_cow_noop SET price = price + 1 WHERE id < 50 RETURNING id",
+        "DELETE FROM g_cow_noop WHERE id < 20 RETURNING id, price",
+        "UPDATE g_cow_noop SET price = s.o_totalprice FROM orders s " +
+          "WHERE g_cow_noop.id = s.o_orderkey AND s.o_orderkey < 60 RETURNING id",
+        "DELETE FROM g_cow_noop USING orders s " +
+          "WHERE g_cow_noop.id = s.o_orderkey AND s.o_orderkey < 30 RETURNING id",
+        "SELECT * FROM pragma_table_info('g_cow_noop')",
+        "SELECT * FROM (SUMMARIZE g_cow_noop)",
+        "SELECT * FROM duckdb_tables()",
+        "SELECT * FROM duckdb_columns()",
+        "SELECT e.event_id, o.o_orderdate FROM events e ASOF JOIN orders o " +
+          "ON o.o_custkey = e.user_id AND o.o_orderdate >= e.ts ORDER BY e.event_id LIMIT 100"
+      ).foreach(run)
+      // distinct client texts add no views either
+      val before = tempViews().length
+      (1 to 5).foreach(i =>
+        run(s"SELECT * FROM (SUMMARIZE SELECT price FROM g_cow_noop WHERE id < ${100 + i})"))
+      assert(tempViews().length == before)
+      // after a DDL every catalog listing is rebuilt: none names a splice
+      Engine.sql(spark, "CREATE TABLE g_cow_noop_ddl AS SELECT 1 AS x")
+      Engine.sql(spark, "DROP TABLE g_cow_noop_ddl")
+      def strings(stmt: String): Seq[String] =
+        Engine.sql(spark, stmt).collect().toSeq.flatMap(_.toSeq).map(String.valueOf)
+      val listed = Map(
+        "SHOW TABLES" -> strings("SHOW TABLES"),
+        "information_schema.tables" ->
+          strings("SELECT table_name FROM information_schema.tables"),
+        "listFlights" -> graft.flight.FlightActions
+          .listFlights(spark, Some("spark_catalog"), Some("default")).map(_.table),
+        "duckdb_tables()" -> strings("SELECT table_name FROM duckdb_tables()"))
+      listed.foreach { case (where, names) =>
+        assert(leaked(names).isEmpty, s"$where lists ${leaked(names)}")
+      }
     } finally {
       spark.conf.unset("graft.cow.inlist.max")
       spark.sql("DROP TABLE g_cow_noop")
