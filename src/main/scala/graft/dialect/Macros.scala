@@ -44,27 +44,10 @@ object Macros {
   private val dropRe =
     """(?is)\s*DROP\s+MACRO\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*""".r
 
-  private def matchClose(toks: Vector[Tok], open: Int): Int = {
-    var d = 0; var i = open; var at = -1
-    while (i < toks.length && at < 0) {
-      toks(i) match {
-        case Punct("(") => d += 1
-        case Punct(")") => d -= 1; if (d == 0) at = i
-        case _ =>
-      }
-      i += 1
-    }
-    at
-  }
-
-  private def skipWs(toks: Vector[Tok], from: Int): Int = {
-    var i = from; while (i < toks.length && toks(i).isInstanceOf[Ws]) i += 1; i
-  }
-
   private def parseParams(toks: Vector[Tok], sql: String): (Seq[String], Map[String, String]) = {
     val params = scala.collection.mutable.ArrayBuffer[String]()
     val defaults = scala.collection.mutable.Map[String, String]()
-    splitTop(toks).filter(_.exists(!_.isInstanceOf[Ws])).foreach { p =>
+    splitTopLevel(toks, nested = true).filter(_.exists(!_.isInstanceOf[Ws])).foreach { p =>
       val nw = p.filterNot(_.isInstanceOf[Ws])
       nw.head match {
         case id: Ident =>
@@ -82,7 +65,7 @@ object Macros {
   /** True when `toks` reads as a macro parameter list: comma-separated
     * bare identifiers, each optionally `:= default`, or empty. */
   private def looksLikeParamList(toks: Vector[Tok]): Boolean =
-    splitTop(toks).forall { g =>
+    splitTopLevel(toks, nested = true).forall { g =>
       val nw = g.filterNot(_.isInstanceOf[Ws])
       nw.isEmpty || (nw.head.isInstanceOf[Ident] &&
         (nw.length == 1 || nw(1) == Punct(":=")))
@@ -94,11 +77,11 @@ object Macros {
     * but `(x + 1)` is not a parameter list. Table-macro bodies are never
     * split (see tryDdl). */
   private def isOverloadBoundary(toks: Vector[Tok], i: Int): Boolean = {
-    val open = skipWs(toks, i + 1)
+    val open = nextNonWs(toks, i)
     if (open >= toks.length || toks(open) != Punct("(")) return false
-    val close = matchClose(toks, open)
-    if (close < 0) return false
-    val k = skipWs(toks, close + 1)
+    val close = matchParen(toks, open)
+    if (toks(close) != Punct(")")) return false
+    val k = nextNonWs(toks, close)
     k < toks.length && (toks(k) match {
       case id: Ident => id.upper == "AS"
       case _ => false
@@ -107,27 +90,27 @@ object Macros {
 
   /** If `sql` is CREATE/DROP MACRO, apply it to the session registry and
     * return true (the caller returns an empty result, as DuckDB does). */
-  def tryDdl(spark: SparkSession, sql: String): Boolean = sql match {
+  def tryDdl(spark: SparkSession, sql: String): Boolean = routeText(sql) match {
     case createRe(name, rest) =>
       val toks = lex("(" + rest)
       val overloads = scala.collection.mutable.ArrayBuffer[Macro]()
       var pos = 0
       while (pos < toks.length) {
-        pos = skipWs(toks, pos)
+        pos = nextNonWs(toks, pos - 1)
         require(pos < toks.length && toks(pos) == Punct("("),
           s"malformed CREATE MACRO: $sql")
-        val close = matchClose(toks, pos)
-        require(close > 0, s"malformed CREATE MACRO: $sql")
+        val close = matchParen(toks, pos)
+        require(toks(close) == Punct(")"), s"malformed CREATE MACRO: $sql")
         val (params, defaults) = parseParams(toks.slice(pos + 1, close), sql)
-        var k = skipWs(toks, close + 1)
+        var k = nextNonWs(toks, close)
         require(k < toks.length && (toks(k) match {
           case id: Ident => id.upper == "AS"; case _ => false
         }), s"CREATE MACRO signature not followed by AS: $sql")
-        k = skipWs(toks, k + 1)
+        k = nextNonWs(toks, k)
         val isTable = k < toks.length && (toks(k) match {
           case id: Ident => id.upper == "TABLE"; case _ => false
         })
-        if (isTable) k = skipWs(toks, k + 1)
+        if (isTable) k = nextNonWs(toks, k)
         // Scalar body extends to the next overload boundary or the end.
         // A TABLE body is greedy to the end: a SELECT list is full of
         // `, (col) AS alias` items indistinguishable from a signature, so
@@ -135,12 +118,8 @@ object Macros {
         // grammar makes the separating comma unambiguous only there).
         var d = 0; var i = k; var end = toks.length
         while (!isTable && i < toks.length && end == toks.length) {
-          toks(i) match {
-            case Punct("(") | Punct("[") => d += 1
-            case Punct(")") | Punct("]") => d -= 1
-            case Punct(",") if d == 0 && isOverloadBoundary(toks, i) => end = i
-            case _ =>
-          }
+          d += depthDelta(toks(i), nested = true)
+          if (d == 0 && toks(i) == Punct(",") && isOverloadBoundary(toks, i)) end = i
           i += 1
         }
         val body = render(toks.slice(k, end)).trim.stripSuffix(";").trim
@@ -160,20 +139,6 @@ object Macros {
       }
       true
     case _ => false
-  }
-
-  private def splitTop(toks: Vector[Tok]): Vector[Vector[Tok]] = {
-    val out = scala.collection.mutable.ArrayBuffer[Vector[Tok]]()
-    var cur = scala.collection.mutable.ArrayBuffer[Tok]()
-    var d = 0
-    toks.foreach {
-      case t @ (Punct("(") | Punct("[")) => d += 1; cur += t
-      case t @ (Punct(")") | Punct("]")) => d -= 1; cur += t
-      case Punct(",") if d == 0 => out += cur.toVector; cur = scala.collection.mutable.ArrayBuffer[Tok]()
-      case t => cur += t
-    }
-    out += cur.toVector
-    out.toVector
   }
 
   /** Expand macro calls in `sql` against the session registry (leftmost
@@ -211,12 +176,12 @@ object Macros {
     while (i < toks.length) {
       toks(i) match {
         case id: Ident if macros.contains(id.text.toLowerCase) => {
-          val open = skipWs(toks, i + 1)
+          val open = nextNonWs(toks, i)
           if (open < toks.length && toks(open) == Punct("(")) {
-            val found = matchClose(toks, open)
-            if (found > 0) {
+            val found = matchParen(toks, open)
+            if (toks(found) == Punct(")")) {
               // split call args into positional and `name := value` named
-              val argGroups = splitTop(toks.slice(open + 1, found))
+              val argGroups = splitTopLevel(toks.slice(open + 1, found), nested = true)
                 .filter(_.exists(!_.isInstanceOf[Ws]))
               val positional = scala.collection.mutable.ArrayBuffer[String]()
               val named = scala.collection.mutable.Map[String, String]()
@@ -252,8 +217,7 @@ object Macros {
                   // struct-field access on the argument is legitimate.
                   val bts = lex(m.body)
                   def afterDot(k: Int): Boolean = {
-                    var p = k - 1
-                    while (p >= 0 && bts(p).isInstanceOf[Ws]) p -= 1
+                    val p = prevNonWs(bts, k)
                     p >= 0 && bts(p) == Punct(".")
                   }
                   val bodyToks = bts.zipWithIndex.map {

@@ -36,26 +36,8 @@ object Sanitizer {
   }
 
   /** Split on top-level semicolons (outside strings/comments/parens). */
-  def splitStatements(sql: String): Seq[String] = {
-    val toks = lex(sql)
-    val out = Seq.newBuilder[String]
-    var cur = Vector.newBuilder[Lexer.Tok]
-    var d = 0
-    for (t <- toks) {
-      t match {
-        case Punct("(") => d += 1; cur += t
-        case Punct(")") => d -= 1; cur += t
-        case Punct(";") if d == 0 =>
-          val s = render(cur.result()).trim
-          if (s.nonEmpty) out += s
-          cur = Vector.newBuilder[Lexer.Tok]
-        case _ => cur += t
-      }
-    }
-    val last = render(cur.result()).trim
-    if (last.nonEmpty) out += last
-    out.result()
-  }
+  def splitStatements(sql: String): Seq[String] =
+    splitTopLevel(lex(sql), sep = Punct(";")).map(render(_).trim).filter(_.nonEmpty)
 
   /** Strip a leading catalog prefix (e.g. `deltalake.`) from 3-part table
     * names in SELECTs, as the reference does token-wise for its Airport

@@ -178,25 +178,6 @@ object Translator {
 
   private def isWs(t: Tok) = t.isInstanceOf[Ws]
   private def up(t: Tok): String = t match { case i: Ident => i.upper; case _ => "" }
-  private def nextNonWs(toks: Vector[Tok], i: Int): Int = {
-    var j = i + 1; while (j < toks.length && isWs(toks(j))) j += 1; j
-  }
-  private def prevNonWs(toks: Vector[Tok], i: Int): Int = {
-    var j = i - 1; while (j >= 0 && isWs(toks(j))) j -= 1; j
-  }
-  private def depthDelta(t: Tok): Int = t match {
-    case Punct("(") => 1; case Punct(")") => -1; case _ => 0
-  }
-  /** Index of the matching close paren for the open paren at `open`. */
-  private def matchParen(toks: Vector[Tok], open: Int): Int = {
-    var d = 0; var i = open
-    while (i < toks.length) {
-      d += depthDelta(toks(i))
-      if (d == 0 && i > open) return i
-      i += 1
-    }
-    toks.length - 1
-  }
 
   /** Runs a rewrite pass to its fixpoint. `step(toks, i)` returns the new
     * tokens when a rule fires at token `i`. After a rewrite the scan resumes
@@ -372,21 +353,6 @@ object Translator {
     })
   }
 
-  /** Index of the matching `]` for the `[` at `open` (paren-blind: only
-    * bracket nesting counts, mirroring how the lexer emits them). */
-  private def matchBracket(toks: Vector[Tok], open: Int): Int = {
-    var d = 0; var i = open
-    while (i < toks.length) {
-      toks(i) match {
-        case Punct("[") => d += 1
-        case Punct("]") => d -= 1; if (d == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    toks.length - 1
-  }
-
   /** DuckDB list comprehensions (probe-verified against the 1.0 oracle):
     * `[expr FOR v IN list]` → `transform(list, v -> expr)` and
     * `[expr FOR v IN list IF cond]` →
@@ -556,20 +522,6 @@ object Translator {
       i += 1
     }
     toks
-  }
-
-  /** Index of the matching open paren for the close paren at `close`. */
-  private def openOf(toks: Vector[Tok], close: Int): Int = {
-    var d = 0; var i = close
-    while (i >= 0) {
-      toks(i) match {
-        case Punct(")") => d += 1
-        case Punct("(") => d -= 1; if (d == 0) return i
-        case _ =>
-      }
-      i -= 1
-    }
-    0
   }
 
   /** Start of the primary expression whose last token sits at `end`: an
@@ -1451,7 +1403,7 @@ object Translator {
                 // produced a multi-arg count). In-place expansion only
                 // when the call IS the whole item.
                 val pre = toks.take(i)
-                val depthAtI = pre.map(depthDelta).sum
+                val depthAtI = pre.map(depthDelta(_)).sum
                 if (depthAtI == 0) {
                   // bare item (possibly `SELECT columns(...)`) — expand in
                   // place; adjoining expression text replicates below only
@@ -3211,9 +3163,9 @@ object Translator {
   private def jsonStructureToDdl(spec: String): Option[String] = {
     var i = 0
     val s = spec
-    def skipWs(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
+    def skipBlanks(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
     def parseStr(): Option[String] = {
-      skipWs()
+      skipBlanks()
       if (i < s.length && s(i) == '"') {
         val e = s.indexOf('"', i + 1)
         if (e > i) { val r = s.substring(i + 1, e); i = e + 1; Some(r) }
@@ -3221,7 +3173,7 @@ object Translator {
       } else None
     }
     def parse(): Option[String] = {
-      skipWs()
+      skipBlanks()
       if (i >= s.length) None
       else s(i) match {
         case '{' =>
@@ -3229,16 +3181,16 @@ object Translator {
           val fields = scala.collection.mutable.ArrayBuffer[String]()
           var ok = true; var done = false
           while (ok && !done) {
-            skipWs()
+            skipBlanks()
             if (i < s.length && s(i) == '}') { i += 1; done = true }
             else parseStr() match {
               case Some(k) =>
-                skipWs()
+                skipBlanks()
                 if (i < s.length && s(i) == ':') {
                   i += 1
                   parse() match {
                     case Some(v) =>
-                      fields += s"`$k`: $v"; skipWs()
+                      fields += s"`$k`: $v"; skipBlanks()
                       if (i < s.length && s(i) == ',') i += 1
                       else if (i < s.length && s(i) == '}') { i += 1; done = true }
                       else ok = false
@@ -3253,7 +3205,7 @@ object Translator {
         case '[' =>
           i += 1
           parse().flatMap { el =>
-            skipWs()
+            skipBlanks()
             if (i < s.length && s(i) == ']') { i += 1; Some(s"ARRAY<$el>") }
             else None
           }
@@ -3261,7 +3213,7 @@ object Translator {
         case _ => None
       }
     }
-    val r = parse(); skipWs()
+    val r = parse(); skipBlanks()
     if (i == s.length) r else None
   }
 
@@ -6852,20 +6804,6 @@ object Translator {
         case _ => None
       }
     }
-  }
-
-  /** Split token run on top-level commas. */
-  private[dialect] def splitTopLevel(toks: Vector[Tok]): Vector[Vector[Tok]] = {
-    val out = Vector.newBuilder[Vector[Tok]]
-    var cur = Vector.newBuilder[Tok]
-    var d = 0
-    for (t <- toks) {
-      d += depthDelta(t)
-      if (d == 0 && t == Punct(",")) { out += cur.result(); cur = Vector.newBuilder[Tok] }
-      else cur += t
-    }
-    out += cur.result()
-    out.result()
   }
 
   /** QUALIFY (DuckDB-ism) → subquery + WHERE on the window predicate. */

@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.dialect.{Sanitizer, Translator}
+import graft.dialect.{Lexer, Sanitizer, Translator}
+import graft.dialect.Lexer.{Ident, Num, Punct, Str, Tok}
 
 /** Session + catalog glue: registers the fixture tables as temp views and
   * executes dialect-translated SQL.
@@ -388,55 +389,28 @@ object Engine {
     ("(?is)^\\s*DELETE\\s+FROM\\s+([\\w.`\"]+)\\s+USING\\s+(.+?)" +
       "\\s+WHERE\\s+(.+?)(?:\\s+RETURNING\\s+(.+?))?\\s*$").r
 
-  /** Positions of TOP-LEVEL keywords (outside parens and string literals)
-    * in a statement tail — so `SET a = (SELECT max(x) FROM s)` or
-    * `extract(epoch FROM ts)` never trips the joined-update path. */
-  private def topLevelKeyword(s: String, word: String): Int = {
-    var i = 0; var depth = 0; var inStr = false
-    val u = s.toUpperCase; val w = word.toUpperCase
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false; i += 1 }
-      else ch match {
-        case '\'' => inStr = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ =>
-          if (depth == 0 && u.startsWith(w, i) &&
-              (i == 0 || (!Character.isLetterOrDigit(s.charAt(i - 1)) &&
-                s.charAt(i - 1) != '_')) &&
-              (i + w.length >= s.length ||
-                (!Character.isLetterOrDigit(s.charAt(i + w.length)) &&
-                  s.charAt(i + w.length) != '_'))) return i
-          i += 1
-      }
-    }
-    -1
-  }
-
-  /** `UPDATE t SET … FROM src WHERE cond [RETURNING …]` split, None when
+  /** `UPDATE t SET … FROM src WHERE cond [RETURNING …]` split at its
+    * top-level keywords, so `SET a = (SELECT max(x) FROM s)` or
+    * `extract(epoch FROM ts)` never trips the joined form; no match when
     * there is no top-level FROM (plain UPDATE handles it). */
-  private def splitUpdateFrom(sql0: String): Option[(String, String, String, String, Option[String])] =
-    sql0 match {
-      case updateHeadRe(table, rest) =>
-        val fromAt = topLevelKeyword(rest, "FROM")
-        if (fromAt < 0) None
-        else {
-          val sets = rest.substring(0, fromAt).trim
-          val tail = rest.substring(fromAt + 4)
-          val whereAt = topLevelKeyword(tail, "WHERE")
-          if (whereAt < 0) None
+  private object UpdateFrom {
+    def unapply(sql0: String): Option[(String, String, String, String, Option[String])] =
+      sql0 match {
+        case updateHeadRe(table, rest) =>
+          val toks = Lexer.lex(rest)
+          val from = Lexer.topLevelKeyword(toks, "FROM")
+          val where = if (from < 0) -1 else Lexer.topLevelKeyword(toks, "WHERE", from + 1)
+          if (where < 0) None
           else {
-            val src = tail.substring(0, whereAt).trim
-            val whereTail = tail.substring(whereAt + 5)
-            val retAt = topLevelKeyword(whereTail, "RETURNING")
-            if (retAt < 0) Some((table, sets, src, whereTail.trim, None))
-            else Some((table, sets, src, whereTail.substring(0, retAt).trim,
-              Some(whereTail.substring(retAt + 9).trim)))
+            val ret = Lexer.topLevelKeyword(toks, "RETURNING", where + 1)
+            def text(a: Int, b: Int) = Lexer.render(toks.slice(a, b)).trim
+            val end = if (ret < 0) toks.length else ret
+            Some((table, text(0, from), text(from + 1, where), text(where + 1, end),
+              if (ret < 0) None else Some(text(ret + 1, toks.length))))
           }
-        }
-      case _ => None
-    }
+        case _ => None
+      }
+  }
   private val truncateBareRe =
     "(?is)^\\s*TRUNCATE\\s+(?!TABLE\\b)([\\w.`\"]+)\\s*;?\\s*$".r
 
@@ -803,29 +777,14 @@ object Engine {
       prune => sql(spark, s"SELECT * FROM $table WHERE $prune AND $hit").localCheckpoint(true)))
   }
 
-  /** Top-level comma split honoring parens/brackets and string literals. */
-  private def splitAssignments(s: String): Seq[(String, String)] = {
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0; var inStr = false; var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inStr = !inStr
-        case c if inStr =>
-        case '(' | '[' | '{' => depth += 1
-        case ')' | ']' | '}' => depth -= 1
-        case ',' if depth == 0 => parts += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
+  /** `col = expr` items of a SET clause, split on top-level commas. */
+  private def splitAssignments(s: String): Seq[(String, String)] =
+    Lexer.splitTopLevel(Lexer.lex(s), nested = true).map { a =>
+      val eq = a.indexOf(Punct("="))
+      val col = Lexer.render(a.take(math.max(eq, 0))).trim
+      require(eq > 0 && col.nonEmpty, s"malformed SET assignment: ${Lexer.render(a)}")
+      (col.replaceAll("[`\"]", ""), Lexer.render(a.drop(eq + 1)).trim)
     }
-    parts += s.substring(start)
-    parts.toSeq.map { a =>
-      val eq = a.indexOf('=')
-      require(eq > 0, s"malformed SET assignment: $a")
-      (a.substring(0, eq).trim.replaceAll("[`\"]", ""), a.substring(eq + 1).trim)
-    }
-  }
 
   private def runUpdate(spark: SparkSession, table0: String, setClause: String,
       where: Option[String], returning: Option[String]): DataFrame = {
@@ -872,49 +831,33 @@ object Engine {
   private val deallocRe =
     "(?is)^\\s*DEALLOCATE\\s+(?:PREPARE\\s+)?([\\w`\"]+)\\s*;?\\s*$".r
 
-  /** Split an EXECUTE argument list on top-level commas (paren- and
-    * string-aware). */
+  /** An EXECUTE argument list split on top-level commas. */
   private def splitArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach { ch =>
-      if (inStr) { cur.append(ch); if (ch == '\'') inStr = false }
-      else ch match {
-        case '\'' => inStr = true; cur.append(ch)
-        case '(' => depth += 1; cur.append(ch)
-        case ')' => depth -= 1; cur.append(ch)
-        case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-        case _ => cur.append(ch)
-      }
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.toSeq
+    val args = Lexer.splitTopLevel(Lexer.lex(s), nested = true).map(Lexer.render(_).trim)
+    if (args.last.isEmpty) args.init else args
   }
 
-  /** `$k` / `?` substitution outside string literals. */
+  /** `$k` / `?` placeholders replaced by their parenthesized arguments. A
+    * placeholder is a `?` token or a `$` token followed by a number token,
+    * so a literal, a quoted name or a comment never holds one. */
   private def bindParams(sql: String, args: Seq[String]): String = {
+    val toks = Lexer.lex(sql)
     val out = new StringBuilder
-    var i = 0; var inStr = false; var qIdx = 0
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      if (inStr) { out.append(ch); if (ch == '\'') inStr = false; i += 1 }
-      else ch match {
-        case '\'' => inStr = true; out.append(ch); i += 1
-        case '$' if i + 1 < sql.length && sql.charAt(i + 1).isDigit =>
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j).isDigit) j += 1
-          val k = sql.substring(i + 1, j).toInt
+    var i = 0; var qIdx = 0
+    def bind(k: Int): Unit = out.append("(").append(args(k)).append(")")
+    while (i < toks.length) {
+      toks(i) match {
+        case Punct("$") if i + 1 < toks.length && (toks(i + 1) match {
+              case Num(n) => n.forall(_.isDigit); case _ => false }) =>
+          val k = toks(i + 1).text.toInt
           require(k >= 1 && k <= args.length,
             s"EXECUTE: parameter $$$k has no argument (got ${args.length})")
-          out.append("(").append(args(k - 1)).append(")")
-          i = j
-        case '?' =>
+          bind(k - 1); i += 2
+        case Punct("?") =>
           require(qIdx < args.length,
             s"EXECUTE: more ? placeholders than arguments (${args.length})")
-          out.append("(").append(args(qIdx)).append(")")
-          qIdx += 1; i += 1
-        case c => out.append(c); i += 1
+          bind(qIdx); qIdx += 1; i += 1
+        case t => out.append(t.text); i += 1
       }
     }
     out.toString
@@ -987,8 +930,6 @@ object Engine {
   private def foldAlterOps(fields: Seq[String], table: String,
       ops: Seq[AlterOp]): Seq[(String, String)] = {
     def substitute(expr: String, cols: Seq[(String, String)]): String = {
-      import graft.dialect.Lexer
-      import graft.dialect.Lexer.{Ident, Punct, Tok}
       val toks = Lexer.lex(expr)
       val out = toks.zipWithIndex.map { case (tk, i) =>
         tk match {
@@ -997,16 +938,10 @@ object Engine {
             // dotted) — quoted idents have upper == "", so compare on the
             // unquoted text
             val name = id.text.replaceAll("[`\"]", "")
-            val isCall = {
-              var j = i + 1
-              while (j < toks.length && toks(j).isInstanceOf[Lexer.Ws]) j += 1
-              j < toks.length && toks(j) == Punct("(")
-            }
-            val isDotted = {
-              var j = i - 1
-              while (j >= 0 && toks(j).isInstanceOf[Lexer.Ws]) j -= 1
-              j >= 0 && toks(j) == Punct(".")
-            }
+            val next = Lexer.nextNonWs(toks, i)
+            val isCall = next < toks.length && toks(next) == Punct("(")
+            val prev = Lexer.prevNonWs(toks, i)
+            val isDotted = prev >= 0 && toks(prev) == Punct(".")
             cols.find(_._1.equalsIgnoreCase(name)) match {
               case Some((_, e)) if !isCall && !isDotted => (Ident(s"($e)"): Tok)
               case _ => tk
@@ -1287,47 +1222,55 @@ object Engine {
 
   private val callPragmaRe =
     "(?is)^\\s*CALL\\s+pragma_([\\w]+)\\s*\\(\\s*('[^']*')?\\s*\\)\\s*;?\\s*$".r
-  private val tableFnPragmaRe =
-    "(?is)pragma_([\\w]+)\\s*\\(\\s*('[^']*')?\\s*\\)".r
 
-  /** Positions inside single-quoted string literals ('' escape-aware):
-    * catalog-fn/pragma textual splices must not fire on occurrences that
-    * are part of a literal's VALUE. */
-  private def singleQuoteMask(s: String): Array[Boolean] = {
-    val mask = new Array[Boolean](s.length)
-    var i = 0; var inStr = false
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { mask(i) = true; if (ch == '\'') inStr = false }
-      else if (ch == '\'') { mask(i) = true; inStr = true }
-      i += 1
+  /** `toks` rendered with spans replaced: at each token `i`, `at(i)` may
+    * give the last token of a span starting there and its replacement. */
+  private def replaceSpans(toks: Vector[Tok])(at: Int => Option[(Int, String)]): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < toks.length) at(i) match {
+      case Some((end, text)) => out.append(text); i = end + 1
+      case None => out.append(toks(i).text); i += 1
     }
-    mask
+    out.toString
   }
 
-  /** replaceAllIn that leaves matches inside single-quoted literals
-    * untouched (and runs no side effects for them). */
-  private def replaceOutsideQuotes(re: scala.util.matching.Regex, s: String)(
-      f: scala.util.matching.Regex.Match => String): String = {
-    val mask = singleQuoteMask(s)
-    re.replaceAllIn(s, m =>
-      if (m.start < mask.length && mask(m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else scala.util.matching.Regex.quoteReplacement(f(m)))
+  /** A call at token `i` to a bare function whose lower-case name passes
+    * `isFn`: its close paren and its argument tokens, whitespace and
+    * comments dropped. */
+  private def callAt(toks: Vector[Tok], i: Int,
+      isFn: String => Boolean): Option[(Int, Vector[Tok])] = toks(i) match {
+    case id: Ident if id.upper.nonEmpty && isFn(id.text.toLowerCase) =>
+      val open = Lexer.nextNonWs(toks, i)
+      val close = if (open < toks.length && toks(open) == Punct("("))
+        Lexer.matchParen(toks, open) else -1
+      if (close > open && toks(close) == Punct(")"))
+        Some((close, toks.slice(open + 1, close).filterNot(_.isInstanceOf[Lexer.Ws])))
+      else None
+    case _ => None
+  }
+
+  /** Each no-argument call `fn()` replaced by `name`. */
+  private def replaceCalls(sql: String, fn: String)(name: => String): String = {
+    val toks = Lexer.lex(sql)
+    replaceSpans(toks)(i => callAt(toks, i, _ == fn).collect {
+      case (close, args) if args.isEmpty => (close, name)
+    })
   }
 
   /** `FROM pragma_table_info('t')`-style table-function forms — each
     * occurrence computed via runPragma into a statement-scoped view and
     * the call text replaced by the view name (the SUMMARIZE-splice
-    * pattern). Occurrences inside string literals are left as data, not
-    * executed. */
+    * pattern). */
   private def rewriteTableFnPragmas(spark: SparkSession, views: StatementViews,
-      sql0: String): String =
-    replaceOutsideQuotes(tableFnPragmaRe, sql0) { m =>
-      views.add("pragma", runPragma(spark, m.group(1), Option(m.group(2))))
-    }
-
-  private val duckdbTablesFnRe = "(?i)duckdb_tables\\s*\\(\\s*\\)".r
+      sql0: String): String = {
+    val toks = Lexer.lex(sql0)
+    replaceSpans(toks)(i => callAt(toks, i, _.startsWith("pragma_")).collect {
+      case (close, args) if args.length <= 1 && args.forall(_.isInstanceOf[Str]) =>
+        (close, views.add("pragma", runPragma(spark,
+          toks(i).text.substring("pragma_".length), args.headOption.map(_.text))))
+    })
+  }
 
   /** Minimal `duckdb_tables()` (the catalog surface COMMENT ON feeds):
     * database/schema/table names, the engine-side comment, column count.
@@ -1342,8 +1285,6 @@ object Engine {
     }.toDF("database_name", "schema_name", "table_name", "comment",
       "temporary", "column_count")
   }
-
-  private val duckdbColumnsFnRe = "(?i)duckdb_columns\\s*\\(\\s*\\)".r
 
   /** Minimal `duckdb_columns()`: one row per visible column with DuckDB
     * type spellings. Bounded by the catalog. */
@@ -1365,37 +1306,21 @@ object Engine {
     * replaced by the view name, so the outer query translates normally. */
   private def rewriteEmbeddedSummarize(spark: SparkSession, views: StatementViews,
       sql0: String): String = {
-    val openRe = "(?is)\\(\\s*SUMMARIZE\\b".r
-    var out = sql0
-    var m = openRe.findFirstMatchIn(out)
-    var guard = 0
-    while (m.isDefined && guard < 16) {
-      val open = m.get.start
-      // balanced-paren scan, single-quote-string aware
-      var i = open; var depth = 0; var inStr = false; var close = -1
-      while (i < out.length && close < 0) {
-        val ch = out.charAt(i)
-        if (inStr) { if (ch == '\'') inStr = false }
-        else ch match {
-          case '\'' => inStr = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
+    val toks = Lexer.lex(sql0)
+    replaceSpans(toks) { open =>
+      val kw = if (toks(open) == Punct("(")) Lexer.nextNonWs(toks, open) else toks.length
+      val close = if (kw < toks.length && (toks(kw) match {
+        case id: Ident => id.upper == "SUMMARIZE"; case _ => false
+      })) Lexer.matchParen(toks, open) else -1
+      if (close <= kw || toks(close) != Punct(")")) None
+      else {
+        val inner = Lexer.render(toks.slice(kw + 1, close)).trim
+        val innerSql =
+          if (bareNameRe.pattern.matcher(inner).matches()) s"SELECT * FROM $inner"
+          else inner
+        Some((close, views.add("summarize", duckdbSummarize(spark, innerSql))))
       }
-      if (close < 0) return out
-      val inner = out.substring(m.get.end, close).trim
-      val innerSql =
-        if (bareNameRe.pattern.matcher(inner).matches())
-          s"SELECT * FROM $inner"
-        else inner
-      val tv = views.add("summarize", duckdbSummarize(spark, innerSql))
-      out = out.substring(0, open) + tv + out.substring(close + 1)
-      m = openRe.findFirstMatchIn(out)
-      guard += 1
     }
-    out
   }
 
   /** Merge-eligible `ASOF JOIN` statements run on the single-shuffle
@@ -1484,7 +1409,7 @@ object Engine {
     // any other routing (so ASOF/COPY/DML shapes see the expanded SQL)
     if (graft.dialect.Macros.tryDdl(spark, duckSql0)) return spark.emptyDataFrame
     refreshUserViews(spark)
-    val expanded = graft.dialect.Macros.expand(spark, duckSql0)
+    val expanded = Lexer.routeText(graft.dialect.Macros.expand(spark, duckSql0))
     // PREPARE and CREATE VIEW store the RAW body: the splices compute
     // results eagerly into views this statement drops, and a prepared
     // statement or a user view must re-evaluate its SUMMARIZE/pragma/
@@ -1497,8 +1422,8 @@ object Engine {
   /** Replace the statement's engine-computed relations by statement-scoped
     * views: `(SUMMARIZE …)`, `pragma_*(…)` table functions (CALL keeps its
     * text — `run` routes it to runPragma directly) and the
-    * duckdb_tables()/duckdb_columns() catalog functions. Quote-aware:
-    * occurrences inside string literals stay data. */
+    * duckdb_tables()/duckdb_columns() catalog functions. Token-level: an
+    * occurrence inside a literal, a quoted name or a comment stays text. */
   private def splice(spark: SparkSession, views: StatementViews, s0: String): String = {
     val s1 = if (s0.toUpperCase.contains("SUMMARIZE"))
       rewriteEmbeddedSummarize(spark, views, s0)
@@ -1509,14 +1434,18 @@ object Engine {
     else s1
     val s3 = if (s2.toLowerCase.contains("duckdb_tables")) {
       lazy val name = views.add("duckdb_tables", duckdbTablesDf(spark))
-      replaceOutsideQuotes(duckdbTablesFnRe, s2)(_ => name)
+      replaceCalls(s2, "duckdb_tables")(name)
     } else s2
     if (s3.toLowerCase.contains("duckdb_columns")) {
       lazy val name = views.add("duckdb_columns", duckdbColumnsDf(spark))
-      replaceOutsideQuotes(duckdbColumnsFnRe, s3)(_ => name)
+      replaceCalls(s3, "duckdb_columns")(name)
     } else s3
   }
 
+  /** The statement router: each route is a `^\s*KEYWORD` regex over the
+    * statement's route text (`Lexer.routeText`), so a route matches from
+    * the first significant token and reads every comment as whitespace.
+    * A statement no route claims goes to the translator. */
   private def run(spark: SparkSession, duckSql: String): DataFrame = {
     duckSql match {
       case pragmaRe(name, callArg, eqArg) =>
@@ -1664,9 +1593,7 @@ object Engine {
       case truncateBareRe(t) =>
         // DuckDB accepts TRUNCATE without the TABLE keyword
         return spark.sql(s"TRUNCATE TABLE ${t.replaceAll("[`\"]", "")}")
-      case s0 if s0.toUpperCase.matches("(?s)^\\s*UPDATE\\b.*") &&
-          splitUpdateFrom(s0).isDefined =>
-        val (table, sets, fromSrc, where, ret) = splitUpdateFrom(s0).get
+      case UpdateFrom(table, sets, fromSrc, where, ret) =>
         return runUpdateFrom(spark, table, sets, fromSrc, where, ret)
       case deleteUsingRe(table, using, where, ret) =>
         return runDeleteUsing(spark, table, using, where, Option(ret))
@@ -1931,7 +1858,7 @@ object Engine {
         var t: Option[String] = None
         var go = true
         while (go && j < stmts.length) {
-          parseAlterOp(stmts(j)) match {
+          parseAlterOp(Lexer.routeText(stmts(j))) match {
             case Some((tbl, op)) if t.forall(_.equalsIgnoreCase(tbl)) =>
               t = Some(tbl); b += ((tbl, op)); j += 1
             case _ => go = false

@@ -40,19 +40,23 @@ case class CosineSim(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
+      // fresh names: the enclosing method may already declare any fixed
+      // one (a projection's `apply(InternalRow i)` declares `i`)
+      val Seq(n, dot, na, nb, i, xv, yv, den) =
+        Seq("n", "dot", "na", "nb", "i", "xv", "yv", "den").map(ctx.freshName)
       s"""
-         |int n = $a.numElements();
-         |if ($b.numElements() != n) {
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n) {
          |  ${ev.isNull} = true;
          |} else {
-         |  double dot = 0.0, na = 0.0, nb = 0.0;
-         |  for (int i = 0; i < n; i++) {
-         |    float xv = $a.isNullAt(i) ? 0.0f : $a.getFloat(i);
-         |    float yv = $b.isNullAt(i) ? 0.0f : $b.getFloat(i);
-         |    dot += (double) xv * yv; na += (double) xv * xv; nb += (double) yv * yv;
+         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    float $xv = $a.isNullAt($i) ? 0.0f : $a.getFloat($i);
+         |    float $yv = $b.isNullAt($i) ? 0.0f : $b.getFloat($i);
+         |    $dot += (double) $xv * $yv; $na += (double) $xv * $xv; $nb += (double) $yv * $yv;
          |  }
-         |  double den = java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb);
-         |  if (den == 0.0) { ${ev.isNull} = true; } else { ${ev.value} = dot / den; }
+         |  double $den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+         |  if ($den == 0.0) { ${ev.isNull} = true; } else { ${ev.value} = $dot / $den; }
          |}
        """.stripMargin
     })

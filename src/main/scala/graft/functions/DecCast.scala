@@ -17,8 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    truncate signature, unique in the candidate table — so the
   *    default is now TRUNC (which is also the 1.0.0 dev replica's
   *    probed behavior: 1.256→(8,1)→1.2). The r14/r15 half-away /
-  *    half-even hypotheses stay one conf flip away
-  *    ([[DecCast.downscaleMode]]).
+  *    half-even hypotheses are refuted and gone.
   *  - DOUBLE/FLOAT → DECIMAL: **MEASURED (r16, VERDICT r15 #1b): the
   *    driver's oracle renders the value to its SHORTEST DECIMAL STRING
   *    (the [[DoubleStr]] kernel — duck-exact, 0/160k + 0/40k validated)
@@ -28,8 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    means the engine's VARCHAR parse already matches). Default is
   *    now RENDER: 0.145e0→"0.145"→(8,2)→0.15; 2.675e0→"2.675"→2.68;
   *    15.085e0→"15.085"→15.09; 2.5e0→"2.5"→(8,0)→3; 0.125e0→0.13;
-  *    99.99e0→(4,2)→99.99. nearbyint/epsilon/exact stay behind the
-  *    conf ([[DecCast.fpCastMode]]). NaN/inf error (try: NULL);
+  *    99.99e0→(4,2)→99.99. The 1.0.0 replica's epsilon model stays
+  *    behind `spark.graft.replicaMode` ([[DecCast.fpCastMode]]); the
+  *    refuted nearbyint and exact models are gone. NaN/inf error (try:
+  *    NULL);
   *  - VARCHAR parses then rounds half away from zero (probed
   *    '1.255'→(8,2)→1.26; duck's string→decimal looks at the first
   *    excess digit — believed version-stable, sentinel q247);
@@ -43,7 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * a false positive lands on a non-decimal input branch here, each of
   * which reproduces duck's semantics for that source type. */
 case class DecCastExpr(child: Expression, p: Int, s: Int, tryMode: Boolean,
-    mode: Int = DecCast.DownEven, fpMode: Int = DecCast.FpNearby)
+    fpMode: Int)
     extends UnaryExpression {
   override def dataType: DataType = DecimalType(p, s)
   override def prettyName: String =
@@ -56,7 +57,7 @@ case class DecCastExpr(child: Expression, p: Int, s: Int, tryMode: Boolean,
       s"${prettyName} requires a numeric, string or boolean input, got ${other.simpleString}")
   }
   override def nullSafeEval(a: Any): Any = {
-    val r = DecCast.cast(a, p, s, tryMode, mode, fpMode)
+    val r = DecCast.cast(a, p, s, tryMode, fpMode)
     if (r == null) null else Decimal(r, p, s)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -68,7 +69,7 @@ case class DecCastExpr(child: Expression, p: Int, s: Int, tryMode: Boolean,
       // !tryMode path (cast() throws), so guard on nullability.
       val onNull = if (nullable) s"${ev.isNull} = true;"
         else "throw new IllegalStateException(\"graft_dec_cast: unexpected null\");"
-      s"""java.math.BigDecimal $tmp = graft.functions.DecCast.cast($a, $p, $s, $tryMode, $mode, $fpMode);
+      s"""java.math.BigDecimal $tmp = graft.functions.DecCast.cast($a, $p, $s, $tryMode, $fpMode);
          |if ($tmp == null) { $onNull }
          |else { ${ev.value} = org.apache.spark.sql.types.Decimal.apply($tmp, $p, $s); }
          |""".stripMargin
@@ -78,69 +79,36 @@ case class DecCastExpr(child: Expression, p: Int, s: Int, tryMode: Boolean,
 }
 
 object DecCast {
-  /** DECIMAL→DECIMAL downscale policies (oracle-version register,
-    * SURVEY §2.12). */
-  val DownEven = 0   // round half to even — r15 default, fingerprint-refuted
-  val DownAway = 1   // round half away from zero — r14's pin, driver-red
-  val DownTrunc = 2  // truncate toward zero — MEASURED driver policy (r16 default)
-
   /** DOUBLE/FLOAT→DECIMAL models. */
-  val FpNearby = 0   // std::nearbyint on the FP product — r15 default, refuted
   val FpEpsilon = 1  // 1.0.0 replica: signed absolute 1e-9 epsilon + half-away
-  val FpExact = 2    // correctly rounded conversion of the exact binary value
   val FpRender = 3   // shortest-string render + half-away parse — MEASURED (r16 default)
 
   /** Read at PLAN time on the driver by every DecCastExpr construction
     * site (translator function builder + DecDownscaleCast rule) so the
-    * mode serializes with the expression. `spark.graft.replicaMode=true`
-    * (or the legacy `spark.graft.decimalDownscaleTruncate=true`) pins
-    * BOTH version-sensitive surfaces to the local DuckDB 1.0.0 replica
-    * for probe-gate work; the driver never sets either, so driver runs
-    * take the new defaults. */
-  private def conf(key: String, dflt: String): String = {
+    * model serializes with the expression. `spark.graft.replicaMode=true`
+    * pins the DOUBLE/FLOAT surface to the local DuckDB 1.0.0 replica for
+    * probe-gate work (DiffProbe, and Verify under SPARK_GRAFT_DEC_TRUNC);
+    * every other session takes the measured default. */
+  def fpCastMode: Int = {
     val c = org.apache.spark.sql.internal.SQLConf.get
-    try c.getConfString(key)
-    catch { case _: java.util.NoSuchElementException => dflt }
+    if (c.getConfString("spark.graft.replicaMode", "false") == "true") FpEpsilon
+    else FpRender
   }
-  private def replica: Boolean =
-    conf("spark.graft.replicaMode", "false") == "true" ||
-      conf("spark.graft.decimalDownscaleTruncate", "false") == "true"
-
-  def downscaleMode: Int =
-    if (replica) DownTrunc
-    else conf("spark.graft.decimalDownscaleMode", "trunc") match {
-      case "away" => DownAway
-      case "even" => DownEven
-      case _ => DownTrunc
-    }
-
-  def fpCastMode: Int =
-    if (replica) FpEpsilon
-    else conf("spark.graft.doubleDecCastMode", "render") match {
-      case "epsilon" => FpEpsilon
-      case "exact" => FpExact
-      case "nearbyint" => FpNearby
-      case _ => FpRender
-    }
 
   /** null return = tryMode swallow; throws when !tryMode (duck's loud
     * Conversion Error posture). */
-  def cast(a: Any, p: Int, s: Int, tryMode: Boolean, mode: Int, fpMode: Int): JBigDecimal = a match {
+  def cast(a: Any, p: Int, s: Int, tryMode: Boolean, fpMode: Int): JBigDecimal = a match {
     case dec: Decimal =>
-      val rm = mode match {
-        case DownAway => RoundingMode.HALF_UP
-        case DownTrunc => RoundingMode.DOWN
-        case _ => RoundingMode.HALF_EVEN
-      }
-      fit(dec.toJavaBigDecimal.setScale(s, rm), p, s, tryMode)
+      // DECIMAL downscale truncates toward zero in every measured version
+      fit(dec.toJavaBigDecimal.setScale(s, RoundingMode.DOWN), p, s, tryMode)
     case d: java.lang.Double =>
       if (fpMode == FpRender) fpRender(d, isFloat = false, 0f, p, s, tryMode)
-      else fp(d, p, s, tryMode, fpMode)
+      else fpEpsilon(d, p, s, tryMode)
     case f: java.lang.Float =>
       // render mode keeps the FLOAT width: duck renders a float with its
       // float-shortest digits (grisu3-binary32), not the widened double's
       if (fpMode == FpRender) fpRender(f.doubleValue(), isFloat = true, f, p, s, tryMode)
-      else fp(f.doubleValue(), p, s, tryMode, fpMode)
+      else fpEpsilon(f.doubleValue(), p, s, tryMode)
     case str: UTF8String =>
       val t = str.toString.trim
       try fit(new JBigDecimal(t).setScale(s, RoundingMode.HALF_UP), p, s, tryMode)
@@ -177,37 +145,26 @@ object DecCast {
     fit(new JBigDecimal(str).setScale(s, RoundingMode.HALF_UP), p, s, tryMode)
   }
 
-  private def fp(d: Double, p: Int, s: Int, tryMode: Boolean, fpMode: Int): JBigDecimal = {
+  /** FpEpsilon (the 1.0.0 replica): scale in FP first (duck's
+    * DoubleToDecimalCast shape in every version probed), add a signed
+    * absolute 1e-9 epsilon, then round half away from zero (1.0.0's
+    * cround). The result is an integral double — exact in binary, so the
+    * BigDecimal conversion is the int128 narrowing duck performs. */
+  private def fpEpsilon(d: Double, p: Int, s: Int, tryMode: Boolean): JBigDecimal = {
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) {
       if (tryMode) return null
       throw new ArithmeticException(
         s"""Casting value "$d" to type DECIMAL($p,$s) failed: value is out of range""")
     }
-    if (fpMode == FpExact) {
-      // correctly rounded conversion of the EXACT binary value, ties to
-      // even (2.675e0 is 2.67499999999999982… → (10,2) → 2.67). Range
-      // check falls out of fit().
-      return fit(new JBigDecimal(d).setScale(s, RoundingMode.HALF_EVEN), p, s, tryMode)
-    }
-    // product models: scale in FP first (duck's DoubleToDecimalCast
-    // shape in every version probed), then round the product
     val prod0 = d * Math.pow(10, s.toDouble)
-    val prod = if (fpMode == FpEpsilon)
-      prod0 + (if (prod0 < 0) -1e-9 else 1e-9) else prod0
+    val prod = prod0 + (if (prod0 < 0) -1e-9 else 1e-9)
     if (java.lang.Double.isInfinite(prod) ||
         prod <= -Math.pow(10, p.toDouble) || prod >= Math.pow(10, p.toDouble)) {
       if (tryMode) return null
       throw new ArithmeticException(
         s"""Casting value "$d" to type DECIMAL($p,$s) failed: value is out of range""")
     }
-    // FpNearby: Math.rint == std::nearbyint under the default FP env
-    // (round half to even); FpEpsilon: 1.0.0's cround (half away — the
-    // epsilon has already broken genuine ties upward, so the two agree
-    // everywhere the replica was probed). Both produce an integral
-    // double — exact in binary, so the BigDecimal conversion is the
-    // int128 narrowing duck performs.
-    val rounded = if (fpMode == FpEpsilon) RoundDbl.cround(prod) else Math.rint(prod)
-    fit(new JBigDecimal(rounded).movePointLeft(s).setScale(s), p, s, tryMode)
+    fit(new JBigDecimal(RoundDbl.cround(prod)).movePointLeft(s).setScale(s), p, s, tryMode)
   }
 
   /** duck errors when the value's integer digits exceed p - s. */

@@ -139,16 +139,16 @@ object GraftFunctions {
       args => IntDivExpr(args(0), args(1))),
     ("graft_intdiv_exact", "DuckDB // over HUGEINT-spelled operands: exact INT128-style trunc division at DECIMAL(38,0); double fallback when a fractional operand shows the slice was not hugeint//hugeint",
       args => IntDivExactExpr(args(0), args(1))),
-    ("graft_dec_cast", "DuckDB CAST to DECIMAL(p,s) by INPUT type: decimal downscale rounds per the conf'd policy (r15 default half-even; away/trunc switchable), double takes the conf'd FP model (r15 default nearbyint on the product), string half-away; out-of-range errors",
+    ("graft_dec_cast", "DuckDB CAST to DECIMAL(p,s) by INPUT type: decimal downscale truncates toward zero, double renders to its shortest string and parses half-away (the 1.0.0 replica's epsilon model under spark.graft.replicaMode), string half-away; out-of-range errors",
       args => DecCastExpr(args(0),
         args(1).eval().asInstanceOf[Number].intValue(),
         args(2).eval().asInstanceOf[Number].intValue(), tryMode = false,
-        mode = DecCast.downscaleMode, fpMode = DecCast.fpCastMode)),
+        fpMode = DecCast.fpCastMode)),
     ("graft_dec_cast_try", "graft_dec_cast's TRY twin: NULL on out-of-range / unparseable / NaN / inf",
       args => DecCastExpr(args(0),
         args(1).eval().asInstanceOf[Number].intValue(),
         args(2).eval().asInstanceOf[Number].intValue(), tryMode = true,
-        mode = DecCast.downscaleMode, fpMode = DecCast.fpCastMode)),
+        fpMode = DecCast.fpCastMode)),
     ("graft_list_sort", "DuckDB list_sort/array_sort/list_reverse_sort: elements by the NULL-HIGH total order (inner NULLs rank above every value — Spark sorts them below), top-level NULL entries placed by the NULLS FIRST/LAST flag",
       args => ListSortExpr(args(0),
         args(1).eval().asInstanceOf[Boolean],

@@ -106,9 +106,9 @@ object StrptimeDyn {
     val in = input
     var pos = 0
     def fail(msg: String): Nothing = throw new ParseFail(msg)
-    def skipWs(): Unit = while (pos < in.length && in.charAt(pos).isWhitespace) pos += 1
+    def skipBlanks(): Unit = while (pos < in.length && in.charAt(pos).isWhitespace) pos += 1
     def readNum(maxDigits: Int, min: Int, max: Int, what: String): Int = {
-      skipWs()
+      skipBlanks()
       val s = pos
       while (pos < in.length && pos - s < maxDigits && in.charAt(pos).isDigit) pos += 1
       if (pos == s) fail(s"expected digits for $what")
@@ -124,7 +124,7 @@ object StrptimeDyn {
       in.substring(s, pos)
     }
     def readName(names: Array[String], what: String): Int = {
-      skipWs()
+      skipBlanks()
       var k = 0
       while (k < names.length) {
         val n = names(k)
@@ -180,7 +180,7 @@ object StrptimeDyn {
             val d = readDigits(9, "nanoseconds")
             micros = (d.toLong + 500L) / 1000L
           case 'p' =>
-            skipWs()
+            skipBlanks()
             if (pos + 2 <= in.length) {
               val m2 = in.substring(pos, pos + 2)
               if (m2.equalsIgnoreCase("AM")) { meridian = 0; pos += 2 }
@@ -197,7 +197,7 @@ object StrptimeDyn {
           case 'U' => sunWeek = readNum(2, 0, 53, "week(Sunday)")
           case 'W' => monWeek = readNum(2, 0, 53, "week(Monday)")
           case 'z' =>
-            skipWs()
+            skipBlanks()
             if (pos >= in.length || (in.charAt(pos) != '+' && in.charAt(pos) != '-'))
               fail("expected a +HH[:]MM utc offset")
             val sign = if (in.charAt(pos) == '-') -1 else 1
@@ -211,7 +211,7 @@ object StrptimeDyn {
             }
             offsetSec = sign * (hh * 3600 + mm * 60)
           case 'Z' =>
-            skipWs()
+            skipBlanks()
             val s = pos
             while (pos < in.length && {
               val ch = in.charAt(pos)
@@ -227,7 +227,7 @@ object StrptimeDyn {
         // pattern whitespace consumes one-or-more input whitespace
         if (pos >= in.length || !in.charAt(pos).isWhitespace)
           fail("expected whitespace")
-        skipWs()
+        skipBlanks()
         // a whitespace RUN in the pattern is one unit
         while (i < p.length && p.charAt(i).isWhitespace) i += 1
       } else {

@@ -38,7 +38,6 @@ object Components {
     var edges = pairs.toDF("a", "b")
       .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
       .filter($"u" =!= $"v").distinct().localCheckpoint()
-    val trace = sys.env.get("GRAFT_CC_TRACE").contains("1")
 
     // Fixpoint test (r16, guide §1.2): the fixpoints of alternating
     // large-star/small-star are EXACTLY the star forests (Kiveris et
@@ -69,7 +68,6 @@ object Components {
     var converged = isStarForest(edges)
     var round = 0
     while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
       // large-star: for each u over BOTH orientations, link every strictly
       // larger neighbor to the neighborhood min (incl. u). The min is
       // computed by a groupBy and JOINED back per edge — a giant component
@@ -100,9 +98,6 @@ object Components {
       edges = smallStar
       converged = isStarForest(edges)
       round += 1
-      if (trace) System.err.println(
-        f"[cc-trace] round $round: converged=$converged " +
-          f"${(System.nanoTime() - t0) / 1e9}%.3fs")
     }
     require(converged, s"connectedComponents did not converge in $maxRounds rounds")
 

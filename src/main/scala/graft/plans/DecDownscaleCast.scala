@@ -10,10 +10,8 @@ import graft.functions.DecCastExpr
 /** Every DECIMAL → DECIMAL *downscale* Cast — explicit or inserted by
   * type coercion (CASE/coalesce branch unification, UNION alignment,
   * INSERT assignment) — routes through the graft_dec_cast kernel so the
-  * rounding mode tracks the oracle version (r15, VERDICT r14 #1: the
-  * driver's newer DuckDB rejected both the replica's truncate and r14's
-  * half-away — kernel default is now half-EVEN, with away/trunc and the
-  * double→decimal models behind DecCast's three-way confs) and overflow
+  * rounding matches the oracle (the measured policy truncates toward
+  * zero, and a DOUBLE/FLOAT source takes DecCast's FP model) and overflow
   * stays duck's loud Conversion Error. r13 dec fuzz, seed-21 pinned the
   * coercion shape: `CASE WHEN … THEN -0.125 % 2.5 ELSE <DECIMAL(38,2)>
   * END` unifies at scale 2. The translator's rewriteDecCast catches explicit casts at
@@ -44,7 +42,6 @@ object DecDownscaleCast extends Rule[LogicalPlan] {
       val t = c.dataType.asInstanceOf[DecimalType]
       DecCastExpr(c.child, t.precision, t.scale,
         tryMode = c.evalMode == EvalMode.TRY,
-        mode = graft.functions.DecCast.downscaleMode,
         fpMode = graft.functions.DecCast.fpCastMode)
   }
 }

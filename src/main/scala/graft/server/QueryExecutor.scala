@@ -1,7 +1,7 @@
 package graft.server
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.dialect.Sanitizer
+import graft.dialect.{Lexer, Sanitizer}
 import graft.engine.Engine
 
 /** Query execution + format dispatch + error channel (reference S2,
@@ -37,7 +37,7 @@ object QueryExecutor {
   private val insertRe = "(?is)^\\s*INSERT\\s+INTO\\s+([\\w.`\"]+)\\s*$".r
 
   def insertTarget(sql: String): Option[String] =
-    Sanitizer.stripFormat(sql)._1 match {
+    Lexer.routeText(Sanitizer.stripFormat(sql)._1) match {
       case insertRe(t) => Some(t.replaceAll("[`\"]", ""))
       case _ => None
     }

@@ -271,6 +271,20 @@ class ExpressionsSpec extends SparkTestBase {
     val df = spark.createDataFrame(Seq((a, b))).toDF("x", "y")
     val got = df.select(expr("cosine_sim(x, y)")).head.getDouble(0)
     assert(math.abs(got - expected) < 1e-12)
+    // p63/p65's top-k shape (ORDER BY … LIMIT): TakeOrderedAndProject
+    // compiles its projection outside whole-stage codegen, in a method
+    // whose input row is named `i`; pinned with the interpreted fallback off
+    val codegenOnly = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    codegenOnly.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val vecs = spark.range(2).selectExpr("id",
+        "array(CAST(1.0 + id AS FLOAT), CAST(2.0 AS FLOAT), CAST(3.0 AS FLOAT)) AS x",
+        "array(CAST(4.0 AS FLOAT), CAST(5.0 AS FLOAT), CAST(6.0 AS FLOAT)) AS y")
+      val top = vecs.select(col("id"), expr("cosine_sim(x, y)").as("c"))
+        .orderBy("id").limit(1).head.getDouble(1)
+      assert(math.abs(top - expected) < 1e-12)
+    } finally codegenOnly.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   test("cosine_sim of identical vectors is 1; orthogonal is 0; zero vector is null") {
@@ -907,33 +921,20 @@ class ExpressionsSpec extends SparkTestBase {
     // DECIMAL source downscale TRUNCATES toward zero (r16 default —
     // MEASURED: the r15 q236-q241 fingerprint came back R G R R R R,
     // the pre-registered truncate signature, unique in the candidate
-    // table. even/away stay behind the three-way conf.)
+    // table.)
     assert(s("graft_dec_cast(CAST(1.256 AS DECIMAL(8,3)), 8, 1)") == "1.2")
     assert(s("graft_dec_cast(CAST(-1.256 AS DECIMAL(8,3)), 8, 1)") == "-1.2")
     assert(s("graft_dec_cast(CAST(2.5 AS DECIMAL(4,1)), 8, 0)") == "2")
     assert(s("graft_dec_cast(CAST(3.5 AS DECIMAL(4,1)), 8, 0)") == "3")
     assert(s("graft_dec_cast(CAST(-2.5 AS DECIMAL(4,1)), 8, 0)") == "-2")
     assert(s("graft_dec_cast(CAST(1.24 AS DECIMAL(8,3)), 8, 1)") == "1.2")
-    // r14's half-away behind the conf
-    spark.conf.set("spark.graft.decimalDownscaleMode", "away")
-    try {
-      assert(s("graft_dec_cast(CAST(2.5 AS DECIMAL(4,1)), 8, 0)") == "3")
-      assert(s("graft_dec_cast(CAST(-2.5 AS DECIMAL(4,1)), 8, 0)") == "-3")
-    } finally spark.conf.unset("spark.graft.decimalDownscaleMode")
-    // r15's half-even behind the conf
-    spark.conf.set("spark.graft.decimalDownscaleMode", "even")
-    try {
-      assert(s("graft_dec_cast(CAST(1.256 AS DECIMAL(8,3)), 8, 1)") == "1.3")
-      assert(s("graft_dec_cast(CAST(2.5 AS DECIMAL(4,1)), 8, 0)") == "2")
-      assert(s("graft_dec_cast(CAST(3.5 AS DECIMAL(4,1)), 8, 0)") == "4")
-    } finally spark.conf.unset("spark.graft.decimalDownscaleMode")
-    // 1.0.0-replica truncate mode behind the legacy conf switch
-    spark.conf.set("spark.graft.decimalDownscaleTruncate", "true")
+    // the 1.0.0 replica truncates too
+    spark.conf.set("spark.graft.replicaMode", "true")
     try {
       assert(s("graft_dec_cast(CAST(1.256 AS DECIMAL(8,3)), 8, 1)") == "1.2")
       assert(s("graft_dec_cast(CAST(-1.256 AS DECIMAL(8,3)), 8, 1)") == "-1.2")
       assert(s("graft_dec_cast(CAST(3.5 AS DECIMAL(4,1)), 8, 0)") == "3")
-    } finally spark.conf.set("spark.graft.decimalDownscaleTruncate", "false")
+    } finally spark.conf.unset("spark.graft.replicaMode")
     // upscale is exact and keeps duck's trailing-zero rendering
     assert(s("graft_dec_cast(CAST(1.5 AS DECIMAL(4,1)), 6, 3)") == "1.500")
     // DOUBLE source, r16 default RENDER (MEASURED — VERDICT r15 #1b:
@@ -958,35 +959,14 @@ class ExpressionsSpec extends SparkTestBase {
     assert(s("graft_dec_cast(CAST(0.145 AS FLOAT), 8, 2)") == "0.15")
     // capacity edge survives: 99.99 renders "99.99", fits (4,2)
     assert(s("graft_dec_cast(CAST(99.99 AS DOUBLE), 4, 2)") == "99.99")
-    // r15's nearbyint behind the conf: half-even on the bare FP
-    // product (0.145·100 = 14.499999999999998 → 0.14; ties even)
-    spark.conf.set("spark.graft.doubleDecCastMode", "nearbyint")
-    try {
-      assert(s("graft_dec_cast(CAST(0.145 AS DOUBLE), 8, 2)") == "0.14")
-      assert(s("graft_dec_cast(CAST(2.675 AS DOUBLE), 10, 2)") == "2.68")
-      assert(s("graft_dec_cast(CAST(2.5 AS DOUBLE), 8, 0)") == "2")
-      assert(s("graft_dec_cast(CAST(-2.5 AS DOUBLE), 8, 0)") == "-2")
-      assert(s("graft_dec_cast(CAST(0.125 AS DOUBLE), 8, 2)") == "0.12")
-    } finally spark.conf.unset("spark.graft.doubleDecCastMode")
     assert(s("graft_round_dbl(CAST(0.145 AS DOUBLE), 2)") == "0.14")
-    // 1.0.0-replica epsilon model behind the conf (replicaMode pins
-    // both surfaces; the dedicated conf pins just this one)
-    spark.conf.set("spark.graft.doubleDecCastMode", "epsilon")
+    // 1.0.0-replica epsilon model behind replicaMode
+    spark.conf.set("spark.graft.replicaMode", "true")
     try {
       assert(s("graft_dec_cast(CAST(0.145 AS DOUBLE), 8, 2)") == "0.15")
       assert(s("graft_dec_cast(CAST(2.5 AS DOUBLE), 8, 0)") == "3")
       assert(s("graft_dec_cast(CAST(2.675 AS DOUBLE), 10, 2)") == "2.68")
-    } finally spark.conf.unset("spark.graft.doubleDecCastMode")
-    // EXACT competing hypothesis: correctly rounded conversion of the
-    // exact binary value (2.675e0 is 2.67499999999999982… → 2.67) —
-    // distinguishable from nearbyint ONLY on product-tie cells like
-    // 2.675 (the q243 fingerprint)
-    spark.conf.set("spark.graft.doubleDecCastMode", "exact")
-    try {
-      assert(s("graft_dec_cast(CAST(2.675 AS DOUBLE), 10, 2)") == "2.67")
-      assert(s("graft_dec_cast(CAST(0.145 AS DOUBLE), 8, 2)") == "0.14")
-      assert(s("graft_dec_cast(CAST(2.5 AS DOUBLE), 8, 0)") == "2")
-    } finally spark.conf.unset("spark.graft.doubleDecCastMode")
+    } finally spark.conf.unset("spark.graft.replicaMode")
     // VARCHAR source: parse + HALF_UP (duck: '1.255' → 1.26)
     assert(s("graft_dec_cast('1.255', 8, 2)") == "1.26")
     // integral exact

@@ -974,6 +974,13 @@ class OperatorsSpec extends SparkTestBase {
     intercept[IllegalStateException] { Engine.sql(spark, "EXECUTE sp_pq") }
     intercept[IllegalStateException] { Engine.sql(spark, "DEALLOCATE sp_pq") }
     Engine.sql(spark, "DEALLOCATE PREPARE sp_pq2")
+    // a `?` or `$n` inside a comment is no placeholder
+    Engine.sql(spark, "PREPARE sp_pq3 AS SELECT 41 + ? -- one arg?\n AS y")
+    assert(Engine.sql(spark, "EXECUTE sp_pq3(1)").head.get(0).toString == "42")
+    Engine.sql(spark, "PREPARE sp_pq4 AS SELECT 1 + $1 /* $2 isn't bound */ AS y")
+    assert(Engine.sql(spark, "EXECUTE sp_pq4(1)").head.get(0).toString == "2")
+    Engine.sql(spark, "DEALLOCATE sp_pq3")
+    Engine.sql(spark, "DEALLOCATE sp_pq4")
   }
 
   test("information_schema emulation and version()") {
@@ -1272,6 +1279,15 @@ class OperatorsSpec extends SparkTestBase {
       val want = if (id < 3) before(id) * 2 else before(id)
       assert(after(id) == want, s"id $id")
     }
+    // a quote or a comma inside a comment is no syntax: the joined form is
+    // still found, and SET keeps one assignment
+    def price(id: Long) = spark.table("sp_jdml").where(s"id = $id").head.getDouble(1)
+    val undo = Engine.sql(spark,
+      "UPDATE sp_jdml SET price = s.o_totalprice -- don't\nFROM orders s " +
+        "WHERE sp_jdml.id = s.o_orderkey AND s.o_orderkey = 1")
+    assert(undo.head.getLong(0) == 1L && price(1) == before(1L))
+    val seven = Engine.sql(spark, "UPDATE sp_jdml SET price = 7 -- a, b\n WHERE id = 1")
+    assert(seven.head.getLong(0) == 1L && price(1) == 7.0)
     // DELETE USING removes matched rows only; RETURNING yields them
     val del = Engine.sql(spark,
       "DELETE FROM sp_jdml USING orders s WHERE sp_jdml.id = s.o_orderkey " +
@@ -1800,6 +1816,64 @@ class OperatorsSpec extends SparkTestBase {
       "SELECT 'duckdb_tables() is a fn' AS s, count(*) AS c FROM duckdb_tables()")
       .head
     assert(mixed.getString(0) == "duckdb_tables() is a fn" && mixed.getLong(1) >= 1)
+    // a quote inside a comment opens no literal: every splice still fires
+    def same(plain: String, withComment: String): Unit = {
+      val want = Engine.sql(spark, plain).collect().toSeq
+      assert(want.nonEmpty && Engine.sql(spark, withComment).collect().toSeq == want, withComment)
+    }
+    same("SELECT count(*) FROM duckdb_tables()",
+      "SELECT /* it's */ count(*) FROM duckdb_tables()")
+    same("SELECT name FROM pragma_table_info('orders')",
+      "SELECT /* it's */ name FROM pragma_table_info('orders')")
+    same("SELECT column_name FROM (SUMMARIZE SELECT o_orderkey FROM orders)",
+      "SELECT column_name FROM (SUMMARIZE SELECT o_orderkey -- it's\n FROM orders)")
+  }
+
+  test("engine routes match from the first significant token, through comments") {
+    import spark.implicits._
+    Engine.registerTables(spark, sfDir)
+    val copyDir = java.nio.file.Files.createTempDirectory("sp_cmt_copy").toString + "/out"
+    // a leading line comment, and a block comment holding a quote, a
+    // comma, parens and a `?` after the first keyword
+    def commented(sql: String): String = {
+      val k = sql.indexOf(' ')
+      s"-- c\n${sql.take(k)} /* it's, (a?) */${sql.drop(k)}"
+    }
+    def fresh(): Unit = {
+      Seq("sp_cmt_t", "sp_cmt_s").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq((1L, 10L), (2L, 20L)).toDF("id", "v").write.format("parquet").saveAsTable("sp_cmt_t")
+      Seq((1L, 11L)).toDF("id", "v").write.format("parquet").saveAsTable("sp_cmt_s")
+    }
+    def rows(sql: String): Seq[String] = Engine.sql(spark, sql).collect().map(_.toString).toSeq
+    def table(): Seq[String] =
+      spark.table("sp_cmt_t").orderBy("id").collect().map(_.toString).toSeq
+    val scripts = Seq(
+      Seq("DELETE FROM sp_cmt_t WHERE id = 2"),
+      Seq("UPDATE sp_cmt_t SET v = 11 WHERE id = 1"),
+      Seq("UPDATE sp_cmt_t SET v = sp_cmt_s.v + 1 FROM sp_cmt_s WHERE sp_cmt_t.id = sp_cmt_s.id"),
+      Seq("DELETE FROM sp_cmt_t USING sp_cmt_s WHERE sp_cmt_t.id = sp_cmt_s.id"),
+      Seq("INSERT INTO sp_cmt_t VALUES (3, 30) RETURNING id, v"),
+      Seq("PREPARE sp_cmt_p AS SELECT 41 + ? AS y", "EXECUTE sp_cmt_p(1)",
+        "DEALLOCATE sp_cmt_p"),
+      Seq("SUMMARIZE sp_cmt_t"),
+      Seq("CREATE VIEW sp_cmt_v AS SELECT id FROM sp_cmt_t", "SELECT * FROM sp_cmt_v",
+        "DROP VIEW sp_cmt_v"),
+      Seq("CREATE MACRO sp_cmt_m(x) AS x + 1", "SELECT sp_cmt_m(v) FROM sp_cmt_t ORDER BY 1",
+        "DROP MACRO sp_cmt_m"),
+      Seq(s"COPY sp_cmt_t TO '$copyDir' (FORMAT PARQUET)"),
+      Seq("ALTER TABLE sp_cmt_t ADD COLUMN w INTEGER DEFAULT 5"))
+    val plain = scripts.map { script => fresh(); script.map(rows) :+ table() }
+    scripts.zip(plain).foreach { case (script, want) =>
+      fresh()
+      assert(script.map(s => rows(commented(s))) :+ table() == want, commented(script.head))
+    }
+    // the plain runs themselves: DuckDB's results
+    assert(plain.take(4).map(_.head) == Seq.fill(4)(Seq("[1]")))
+    assert(plain.take(4).map(_.last) == Seq(Seq("[1,10]"), Seq("[1,11]", "[2,20]"),
+      Seq("[1,12]", "[2,20]"), Seq("[2,20]")))
+    assert(plain(5)(1) == Seq("[42]"))
+    assert(plain(6).head.length == 2 && plain(6).head.head.split(",").length == 12)
+    Seq("sp_cmt_t", "sp_cmt_s").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("r8 advice: current_setting runtime path unquotes like plan-time") {

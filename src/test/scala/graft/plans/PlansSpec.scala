@@ -96,7 +96,7 @@ class PlansSpec extends SparkTestBase {
     // MEASURED): the q236-q241 fingerprint vector uniquely matched
     // the TRUNCATE row; -0.125 → -0.12 under truncate too (toward
     // zero), 2.555 → 2.55 is the cell where truncate and every
-    // rounding policy disagree. even/away stay conf-switchable.
+    // rounding policy disagree.
     graft.engine.Engine.registerTables(spark, sfDir)
     val caseSql =
       "SELECT CAST(CASE WHEN o_orderkey % 3 = 0 THEN CAST(-0.125 AS DECIMAL(6,3)) % CAST(2.5 AS DECIMAL(2,1)) " +
@@ -108,22 +108,13 @@ class PlansSpec extends SparkTestBase {
     val e = spark.sql("SELECT CAST(CAST(2.555 AS DECIMAL(6,3)) AS DECIMAL(6,2))")
       .head.getDecimal(0).toPlainString
     assert(e == "2.55", s"explicit downscale not truncate: $e")
-    // r14's half-away behind the mode conf (-0.125 → -0.13)
-    spark.conf.set("spark.graft.decimalDownscaleMode", "away")
-    try assert(spark.sql(caseSql).head.getString(0) == "-0.13")
-    finally spark.conf.unset("spark.graft.decimalDownscaleMode")
-    // r15's half-even behind the mode conf (2.555 → 2.56)
-    spark.conf.set("spark.graft.decimalDownscaleMode", "even")
-    try assert(spark.sql("SELECT CAST(CAST(2.555 AS DECIMAL(6,3)) AS DECIMAL(6,2))")
-      .head.getDecimal(0).toPlainString == "2.56")
-    finally spark.conf.unset("spark.graft.decimalDownscaleMode")
-    // replica truncate mode behind the legacy conf switch
-    spark.conf.set("spark.graft.decimalDownscaleTruncate", "true")
+    // the 1.0.0 replica truncates too
+    spark.conf.set("spark.graft.replicaMode", "true")
     try {
       assert(spark.sql(caseSql).head.getString(0) == "-0.12")
       assert(spark.sql("SELECT CAST(CAST(2.555 AS DECIMAL(6,3)) AS DECIMAL(6,2))")
         .head.getDecimal(0).toPlainString == "2.55")
-    } finally spark.conf.set("spark.graft.decimalDownscaleTruncate", "false")
+    } finally spark.conf.unset("spark.graft.replicaMode")
   }
 
   test("NestedCompare: duck's context-sensitive nested comparison semantics (r15)") {
