@@ -9,8 +9,8 @@ import graft.dialect.Lexer.{Ident, Num, Punct, Str, Tok}
   *
   * Plays the role of the reference's connection manager
   * (`/root/reference/main.py:71-132`): there the engine is a per-tenant
-  * embedded DuckDB; here it is one shared SparkSession with views/databases
-  * as the namespace.
+  * embedded DuckDB; here each tenant is a SparkSession over one shared
+  * catalog, with its own database and engine state (`SessionState`).
   */
 object Engine {
 
@@ -55,27 +55,27 @@ object Engine {
     }
   }
 
+  /** `f` applied to the footer of the parquet file at `path`. */
+  private def footer[T](path: String)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.conf.Configuration()))
+    try f(reader.getFooter) finally reader.close()
+  }
+
   /** Columns annotated TIMESTAMP(NANOS) in the parquet footer — these come
     * back as raw long under nanosAsLong and need explicit conversion. */
   private def nanoLongCols(path: String): Seq[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
     import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
     import scala.jdk.CollectionConverters._
-    try {
-      val in = HadoopInputFile.fromPath(new Path(path), new Configuration())
-      val reader = ParquetFileReader.open(in)
-      try {
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-          case f if Option(f.getLogicalTypeAnnotation).exists {
-            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-            case _ => false
-          } => f.getName
-        }.toSeq
-      } finally reader.close()
-    } catch { case _: Throwable => Nil }
+    try footer(path)(_.getFileMetaData.getSchema.getFields.asScala.collect {
+      case f if Option(f.getLogicalTypeAnnotation).exists {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      } => f.getName
+    }.toSeq)
+    catch { case _: Throwable => Nil }
   }
 
   /** Exact row count from parquet footer metadata — driver-side, no Spark
@@ -83,10 +83,6 @@ object Engine {
     * idiomatic source for sizing parameters like LSH plane counts; catalog
     * statistics take precedence when a table has them. */
   def parquetRowCount(path: String): Option[Long] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
     import scala.jdk.CollectionConverters._
     try {
       val f = new java.io.File(path)
@@ -97,12 +93,7 @@ object Engine {
         else if (f.exists()) Seq(f)
         else return None
       if (files.isEmpty) return None
-      Some(files.map { file =>
-        val in = HadoopInputFile.fromPath(new Path(file.getPath), new Configuration())
-        val reader = ParquetFileReader.open(in)
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
-      }.sum)
+      Some(files.map(file => footer(file.getPath)(_.getBlocks.asScala.map(_.getRowCount).sum)).sum)
     } catch { case _: Throwable => None }
   }
 
@@ -131,20 +122,25 @@ object Engine {
       Option(m.group(1)).orElse(Option(m.group(2))).toSeq
         .flatMap(_.split(',')).map(_.trim.replaceAll("[`\"]", "")).filter(_.nonEmpty)
     }
-    // single execution: the row count is observed during the write job
-    // itself (a count()-then-save would scan the source twice — at 100 TB
-    // an export query must not run twice)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs,
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"))
-    val writer0 = observed.write.mode("overwrite").format(format)
-    val writer = if (partitionCols.nonEmpty) writer0.partitionBy(partitionCols: _*) else writer0
-    val withHeader = if (format == "csv" && (optU.contains("HEADER") || optU.isEmpty))
-      writer.option("header", "true") else writer
-    withHeader.save(path)
-    val n = obs.get("n").asInstanceOf[Long]
+    writeCounted(spark, df) { observed =>
+      val writer0 = observed.write.mode("overwrite").format(format)
+      val writer = if (partitionCols.nonEmpty) writer0.partitionBy(partitionCols: _*) else writer0
+      val withHeader = if (format == "csv" && (optU.contains("HEADER") || optU.isEmpty))
+        writer.option("header", "true") else writer
+      withHeader.save(path)
+    }
+  }
+
+  /** DuckDB's 1-row `Count` result of `write` run on `df`, the rows
+    * counted during the write job itself (a count()-then-save would scan
+    * the source twice — at 100 TB a COPY must not run twice). */
+  private def writeCounted(spark: SparkSession, df: DataFrame)(
+      write: DataFrame => Unit): DataFrame = {
+    import org.apache.spark.sql.functions.{count, lit}
     import spark.implicits._
-    Seq(n).toDF("Count")
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    Seq(obs.get("n").asInstanceOf[Long]).toDF("Count")
   }
 
   /** DuckDB `PRAGMA` statements (r5): the reference passes them straight
@@ -192,6 +188,14 @@ object Engine {
   // DATABASES never reach this: the translator rewrites them first.
   private val describeTableRe =
     "(?is)^\\s*(?:DESCRIBE|SHOW)\\s+(?:TABLE\\s+)?([\\w.`\"]+)\\s*;?\\s*$".r
+  private def describe(spark: SparkSession, df: DataFrame): DataFrame = {
+    import spark.implicits._
+    // DuckDB type spellings (r7 session 3 — was Spark's INT/STRING)
+    df.schema.fields.toSeq.map { f =>
+      (f.name, duckTypeName(f.dataType), if (f.nullable) "YES" else "NO",
+        Option.empty[String], Option.empty[String], Option.empty[String])
+    }.toDF("column_name", "column_type", "null", "key", "default", "extra")
+  }
   private val explainRe =
     "(?is)^\\s*EXPLAIN\\s+(ANALYZE\\s+)?((?:SELECT|WITH|FROM|VALUES)\\b.*)$".r
   private val dropTableIfExistsRe =
@@ -339,15 +343,9 @@ object Engine {
         .cast(target.schema(c).dataType))
     }.select(target.schema.fieldNames.map(c =>
       org.apache.spark.sql.functions.col(c).cast(target.schema(c).dataType)): _*)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = aligned.observe(obs,
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"))
-    tableWriteLock(t).synchronized {
-      observed.write.mode("append").insertInto(t)
+    writeCounted(spark, aligned) { observed =>
+      tableWriteLock(t).synchronized(observed.write.mode("append").insertInto(t))
     }
-    val n = obs.get("n").asInstanceOf[Long]
-    import spark.implicits._
-    Seq(n).toDF("Count")
   }
 
   // ---- DML: one copy-on-write driver -----------------------------------
@@ -555,17 +553,12 @@ object Engine {
     // split it, push source-only filters into the scan, and detect
     // equi-join keys (→ broadcast).
     copyOnWrite(spark, table, returning) {
-      val sets = splitAssignments(setClause)
-      val fields = spark.table(table).schema.fields
-      sets.foreach { case (c, _) =>
-        require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
-      }
-      val selectList = fields.map { f =>
-        sets.find(_._1.equalsIgnoreCase(f.name)) match {
-          case Some((_, e)) =>
-            s"CAST(CASE WHEN __g_m THEN ($e) ELSE $table.${f.name} END AS ${f.dataType.sql}) AS ${f.name}"
-          case None => s"$table.${f.name} AS ${f.name}"
-        }
+      val cols = setColumns(spark, table, setClause)
+      val fields = cols.map(_._1)
+      val selectList = cols.map {
+        case (f, Some(e)) =>
+          s"CAST(CASE WHEN __g_m THEN ($e) ELSE $table.${f.name} END AS ${f.dataType.sql}) AS ${f.name}"
+        case (f, None) => s"$table.${f.name} AS ${f.name}"
       }
       // lazy checkpoint: materialized by the per-file count (one job, not two)
       val matched = sql(spark,
@@ -577,12 +570,12 @@ object Engine {
           s"ON ($where)) WHERE __g_rn = 1").localCheckpoint(false)
       import org.apache.spark.sql.functions.{col, lit, when}
       val mPref = matched.select(
-        fields.toSeq.map(f => matched(f.name).as(s"__g_n_${f.name}")) ++
+        fields.map(f => matched(f.name).as(s"__g_n_${f.name}")) ++
           Seq(matched("__g_f"), matched("__g_r"), lit(true).as("__g_hit")): _*)
       CowForm(matched.groupBy("__g_f").count(),
         prune => sql(spark, s"${idScan(table)} WHERE $prune")
           .join(mPref, Seq("__g_f", "__g_r"), "left")
-          .select(fields.toSeq.map(f =>
+          .select(fields.map(f =>
             when(col("__g_hit"), col(s"__g_n_${f.name}"))
               .otherwise(col(f.name)).as(f.name)): _*),
         _ => matched.drop("__g_f", "__g_r"))
@@ -591,25 +584,26 @@ object Engine {
 
   /** `DELETE FROM t USING src WHERE cond` — rows with ANY match are
     * removed (NULL/FALSE conditions keep the row, the plain-DELETE
-    * contract). One join against the source emits the (file, row) ids of
-    * the removed rows, checkpointed once; the rewrite anti-joins the
-    * affected files against them, RETURNING semi-joins. */
+    * contract). One join against the source emits the removed rows with
+    * their (file, row) identity, one row per id, checkpointed once: the
+    * rewrite anti-joins the affected files against the ids, RETURNING
+    * reads the checkpoint. */
   private def runDeleteUsing(spark: SparkSession, table0: String,
       using: String, where: String, returning: Option[String]): DataFrame = {
     val table = table0.replaceAll("[`\"]", "")
     copyOnWrite(spark, table, returning) {
-      // INNER JOIN + DISTINCT, not LEFT SEMI: a semi join can only
+      // INNER JOIN + de-duplication, not LEFT SEMI: a semi join can only
       // broadcast-build its right (source) side, while the inner form
       // lets AQE broadcast whichever side is smaller — usually the
       // pruned target probe, with the source streaming past it.
-      val matched = sql(spark,
-        s"SELECT DISTINCT __g_f, __g_r FROM (${idScan(table)}) $table " +
-          s"JOIN $using ON ($where)").localCheckpoint(false)
-      def target(prune: String, how: String) =
-        sql(spark, s"${idScan(table)} WHERE $prune")
-          .join(matched, Seq("__g_f", "__g_r"), how).drop("__g_f", "__g_r")
+      // Lazy checkpoint: materialized by the per-file count.
+      val matched = sql(spark, s"SELECT $table.* FROM (${idScan(table)}) $table " +
+        s"JOIN $using ON ($where)").dropDuplicates("__g_f", "__g_r").localCheckpoint(false)
+      val ids = matched.select("__g_f", "__g_r")
       CowForm(matched.groupBy("__g_f").count(),
-        target(_, "anti"), target(_, "semi").localCheckpoint(true))
+        prune => sql(spark, s"${idScan(table)} WHERE $prune")
+          .join(ids, Seq("__g_f", "__g_r"), "anti").drop("__g_f", "__g_r"),
+        _ => matched.drop("__g_f", "__g_r"))
     }
   }
   // INSERT … RETURNING (r7): DuckDB returns the inserted rows (after
@@ -777,36 +771,39 @@ object Engine {
       prune => sql(spark, s"SELECT * FROM $table WHERE $prune AND $hit").localCheckpoint(true)))
   }
 
-  /** `col = expr` items of a SET clause, split on top-level commas. */
-  private def splitAssignments(s: String): Seq[(String, String)] =
-    Lexer.splitTopLevel(Lexer.lex(s), nested = true).map { a =>
+  /** Each column of `table` with the expression its SET clause assigns
+    * it, if any; the clause's `col = expr` items split on top-level
+    * commas. */
+  private def setColumns(spark: SparkSession, table: String,
+      setClause: String): Seq[(org.apache.spark.sql.types.StructField, Option[String])] = {
+    val sets = Lexer.splitTopLevel(Lexer.lex(setClause), nested = true).map { a =>
       val eq = a.indexOf(Punct("="))
       val col = Lexer.render(a.take(math.max(eq, 0))).trim
       require(eq > 0 && col.nonEmpty, s"malformed SET assignment: ${Lexer.render(a)}")
       (col.replaceAll("[`\"]", ""), Lexer.render(a.drop(eq + 1)).trim)
     }
+    val fields = spark.table(table).schema.fields.toSeq
+    sets.foreach { case (c, _) =>
+      require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
+    }
+    fields.map(f => f -> sets.find(_._1.equalsIgnoreCase(f.name)).map(_._2))
+  }
 
   private def runUpdate(spark: SparkSession, table0: String, setClause: String,
       where: Option[String], returning: Option[String]): DataFrame = {
     val table = table0.replaceAll("[`\"]", "")
     copyOnWrite(spark, table, returning) {
-      val sets = splitAssignments(setClause)
-      val fields = spark.table(table).schema.fields
-      sets.foreach { case (c, _) =>
-        require(fields.exists(_.name.equalsIgnoreCase(c)), s"unknown column in SET: $c")
-      }
+      val cols = setColumns(spark, table, setClause)
       val hit = where.fold("true")(w => s"coalesce(($w), false)")
       // cast to the column's type (DuckDB UPDATE coerces the same way);
       // the rewrite guards each SET by the predicate, RETURNING (DuckDB's
       // NEW rows of the matched set) reads matched rows only
-      def setList(guard: Boolean): String = fields.map { f =>
-        sets.find(_._1.equalsIgnoreCase(f.name)) match {
-          case Some((_, e)) =>
-            val v = if (guard && where.isDefined)
-              s"CASE WHEN $hit THEN ($e) ELSE ${f.name} END" else s"($e)"
-            s"CAST($v AS ${f.dataType.sql}) AS ${f.name}"
-          case None => f.name
-        }
+      def setList(guard: Boolean): String = cols.map {
+        case (f, Some(e)) =>
+          val v = if (guard && where.isDefined)
+            s"CASE WHEN $hit THEN ($e) ELSE ${f.name} END" else s"($e)"
+          s"CAST($v AS ${f.dataType.sql}) AS ${f.name}"
+        case (f, None) => f.name
       }.mkString(", ")
       CowForm(perFileMatches(spark, table, where),
         prune => sql(spark, s"SELECT ${setList(guard = true)} FROM $table WHERE $prune"),
@@ -821,9 +818,8 @@ object Engine {
   // left-to-right); EXECUTE splices the literal argument texts into the
   // stored DuckDB SQL (skipping string literals) and runs it through the
   // normal dialect path — so a prepared statement supports everything a
-  // direct statement does. State is JVM-session-local like sequences.
-  private val preparedStmts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // direct statement does. Statements belong to their session
+  // (`SessionState`).
   private val prepareRe =
     "(?is)^\\s*PREPARE\\s+([\\w`\"]+)\\s+AS\\s+(.+?)\\s*;?\\s*$".r
   private val executeRe =
@@ -985,6 +981,12 @@ object Engine {
     cols
   }
 
+  /** `table` projected onto a folded column list. */
+  private def alterProjection(spark: SparkSession, table: String,
+      cols: Seq[(String, String)]): DataFrame =
+    sql(spark, cols.map { case (n, e) => if (e == n) n else s"($e) AS $n" }
+      .mkString("SELECT ", ", ", s" FROM $table"))
+
   /** Metadata-only ADD COLUMN: Spark 4's native ADD COLUMNS with a
     * constant DEFAULT fills existing rows via the exists-default without
     * rewriting a byte (probe-verified on parquet v1) — at 100 TB that is
@@ -1041,30 +1043,19 @@ object Engine {
         // adds with one projection over the POST-mutation schema; a
         // failure here must surface loudly — returning false would
         // double-apply the committed prefix
-        val remaining: Seq[AlterOp] = adds.drop(k)
         val fields2 = spark.table(table).schema.fieldNames.toSeq
-        val cols2 =
-          try foldAlterOps(fields2, table, remaining)
-          catch { case e: Throwable =>
-            if (k > 0) throw e else return false }
-        val proj2 = cols2.map { case (n, e) =>
-          if (e == n) n else s"($e) AS $n" }.mkString(", ")
         val projected2 =
-          try sql(spark, s"SELECT $proj2 FROM $table")
-          catch { case e: Throwable =>
-            if (k > 0) throw e else return false }
+          try alterProjection(spark, table, foldAlterOps(fields2, table, adds.drop(k)))
+          catch { case e: Throwable => if (k > 0) throw e else return false }
         swap(spark, table, projected2, schemaChanged = true)
         return true
       }
     }
-    val proj = cols.map { case (n, e) =>
-      if (e == n) n else s"($e) AS $n"
-    }.mkString(", ")
     // a post-validation failure (e.g. a substituted expression the
     // original scan can't resolve) falls back to per-statement execution:
     // the projection is built BEFORE any table mutation, so the target is
     // still intact here
-    val projected = try sql(spark, s"SELECT $proj FROM $table")
+    val projected = try alterProjection(spark, table, cols)
       catch { case _: Throwable => return false }
     swap(spark, table, projected, schemaChanged = true)
     true
@@ -1089,11 +1080,7 @@ object Engine {
       op match {
         case a: AlterAdd if nativeAddColumn(spark, t, a) => // metadata-only
         case _ =>
-          val cols = foldAlterOps(fields, t, Seq(op))
-          val proj = cols.map { case (n, e) =>
-            if (e == n) n else s"($e) AS $n"
-          }.mkString(", ")
-          swap(spark, t, sql(spark, s"SELECT $proj FROM $t"),
+          swap(spark, t, alterProjection(spark, t, foldAlterOps(fields, t, Seq(op))),
             schemaChanged = true)
       }
       spark.emptyDataFrame
@@ -1113,24 +1100,18 @@ object Engine {
   private val dropViewRe =
     "(?is)^\\s*DROP\\s+VIEW\\s+(?:IF\\s+EXISTS\\s+)?([\\w.`\"]+)\\s*;?\\s*$".r
 
-  // user views are temp views over a LAZY plan, which pins file indexes —
-  // a DML/ALTER swap that rewrites an underlying table would leave them
-  // stale or broken where DuckDB re-resolves per query. The DEFINITIONS
-  // live here and are re-registered after any catalog change.
-  private val userViews =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** COMMENT ON … metadata (object name → comment), session-scoped. */
-  private[graft] val objectComments =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val userViewsDirty = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private val refreshingViews = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-  private def refreshUserViews(spark: SparkSession): Unit = {
-    if (userViews.isEmpty || refreshingViews.get()) return
-    if (!userViewsDirty.getAndSet(false)) return
-    refreshingViews.set(true)
-    try userViews.forEach { (n, body) =>
+  /** Re-resolve the session's user views when the data version has moved
+    * since it last did: a view is a temp view over a lazy plan that pins
+    * file indexes, and a DML or ALTER swap replaces the files under it,
+    * where DuckDB re-resolves per query. The session claims the refresh
+    * first (`Long.MaxValue` while the bodies run), so their nested `sql`
+    * calls, and its other statements meanwhile, return at once. */
+  private def refreshViews(spark: SparkSession, st: SessionState): Unit = {
+    val v = dataVersion.get()
+    val seen = st.viewsVersion.get()
+    if (seen >= v || st.views.isEmpty ||
+        !st.viewsVersion.compareAndSet(seen, Long.MaxValue)) return
+    try st.views.forEach { (n, body) =>
       try sql(spark, body).createOrReplaceTempView(n)
       catch {
         case _: Throwable =>
@@ -1138,7 +1119,7 @@ object Engine {
           // the next reference fails LOUDLY instead of returning stale data
           try spark.catalog.dropTempView(n) catch { case _: Throwable => () }
       }
-    } finally refreshingViews.set(false)
+    } finally st.viewsVersion.set(v)
   }
   private val summarizeRe = "(?is)^\\s*SUMMARIZE\\s+(.+?)\\s*;?\\s*$".r
   private val bareNameRe = "(?s)^[\\w.`\"]+$".r
@@ -1280,7 +1261,7 @@ object Engine {
     spark.catalog.listTables().collect().toSeq.map { t =>
       val cols = try spark.table(t.name).schema.length catch { case _: Throwable => 0 }
       ("memory", Option(t.database).getOrElse("main"), t.name,
-        Option(objectComments.get(t.name.toLowerCase)),
+        Option(state(spark).comments.get(t.name.toLowerCase)),
         t.tableType == "TEMPORARY", cols.toLong)
     }.toDF("database_name", "schema_name", "table_name", "comment",
       "temporary", "column_count")
@@ -1408,7 +1389,7 @@ object Engine {
     // DuckDB, returns an empty result; macro calls expand textually before
     // any other routing (so ASOF/COPY/DML shapes see the expanded SQL)
     if (graft.dialect.Macros.tryDdl(spark, duckSql0)) return spark.emptyDataFrame
-    refreshUserViews(spark)
+    refreshViews(spark, state(spark))
     val expanded = Lexer.routeText(graft.dialect.Macros.expand(spark, duckSql0))
     // PREPARE and CREATE VIEW store the RAW body: the splices compute
     // results eagerly into views this statement drops, and a prepared
@@ -1466,22 +1447,10 @@ object Engine {
         val plan = df.queryExecution.explainString(mode)
         return Seq(("physical_plan", plan)).toDF("explain_key", "explain_value")
       }
-      case describeSelectRe(inner) => {
-        import spark.implicits._
-        // DuckDB type spellings (r7 session 3 — was Spark's INT/STRING)
-        return sql(spark, inner).schema.fields.toSeq.map { f =>
-          (f.name, duckTypeName(f.dataType), if (f.nullable) "YES" else "NO",
-            Option.empty[String], Option.empty[String], Option.empty[String])
-        }.toDF("column_name", "column_type", "null", "key", "default", "extra")
-      }
+      case describeSelectRe(inner) => return describe(spark, sql(spark, inner))
       case describeTableRe(t)
-          if spark.catalog.tableExists(t.replaceAll("[`\"]", "")) => {
-        import spark.implicits._
-        return spark.table(t.replaceAll("[`\"]", "")).schema.fields.toSeq.map { f =>
-          (f.name, duckTypeName(f.dataType), if (f.nullable) "YES" else "NO",
-            Option.empty[String], Option.empty[String], Option.empty[String])
-        }.toDF("column_name", "column_type", "null", "key", "default", "extra")
-      }
+          if spark.catalog.tableExists(t.replaceAll("[`\"]", "")) =>
+        return describe(spark, spark.table(t.replaceAll("[`\"]", "")))
       case exportDbRe(dir, _) => return runExportDb(spark, dir)
       case importDbRe(dir) => return runImportDb(spark, dir)
       case copyFromRe(table, path, opts) =>
@@ -1492,18 +1461,18 @@ object Engine {
         // DuckDB `CALL pragma_<fn>(…)` — the procedure form of PRAGMA
         return runPragma(spark, name, Option(arg))
       case prepareRe(name, body) =>
-        preparedStmts.put(name.replaceAll("[`\"]", "").toLowerCase, body)
+        state(spark).prepared.put(name.replaceAll("[`\"]", "").toLowerCase, body)
         return spark.emptyDataFrame
       case executeRe(name0, argList) =>
         val name = name0.replaceAll("[`\"]", "").toLowerCase
-        val body = preparedStmts.get(name)
+        val body = state(spark).prepared.get(name)
         if (body == null) throw new IllegalStateException(
           s"EXECUTE: no prepared statement named '$name'")
         val args = Option(argList).map(splitArgs).getOrElse(Nil)
         return sql(spark, bindParams(body, args))
       case deallocRe(name0) =>
         val name = name0.replaceAll("[`\"]", "").toLowerCase
-        if (preparedStmts.remove(name) == null)
+        if (state(spark).prepared.remove(name) == null)
           throw new IllegalStateException(
             s"DEALLOCATE: no prepared statement named '$name'")
         return spark.emptyDataFrame
@@ -1536,12 +1505,12 @@ object Engine {
             s"""Catalog Error: View with name "$name" already exists!""")
         }
         sql(spark, body).createOrReplaceTempView(name)
-        userViews.put(name.toLowerCase, body) // definition survives DDL
+        state(spark).views.put(name.toLowerCase, body) // definition survives DDL
         bumpCatalogVersion()
         return spark.emptyDataFrame
       case dropViewRe(name0) =>
         val name = name0.replaceAll("[`\"]", "")
-        userViews.remove(name.toLowerCase)
+        state(spark).views.remove(name.toLowerCase)
         spark.sql(duckSql) // Spark's DROP VIEW handles IF EXISTS + errors
         bumpCatalogVersion()
         return spark.emptyDataFrame
@@ -1585,8 +1554,8 @@ object Engine {
           val key = mm.group(1).replaceAll("[`\"]", "").toLowerCase
             .split('.').last
           val raw = mm.group(2).trim
-          if (raw.equalsIgnoreCase("NULL")) objectComments.remove(key)
-          else objectComments.put(key,
+          if (raw.equalsIgnoreCase("NULL")) state(spark).comments.remove(key)
+          else state(spark).comments.put(key,
             raw.stripPrefix("'").stripSuffix("'").replace("''", "'"))
         }
         return spark.emptyDataFrame
@@ -1615,7 +1584,7 @@ object Engine {
     // ARRAY/MAP columns for collection-shape dispatch (empty/len/
     // length size-vs-length, concat list-vs-string, …). Always on: the
     // translator only invokes the lambda when a rewrite actually needs a
-    // shape decision, and the snapshot is cached per DDL version, so the
+    // shape decision, and the snapshot is cached per catalog version, so the
     // steady-state cost is one Map lookup (a statement substring gate
     // here silently disabled the named-column dispatch for len()/concat
     // — advice r8).
@@ -1629,7 +1598,7 @@ object Engine {
     // rewrites (strict — advice r11: a loose lookup silently datediff'd a
     // TIMESTAMP column sharing a DATE column's name); STRING routes
     // column subscripts through character semantics; DECIMAL suppresses
-    // the `/`→try_divide rewrite. Same lazy per-DDL-version cache.
+    // the `/`→try_divide rewrite. Same lazy per-catalog-version cache.
     val types = Translator.ColTypes(
       isMapCol = isMapCol,
       isCollectionCol = isCollectionCol,
@@ -1658,6 +1627,63 @@ object Engine {
     out
   }
 
+  // ---- per-session state ------------------------------------------------
+
+  /** The engine state of one SparkSession. A tenant is one session
+    * (`TenantManager.sessionFor` clones one per tenant and database, as
+    * the reference opens one DuckDB connection per tenant), so what one
+    * tenant declares is invisible to the others:
+    *   - `prepared`: PREPARE name → raw body;
+    *   - `views`: CREATE VIEW name → raw body, and `viewsVersion`, the
+    *     data version at which the session last resolved them;
+    *   - `comments`: COMMENT ON name → text (`duckdb_tables()`);
+    *   - `info` and `colTypes`: the information_schema and column-class
+    *     snapshots, rebuilt lazily when the catalog version has moved;
+    *   - `infoSchemaVersion`: the catalog version of the session's
+    *     `graft_infoschema_*` views.
+    * Process-global, because what they guard is shared by every session:
+    * the catalog and data versions (one Spark catalog, one warehouse), the
+    * table write locks, and `Sequences` (`nextval` runs in generated code,
+    * which has no session to look up). Macros keep the same per-session
+    * map in `Macros`. */
+  private final class SessionState {
+    val prepared = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val views = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val viewsVersion = new java.util.concurrent.atomic.AtomicLong(0)
+    val comments = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    @volatile var info: InfoSnapshot = null
+    @volatile var colTypes: ColTypeInfo = null
+    @volatile var infoSchemaVersion = -1L
+  }
+
+  private val sessions: java.util.Map[SparkSession, SessionState] =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, SessionState]())
+
+  private def state(spark: SparkSession): SessionState =
+    sessions.computeIfAbsent(spark, _ => new SessionState)
+
+  private val catalogVersion = new java.util.concurrent.atomic.AtomicLong(0)
+  private val dataVersion = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Call after any DDL that changes the catalog (CREATE/DROP/ALTER): the
+    * snapshots rebuild and the user views re-resolve. */
+  def bumpCatalogVersion(): Unit = {
+    catalogVersion.incrementAndGet()
+    dataVersion.incrementAndGet()
+  }
+
+  /** Call after schema-PRESERVING table mutation (INSERT/UPDATE/DELETE —
+    * r17, VERDICT r16 #5): user views must re-resolve (the COW swap
+    * replaces the table's files, so a resolved temp-view plan would read
+    * the old ones), but the catalog-version snapshots (colTypeInfo,
+    * information_schema) depend only on SCHEMAS, which pure DML cannot
+    * change — re-collecting them per statement cost a listTables Spark
+    * job plus a full catalog schema walk after every statement of a DML
+    * script (measured: q216 paid 2 extra listTables jobs + 3 snapshot
+    * rebuilds per run). */
+  def bumpDataVersion(): Unit = dataVersion.incrementAndGet()
+
   // ---- information_schema emulation ------------------------------------
   //
   // The reference queries information_schema for its catalog actions
@@ -1665,7 +1691,7 @@ object Engine {
   // we snapshot spark.catalog — but a snapshot per catalog CALL would
   // re-collect the whole table/column listing each time (catalog clients
   // poll these constantly). The snapshot is cached per session and
-  // invalidated by a DDL version counter.
+  // invalidated by the catalog version.
 
   final case class InfoSnapshot(
       version: Long,
@@ -1673,33 +1699,9 @@ object Engine {
       tables: Seq[(String, String, String, String)], // catalog, schema, name, type
       columns: Seq[(String, String, String, Int, String, Boolean)])
 
-  private val ddlVersion = new java.util.concurrent.atomic.AtomicLong(0)
-  private val infoCache: java.util.Map[SparkSession, InfoSnapshot] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, InfoSnapshot]())
-
-  /** Call after any DDL that changes the catalog (CREATE/DROP/ALTER). */
-  def bumpCatalogVersion(): Unit = {
-    ddlVersion.incrementAndGet()
-    userViewsDirty.set(true) // user views re-resolve on next statement
-  }
-
-  /** Call after schema-PRESERVING table mutation (INSERT/UPDATE/DELETE —
-    * r17, VERDICT r16 #5): user views must re-resolve (the COW swap
-    * replaces the table's files, so a resolved temp-view plan would read
-    * the old ones), but every ddlVersion-keyed snapshot (colTypeInfo,
-    * information_schema) depends only on SCHEMAS, which pure DML cannot
-    * change — re-collecting them per
-    * statement cost a listTables Spark job plus a full catalog schema
-    * walk after every statement of a DML script (measured: q216 paid 2
-    * extra listTables jobs + 3 snapshot rebuilds per run). */
-  def bumpDataVersion(): Unit = {
-    userViewsDirty.set(true)
-  }
-
   /** Visible-catalog column-type snapshot (r12, upgrading r11's DATE-only
     * set after the r11 advisor finding): per-TABLE class map plus the
-    * cross-table class sets, cached per (session, DDL version): catalog
+    * cross-table class sets, cached per (session, catalog version): catalog
     * listing + schema walks are too slow to pay per statement. Drives
     * every schema-aware translator resolver:
     *
@@ -1719,21 +1721,18 @@ object Engine {
     *   - DECIMAL (try_divide/try_mod suppression): always loose — the
     *     conservative direction, a false positive keeps the loud ANSI
     *     error. */
-  private final case class ColTypeInfo(
+  private final case class ColTypeInfo(version: Long,
       byTable: Map[String, Map[String, String]],
       classesOf: Map[String, Set[String]]) {
     def hasClass(col: String, cls: String): Boolean =
       classesOf.get(col).exists(_.contains(cls))
   }
 
-  private val colTypeCache: java.util.Map[SparkSession, (Long, ColTypeInfo)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, (Long, ColTypeInfo)]())
-
   private def colTypeInfo(spark: SparkSession): ColTypeInfo = {
-    val v = ddlVersion.get()
-    val cached = colTypeCache.get(spark)
-    if (cached != null && cached._1 == v) cached._2
+    val v = catalogVersion.get()
+    val st = state(spark)
+    val cached = st.colTypes
+    if (cached != null && cached.version == v) cached
     else {
       import org.apache.spark.sql.types._
       def cls(dt: DataType): String = dt match {
@@ -1755,8 +1754,8 @@ object Engine {
       }.getOrElse(Map.empty[String, Map[String, String]])
       val classesOf = byTable.values.flatten
         .groupBy(_._1).map { case (c, kvs) => c -> kvs.map(_._2).toSet }
-      val info = ColTypeInfo(byTable, classesOf)
-      colTypeCache.put(spark, (v, info))
+      val info = ColTypeInfo(v, byTable, classesOf)
+      st.colTypes = info
       info
     }
   }
@@ -1794,10 +1793,11 @@ object Engine {
 
   private val ddlRe = "(?is)^\\s*(CREATE|DROP|ALTER|TRUNCATE)\\b.*".r
 
-  /** Cached catalog snapshot; re-collected only when the DDL version moved. */
+  /** Cached catalog snapshot; re-collected only when the catalog version moved. */
   def infoSnapshot(spark: SparkSession): InfoSnapshot = {
-    val v = ddlVersion.get()
-    val cached = infoCache.get(spark)
+    val v = catalogVersion.get()
+    val st = state(spark)
+    val cached = st.info
     if (cached != null && cached.version == v) return cached
     val cat = spark.catalog.currentCatalog()
     val dbs = spark.catalog.listDatabases().collect()
@@ -1814,7 +1814,7 @@ object Engine {
       } catch { case _: Throwable => Seq.empty }
     }
     val snap = InfoSnapshot(v, schemata, tables, columns)
-    infoCache.put(spark, snap)
+    st.info = snap
     snap
   }
 
@@ -1822,9 +1822,9 @@ object Engine {
     * dialect layer rewrites information_schema references to. */
   def registerInfoSchema(spark: SparkSession): Unit = {
     import spark.implicits._
-    val key = "graft.infoschema.version"
     val snap = infoSnapshot(spark)
-    if (spark.conf.getOption(key).contains(snap.version.toString)) return
+    val st = state(spark)
+    if (st.infoSchemaVersion == snap.version) return
     snap.schemata.map { case (c, s, o, _) => (c, s, o) }
       .toDF("catalog_name", "schema_name", "schema_owner")
       .createOrReplaceTempView("graft_infoschema_schemata")
@@ -1835,7 +1835,7 @@ object Engine {
       .toDF("table_schema", "table_name", "column_name", "ordinal_position",
         "data_type", "is_nullable")
       .createOrReplaceTempView("graft_infoschema_columns")
-    spark.conf.set(key, snap.version.toString)
+    st.infoSchemaVersion = snap.version
   }
 
   /** Multi-statement ticket execution: run serially, return the last result
@@ -1852,20 +1852,10 @@ object Engine {
     var last: DataFrame = null
     var i = 0
     while (i < stmts.length) {
-      val chain = {
-        val b = scala.collection.mutable.ArrayBuffer[(String, AlterOp)]()
-        var j = i
-        var t: Option[String] = None
-        var go = true
-        while (go && j < stmts.length) {
-          parseAlterOp(Lexer.routeText(stmts(j))) match {
-            case Some((tbl, op)) if t.forall(_.equalsIgnoreCase(tbl)) =>
-              t = Some(tbl); b += ((tbl, op)); j += 1
-            case _ => go = false
-          }
-        }
-        b.toSeq
-      }
+      // the column ops from statement i on, while they name one table
+      val alters = stmts.iterator.drop(i).map(st => parseAlterOp(Lexer.routeText(st)))
+        .takeWhile(_.isDefined).map(_.get).toSeq
+      val chain = alters.takeWhile(_._1.equalsIgnoreCase(alters.head._1))
       if (chain.length >= 2 &&
           runAlterChain(spark, chain.head._1, chain.map(_._2))) {
         last = spark.emptyDataFrame

@@ -9,8 +9,9 @@ import java.util.concurrent.atomic.AtomicLong
   * START; currval is the last value handed out and errors before any
   * nextval; duplicate CREATE without OR REPLACE/IF NOT EXISTS errors).
   *
-  * State is JVM-global (one server process — the reference is a
-  * single-node DuckDB, where sequence state is likewise process-local).
+  * State is JVM-global, not per-session like `Engine`'s `SessionState`:
+  * `nextval` runs in generated code, which has no session to look up
+  * (the reference is a single-node DuckDB, one process).
   * On a multi-executor cluster nextval still yields UNIQUE values only if
   * evaluated on the driver; for distributed id assignment the engine's
   * guidance is monotonically_increasing_id / row_number, not sequences —

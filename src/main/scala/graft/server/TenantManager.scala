@@ -32,7 +32,8 @@ final class TenantManager(spark: SparkSession) {
   // access-ordered LRU, bounded: the database half of the key is
   // client-controlled, so an unbounded map is an unauthenticated
   // memory-growth vector. An evicted session is simply re-cloned on the
-  // next request (its database persists in the shared catalog).
+  // next request: its database persists in the shared catalog, its
+  // prepared statements, views and macros end with it.
   private val sessions = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, String), SparkSession](16, 0.75f, true) {
       override def removeEldestEntry(

@@ -1804,6 +1804,29 @@ class OperatorsSpec extends SparkTestBase {
     Engine.sql(spark, "DROP TABLE sp_vstale")
   }
 
+  test("views over read_csv_auto re-resolve after a data change without re-entering the refresh") {
+    // each body's read_csv_auto registers a file view and bumps the
+    // catalog version while the refresh runs; the session's claim on the
+    // refresh keeps those nested statements from starting another one
+    val dir = java.nio.file.Files.createTempDirectory("graft_view_csv")
+    val csv = dir.resolve("x.csv")
+    java.nio.file.Files.write(csv, "a\n1\n2\n3\n".getBytes("UTF-8"))
+    try {
+      Seq("sp_csv_a", "sp_csv_b").foreach(v =>
+        Engine.sql(spark, s"CREATE OR REPLACE VIEW $v AS SELECT * FROM read_csv_auto('$csv')"))
+      Engine.bumpDataVersion()
+      // a refresh that re-entered itself would not return
+      val sums = scala.concurrent.Future(Seq("sp_csv_a", "sp_csv_b").map(v =>
+        Engine.sql(spark, s"SELECT sum(a) FROM $v").head.getLong(0)))(
+        scala.concurrent.ExecutionContext.global)
+      assert(scala.concurrent.Await.result(sums,
+        scala.concurrent.duration.Duration(2, "min")) == Seq(6L, 6L))
+    } finally {
+      Seq("sp_csv_a", "sp_csv_b").foreach(v => Engine.sql(spark, s"DROP VIEW IF EXISTS $v"))
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+  }
+
   test("r8 advice: pragma/catalog-fn splices skip string literals") {
     Engine.registerTables(spark, sfDir)
     // an occurrence inside a literal is DATA — not executed, not replaced
@@ -2230,18 +2253,6 @@ class OperatorsSpec extends SparkTestBase {
       s"selective DML should use the literal prune, got ${Engine.lastCowPrune.get()}")
 
     // every form runs one driver, so the edge cases agree across forms.
-    // Spark jobs a statement starts, counted once the listener bus drains:
-    def jobsOf(stmt: => Any): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try { stmt; org.apache.spark.GraftListenerBus.drain(spark.sparkContext); jobs.get() }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
     // a WHERE naming a missing column fails at analysis, before any job
     val missingJobs = jobsOf(intercept[Exception](
       Engine.sql(spark, "DELETE FROM g_cow_t WHERE no_such_col = 1")))
@@ -2266,6 +2277,56 @@ class OperatorsSpec extends SparkTestBase {
       s"every-file DELETE stats: ${Engine.lastCowStats.get()}")
     assert(spark.table("g_cow_t").count() == left)
     spark.sql("DROP TABLE g_cow_t")
+  }
+
+  /** Spark jobs `stmt` starts, counted once the listener bus drains. */
+  private def jobsOf(stmt: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { stmt; org.apache.spark.GraftListenerBus.drain(spark.sparkContext); jobs.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("DELETE … USING … RETURNING reads its matched checkpoint: no more jobs than UPDATE … FROM") {
+    spark.sql("DROP TABLE IF EXISTS g_jobs_s")
+    // one source file; ids 5 and 6 match twice each
+    spark.range(0, 1000).selectExpr("id AS sid", "id % 7 AS k")
+      .union(spark.range(5, 7).selectExpr("id AS sid", "-1 AS k"))
+      .coalesce(1).write.format("parquet").saveAsTable("g_jobs_s")
+    // a fresh 4-file 1000-row target per statement
+    def fresh(): Unit = {
+      spark.sql("DROP TABLE IF EXISTS g_jobs_t")
+      spark.range(0, 1000).selectExpr("id", "id * 2 AS v").repartition(4)
+        .write.format("parquet").saveAsTable("g_jobs_t")
+    }
+    def run(stmt: String): (Int, Seq[String]) = {
+      fresh()
+      var out = Seq.empty[String]
+      val jobs = jobsOf { out = Engine.sql(spark, stmt).collect().map(_.mkString(",")).toSeq.sorted }
+      (jobs, out)
+    }
+    val using = "g_jobs_s s WHERE g_jobs_t.id = s.sid AND s.sid IN (5, 6, 900)"
+    val (updJobs, upd) = run(s"UPDATE g_jobs_t SET v = -1 FROM $using RETURNING id, v")
+    assert(upd == Seq("5,-1", "6,-1", "900,-1"))
+    val (delRetJobs, delRet) = run(s"DELETE FROM g_jobs_t USING $using RETURNING id, v")
+    // each removed row once, however many source rows match it
+    assert(delRet == Seq("5,10", "6,12", "900,1800"))
+    assert(spark.table("g_jobs_t").count() == 997)
+    val (delJobs, del) = run(s"DELETE FROM g_jobs_t USING $using")
+    assert(del == Seq("3"))
+    assert(spark.table("g_jobs_t").where("id IN (5, 6, 900)").count() == 0)
+    info(s"jobs: UPDATE … FROM … RETURNING $updJobs, " +
+      s"DELETE … USING … RETURNING $delRetJobs, DELETE … USING $delJobs")
+    assert(delRetJobs <= updJobs,
+      s"DELETE USING RETURNING ran $delRetJobs jobs, UPDATE FROM RETURNING $updJobs")
+    assert(delJobs <= 8, s"DELETE USING ran $delJobs jobs")
+    spark.sql("DROP TABLE g_jobs_t")
+    spark.sql("DROP TABLE g_jobs_s")
   }
 
   test("COW DML holds the table's write lock from its file listing to its swap") {

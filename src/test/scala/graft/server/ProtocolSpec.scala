@@ -192,6 +192,83 @@ class ProtocolSpec extends SparkTestBase {
     graft.engine.Engine.sql(alice, "DROP MACRO m_iso")
   }
 
+  /** Table `t(id, v)` holding (1,10),(2,20) in the session's database; a
+    * directory an earlier crashed run left behind is removed first. */
+  private def freshTenantTable(s: org.apache.spark.sql.SparkSession): Unit = {
+    s.sql("DROP TABLE IF EXISTS t")
+    val db = s.catalog.getDatabase(s.catalog.currentDatabase)
+    val dir = new java.io.File(new URI(db.locationUri).getPath, "t")
+    if (dir.isDirectory) new scala.reflect.io.Directory(dir).deleteRecursively()
+    graft.engine.Engine.sql(s,
+      "CREATE TABLE t AS SELECT * FROM (VALUES (1, 10), (2, 20)) AS x(id, v)")
+  }
+
+  test("engine state is session-scoped: prepared statements, views and comments stay with their tenant") {
+    import graft.engine.Engine
+    // the reference routes each tenant to its own DuckDB connection, so
+    // what one tenant PREPAREs, CREATEs as a view or COMMENTs ON is not
+    // the other's; both tenants own a table `t`
+    val tm = new TenantManager(spark)
+    val a = tm.sessionFor(Some(("state_alice", "pw")))
+    val b = tm.sessionFor(Some(("state_bob", "pw")))
+    Seq(a, b).foreach(freshTenantTable)
+    def rows(s: org.apache.spark.sql.SparkSession, q: String): Seq[String] =
+      Engine.sql(s, q).collect().map(_.mkString(",")).toSeq
+    try {
+      // B cannot run A's prepared statement
+      Engine.sql(a, "PREPARE p AS SELECT 41 + ? AS y")
+      assert(rows(a, "EXECUTE p(1)") == Seq("42"))
+      val e = intercept[Exception](Engine.sql(b, "EXECUTE p(1)").collect())
+      assert(e.getMessage.contains("no prepared statement named"), e.getMessage)
+      // A's view stays in A's catalog, and B's statements do not use up
+      // A's re-resolution after A's UPDATE swapped `t`'s files
+      Engine.sql(a, "CREATE VIEW v AS SELECT * FROM t")
+      Engine.sql(a, "UPDATE t SET v = 11 WHERE id = 1").collect()
+      Engine.sql(b, "SELECT 1").collect()
+      assert(!b.catalog.tableExists("v"), "B's catalog holds A's view")
+      assert(rows(a, "SELECT * FROM v ORDER BY id") == Seq("1,11", "2,20"))
+      // A's comment is not on B's `t`
+      Engine.sql(a, "COMMENT ON TABLE t IS 'alice secret'")
+      val comment = "SELECT comment FROM duckdb_tables() WHERE table_name = 't'"
+      assert(rows(a, comment) == Seq("alice secret"))
+      assert(rows(b, comment) == Seq("null"))
+    } finally {
+      scala.util.Try(Engine.sql(a, "DEALLOCATE p"))
+      scala.util.Try(Engine.sql(a, "DROP VIEW IF EXISTS v"))
+      Seq(a, b).foreach(s => Engine.sql(s, "DROP TABLE IF EXISTS t"))
+    }
+  }
+
+  test("HTTP: one Basic-auth tenant's PREPARE and CREATE VIEW are not another's") {
+    val srv = new HttpServer(spark, 0)
+    val port = srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def post(user: String, sql: String): HttpResponse[String] =
+        client.send(HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$port/?default_format=CSV"))
+          .header("Authorization", "Basic " + java.util.Base64.getEncoder
+            .encodeToString(s"$user:pw".getBytes("UTF-8")))
+          .POST(HttpRequest.BodyPublishers.ofString(sql)).build(),
+          HttpResponse.BodyHandlers.ofString())
+      def ok(user: String, sql: String): String = {
+        val r = post(user, sql)
+        assert(r.statusCode() == 200, s"$user: $sql -> ${r.body()}")
+        r.body().trim
+      }
+      ok("http_alice", "PREPARE hp AS SELECT 41 + ? AS y")
+      assert(ok("http_alice", "EXECUTE hp(1)") == "42")
+      val exec = post("http_bob", "EXECUTE hp(1)")
+      assert(exec.statusCode() == 400 && exec.body().contains("no prepared statement named"),
+        exec.body())
+      ok("http_alice", "CREATE VIEW hv AS SELECT 7 AS x")
+      assert(ok("http_alice", "SELECT x FROM hv") == "7")
+      assert(post("http_bob", "SELECT x FROM hv").statusCode() == 400)
+      ok("http_alice", "DROP VIEW hv")
+      ok("http_alice", "DEALLOCATE hp")
+    } finally srv.stop()
+  }
+
   test("zstd envelope round-trip with 4-byte LE length prefix") {
     val payload = "payload-bytes".getBytes
     val env = FlightActions.compressEnvelope(payload)
