@@ -23,6 +23,12 @@ import scala.collection.mutable.ArrayBuffer
   *  - DuckDB default null order (NULLS LAST) injected into ORDER BY items
   *  - `QUALIFY`, `DISTINCT ON`, `ASOF JOIN`, `SEMI/ANTI JOIN`, `unnest`
   *    rewritten to Spark-native forms
+  *
+  * [[translate]] runs 36 passes in order. Function calls are rewritten by
+  * one of them, a walk over the name-keyed [[argShapeRules]] table: the
+  * date, strftime, regex, POSIX-class, split and ordered-aggregate rules
+  * (tier 0), the general arg-shape rules (tier 1), then list_sum/list_avg
+  * (tier 2). The 1:1 renames of [[fnMap]] run as the pass after it.
   */
 object Translator {
 
@@ -108,17 +114,10 @@ object Translator {
     toks = rewriteAnyAll(toks)
     toks = rewriteWindowFilter(toks)
     toks = rewriteWindowExclude(toks)
-    toks = rewriteOrderedArrayAgg(toks)
-    toks = rewriteStrftime(toks)
-    toks = rewriteDateFns(toks)
-    toks = rewriteRegexpReplaceFlag(toks)
-    toks = rewritePosixClasses(toks)
     toks = rewriteJsonArrows(toks)
-    toks = rewriteSplitLiteralSep(toks)
     toks = rewriteArgShapeFns(toks, types.isCollectionCol, types.isDateCol,
       types.isDecimalCol)
     toks = rewriteFunctionNames(toks)
-    toks = rewriteListAggs(toks)
     toks = rewriteInfoSchema(toks)
     toks = rewriteTypeNames(toks)
     toks = rewriteDivMod(toks, types.isDecimalCol)
@@ -188,38 +187,70 @@ object Translator {
     * because an outer rule's guard reads its arguments, which an inner
     * rewrite changes. */
   private def fixpoint(toks0: Vector[Tok])(
-      step: (Vector[Tok], Int) => Option[Vector[Tok]]): Vector[Tok] = {
+      step: (Vector[Tok], Int) => Option[Vector[Tok]]): Vector[Tok] =
+    walk(toks0)((toks, i) => step(toks, i).map(_ -> 0))
+
+  /** [[fixpoint]] for a `step` that also returns how many leading tokens
+    * it left as they were. The walk keeps the unclosed parens before `i`,
+    * so a rewrite that keeps the tokens before `i` costs only the tokens
+    * from `i` to its first change; any other is found from token 0. */
+  private def walk(toks0: Vector[Tok])(
+      step: (Vector[Tok], Int) => Option[(Vector[Tok], Int)]): Vector[Tok] = {
     var toks = toks0
     var i = 0
+    var at = new Parens // the unclosed parens before token i
     while (i < toks.length) {
       step(toks, i) match {
-        case Some(next) => i = math.min(i, resumeAt(toks, next)); toks = next
-        case None => i += 1
+        case Some((next, kept)) =>
+          // k: the first changed token, and the parens before it
+          val before = if (kept >= i) at.copy else new Parens
+          var k = if (kept >= i) i else 0
+          val n = math.min(toks.length, next.length)
+          while (k < n && ((toks(k) eq next(k)) || toks(k) == next(k))) { before.add(next, k); k += 1 }
+          before.outermostCall match {
+            case Some((name, parens)) if name < i => i = name; at = parens
+            case None if k < i => i = k; at = before
+            case _ => // the tokens before i are unchanged
+          }
+          toks = next
+        case None => at.add(toks, i); i += 1
       }
     }
     toks
   }
 
-  /** Name token of the outermost call in `after` that encloses the first
-    * token where `before` and `after` differ; that token itself when no
-    * call encloses it. */
-  private def resumeAt(before: Vector[Tok], after: Vector[Tok]): Int = {
-    val n = math.min(before.length, after.length)
-    var k = 0
-    while (k < n && before(k) == after(k)) k += 1
-    var start = k; var d = 0; var j = k - 1
-    while (j >= 0) {
-      after(j) match {
-        case Punct(")") => d += 1
-        case Punct("(") if d > 0 => d -= 1
+  /** The unclosed parens before a token: for each, the index of the call
+    * name before it, or -1. */
+  private final class Parens {
+    private var opens = new Array[Int](8)
+    private var depth = 0
+    private var last = -1
+    private var lastTok: Tok = null
+    /** Steps over token `j`. */
+    def add(toks: Vector[Tok], j: Int): Unit = {
+      val t = toks(j)
+      t match {
         case Punct("(") =>
-          val p = prevNonWs(after, j)
-          if (p >= 0 && after(p).isInstanceOf[Ident]) start = p
+          if (depth == opens.length) opens = java.util.Arrays.copyOf(opens, depth * 2)
+          opens(depth) = if (lastTok.isInstanceOf[Ident]) last else -1
+          depth += 1
+        case Punct(")") => if (depth > 0) depth -= 1
         case _ =>
       }
-      j -= 1
+      if (!isWs(t)) { last = j; lastTok = t }
     }
-    start
+    def copy: Parens = {
+      val p = new Parens
+      p.opens = opens.clone(); p.depth = depth; p.last = last; p.lastTok = lastTok
+      p
+    }
+    /** The name of the outermost open call, with the parens before it. */
+    def outermostCall: Option[(Int, Parens)] =
+      (0 until depth).find(opens(_) >= 0).map { d =>
+        val p = copy
+        p.depth = d
+        (opens(d), p)
+      }
   }
 
   // ---- simple token rewrites ------------------------------------------
@@ -2498,120 +2529,6 @@ object Translator {
     toks
   }
 
-  /** `array_agg(x ORDER BY k [ASC|DESC])` / `list(x ORDER BY k [ASC|DESC])`
-    * → sort-after-collect: the sort key rides inside a struct, the group's
-    * array is sorted once after aggregation, then the key is dropped —
-    * `transform(array_sort(collect_list(named_struct('k', k, 'v', x))),
-    * s -> s.v)`, wrapped in `reverse(...)` for DESC. Spark's collect_list
-    * has no ordered form and its accumulation order is nondeterministic
-    * under parallel aggregation, so an unsorted rename would be silently
-    * flaky. Ties: DuckDB leaves equal-key order unspecified (parallel
-    * accumulation there too), so declared queries use a unique sort key;
-    * DESC reverses the full (k, x) order. Calls with multiple sort keys
-    * or NULLS FIRST/LAST are left untouched (Spark then rejects them
-    * loudly rather than silently reordering). */
-  private[dialect] def rewriteOrderedArrayAgg(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case id: Ident if id.upper == "ARRAY_AGG" || id.upper == "LIST" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            var d = 0; var ob = -1
-            for (j <- open to close) {
-              d += depthDelta(toks(j))
-              if (d == 1 && ob < 0 && up(toks(j)) == "ORDER") ob = j
-            }
-            if (ob > 0) {
-              val by = nextNonWs(toks, ob)
-              val ordToks = toks.slice(nextNonWs(toks, by) max (by + 1), close)
-              val ordParts = splitTopLevel(ordToks)
-              val valueExpr = render(toks.slice(open + 1, ob)).trim
-                .stripSuffix(",").trim
-              if (up(toks(by)) == "BY" && ordParts.length == 1 &&
-                  valueExpr.nonEmpty) {
-                val ord = render(ordParts(0)).trim
-                val (key, desc) =
-                  if (ord.toUpperCase.endsWith(" DESC"))
-                    (ord.dropRight(5).trim, true)
-                  else if (ord.toUpperCase.endsWith(" ASC"))
-                    (ord.dropRight(4).trim, false)
-                  else (ord, false)
-                // r10 fuzz batch 6: array_agg(DISTINCT x ORDER BY …) was
-                // a loud parse error — strip DISTINCT and dedupe AFTER
-                // the sort (array_distinct keeps first occurrence, so
-                // order is preserved)
-                val distinct = valueExpr.toUpperCase.startsWith("DISTINCT ")
-                val ve = if (distinct) valueExpr.drop(9).trim else valueExpr
-                if (!key.toUpperCase.contains("NULLS")) {
-                  // array_sort here is recaptured into graft_list_sort
-                  // by the sort handler (r15) — duck's within-group
-                  // ORDER BY puts NULL keys LAST in BOTH directions
-                  // (default_null_order): asc falls out of the kernel's
-                  // NULL-high field order; desc sorts ascending on a
-                  // leading (k IS NOT NULL) flag (NULL-key group first)
-                  // and reverses, landing the NULL keys at the end
-                  val sorted =
-                    if (desc)
-                      s"array_sort(collect_list(named_struct('kn', ($key) IS NOT NULL, 'k', ($key), 'v', ($ve))))"
-                    else s"array_sort(collect_list(named_struct('k', ($key), 'v', ($ve))))"
-                  val body = if (desc) s"reverse($sorted)" else sorted
-                  val projected = s"transform($body, __g_s -> __g_s.v)"
-                  toks = toks.patch(i,
-                    lex(if (distinct) s"array_distinct($projected)" else projected),
-                    close - i + 1)
-                }
-              }
-            }
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    toks
-  }
-
-  /** DuckDB `string_split(x, sep)` splits on a LITERAL separator; Spark's
-    * `split` treats it as a regex — `string_split(x, '.')` would split on
-    * every character after a name-only rename. Metachars in literal
-    * separators are backslash-escaped (doubled: Spark's string parser eats
-    * one level) before [[rewriteFunctionNames]] renames the call.
-    * Non-literal separators stay as-is (rare; documented divergence). */
-  private[dialect] def rewriteSplitLiteralSep(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case id: Ident if id.upper == "STRING_SPLIT" || id.upper == "STR_SPLIT" || id.upper == "STRING_TO_ARRAY" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            val sepInArg = if (args.length == 2) args(1).indexWhere(!isWs(_)) else -1
-            if (sepInArg >= 0) {
-              val sepIdx = open + 1 + args(0).length + 1 + sepInArg
-              toks(sepIdx) match {
-                case s: Str if s.value.exists(!_.isLetterOrDigit) =>
-                  // verbatim literals (r10): one backslash, for the regex
-                  // engine only
-                  val escaped = s.value.flatMap { c =>
-                    if ("\\.[]{}()*+?^$|".contains(c)) "\\" + c else c.toString
-                  }
-                  toks = toks.updated(sepIdx,
-                    Str("'" + escaped.replace("'", "''") + "'"))
-                case _ =>
-              }
-            }
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    toks
-  }
-
   /** Safe 1:1 function renames (SURVEY.md §2.9 dialect-intersection table). */
   private val fnMap = Map(
     "ARG_MAX" -> "max_by",
@@ -2624,10 +2541,6 @@ object Translator {
     // Spark's ANSI element_at throws; try_element_at matches DuckDB
     "LIST_ELEMENT" -> "try_element_at",
     "LIST_EXTRACT" -> "try_element_at",
-    "REGEXP_SPLIT_TO_ARRAY" -> "split",
-    "STRING_SPLIT_REGEX" -> "split",
-    "STR_SPLIT_REGEX" -> "split",
-    "LIST_CONTAINS" -> "array_contains",
     "ARRAY_LENGTH" -> "size",
     "LIST_TRANSFORM" -> "transform",
     "LIST_FILTER" -> "filter",
@@ -2637,7 +2550,7 @@ object Translator {
     "REGEXP_MATCHES" -> "rlike",
     "VERSION" -> "graft_version",
     // STRFTIME deliberately NOT name-mapped (r10 batch 7b): the scanner
-    // in rewriteStrftime owns every translatable form; a blanket rename
+    // in the STRFTIME rule owns every translatable form; a blanket rename
     // would feed raw %-patterns to date_format on scanner rejection,
     // turning duck's loud unknown-specifier error into silent garbage
     "STARTS_WITH" -> "startswith",
@@ -2725,7 +2638,7 @@ object Translator {
     "JSON_CONTAINS" -> "graft_json_contains",
     "JSON_MERGE_PATCH" -> "graft_json_merge_patch",
     "DATETRUNC" -> "date_trunc",
-    // fallback for non-literal parts the rewriteDateFns form skips
+    // fallback for non-literal parts the DATE_PART rule skips
     "DATEPART" -> "date_part",
     "ARBITRARY" -> "any_value",
     "PRODUCT" -> "graft_product",
@@ -2835,32 +2748,6 @@ object Translator {
     "LOWERUTF8" -> "lower",
     "UPPERUTF8" -> "upper",
     "SUBSTRINGUTF8" -> "substr")
-
-  /** DuckDB `list_sum(x)` / `list_avg(x)` → Spark higher-order
-    * `aggregate(...)` forms (no Spark builtin exists). Accumulation is in
-    * DOUBLE — DuckDB widens integer list sums to HUGEINT, so integer
-    * outputs are not oracle-comparable; the surface is spec-tested. */
-  private[dialect] def rewriteListAggs(toks0: Vector[Tok]): Vector[Tok] =
-    fixpoint(toks0) { (toks, i) =>
-      toks(i) match {
-        case id: Ident if (id.upper == "LIST_SUM" || id.upper == "LIST_AVG") && {
-          val n = nextNonWs(toks, i); n < toks.length && toks(n) == Punct("(")
-        } =>
-          val open = nextNonWs(toks, i)
-          val close = matchParen(toks, open)
-          val arg = render(toks.slice(open + 1, close)).trim
-          // DuckDB list_sum/list_avg SKIP NULL elements and return NULL
-          // for an empty/all-NULL list (r8 fuzz: list_sum([]) was 0 and
-          // one NULL element poisoned the whole fold)
-          val nn = s"filter(($arg), __g_n -> __g_n IS NOT NULL)"
-          val sum = s"aggregate($nn, CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE))"
-          val body = if (id.upper == "LIST_SUM") sum else s"($sum / size($nn))"
-          val repl = s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE $body END)"
-          // a nested list_sum in `arg` is rewritten when the scan resumes
-          Some(toks.patch(i, lex(repl), close - i + 1))
-        case _ => None
-      }
-    }
 
   /** Arg-shape rewrites with no 1:1 Spark rename (round 4):
     *   - `xor(a, b)` → `((a) ^ (b))` — DuckDB's `^` is power, so the
@@ -3038,7 +2925,7 @@ object Translator {
     * CAST(… AS DATE) — our own emission or the user's explicit cast — is
     * skipped, as is one enclosed in CAST(… AS TIMESTAMP): that form is
     * the INTERNAL-EMISSION SENTINEL (r13, VERDICT r12 #4) — the
-    * rewriteDateFns datediff grids and toStartOfDay pre-wrap their
+    * DATE_DIFF rule's datediff grids and toStartOfDay pre-wrap their
     * date_trunc calls in a no-op timestamp cast (folded by Catalyst's
     * SimplifyCasts) so they keep the TIMESTAMP shape across a
     * re-translate. A user-written enclosing CAST(… AS TIMESTAMP) is
@@ -3293,21 +3180,408 @@ object Translator {
     def nextLambdaIx(): Int = { lambdaIx += 1; lambdaIx }
   }
 
+  /** DuckDB interval-constructor name → make_interval emission (r10
+    * batch 9). Spark make_interval slots: (years, months, weeks, days,
+    * hours, mins, secs). */
+  private val toIntervalUnits: Map[String, String => String] = Map(
+    "TO_MILLENNIA" -> (e => s"make_interval(($e) * 1000)"),
+    "TO_CENTURIES" -> (e => s"make_interval(($e) * 100)"),
+    "TO_DECADES" -> (e => s"make_interval(($e) * 10)"),
+    "TO_YEARS" -> (e => s"make_interval($e)"),
+    "TO_MONTHS" -> (e => s"make_interval(0, $e)"),
+    "TO_WEEKS" -> (e => s"make_interval(0, 0, $e)"),
+    "TO_DAYS" -> (e => s"make_interval(0, 0, 0, $e)"),
+    "TO_HOURS" -> (e => s"make_interval(0, 0, 0, 0, $e)"),
+    "TO_MINUTES" -> (e => s"make_interval(0, 0, 0, 0, 0, $e)"),
+    "TO_SECONDS" -> (e => s"make_interval(0, 0, 0, 0, 0, 0, $e)"),
+    "TO_MILLISECONDS" -> (e =>
+      s"make_interval(0, 0, 0, 0, 0, 0, CAST($e AS DOUBLE) / 1000.0)"),
+    "TO_MICROSECONDS" -> (e =>
+      s"make_interval(0, 0, 0, 0, 0, 0, CAST($e AS DOUBLE) / 1000000.0)"))
+
+  /** DuckDB's epoch of `e` in FRACTIONAL seconds (a DOUBLE); a literal
+    * interval `arg` folds to its width (r10). CAST AS DOUBLE first: long /
+    * decimal-literal is DECIMAL in Spark where duck epoch is DOUBLE — and
+    * a later CAST(... AS BIGINT) would then round half-AWAY (decimal rule)
+    * where duck's double rounds half-even (r12 ts fuzz, seed 21). */
+  private def epochSecondsSql(arg: Vector[Tok], e: String): String =
+    intervalEpochMicros(arg) match {
+      case Some(us) => s"CAST(${us / 1e6} AS DOUBLE)"
+      case None => s"(CAST(graft_epoch_us($e) AS DOUBLE) / 1000000.0)"
+    }
+
   /** An arg-shape rule. A matching `case` claims the name token, so later
     * rules for that name never see it, even when the body then returns
-    * None and leaves the call as it is. */
+    * None and leaves the call as it is. A `call` rule changes no token
+    * before the name: the walk skips re-reading them. */
   private type ShapeRule = PartialFunction[Call, Option[Vector[Tok]]]
 
+  /** One entry of the arg-shape table: `callOnly` rules see the name only
+    * when `(` follows it. A rule of `tier` t sees a call only once no rule
+    * of a lower tier fires inside the call's parens. */
+  private final case class ShapeEntry(tier: Int, callOnly: Boolean, rule: ShapeRule)
+
   /** The arg-shape rules, keyed on the upper-cased function name, each
-    * name's rules in precedence order. The Boolean is true for `call`
-    * rules, which see the name only when `(` follows it. */
-  private val argShapeRules: Map[String, Vector[(Boolean, ShapeRule)]] = {
-    val table = scala.collection.mutable.Map[String, Vector[(Boolean, ShapeRule)]]()
+    * name's rules in precedence order. Three tiers:
+    *   0. date, format, regex, split and ordered-aggregate calls, whose
+    *      rewrites the general rules read as arguments;
+    *   1. the general arg-shape rules;
+    *   2. list_sum/list_avg, which copy their argument twice and so must
+    *      see it in its final form. */
+  private val argShapeRules: Map[String, Vector[ShapeEntry]] = {
+    val table = scala.collection.mutable.Map[String, Vector[ShapeEntry]]()
+    var tier = 0
     def add(callOnly: Boolean, names: Seq[String], rule: ShapeRule): Unit =
-      names.foreach(n => table(n) = table.getOrElse(n, Vector.empty) :+ (callOnly -> rule))
+      names.foreach(n => table(n) = table.getOrElse(n, Vector.empty) :+ ShapeEntry(tier, callOnly, rule))
     def call(names: String*)(rule: ShapeRule): Unit = add(callOnly = true, names, rule)
     def word(names: String*)(rule: ShapeRule): Unit = add(callOnly = false, names, rule)
 
+    /** A rule that claims the name only when it changes the call, so a
+      * later rule for the same name still sees every call it leaves. */
+    def rewriting(f: Call => Option[Vector[Tok]]): ShapeRule =
+      Function.unlift((c: Call) => f(c).map(Some(_)))
+
+    // ---- tier 0: date, format, regex, split and ordered-aggregate calls
+
+    call("ARRAY_AGG", "LIST")(rewriting { c =>
+      // `array_agg(x ORDER BY k [ASC|DESC])` / `list(x ORDER BY k …)` →
+      // sort-after-collect: the sort key rides inside a struct, the
+      // group's array is sorted once after aggregation, then the key is
+      // dropped — `transform(array_sort(collect_list(named_struct('k',
+      // k, 'v', x))), s -> s.v)`, wrapped in `reverse(...)` for DESC.
+      // Spark's collect_list has no ordered form and its accumulation
+      // order is nondeterministic under parallel aggregation, so an
+      // unsorted rename would be silently flaky. Ties: DuckDB leaves
+      // equal-key order unspecified (parallel accumulation there too),
+      // so declared queries use a unique sort key; DESC reverses the
+      // full (k, x) order. Calls with multiple sort keys or NULLS
+      // FIRST/LAST are left untouched (Spark then rejects them loudly
+      // rather than silently reordering).
+      val toks = c.toks
+      var d = 0
+      val ob = (c.open to c.close).find { j =>
+        d += depthDelta(toks(j)); d == 1 && up(toks(j)) == "ORDER"
+      }.getOrElse(-1)
+      val by = if (ob > 0) nextNonWs(toks, ob) else c.close
+      val ordParts = splitTopLevel(toks.slice(nextNonWs(toks, by) max (by + 1), c.close))
+      val valueExpr = render(toks.slice(c.open + 1, ob max c.open + 1)).trim.stripSuffix(",").trim
+      if (ob < 0 || up(toks(by)) != "BY" || ordParts.length != 1 || valueExpr.isEmpty) None
+      else {
+        val ord = render(ordParts(0)).trim
+        val (key, desc) =
+          if (ord.toUpperCase.endsWith(" DESC")) (ord.dropRight(5).trim, true)
+          else if (ord.toUpperCase.endsWith(" ASC")) (ord.dropRight(4).trim, false)
+          else (ord, false)
+        // r10 fuzz batch 6: array_agg(DISTINCT x ORDER BY …) was a loud
+        // parse error — strip DISTINCT and dedupe AFTER the sort
+        // (array_distinct keeps first occurrence, so order is preserved)
+        val distinct = valueExpr.toUpperCase.startsWith("DISTINCT ")
+        val ve = if (distinct) valueExpr.drop(9).trim else valueExpr
+        if (key.toUpperCase.contains("NULLS")) None
+        else {
+          // array_sort here is recaptured into graft_list_sort by the
+          // LIST_SORT/ARRAY_SORT rule (r15) — duck's within-group ORDER
+          // BY puts NULL keys LAST in BOTH directions
+          // (default_null_order): asc falls out of the kernel's
+          // NULL-high field order; desc sorts ascending on a leading
+          // (k IS NOT NULL) flag (NULL-key group first) and reverses,
+          // landing the NULL keys at the end
+          val sorted =
+            if (desc)
+              s"array_sort(collect_list(named_struct('kn', ($key) IS NOT NULL, 'k', ($key), 'v', ($ve))))"
+            else s"array_sort(collect_list(named_struct('k', ($key), 'v', ($ve))))"
+          val body = if (desc) s"reverse($sorted)" else sorted
+          val projected = s"transform($body, __g_s -> __g_s.v)"
+          c.to(if (distinct) s"array_distinct($projected)" else projected)
+        }
+      }
+    })
+    call("STRFTIME", "FORMATDATETIME")(rewriting { c =>
+      // `strftime(ts, '%Y-%m-%d')` → `date_format(ts, 'yyyy-MM-dd')`:
+      // strftime→JDK pattern translation of a string-literal pattern.
+      // formatDateTime is ClickHouse's spelling of the same (time, fmt)
+      // call with the same %-pattern family (chsql macro surface). The
+      // pattern is whichever arg is the '%'-bearing literal (duck
+      // accepts both argument orders; chsql formatDateTime(time, fmt))
+      val fmtIx = c.args.indexWhere(_.filterNot(isWs) match {
+        case Vector(s: Str) => s.value.contains("%")
+        case _ => false
+      })
+      if (c.args.length != 2) None
+      // «TS» holes sit inside function-call parens in every template,
+      // so the rendered arg needs no extra wrapping; None is an unknown
+      // specifier — duck errors; stay loud
+      else if (fmtIx >= 0)
+        strftimeSql(c.arg(1 - fmtIx), c.sig(fmtIx).head.asInstanceOf[Str].value).flatMap(c.to)
+      // DYNAMIC pattern (r12): route through the graft_strftime runtime
+      // formatter — a bare date_format rename fed duck %-patterns to the
+      // JDK formatter, a silent wrong answer. Standard (ts, fmt) argument
+      // order (the literal-order sniffing above needs a literal); unknown
+      // specifiers throw at runtime like duck.
+      else c.to(s"graft_strftime(CAST((${c.arg(0)}) AS TIMESTAMP), ${c.arg(1)})")
+    })
+    call("SPLITBYCHAR") {
+      // ClickHouse splitByChar(sep, s) → split(s, quoted-sep) (args swap)
+      case c if c.args.length == 2 && (c.sig(0) match {
+          case Vector(_: Str) => true
+          case _ => false
+        }) =>
+        val sep = c.sig(0).head.asInstanceOf[Str].value
+        c.to(s"split(${c.arg(1)}, '${regexLiteralSep(sep)}')")
+    }
+    call("DATE_DIFF", "DATEDIFF")(rewriting { c =>
+      // DuckDB `date_diff('day', a, b)` → Spark `datediff(b, a)`: DuckDB
+      // counts from a to b, Spark's datediff(end, start).
+      c.sig(0) match {
+        case Vector(part: Str) if c.args.length == 3 =>
+          val (a, b) = (c.arg(1), c.arg(2))
+          // DuckDB date_diff counts BOUNDARY CROSSINGS (probe: ('hour',
+          // 10:59:59, 11:00:01) = 1) — truncate BOTH sides to the part
+          // grid, then divide; the raw-span DIV shipped through r8 was a
+          // silent divergence (r9). Truncated values are exact multiples
+          // of the width, so DIV is exact in both directions.
+          //
+          // r13 (closing three allowlisted ts cells): duck's grids differ
+          // by FLAVOR — NAIVE timestamps truncate each side toward zero
+          // (probed: ('minute', 23:59:59, 00:00:30) = 0), but a TSTZ
+          // operand switches BOTH sides to the session-calendar FLOOR
+          // grid (same probe over to_timestamp() values = 1, and mixed
+          // naive+TSTZ coerces to TSTZ). The two agree for positive
+          // epochs; pre-epoch values diverge by one. TSTZ producers are
+          // visible at token level here (to_timestamp / timezone() — AT
+          // TIME ZONE has already become timezone() by this point).
+          // per-arg, not concatenated: a WHEN..THEN region must not mask
+          // across the argument boundary (r14)
+          val tstz = tstzProducerToks(c.args(1)) || tstzProducerToks(c.args(2))
+          def truncDiv(wUs: Long): String =
+            if (tstz) {
+              // exact integer floor: subtract pmod (∈ [0, w)) then DIV —
+              // a double division would lose micros past 2^53
+              def f(e: String) =
+                s"((unix_micros(CAST($e AS TIMESTAMP)) - " +
+                  s"pmod(unix_micros(CAST($e AS TIMESTAMP)), $wUs)) DIV $wUs)"
+              s"(${f(b)} - ${f(a)})"
+            } else
+              s"((unix_micros(CAST($b AS TIMESTAMP)) DIV $wUs) - " +
+                s"(unix_micros(CAST($a AS TIMESTAMP)) DIV $wUs))"
+          (part.value.toLowerCase match {
+            case "day" | "days" | "d" => Some(s"datediff($b, $a)")
+            // the enclosing CAST(… AS TIMESTAMP) on each date_trunc is
+            // the rewriteDateTruncShape internal-emission sentinel (r13)
+            // — a re-translate must not DATE-wrap these grid inputs
+            case "month" | "months" => Some(s"CAST(round(months_between(CAST(date_trunc('month', CAST(($b) AS TIMESTAMP)) AS TIMESTAMP), CAST(date_trunc('month', CAST(($a) AS TIMESTAMP)) AS TIMESTAMP))) AS BIGINT)")
+            case "quarter" | "quarters" => Some(s"(CAST(round(months_between(CAST(date_trunc('quarter', CAST(($b) AS TIMESTAMP)) AS TIMESTAMP), CAST(date_trunc('quarter', CAST(($a) AS TIMESTAMP)) AS TIMESTAMP))) AS BIGINT) DIV 3)")
+            case "year" | "years" => Some(s"(year($b) - year($a))")
+            case "decade" | "decades" => Some(s"((year($b) DIV 10) - (year($a) DIV 10))")
+            // r10 (advisor fix): DuckDB counts century/millennium
+            // crossings on the FLOOR grid like decade — probed
+            // date_diff('century', 1899→1900)=1 but (1900→1901)=0; the
+            // old ceil form was inverted at every boundary
+            case "century" | "centuries" => Some(s"((year($b) DIV 100) - (year($a) DIV 100))")
+            case "millennium" | "millennia" => Some(s"((year($b) DIV 1000) - (year($a) DIV 1000))")
+            case "week" | "weeks" => Some(s"(datediff(CAST(date_trunc('week', CAST(($b) AS TIMESTAMP)) AS TIMESTAMP), CAST(date_trunc('week', CAST(($a) AS TIMESTAMP)) AS TIMESTAMP)) DIV 7)")
+            case "hour" | "hours" => Some(truncDiv(3600000000L))
+            case "minute" | "minutes" => Some(truncDiv(60000000L))
+            case "second" | "seconds" => Some(truncDiv(1000000L))
+            case "millisecond" | "milliseconds" => Some(truncDiv(1000L))
+            case "microsecond" | "microseconds" =>
+              Some(s"((unix_micros(CAST($b AS TIMESTAMP)) - unix_micros(CAST($a AS TIMESTAMP))))")
+            case _ => None
+          }).flatMap(c.to)
+        case _ => None
+      }
+    })
+    call("MAKE_TIMESTAMP") {
+      // r12 ts fuzz: duck's 1-arg make_timestamp(micros) — Spark only
+      // has the 6-arg form (loud DATATYPE_MISMATCH before);
+      // timestamp_micros is the exact equivalent
+      case c if c.args.length == 1 => c.to(s"timestamp_micros(${c.arg(0)})")
+    }
+    call("DATE_PART", "DATEPART") {
+      // DuckDB `date_part('year', ts)` → Spark `extract(year FROM ts)`
+      case c if c.args.length == 2 && (c.sig(0) match {
+          case Vector(_: Str) => true
+          case _ => false
+        }) =>
+        val e = c.arg(1)
+        // DuckDB dow is 0=Sunday..6 (Postgres); Spark's DOW extract is
+        // 1=Sunday..7 — shift. isodow agrees (Mon=1).
+        c.to(c.sig(0).head.asInstanceOf[Str].value.toLowerCase match {
+          // dayofweek directly — an emitted extract(DOW …) would be
+          // re-shifted by the EXTRACT rewrite below (r8)
+          case "dow" | "dayofweek" | "weekday" => s"graft_dow($e)"
+          // DuckDB isodow is Monday=1..Sunday=7; Spark has no ISODOW
+          // field, and an emitted weekday() would be re-captured by the
+          // DuckDB weekday-ALIAS rewrite (Sunday=0) — dayofweek
+          // arithmetic instead (r8)
+          case "isodow" => s"(((graft_dow($e) + 6) % 7) + 1)"
+          // duck SECOND is the BIGINT integer part; MS/US include the
+          // seconds (r12 ts fuzz)
+          case "second" | "seconds" => s"(pmod(graft_epoch_us($e), 60000000) DIV 1000000)"
+          case "millisecond" | "milliseconds" => s"(pmod(graft_epoch_us($e), 60000000) DIV 1000)"
+          case "microsecond" | "microseconds" => s"pmod(graft_epoch_us($e), 60000000)"
+          // DuckDB's epoch part is FRACTIONAL seconds (probe: …00.5 →
+          // 1704067200.5); Spark's extract has no epoch. Literal-interval
+          // args fold to their width (r10)
+          case "epoch" => epochSecondsSql(c.args(1), e)
+          case p => s"extract($p FROM $e)"
+        })
+    }
+    call("EXTRACT") {
+      // EXTRACT field divergences (r8, probe-pinned): EPOCH → fractional
+      // seconds via unix_micros (Spark has no epoch field); DOW → DuckDB
+      // is 0=Sunday where Spark's DOW is 1=Sunday (a SILENT off-by-one
+      // through passthrough); ISODOW (Monday=1..Sunday=7) → weekday()+1
+      // (no Spark field). Other fields pass through.
+      case c if {
+          val fi = nextNonWs(c.toks, c.open)
+          val fromI = if (fi < c.close) nextNonWs(c.toks, fi) else c.close
+          fi < c.close && fromI < c.close && up(c.toks(fromI)) == "FROM" &&
+            Set("EPOCH", "DOW", "ISODOW", "WEEKDAY", "DAYOFWEEK", "SECOND", "SECONDS",
+              "MILLISECOND", "MILLISECONDS", "MICROSECOND", "MICROSECONDS")
+              .contains(up(c.toks(fi)))
+        } =>
+        val fi = nextNonWs(c.toks, c.open)
+        val from = c.toks.slice(nextNonWs(c.toks, fi) + 1, c.close)
+        val e = render(from).trim
+        c.to(up(c.toks(fi)) match {
+          case "EPOCH" => epochSecondsSql(from, e)
+          // duck's WEEKDAY/DAYOFWEEK extract fields are 0=Sunday too (r12
+          // ts fuzz: the DAYOFWEEK spelling passed through to Spark's
+          // 1-based field - a silent off-by-one)
+          case "DOW" | "WEEKDAY" | "DAYOFWEEK" => s"graft_dow($e)"
+          case "ISODOW" => s"(((graft_dow($e) + 6) % 7) + 1)"
+          // duck SECOND is the BIGINT integer part; MILLISECOND/
+          // MICROSECOND include the seconds (r12 ts fuzz - Spark's SECOND
+          // field is DECIMAL(8,6), MS/US fields don't exist)
+          case "SECOND" | "SECONDS" => s"(pmod(graft_epoch_us($e), 60000000) DIV 1000000)"
+          case "MILLISECOND" | "MILLISECONDS" => s"(pmod(graft_epoch_us($e), 60000000) DIV 1000)"
+          case _ => s"pmod(graft_epoch_us($e), 60000000)"
+        })
+    }
+    call("WEEK") {
+      // week(date) → ISO weekofyear (probe: both 52 on 2023-01-01); the
+      // bare-arg function only — WEEK inside interval/date_trunc
+      // literals is handled by those rewrites
+      case c => c.to(s"weekofyear(${render(c.inner).trim})")
+    }
+    call(toIntervalUnits.keys.toSeq: _*) {
+      // r10 batch 9: DuckDB's interval constructors to_years(2),
+      // to_days(3), … → make_interval with the count in the right slot
+      // (probe: to_years(2) = INTERVAL 2 YEAR; decades/centuries/
+      // millennia scale into years, millis/micros into seconds)
+      case c => c.to(toIntervalUnits(c.name)(render(c.inner).trim))
+    }
+    call("CENTURY", "DECADE", "MILLENNIUM", "WEEKDAY", "YEARWEEK", "ISOYEAR", "EPOCH_NS",
+        "DAYOFWEEK", "ISODOW", "JULIAN") {
+      // r7 session-3 date-part functions, probe-pinned on DuckDB 1.0:
+      // century(2024)=21, decade=202, millennium=3 (CE off-by-one
+      // forms), weekday Sunday=0, yearweek = ISO year·100 + ISO week
+      // (2023-01-01 → 202252), isoyear = Spark's YEAROFWEEK
+      case c =>
+        val e = render(c.inner).trim
+        c.to(c.name match {
+          case "CENTURY" => s"(CAST(floor((year($e) - 1) / 100.0) AS BIGINT) + 1)"
+          case "DECADE" => s"CAST(floor(year($e) / 10.0) AS BIGINT)"
+          case "MILLENNIUM" => s"(CAST(floor((year($e) - 1) / 1000.0) AS BIGINT) + 1)"
+          // r10 batch 8: duck dayofweek() is the Postgres 0=Sunday form
+          // where Spark's builtin is 1=Sunday — a SILENT off-by-one
+          // through passthrough until now
+          case "WEEKDAY" | "DAYOFWEEK" => s"graft_dow($e)"
+          case "ISODOW" => s"(((graft_dow($e) + 6) % 7) + 1)"
+          // r10 batch 8, probe-pinned: duck julian(DATE '2000-01-01') =
+          // 2451545.0 — a MIDNIGHT-aligned day count (the astronomical
+          // JD would read .5 there), so the epoch offset is 2440588 =
+          // julian(1970-01-01 00:00). CAST to DOUBLE first: bigint /
+          // decimal-literal would stay DECIMAL(29,6) where duck returns
+          // DOUBLE
+          case "JULIAN" =>
+            s"(CAST(unix_micros(CAST($e AS TIMESTAMP)) AS DOUBLE) / 86400000000.0 + 2440588.0)"
+          case "YEARWEEK" => s"(extract(YEAROFWEEK FROM $e) * 100 + weekofyear($e))"
+          case "ISOYEAR" => s"extract(YEAROFWEEK FROM $e)"
+          case _ => s"(graft_epoch_us($e) * 1000)"
+        })
+    }
+    call("EPOCH", "EPOCH_MS", "EPOCH_US") {
+      // DuckDB epoch() is FRACTIONAL seconds (a DOUBLE); Spark's
+      // unix_timestamp truncates. micros/1e6 reproduces the exact double
+      // both engines derive from the same microsecond value.
+      // epoch_ms/epoch_us are exact integers either way. Literal-interval
+      // args fold to their 30-day-month width (r10 fuzz batch 6 — probed
+      // epoch_ms(INTERVAL '1 day') = 86400000)
+      case c =>
+        val e = render(c.inner).trim
+        val iv = intervalEpochMicros(c.inner)
+        // r10 batch 9: epoch_ms(BIGINT) is the INVERSE direction — millis
+        // → TIMESTAMP (dual signature in DuckDB; probed
+        // epoch_ms(1709820309000) = 2024-03-07 14:05:09). Only the
+        // literal-integer shape is decidable at the token level; a named
+        // column keeps the common ts→ms direction.
+        val bareIntArg = c.inner.filterNot(isWs) match {
+          case Vector(n: Num) => !n.text.contains(".") && !n.text.toUpperCase.contains("E")
+          case _ => false
+        }
+        c.to(c.name match {
+          case "EPOCH_MS" if bareIntArg => s"timestamp_millis($e)"
+          case "EPOCH" => epochSecondsSql(c.inner, e)
+          case "EPOCH_MS" => iv.fold(s"(graft_epoch_us($e) DIV 1000)")(us => s"CAST(${us / 1000L} AS BIGINT)")
+          case _ => iv.fold(s"graft_epoch_us($e)")(us => s"CAST($us AS BIGINT)")
+        })
+    }
+    call("REGEXP_REPLACE")(rewriting { c =>
+      // DuckDB `regexp_replace(s, p, r, 'g')` is Spark's default global
+      // replace. The 3-arg DuckDB form is first-match-only — Spark's
+      // builtin cannot express that, so it maps to graft's codegen
+      // [[graft.functions.RegexpReplaceFirst]] expression (round 4).
+      val last = c.args.last
+      if (c.args.length >= 2 && (last.filterNot(isWs) match {
+          case Vector(s: Str) => s.value == "g"
+          case _ => false
+        }))
+        // global flag → Spark's 4-arg position form (global from position
+        // 1), NOT the 3-arg form: re-translating a 3-arg output would
+        // wrongly demote it to first-match (the idempotence property the
+        // dialect layer guarantees)
+        Some(c.toks.patch(c.close - last.length, Seq(Ws(" "), Num("1")), last.length))
+      else if (c.args.length == 3) Some(c.toks.updated(c.i, Ident("regexp_replace_first")))
+      else None
+    })
+    call("REGEXP_MATCHES", "REGEXP_EXTRACT", "REGEXP_EXTRACT_ALL", "REGEXP_REPLACE",
+        "REGEXP_SPLIT_TO_ARRAY", "REGEXP_FULL_MATCH", "REGEXP_COUNT", "REGEXP_REPLACE_FIRST",
+        "STRING_SPLIT_REGEX", "RLIKE", "MATCH")(rewriting { c =>
+      // POSIX classes in the pattern, which is arg 1 for every function
+      // in the set
+      val at = if (c.args.length >= 2) c.args(1).indexWhere(!isWs(_)) else -1
+      if (at < 0) None else posixClasses(c.toks, c.open + 1 + c.args(0).length + 1 + at)
+    })
+    word("RLIKE", "SIMILAR")(rewriting { c =>
+      // operator form: the right operand literal
+      val r = nextNonWs(c.toks, c.i)
+      val r2 = if (r < c.toks.length && up(c.toks(r)) == "TO") nextNonWs(c.toks, r) else r
+      if (r2 < c.toks.length) posixClasses(c.toks, r2) else None
+    })
+    call("STRING_SPLIT", "STR_SPLIT", "STRING_TO_ARRAY")(rewriting { c =>
+      // DuckDB `string_split(x, sep)` splits on a LITERAL separator;
+      // Spark's `split` treats it as a regex — `string_split(x, '.')`
+      // would split on every character after a name-only rename.
+      // Metachars in literal separators are backslash-escaped (one
+      // backslash, for the regex engine only) and the call renamed to
+      // split here: under its own name the escaped separator would be
+      // escaped again. Non-literal separators stay as-is (rare;
+      // documented divergence).
+      val at = if (c.args.length == 2) c.args(1).indexWhere(!isWs(_)) else -1
+      val sepIdx = c.open + 1 + c.args(0).length + 1 + at
+      if (at < 0) None
+      else c.toks(sepIdx) match {
+        case s: Str if s.value.exists(!_.isLetterOrDigit) =>
+          Some(c.toks.updated(sepIdx, Str("'" + regexLiteralSep(s.value) + "'"))
+            .updated(c.i, Ident("split")))
+        case _ => None
+      }
+    })
+
+    // ---- tier 1: the general arg-shape rules
+    tier = 1
     call("GREATEST", "LEAST") {
       // duck converts DECIMAL-bearing greatest/least to DOUBLE
       // (r13 dec fuzz — probed: typeof(greatest(dec, dec)) =
@@ -3885,7 +4159,7 @@ object Translator {
       // DuckDB macro: json_group_array(e) = to_json(list(e)). NULL
       // elements survive in DuckDB's list but Spark's collect_list
       // drops them — ride each value inside a never-NULL struct
-      // (the rewriteOrderedArrayAgg trick), then unwrap.
+      // (the ordered ARRAY_AGG rule's trick), then unwrap.
       case c if c.args.length == 1 =>
         c.to(s"to_json(transform(collect_list(named_struct('v', (${c.arg(0)}))), __g_j -> __g_j.v), map('ignoreNullFields', 'false'))")
     }
@@ -4864,6 +5138,26 @@ object Translator {
           case _ => None
         }
     }
+    // ---- tier 2
+    tier = 2
+    call("LIST_SUM", "LIST_AVG") {
+      // DuckDB `list_sum(x)` / `list_avg(x)` → Spark higher-order
+      // `aggregate(...)` forms (no Spark builtin exists). Accumulation
+      // is in DOUBLE — DuckDB widens integer list sums to HUGEINT, so
+      // integer outputs are not oracle-comparable; the surface is
+      // spec-tested. DuckDB list_sum/list_avg SKIP NULL elements and
+      // return NULL for an empty/all-NULL list (r8 fuzz: list_sum([])
+      // was 0 and one NULL element poisoned the whole fold). The
+      // emitted filter(…)/aggregate(…) match neither the FILTER nor the
+      // AGGREGATE rules: no `)` before the name, no string-literal
+      // second argument, no `(x, i) ->` lambda.
+      case c =>
+        val arg = render(c.inner).trim
+        val nn = s"filter(($arg), __g_n -> __g_n IS NOT NULL)"
+        val sum = s"aggregate($nn, CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE))"
+        val body = if (c.name == "LIST_SUM") sum else s"($sum / size($nn))"
+        c.to(s"(CASE WHEN size($nn) = 0 THEN CAST(NULL AS DOUBLE) ELSE $body END)")
+    }
     table.toMap
   }
 
@@ -4872,16 +5166,27 @@ object Translator {
       isDateCol: (String, Boolean) => Boolean = (_, _) => false,
       isDecimalCol: String => Boolean = _ => false): Vector[Tok] = {
     val scope = new ArgShapeScope(isCollectionCol, isDateCol, isDecimalCol)
-    fixpoint(toks0) { (toks, i) =>
-      toks(i) match {
-        case id: Ident => argShapeRules.get(id.upper).flatMap { rules =>
-          val c = new Call(toks, i, id, scope)
-          rules.iterator.collect { case (callOnly, rule) if !callOnly || c.open >= 0 => rule.lift(c) }
-            .collectFirst { case Some(out) => out }.flatten
-        }
-        case _ => None
+    /** The rewrite the rules of tier `maxTier` or lower make at token `i`.
+      * Before the first rule of tier t, the call's inner tokens are tried
+      * with the lower tiers, and an inner rewrite found there is made
+      * first. */
+    def fire(toks: Vector[Tok], i: Int, maxTier: Int): Option[(Vector[Tok], Int)] = toks(i) match {
+      case id: Ident => argShapeRules.get(id.upper).flatMap { entries =>
+        val c = new Call(toks, i, id, scope)
+        var innerTier = 0
+        entries.iterator.filter(e => e.tier <= maxTier && (!e.callOnly || c.open >= 0)).map { e =>
+          val inner = if (e.tier > innerTier && c.open >= 0) {
+            innerTier = e.tier
+            (c.open + 1 until c.close).iterator.map(fire(toks, _, e.tier - 1)).collectFirst { case Some(out) => out }
+          } else None
+          // a `call` rule changes no token before its name
+          if (inner.isDefined) Some(inner)
+          else e.rule.lift(c).map(_.map(_ -> (if (e.callOnly) i else 0)))
+        }.collectFirst { case Some(out) => out }.flatten
       }
+      case _ => None
     }
+    walk(toks0)(fire(_, _, Int.MaxValue))
   }
 
   /** Aggregate heads whose value is independent of input order — an
@@ -4920,25 +5225,6 @@ object Translator {
     }
     sb.toString
   }
-
-  /** DuckDB interval-constructor name → make_interval emission (r10
-    * batch 9). Spark make_interval slots: (years, months, weeks, days,
-    * hours, mins, secs). */
-  private val toIntervalUnits: Map[String, String => String] = Map(
-    "TO_MILLENNIA" -> (e => s"make_interval(($e) * 1000)"),
-    "TO_CENTURIES" -> (e => s"make_interval(($e) * 100)"),
-    "TO_DECADES" -> (e => s"make_interval(($e) * 10)"),
-    "TO_YEARS" -> (e => s"make_interval($e)"),
-    "TO_MONTHS" -> (e => s"make_interval(0, $e)"),
-    "TO_WEEKS" -> (e => s"make_interval(0, 0, $e)"),
-    "TO_DAYS" -> (e => s"make_interval(0, 0, 0, $e)"),
-    "TO_HOURS" -> (e => s"make_interval(0, 0, 0, 0, $e)"),
-    "TO_MINUTES" -> (e => s"make_interval(0, 0, 0, 0, 0, $e)"),
-    "TO_SECONDS" -> (e => s"make_interval(0, 0, 0, 0, 0, 0, $e)"),
-    "TO_MILLISECONDS" -> (e =>
-      s"make_interval(0, 0, 0, 0, 0, 0, CAST($e AS DOUBLE) / 1000.0)"),
-    "TO_MICROSECONDS" -> (e =>
-      s"make_interval(0, 0, 0, 0, 0, 0, CAST($e AS DOUBLE) / 1000000.0)"))
 
   /** fmt-style spec body → java.util.Formatter body, or None when the
     * spec has no faithful Java form (center align, custom fill chars,
@@ -5125,388 +5411,6 @@ object Translator {
       else s"concat(${parts.mkString(", ")})"
     }
 
-  /** DuckDB `date_diff('day', a, b)` / `date_part('year', ts)` /
-    * `epoch(ts)` → Spark `datediff(b, a)` / `extract(year FROM ts)` /
-    * `unix_timestamp(ts)`. date_diff needs an argument swap: DuckDB counts
-    * from a to b, Spark's datediff(end, start). */
-  private[dialect] def rewriteDateFns(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case id: Ident if id.upper == "DATE_DIFF" || id.upper == "DATEDIFF" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            if (args.length == 3) {
-              args.head.filterNot(isWs) match {
-                case Vector(part: Str) =>
-                  val a = render(args(1)).trim
-                  val b = render(args(2)).trim
-                  // DuckDB date_diff counts BOUNDARY CROSSINGS (probe:
-                  // ('hour', 10:59:59, 11:00:01) = 1) — truncate BOTH
-                  // sides to the part grid, then divide; the raw-span
-                  // DIV shipped through r8 was a silent divergence (r9).
-                  // Truncated values are exact multiples of the width,
-                  // so DIV is exact in both directions.
-                  //
-                  // r13 (closing three allowlisted ts cells): duck's
-                  // grids differ by FLAVOR — NAIVE timestamps truncate
-                  // each side toward zero (probed: ('minute', 23:59:59,
-                  // 00:00:30) = 0), but a TSTZ operand switches BOTH
-                  // sides to the session-calendar FLOOR grid (same
-                  // probe over to_timestamp() values = 1, and mixed
-                  // naive+TSTZ coerces to TSTZ). The two agree for
-                  // positive epochs; pre-epoch values diverge by one.
-                  // TSTZ producers are visible at token level here
-                  // (to_timestamp / timezone() — AT TIME ZONE has
-                  // already become timezone() by this pass).
-                  // per-arg, not concatenated: a WHEN..THEN region must
-                  // not mask across the argument boundary (r14)
-                  val tstz = tstzProducerToks(args(1)) ||
-                    tstzProducerToks(args(2))
-                  def gridDiv(wUs: Long): String =
-                    if (tstz) {
-                      // exact integer floor: subtract pmod (∈ [0, w))
-                      // then DIV — a double division would lose micros
-                      // past 2^53
-                      def f(e: String) =
-                        s"((unix_micros(CAST($e AS TIMESTAMP)) - " +
-                          s"pmod(unix_micros(CAST($e AS TIMESTAMP)), $wUs)) DIV $wUs)"
-                      s"(${f(b)} - ${f(a)})"
-                    } else
-                      s"((unix_micros(CAST($b AS TIMESTAMP)) DIV $wUs) - " +
-                        s"(unix_micros(CAST($a AS TIMESTAMP)) DIV $wUs))"
-                  def truncDiv(wUs: Long): String = gridDiv(wUs)
-                  val repl = part.value.toLowerCase match {
-                    case "day" | "days" | "d" => s"datediff($b, $a)"
-                    // the enclosing CAST(… AS TIMESTAMP) on each
-                    // date_trunc is the rewriteDateTruncShape internal-
-                    // emission sentinel (r13) — a re-translate must not
-                    // DATE-wrap these grid inputs
-                    case "month" | "months" => s"CAST(round(months_between(CAST(date_trunc('month', CAST(($b) AS TIMESTAMP)) AS TIMESTAMP), CAST(date_trunc('month', CAST(($a) AS TIMESTAMP)) AS TIMESTAMP))) AS BIGINT)"
-                    case "quarter" | "quarters" => s"(CAST(round(months_between(CAST(date_trunc('quarter', CAST(($b) AS TIMESTAMP)) AS TIMESTAMP), CAST(date_trunc('quarter', CAST(($a) AS TIMESTAMP)) AS TIMESTAMP))) AS BIGINT) DIV 3)"
-                    case "year" | "years" => s"(year($b) - year($a))"
-                    case "decade" | "decades" => s"((year($b) DIV 10) - (year($a) DIV 10))"
-                    // r10 (advisor fix): DuckDB counts century/millennium
-                    // crossings on the FLOOR grid like decade — probed
-                    // date_diff('century', 1899→1900)=1 but (1900→1901)=0;
-                    // the old ceil form was inverted at every boundary
-                    case "century" | "centuries" => s"((year($b) DIV 100) - (year($a) DIV 100))"
-                    case "millennium" | "millennia" => s"((year($b) DIV 1000) - (year($a) DIV 1000))"
-                    case "week" | "weeks" => s"(datediff(CAST(date_trunc('week', CAST(($b) AS TIMESTAMP)) AS TIMESTAMP), CAST(date_trunc('week', CAST(($a) AS TIMESTAMP)) AS TIMESTAMP)) DIV 7)"
-                    case "hour" | "hours" => truncDiv(3600000000L)
-                    case "minute" | "minutes" => truncDiv(60000000L)
-                    case "second" | "seconds" => truncDiv(1000000L)
-                    case "millisecond" | "milliseconds" => truncDiv(1000L)
-                    case "microsecond" | "microseconds" =>
-                      s"((unix_micros(CAST($b AS TIMESTAMP)) - unix_micros(CAST($a AS TIMESTAMP))))"
-                    case _ => ""
-                  }
-                  // re-lex: the replacement may contain inner calls later
-                  // passes must still see (e.g. to_timestamp inside epoch_us
-                  // — an opaque Ident blob broke translate∘translate fixpoint)
-                  if (repl.nonEmpty) toks = toks.patch(i, lex(repl), close - i + 1)
-                case _ =>
-              }
-            }
-          }
-        case id: Ident if id.upper == "MAKE_TIMESTAMP" && {
-            // r12 ts fuzz: duck's 1-arg make_timestamp(micros) — Spark
-            // only has the 6-arg form (loud DATATYPE_MISMATCH before);
-            // timestamp_micros is the exact equivalent
-            val open = nextNonWs(toks, i)
-            open < toks.length && toks(open) == Punct("(") && {
-              val close = matchParen(toks, open)
-              splitTopLevel(toks.slice(open + 1, close)).length == 1
-            }
-          } =>
-          val open = nextNonWs(toks, i)
-          val close = matchParen(toks, open)
-          val e = render(toks.slice(open + 1, close)).trim
-          toks = toks.patch(i, lex(s"timestamp_micros($e)"), close - i + 1)
-        case id: Ident if id.upper == "DATE_PART" || id.upper == "DATEPART" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            if (args.length == 2) {
-              args.head.filterNot(isWs) match {
-                case Vector(part: Str) =>
-                  val e = render(args(1)).trim
-                  // DuckDB dow is 0=Sunday..6 (Postgres); Spark's DOW
-                  // extract is 1=Sunday..7 — shift. isodow agrees (Mon=1).
-                  val repl = part.value.toLowerCase match {
-                    // dayofweek directly — an emitted extract(DOW …) would
-                    // be re-shifted by the EXTRACT rewrite below (r8)
-                    case "dow" | "dayofweek" | "weekday" =>
-                      s"graft_dow($e)"
-                    // DuckDB isodow is Monday=1..Sunday=7; Spark has no
-                    // ISODOW field, and an emitted weekday() would be
-                    // re-captured by the DuckDB weekday-ALIAS rewrite
-                    // (Sunday=0) — dayofweek arithmetic instead (r8)
-                    case "isodow" => s"(((graft_dow($e) + 6) % 7) + 1)"
-                    // duck SECOND is the BIGINT integer part; MS/US
-                    // include the seconds (r12 ts fuzz)
-                    case "second" | "seconds" =>
-                      s"(pmod(graft_epoch_us($e), 60000000) DIV 1000000)"
-                    case "millisecond" | "milliseconds" =>
-                      s"(pmod(graft_epoch_us($e), 60000000) DIV 1000)"
-                    case "microsecond" | "microseconds" =>
-                      s"pmod(graft_epoch_us($e), 60000000)"
-                    // DuckDB's epoch part is FRACTIONAL seconds (probe:
-                    // …00.5 → 1704067200.5); Spark's extract has no epoch.
-                    // Literal-interval args fold to their width (r10)
-                    case "epoch" => intervalEpochMicros(args(1)) match {
-                      case Some(us) => s"CAST(${us / 1e6} AS DOUBLE)"
-                      case None =>
-                      // CAST AS DOUBLE first: long / decimal-literal is
-                      // DECIMAL in Spark where duck epoch is DOUBLE — and
-                      // a later CAST(... AS BIGINT) would then round
-                      // half-AWAY (decimal rule) where duck's double
-                      // rounds half-even (r12 ts fuzz, seed 21)
-                      s"(CAST(graft_epoch_us($e) AS DOUBLE) / 1000000.0)"
-                    }
-                    case p => s"extract($p FROM $e)"
-                  }
-                  toks = toks.patch(i, lex(repl), close - i + 1)
-                case _ =>
-              }
-            }
-          }
-        case id: Ident if id.upper == "EXTRACT" => {
-          // EXTRACT field divergences (r8, probe-pinned): EPOCH →
-          // fractional seconds via unix_micros (Spark has no epoch
-          // field); DOW → DuckDB is 0=Sunday where Spark's DOW is
-          // 1=Sunday (a SILENT off-by-one through passthrough); ISODOW
-          // (Monday=1..Sunday=7) → weekday()+1 (no Spark field). Other
-          // fields pass through.
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val fi = nextNonWs(toks, open)
-            val fromI = if (fi < close) nextNonWs(toks, fi) else close
-            if (fi < close && fromI < close && up(toks(fromI)) == "FROM" &&
-                Set("EPOCH", "DOW", "ISODOW", "WEEKDAY", "DAYOFWEEK",
-                  "SECOND", "SECONDS", "MILLISECOND", "MILLISECONDS",
-                  "MICROSECOND", "MICROSECONDS").contains(up(toks(fi)))) {
-              val e = render(toks.slice(fromI + 1, close)).trim
-              val repl = up(toks(fi)) match {
-                case "EPOCH" =>
-                  intervalEpochMicros(toks.slice(fromI + 1, close)) match {
-                    case Some(us) => s"CAST(${us / 1e6} AS DOUBLE)"
-                    case None =>
-                      // CAST AS DOUBLE first: long / decimal-literal is
-                      // DECIMAL in Spark where duck epoch is DOUBLE — and
-                      // a later CAST(... AS BIGINT) would then round
-                      // half-AWAY (decimal rule) where duck's double
-                      // rounds half-even (r12 ts fuzz, seed 21)
-                      s"(CAST(graft_epoch_us($e) AS DOUBLE) / 1000000.0)"
-                  }
-                // duck's WEEKDAY/DAYOFWEEK extract fields are 0=Sunday too
-                // (r12 ts fuzz: the DAYOFWEEK spelling passed through to
-                // Spark's 1-based field - a silent off-by-one)
-                case "DOW" | "WEEKDAY" | "DAYOFWEEK" => s"graft_dow($e)"
-                case "ISODOW" => s"(((graft_dow($e) + 6) % 7) + 1)"
-                // duck SECOND is the BIGINT integer part; MILLISECOND/
-                // MICROSECOND include the seconds (r12 ts fuzz - Spark's
-                // SECOND field is DECIMAL(8,6), MS/US fields don't exist)
-                case "SECOND" | "SECONDS" =>
-                  s"(pmod(graft_epoch_us($e), 60000000) DIV 1000000)"
-                case "MILLISECOND" | "MILLISECONDS" =>
-                  s"(pmod(graft_epoch_us($e), 60000000) DIV 1000)"
-                case "MICROSECOND" | "MICROSECONDS" =>
-                  s"pmod(graft_epoch_us($e), 60000000)"
-              }
-              toks = toks.patch(i, lex(repl), close - i + 1)
-            }
-          }
-        }
-        case id: Ident if id.upper == "WEEK" && {
-              // week(date) → ISO weekofyear (probe: both 52 on 2023-01-01);
-              // the bare-arg function only — WEEK inside interval/
-              // date_trunc literals is handled by those rewrites
-              val n = nextNonWs(toks, i)
-              n < toks.length && toks(n) == Punct("(")
-            } =>
-          val open = nextNonWs(toks, i)
-          val close = matchParen(toks, open)
-          val e = render(toks.slice(open + 1, close)).trim
-          toks = toks.patch(i, lex(s"weekofyear($e)"), close - i + 1)
-        case id: Ident if id.upper.startsWith("TO_") &&
-            toIntervalUnits.contains(id.upper) && {
-              val n = nextNonWs(toks, i)
-              n < toks.length && toks(n) == Punct("(")
-            } =>
-          // r10 batch 9: DuckDB's interval constructors to_years(2),
-          // to_days(3), … → make_interval with the count in the right
-          // slot (probe: to_years(2) = INTERVAL 2 YEAR; decades/centuries/
-          // millennia scale into years, millis/micros into seconds)
-          val open = nextNonWs(toks, i)
-          val close = matchParen(toks, open)
-          val e = render(toks.slice(open + 1, close)).trim
-          toks = toks.patch(i, lex(toIntervalUnits(id.upper)(e)), close - i + 1)
-        case id: Ident if Set("CENTURY", "DECADE", "MILLENNIUM", "WEEKDAY",
-            "YEARWEEK", "ISOYEAR", "EPOCH_NS", "DAYOFWEEK", "ISODOW",
-            "JULIAN").contains(id.upper) =>
-          // r7 session-3 date-part functions, probe-pinned on DuckDB 1.0:
-          // century(2024)=21, decade=202, millennium=3 (CE off-by-one
-          // forms), weekday Sunday=0, yearweek = ISO year·100 + ISO week
-          // (2023-01-01 → 202252), isoyear = Spark's YEAROFWEEK
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val e = render(toks.slice(open + 1, close)).trim
-            val repl = id.upper match {
-              case "CENTURY" => s"(CAST(floor((year($e) - 1) / 100.0) AS BIGINT) + 1)"
-              case "DECADE" => s"CAST(floor(year($e) / 10.0) AS BIGINT)"
-              case "MILLENNIUM" => s"(CAST(floor((year($e) - 1) / 1000.0) AS BIGINT) + 1)"
-              case "WEEKDAY" => s"graft_dow($e)"
-              // r10 batch 8: duck dayofweek() is the Postgres 0=Sunday
-              // form where Spark's builtin is 1=Sunday — a SILENT
-              // off-by-one through passthrough until now. The extract
-              // spelling avoids self-recapture (this very rule).
-              case "DAYOFWEEK" => s"graft_dow($e)"
-              case "ISODOW" => s"(((graft_dow($e) + 6) % 7) + 1)"
-              // r10 batch 8, probe-pinned: duck julian(DATE '2000-01-01')
-              // = 2451545.0 — a MIDNIGHT-aligned day count (the
-              // astronomical JD would read .5 there), so the epoch
-              // offset is 2440588 = julian(1970-01-01 00:00)
-              case "JULIAN" =>
-                // CAST to DOUBLE first: bigint / decimal-literal would stay
-                // DECIMAL(29,6) where duck returns DOUBLE
-                s"(CAST(unix_micros(CAST($e AS TIMESTAMP)) AS DOUBLE) / 86400000000.0 + 2440588.0)"
-              case "YEARWEEK" => s"(extract(YEAROFWEEK FROM $e) * 100 + weekofyear($e))"
-              case "ISOYEAR" => s"extract(YEAROFWEEK FROM $e)"
-              case "EPOCH_NS" => s"(graft_epoch_us($e) * 1000)"
-            }
-            toks = toks.patch(i, lex(repl), close - i + 1)
-          }
-        case id: Ident if id.upper == "EPOCH" || id.upper == "EPOCH_MS" ||
-            id.upper == "EPOCH_US" =>
-          // DuckDB epoch() is FRACTIONAL seconds (a DOUBLE); Spark's
-          // unix_timestamp truncates. micros/1e6 reproduces the exact
-          // double both engines derive from the same microsecond value.
-          // epoch_ms/epoch_us are exact integers either way.
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val e = render(toks.slice(open + 1, close)).trim
-            // literal-interval args fold to their 30-day-month width (r10
-            // fuzz batch 6 — probed epoch_ms(INTERVAL '1 day') = 86400000)
-            val iv = intervalEpochMicros(toks.slice(open + 1, close))
-            // r10 batch 9: epoch_ms(BIGINT) is the INVERSE direction —
-            // millis → TIMESTAMP (dual signature in DuckDB; probed
-            // epoch_ms(1709820309000) = 2024-03-07 14:05:09). Only the
-            // literal-integer shape is decidable at the token level; a
-            // named column keeps the common ts→ms direction.
-            val bareIntArg = toks.slice(open + 1, close).filterNot(isWs) match {
-              case Vector(n: Num) => !n.text.contains(".") && !n.text.toUpperCase.contains("E")
-              case _ => false
-            }
-            val repl = if (bareIntArg && id.upper == "EPOCH_MS")
-              s"timestamp_millis($e)"
-            else id.upper match {
-              case "EPOCH" => iv match {
-                case Some(us) => s"CAST(${us / 1e6} AS DOUBLE)"
-                case None =>
-                      // CAST AS DOUBLE first: long / decimal-literal is
-                      // DECIMAL in Spark where duck epoch is DOUBLE — and
-                      // a later CAST(... AS BIGINT) would then round
-                      // half-AWAY (decimal rule) where duck's double
-                      // rounds half-even (r12 ts fuzz, seed 21)
-                      s"(CAST(graft_epoch_us($e) AS DOUBLE) / 1000000.0)"
-              }
-              case "EPOCH_MS" => iv match {
-                case Some(us) => s"CAST(${us / 1000L} AS BIGINT)"
-                case None => s"(graft_epoch_us($e) DIV 1000)"
-              }
-              case "EPOCH_US" => iv match {
-                case Some(us) => s"CAST($us AS BIGINT)"
-                case None => s"graft_epoch_us($e)"
-              }
-            }
-            toks = toks.patch(i, lex(repl), close - i + 1)
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    toks
-  }
-
-  /** `strftime(ts, '%Y-%m-%d')` → `date_format(ts, 'yyyy-MM-dd')`: rename
-    * plus strftime→JDK pattern translation of string-literal args. */
-  private[dialect] def rewriteStrftime(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        // formatDateTime is ClickHouse's spelling of the same (time, fmt)
-        // call with the same %-pattern family (chsql macro surface)
-        case id: Ident if id.upper == "STRFTIME" || id.upper == "FORMATDATETIME" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            // pattern = whichever arg is the '%'-bearing literal (duck
-            // accepts both argument orders; chsql formatDateTime(time, fmt))
-            val fmtIx = args.indexWhere(_.filterNot(isWs) match {
-              case Vector(s: Str) => s.value.contains("%")
-              case _ => false
-            })
-            if (args.length == 2 && fmtIx >= 0) {
-              val ts = render(args(1 - fmtIx)).trim
-              val fmt = args(fmtIx).filterNot(isWs).head.asInstanceOf[Str].value
-              // «TS» holes sit inside function-call parens in every
-              // template, so the rendered arg needs no extra wrapping
-              strftimeSql(ts, fmt) match {
-                case Some(sql) =>
-                  toks = toks.patch(i, lex(sql), close - i + 1)
-                case None => () // unknown specifier — duck errors; stay loud
-              }
-            } else if (args.length == 2) {
-              // DYNAMIC pattern (r12, closing the register entry): route
-              // through the graft_strftime runtime formatter — the old
-              // bare date_format rename fed duck %-patterns to the JDK
-              // formatter, a silent wrong answer. Standard (ts, fmt)
-              // argument order (the literal-order sniffing above needs a
-              // literal); unknown specifiers throw at runtime like duck.
-              val (ts, fmt) = (render(args(0)).trim, render(args(1)).trim)
-              toks = toks.patch(i, lex(
-                s"graft_strftime(CAST(($ts) AS TIMESTAMP), $fmt)"),
-                close - i + 1)
-            }
-          }
-        // ClickHouse splitByChar(sep, s) → split(s, quoted-sep) (args swap)
-        case id: Ident if id.upper == "SPLITBYCHAR" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            if (args.length == 2) {
-              args(0).filterNot(isWs) match {
-                case Vector(sep: Str) =>
-                  val quoted = regexLiteralSep(sep.value)
-                  val sql = s"split(${render(args(1)).trim}, '$quoted')"
-                  toks = toks.patch(i, lex(sql), close - i + 1)
-                case _ =>
-              }
-            }
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    toks
-  }
-
-  /** DuckDB `regexp_replace(s, p, r, 'g')` == Spark's default (global)
-    * `regexp_replace(s, p, r)` → drop the flag. The 3-arg DuckDB form is
-    * first-match-only — Spark's builtin cannot express that, so it maps to
-    * graft's codegen [[graft.functions.RegexpReplaceFirst]] expression
-    * (round 4; previously a documented divergence). */
   /** POSIX character classes in regex-argument literals (r10 batch 7):
     * DuckDB's RE2 accepts `[[:alpha:]]`; Java's engine silently matches
     * NOTHING on that syntax. Translate `[:name:]` → `\p{Name}` (valid in
@@ -5519,94 +5423,17 @@ object Translator {
     "punct" -> "\\p{Punct}", "xdigit" -> "\\p{XDigit}", "cntrl" -> "\\p{Cntrl}",
     "graph" -> "\\p{Graph}", "print" -> "\\p{Print}", "blank" -> "\\p{Blank}",
     "ascii" -> "\\p{ASCII}", "word" -> "\\w")
-  private val posixRegexFns = Set("REGEXP_MATCHES", "REGEXP_EXTRACT",
-    "REGEXP_EXTRACT_ALL", "REGEXP_REPLACE", "REGEXP_SPLIT_TO_ARRAY",
-    "REGEXP_FULL_MATCH", "REGEXP_COUNT", "REGEXP_REPLACE_FIRST",
-    "STRING_SPLIT_REGEX", "RLIKE", "MATCH")
-  private[dialect] def rewritePosixClasses(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    def mapped(v: String): String =
-      "\\[:([a-z]+):\\]".r.replaceAllIn(v, m =>
+
+  /** The pattern literal at `at` with its POSIX classes mapped; None when
+    * it is no literal or has no class to map (an unknown `[:foo:]` stays,
+    * and a None keeps the rule from firing on its own output). */
+  private def posixClasses(toks: Vector[Tok], at: Int): Option[Vector[Tok]] = toks(at) match {
+    case s: Str if s.value.contains("[:") =>
+      val v = "\\[:([a-z]+):\\]".r.replaceAllIn(s.value, m =>
         java.util.regex.Matcher.quoteReplacement(
           posixClassMap.getOrElse(m.group(1), m.matched)))
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case id: Ident if posixRegexFns.contains(id.upper) =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            val args = splitTopLevel(toks.slice(open + 1, close))
-            // pattern is arg 1 for every function in the set
-            if (args.length >= 2) {
-              val pIn = args(1).indexWhere(!isWs(_))
-              if (pIn >= 0) {
-                val pIdx = open + 1 + args(0).length + 1 + pIn
-                toks(pIdx) match {
-                  case s: Str if s.value.contains("[:") =>
-                    toks = toks.updated(pIdx,
-                      Str("'" + mapped(s.value).replace("'", "''") + "'"))
-                  case _ =>
-                }
-              }
-            }
-          }
-        case p: Ident if p.upper == "RLIKE" || p.upper == "SIMILAR" =>
-          // operator form: the right operand literal
-          val r = nextNonWs(toks, i)
-          val r2 = if (r < toks.length && up(toks(r)) == "TO") nextNonWs(toks, r) else r
-          if (r2 < toks.length) toks(r2) match {
-            case s: Str if s.value.contains("[:") =>
-              toks = toks.updated(r2,
-                Str("'" + mapped(s.value).replace("'", "''") + "'"))
-            case _ =>
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    toks
-  }
-
-  private[dialect] def rewriteRegexpReplaceFlag(toks0: Vector[Tok]): Vector[Tok] = {
-    var toks = toks0
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case id: Ident if id.upper == "REGEXP_REPLACE" =>
-          val open = nextNonWs(toks, i)
-          if (open < toks.length && toks(open) == Punct("(")) {
-            val close = matchParen(toks, open)
-            // count top-level args; remember the last comma for flag removal
-            var d = 0
-            var lastComma = -1
-            var nCommas = 0
-            for (j <- open to close) {
-              d += depthDelta(toks(j))
-              if (d == 1 && toks(j) == Punct(",")) { lastComma = j; nCommas += 1 }
-            }
-            val lastArg =
-              if (lastComma > 0) toks.slice(lastComma + 1, close).filterNot(isWs)
-              else Vector.empty[Tok]
-            lastArg match {
-              case Vector(s: Str) if s.value == "g" =>
-                // global flag → Spark's 4-arg position form (global from
-                // position 1), NOT the 3-arg form: re-translating a 3-arg
-                // output would wrongly demote it to first-match (the
-                // idempotence property the dialect layer guarantees)
-                toks = toks.patch(lastComma + 1, Seq(Ws(" "), Num("1")),
-                  close - lastComma - 1)
-              case _ if nCommas == 2 =>
-                // bare 3-arg form: DuckDB replaces only the first match
-                toks = toks.updated(i, Ident("regexp_replace_first"))
-              case _ =>
-            }
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    toks
+      if (v == s.value) None else Some(toks.updated(at, Str("'" + v.replace("'", "''") + "'")))
+    case _ => None
   }
 
   /** DuckDB JSON arrows (r9 batch-4 widening): `j -> path` extracts JSON

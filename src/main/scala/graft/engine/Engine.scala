@@ -1611,14 +1611,20 @@ object Engine {
     val t = Translator.translate(duckSql,
       name => scala.util.Try(spark.table(name).schema.fieldNames.toSeq).toOption,
       types)
-    t.views.foreach { v =>
-      v.format match {
-        case "csv" => spark.read.option("header", "true")
-          .option("inferSchema", "true").csv(v.path).createOrReplaceTempView(v.name)
-        case f => spark.read.format(f).load(v.path).createOrReplaceTempView(v.name)
+    // a view new to the session, or one whose schema changed, may carry
+    // MAP columns the catalog snapshots do not know yet; the same file
+    // re-registered with the same schema (each refresh of a view over
+    // read_csv_auto does it) changes nothing they hold
+    val changed = t.views.map { v =>
+      val df = v.format match {
+        case "csv" => spark.read.option("header", "true").option("inferSchema", "true").csv(v.path)
+        case f => spark.read.format(f).load(v.path)
       }
+      val before = scala.util.Try(spark.table(v.name).schema).toOption
+      df.createOrReplaceTempView(v.name)
+      !before.contains(df.schema)
     }
-    if (t.views.nonEmpty) bumpCatalogVersion() // new views may carry MAP columns
+    if (changed.contains(true)) bumpCatalogVersion()
     if (t.sql.contains("graft_infoschema_")) registerInfoSchema(spark)
     val out = spark.sql(t.sql)
     // DDL invalidates the cached information_schema snapshot (spark.sql

@@ -247,7 +247,10 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     val auth = tenants.parseAuthHeader(
       Option(ex.getRequestHeaders.getFirst("Authorization")))
     val defaultFormat = params.getOrElse("default_format", "JSONCompact")
-    val queryId = params.get("query_id")
+    // a query_id names a result within its tenant and database: another
+    // tenant's replay of the same id must not see it
+    val cacheKey = params.get("query_id").map(id =>
+      s"${tenants.tenantDatabase(auth)}\u0000${params.getOrElse("database", "")}\u0000$id")
     val paramQuery = params.getOrElse("query", "")
 
     // POST INSERT with NDJSON body (reference main.py:228-229,196-211):
@@ -260,7 +263,7 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
       val session = tenants.sessionFor(auth, params.get("database"))
       QueryExecutor.runInsertStream(session, insertTarget.get, ex.getRequestBody) match {
         case Right(_) =>
-          queryId.foreach(id => cache.put(id, Array.emptyByteArray))
+          cacheKey.foreach(id => cache.put(id, Array.emptyByteArray))
           respond(ex, 200, Array.emptyByteArray)
         case Left(err) => respondText(ex, 400, err)
       }
@@ -270,8 +273,8 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
 
     // cache replay: query_id with no query (reference main.py:276-278)
-    if (paramQuery.isEmpty && body.isEmpty && queryId.nonEmpty) {
-      cache.get(queryId.get) match {
+    if (paramQuery.isEmpty && body.isEmpty && cacheKey.nonEmpty) {
+      cache.get(cacheKey.get) match {
         case Some(bytes) => respond(ex, 200, bytes)
         case None => respondText(ex, 404, "query_id not cached")
       }
@@ -306,7 +309,7 @@ final class HttpServer(spark: SparkSession, port: Int = 8123, uiDir: Option[Stri
         // only runtime failures can strike mid-stream (the client sees a
         // truncated chunked body)
         respondStream(ex, "application/json; charset=UTF-8") { os =>
-          queryId match {
+          cacheKey match {
             case None => graft.formats.Encoders.encodeTo(p.df, p.format, p.t0, os)
             case Some(id) =>
               val tee = new TeeOutputStream(os)

@@ -2,7 +2,9 @@ package graft.server
 
 /** LRU cache of encoded responses keyed by `query_id` (reference S8,
   * `LRUCache(maxsize=10)`, `/root/reference/main.py:65,276-278,287-288`):
-  * a GET carrying only `query_id` replays the cached bytes. Bounded by the
+  * a GET carrying only `query_id` replays the cached bytes. The server
+  * qualifies each id with the request's tenant and `database`, so one
+  * tenant cannot replay another's result. Bounded by the
   * reference's entry count and by [[ResultCache.maxBytes]] in total: a put
   * evicts the least recently used entries until both fit, and a result
   * larger than the cap is not kept. */

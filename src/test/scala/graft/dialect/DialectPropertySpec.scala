@@ -58,6 +58,27 @@ class DialectPropertySpec extends AnyFunSuite {
       val twice = Translator.sparkSql(once)
       assert(twice == once, s"$name not idempotent:\n once=$once\n twice=$twice")
     }
+    // call rewrites whose output holds a name their own or another rule
+    // matches: each translation ends, gives the pinned text, and holds
+    val pinned = Seq(
+      "SELECT string_split(x, '.') FROM t" -> """SELECT split(x, '\.') FROM t""",
+      "SELECT regexp_replace(s, 'a', 'b', 'g') FROM t" -> "SELECT regexp_replace(s, 'a', 'b', 1) FROM t",
+      "SELECT regexp_replace(s, 'a', 'b') FROM t" -> "SELECT regexp_replace_first(s, 'a', 'b') FROM t",
+      "SELECT regexp_matches(s, '[[:foo:]]') FROM t" -> "SELECT rlike(s, '[[:foo:]]') FROM t",
+      "SELECT array_agg(x ORDER BY k DESC) FROM t" ->
+        ("SELECT transform(reverse(graft_list_sort(collect_list(named_struct('kn', (k) IS NOT NULL, " +
+          "'k', (k), 'v', (x))), false, false)), __g_s -> __g_s.v) FROM t"),
+      "SELECT list_sum([1, NULL])" ->
+        ("SELECT (CASE WHEN size(filter((array(1, NULL)), __g_n -> __g_n IS NOT NULL)) = 0 " +
+          "THEN CAST(NULL AS DOUBLE) ELSE aggregate(filter((array(1, NULL)), __g_n -> __g_n IS NOT NULL), " +
+          "CAST(0 AS DOUBLE), (__g_acc, __g_v) -> __g_acc + CAST(__g_v AS DOUBLE)) END)"))
+    pinned.foreach { case (sql, want) =>
+      val once = scala.concurrent.Await.result(
+        scala.concurrent.Future(Translator.sparkSql(sql))(scala.concurrent.ExecutionContext.global),
+        scala.concurrent.duration.Duration(30, "s"))
+      assert(once == want, sql)
+      assert(Translator.sparkSql(once) == once, sql)
+    }
   }
 
   test("translate time grows linearly with statement size") {

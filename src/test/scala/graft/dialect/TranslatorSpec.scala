@@ -457,6 +457,12 @@ class TranslatorSpec extends AnyFunSuite {
       == "SELECT * FROM t WHERE x RLIKE '^(?:S[0-9]+)$'")
     assert(t("SELECT * FROM t WHERE x NOT SIMILAR TO 'a.b'")
       == "SELECT * FROM t WHERE x NOT RLIKE '^(?:a.b)$'")
+    // POSIX classes in the operator's literal map like the regexp
+    // functions' patterns (Java matches nothing on `[[:alpha:]]`)
+    assert(t("SELECT * FROM t WHERE x SIMILAR TO '[[:alpha:]]+'")
+      == """SELECT * FROM t WHERE x RLIKE '^(?:[\p{Alpha}]+)$'""")
+    assert(t("SELECT * FROM t WHERE x RLIKE '[[:digit:]][[:foo:]]'")
+      == """SELECT * FROM t WHERE x RLIKE '[\p{Digit}][[:foo:]]'""")
   }
 
   test("dot-call chaining becomes nested calls, before the fn-name map") {

@@ -1821,6 +1821,12 @@ class OperatorsSpec extends SparkTestBase {
         scala.concurrent.ExecutionContext.global)
       assert(scala.concurrent.Await.result(sums,
         scala.concurrent.duration.Duration(2, "min")) == Seq(6L, 6L))
+      // re-registering the same file views leaves the catalog version
+      // alone, so another session keeps its snapshot
+      val other = spark.newSession()
+      val snap = Engine.infoSnapshot(other)
+      (1 to 3).foreach(_ => Engine.sql(spark, "SELECT 1").collect())
+      assert(Engine.infoSnapshot(other) eq snap)
     } finally {
       Seq("sp_csv_a", "sp_csv_b").foreach(v => Engine.sql(spark, s"DROP VIEW IF EXISTS $v"))
       new scala.reflect.io.Directory(dir.toFile).deleteRecursively()

@@ -269,6 +269,27 @@ class ProtocolSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("HTTP: a query_id result replays to its own tenant only") {
+    val srv = new HttpServer(spark, 0)
+    val port = srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def get(user: String, pathAndQuery: String): HttpResponse[String] =
+        client.send(HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$port$pathAndQuery"))
+          .header("Authorization", "Basic " + java.util.Base64.getEncoder
+            .encodeToString(s"$user:pw".getBytes("UTF-8"))).build(),
+          HttpResponse.BodyHandlers.ofString())
+      val q = java.net.URLEncoder.encode("SELECT 'alice private' AS s", "UTF-8")
+      val first = get("qa_alice", s"/?query=$q&query_id=qx&default_format=CSV")
+      assert(first.statusCode() == 200 && first.body().contains("alice private"), first.body())
+      val bob = get("qa_bob", "/?query_id=qx")
+      assert(bob.statusCode() == 404, bob.body())
+      val replay = get("qa_alice", "/?query_id=qx")
+      assert(replay.statusCode() == 200 && replay.body() == first.body())
+    } finally srv.stop()
+  }
+
   test("zstd envelope round-trip with 4-byte LE length prefix") {
     val payload = "payload-bytes".getBytes
     val env = FlightActions.compressEnvelope(payload)
