@@ -90,10 +90,11 @@ object ArrowIO {
     * each record batch to the sink as it seals, so with a chunked HTTP
     * response the driver holds one partition and one batch. A root
     * `ORDER BY` whose size, as Spark estimates or measures it, fits the
-    * advisory partition size is met on one partition, without the range
-    * partitioner's sampling job (the final stage runs one partition per job
-    * in sequence either way); that partition is the whole reply, so larger
-    * sorted results keep the range partitioning. Returns the row count. */
+    * advisory partition size is met on one partition gathered inside the
+    * result job, without the range partitioner's sampling job or a shuffle
+    * stage of its own (a `GROUP BY` under it gathers its partial aggregates
+    * there too); that partition is the whole reply, so larger sorted
+    * results keep the range partitioning. Returns the row count. */
   def toArrowStreamTo(df: DataFrame, out: java.io.OutputStream): Long =
     writeIpc(df.schema, graft.plans.SingleStream.drain(df), out)
 

@@ -22,6 +22,12 @@ object Lexer {
   /** Single-quoted string literal, quotes included, '' escapes preserved. */
   final case class Str(text: String) extends Tok {
     def value: String = text.substring(1, text.length - 1).replace("''", "'")
+    /** The closing quote is there: the quotes after the opening one end
+      * in an odd run (an even run is `''` escapes the text ran out in). */
+    def closed: Boolean = {
+      val body = text.drop(1)
+      (body.length - 1 - body.lastIndexWhere(_ != '\'')) % 2 == 1
+    }
   }
   final case class Num(text: String) extends Tok
   /** Operator / punctuation (possibly multi-char: <=, >=, <>, !=, ==, ||, ::). */

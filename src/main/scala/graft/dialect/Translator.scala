@@ -142,6 +142,9 @@ object Translator {
     *     terms. */
   private def encodeStrLiterals(toks: Vector[Tok]): Vector[Tok] =
     toks.flatMap {
+      // an unterminated literal has no value to re-encode: it stays as
+      // written, for Spark's parser to reject
+      case s: Str if !s.closed => Vector(s)
       case s: Str =>
         val v = s.value
         if (!v.contains('\'') && !v.endsWith("\\"))
@@ -3158,6 +3161,9 @@ object Translator {
       if (n < toks.length && toks(n) == Punct("(")) n else -1
     }
     lazy val close: Int = matchParen(toks, open)
+    /** The lexer found the call's close paren (an unterminated string or
+      * comment inside the call runs to the end of the text instead). */
+    def closed: Boolean = toks(close) == Punct(")")
     lazy val inner: Vector[Tok] = toks.slice(open + 1, close)
     lazy val args: Vector[Vector[Tok]] = splitTopLevel(inner)
     private lazy val rendered = args.map(a => render(a).trim)
@@ -4148,11 +4154,14 @@ object Translator {
     call("TO_JSON", "ROW_TO_JSON", "ARRAY_TO_JSON") {
       // DuckDB to_json keeps NULL struct fields ({"a":null}); Spark's
       // to_json DROPS them by default — inject
-      // ignoreNullFields=false. One-arg calls only: the re-lexed
-      // 2-arg result no longer matches, so the fixpoint loop can't
-      // re-fire. (DuckDB scalar to_json('s') → '"s"' stays a
-      // declared gap: Spark's to_json takes only struct/map/array.)
-      case c if c.args.length == 1 =>
+      // ignoreNullFields=false. One-arg calls whose close paren the
+      // lexer found only: the re-lexed 2-arg result no longer matches, so
+      // the fixpoint loop can't re-fire. An unclosed call would not stay
+      // 2-arg: an unterminated string in its argument swallows the added
+      // `, map(…` on the re-lex. (DuckDB scalar to_json('s') → '"s"'
+      // stays a declared gap: Spark's to_json takes only
+      // struct/map/array.)
+      case c if c.args.length == 1 && c.closed =>
         c.to(s"to_json(${c.arg(0)}, map('ignoreNullFields', 'false'))")
     }
     call("JSON_GROUP_ARRAY") {

@@ -25,11 +25,11 @@ import java.nio.charset.StandardCharsets
   * 100 TB the collection boundary is the one place bounded memory
   * matters). The drain meets a root `ORDER BY` whose size, as Spark
   * estimates or measures it, fits the advisory partition size on one
-  * partition instead of a sampled range partitioning: the final stage runs
-  * one partition per job in sequence either way, so for such a reply the
-  * range partitioner's sampling job is pure overhead. That one partition
-  * is then the whole reply, which is why larger sorted results keep the
-  * range partitioning.
+  * partition instead of a sampled range partitioning, gathered inside the
+  * result job (a `GROUP BY` under it gathers its partial aggregates there
+  * too): no sampling job, and no shuffle stage with a job of its own. That
+  * one partition is then the whole reply, which is why larger sorted
+  * results keep the range partitioning.
   */
 object Encoders {
 

@@ -3,10 +3,19 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftFrames, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort, UnaryNode, WithCTE}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, PythonUDAF, SortOrder}
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, Filter, LeafNode, LogicalPlan, Project, Sort,
+  UnaryNode, Union, WithCTE}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition,
+  UnspecifiedDistribution}
+import org.apache.spark.sql.execution.{ProjectExec, ShuffledRowRDD, SortExec, SparkPlan, SparkStrategy,
+  UnaryExecNode, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.AggUtils
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLShuffleReadMetricsReporter,
+  SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.internal.SQLConf
 import scala.jdk.CollectionConverters._
 
@@ -19,10 +28,15 @@ import scala.jdk.CollectionConverters._
   * nothing here: `RDD.toLocalIterator` runs the final stage one partition
   * per job, in sequence, so the final sort never runs in parallel anyway.
   * Under this marker [[SingleStreamStrategy]] meets the ordering on ONE
-  * partition instead — a local sort over [[SingleStreamExec]], which asks
-  * for all tuples in one partition. The map side stays parallel, the
-  * sampling pass is gone, and an input that already sits in one ordered
-  * partition (a window without PARTITION BY) gets no exchange and no sort.
+  * partition instead: a local sort over [[SingleStreamExec]], which
+  * gathers its input into one partition inside the result job. The map side
+  * stays parallel, the sampling pass is gone, no exchange (and so no AQE
+  * query stage and no job of its own) is planned for the gather, an input
+  * already in one partition is not moved at all, and one already in one
+  * ordered partition (a window without PARTITION BY) is not sorted again.
+  * A root sort over a non-DISTINCT `GROUP BY` gathers the partial
+  * aggregates and runs the final aggregate on the one partition, so the
+  * hash exchange goes too: the whole reply is one job.
   *
   * `toLocalIterator` fetches each partition whole, as one task result, so
   * that one partition is the whole sorted reply: the strategy plans it only
@@ -81,33 +95,108 @@ object SingleStream {
   * small but measured large before that exchange runs keeps the range
   * partitioning. Estimates can under-read (a generator's output is
   * estimated at its input's size), so the bound is only as good as the
-  * size Spark has when it plans the root exchange. */
+  * size Spark has when it plans the root exchange.
+  *
+  * When the sort's input is (under `Project`s) a non-DISTINCT aggregate
+  * whose own input fits the advisory size too and plans no exchange (scans,
+  * filters, projections, `GROUPING SETS` expansions and unions), the
+  * aggregate plans as partial aggregate, gather, final aggregate: the one
+  * final-aggregate task reads at most that much, and no hash exchange is
+  * planned, so the reply is one job of two stages. Any other input (a
+  * join, a generator, another aggregate, a larger or a DISTINCT one) keeps
+  * the hash exchange below the gather: that is the stage whose measured
+  * size lets AQE move an under-estimated result back to range
+  * partitioning. */
 object SingleStreamStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case s @ SingleStream(c) =>
-      val fits = s.stats.sizeInBytes <= SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-      (if (fits) single(c) else planLater(c)) :: Nil
+    case s @ SingleStream(c) => (if (fits(s)) single(c) else planLater(c)) :: Nil
     case _ => Nil
   }
 
+  private def fits(p: LogicalPlan): Boolean =
+    p.stats.sizeInBytes <= SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
   private def single(p: LogicalPlan): SparkPlan = p match {
     case Project(list, c) => ProjectExec(list, single(c))
-    case Sort(order, true, c, _) => SortExec(order, global = false, SingleStreamExec(planLater(c)))
+    case Sort(order, true, c, _) =>
+      SortExec(order, global = false, aggregated(c).getOrElse(SingleStreamExec(planLater(c))))
     case c => planLater(c)
+  }
+
+  /** `p`, a non-DISTINCT aggregate under any `Project`s, as final aggregate
+    * over [[SingleStreamExec]] over partial aggregate; None for any other
+    * plan, and when the aggregate's input does not fit or is not narrow. */
+  private def aggregated(p: LogicalPlan): Option[SparkPlan] = p match {
+    case Project(list, c) => aggregated(c).map(ProjectExec(list, _))
+    case PhysicalAggregation(keys, aggs, results, c) if fits(c) && narrow(c) &&
+        aggs.forall(a => !a.isDistinct && !a.aggregateFunction.isInstanceOf[PythonUDAF]) =>
+      AggUtils.planAggregateWithoutDistinct(keys, aggs, results, planLater(c)) match {
+        case Seq(last) if last.children.size == 1 =>
+          Some(last.withNewChildren(SingleStreamExec(last.children.head) :: Nil))
+        case _ => None
+      }
+    case _ => None
+  }
+
+  /** Plans no exchange, so AQE has nothing to measure below it. */
+  private def narrow(p: LogicalPlan): Boolean = !p.exists {
+    case _: LogicalQueryStage => true
+    case _: Project | _: Filter | _: Expand | _: Union | _: LeafNode => false
+    case _ => true
   }
 }
 
-/** Requires all tuples in one partition and passes the child's partitioning
-  * and ordering through, so `EnsureRequirements` adds `Exchange
-  * SinglePartition` only when the child has more than one partition, and
-  * `RemoveRedundantSorts` drops the local sort above when the child already
-  * delivers the order. */
+/** Delivers its child's rows in ONE partition (`SinglePartition`). Once
+  * no exchange below the child is left to run, the rows are gathered
+  * inside the job that consumes them: a one-partition child passes through,
+  * and a larger one is gathered by a single-partition shuffle this node
+  * runs itself, the way `TakeOrderedAndProjectExec` gathers its top-k. No
+  * exchange is planned for it, so under AQE the gather is a stage of the
+  * result job rather than a query stage with a job of its own.
+  *
+  * While an exchange (or an AQE query stage) below has still to run, the
+  * node asks for all tuples instead, so `EnsureRequirements` adds `Exchange
+  * SinglePartition` when the child has more than one partition. AQE plans
+  * the root again when that stage below finishes: from a measured size
+  * still too large for one partition it swaps the single exchange for a
+  * range exchange at equal cost, and from one that fits it plans this node
+  * again, now gathering in the job, one exchange cheaper. (An in-job gather
+  * planned before then would make the range exchange look a shuffle more
+  * expensive, and AQE would keep the one partition.)
+  *
+  * The child's ordering passes through only when the child reports one
+  * partition, so `RemoveRedundantSorts` drops the local sort above when that
+  * partition already arrives in order. */
 final case class SingleStreamExec(child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
-  override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
-  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def outputOrdering: Seq[SortOrder] =
+    if (child.outputPartitioning.numPartitions == 1) child.outputOrdering else Nil
+  override def requiredChildDistribution: Seq[Distribution] =
+    (if (staged) AllTuples else UnspecifiedDistribution) :: Nil
+
+  private def staged: Boolean = child.exists {
+    case _: Exchange | _: ReusedExchangeExec => true
+    case s: QueryStageExec => !s.isMaterialized
+    case _ => false
+  }
+
+  private lazy val writeMetrics = SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sparkContext)
+  private lazy val readMetrics = SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sparkContext)
+  override lazy val metrics: Map[String, SQLMetric] = readMetrics ++ writeMetrics
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val rows = child.execute()
+    rows.getNumPartitions match {
+      case 1 => rows
+      // one empty partition, so an aggregate above without keys still
+      // emits its one row
+      case 0 => sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      case _ => new ShuffledRowRDD(ShuffleExchangeExec.prepareShuffleDependency(rows, child.output,
+        SinglePartition, new UnsafeRowSerializer(child.output.size), writeMetrics), readMetrics)
+    }
+  }
+
   override protected def withNewChildInternal(newChild: SparkPlan): SingleStreamExec =
     copy(child = newChild)
 }

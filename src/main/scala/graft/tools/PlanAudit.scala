@@ -861,6 +861,9 @@ object PlanAudit {
     // partition size) loses the root rangepartitioning exchange (and with
     // it the sampling job), keeps any inner ORDER BY's range exchange the
     // plain plan has too, and never has more exchanges than the plain plan.
+    // The line also counts the served plans left with no exchange at all
+    // (the whole reply one job) and those that lost a hash exchange (a
+    // GROUP BY gathered between its partial and final aggregates).
     // Compares AQE initial plans; nothing is executed. The manifest is the
     // second argument, by default perfbench/manifest.json under the working
     // directory; a missing manifest fails this check alone.
@@ -871,7 +874,7 @@ object PlanAudit {
         "(run from the repo root or pass its path as the second argument)")
     } else {
       import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+      import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioningLike, RangePartitioning}
       import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
       import org.apache.spark.sql.execution.exchange.Exchange
@@ -881,6 +884,8 @@ object PlanAudit {
       }
       def isRange(e: SparkPlan): Boolean = e.isInstanceOf[Exchange] &&
         e.outputPartitioning.isInstanceOf[RangePartitioning]
+      def isHash(e: SparkPlan): Boolean = e.isInstanceOf[Exchange] &&
+        e.outputPartitioning.isInstanceOf[HashPartitioningLike]
       def rootRange(p: SparkPlan): Boolean = p match {
         case ProjectExec(_, c) => rootRange(c)
         case SortExec(_, true, c, _) => isRange(c)
@@ -902,10 +907,13 @@ object PlanAudit {
           if count(p, _.isInstanceOf[Exchange]) > count(plain, _.isInstanceOf[Exchange]) => n }
       val dropped = served.count { case (_, plain, _) => rootRange(plain) }
       val inner = served.count { case (_, _, p) => count(p, isRange) > 0 }
+      val bare = served.count { case (_, _, p) => count(p, _.isInstanceOf[Exchange]) == 0 }
+      val hashLost = served.count { case (_, plain, p) => count(p, isHash) < count(plain, isHash) }
       if (served.nonEmpty && ranged.isEmpty && grown.isEmpty)
         println(s"PLAN OK   served ORDER BY on one partition: ${served.size} of " +
           s"${eligible.size} eligible entries drain a root sort there, $dropped lose its range " +
-          s"exchange, none gains an exchange ($inner keep an inner ORDER BY's)")
+          s"exchange, none gains an exchange ($inner keep an inner ORDER BY's), $bare plan " +
+          s"no exchange at all, $hashLost lose a hash exchange")
       else {
         failures += 1
         println(s"PLAN BAD  served ORDER BY: ${served.size} served root sorts, " +

@@ -818,6 +818,21 @@ class TranslatorSpec extends AnyFunSuite {
       "SELECT to_json(map_from_entries(collect_list(named_struct('key', (k), 'value', (v)))), map('ignoreNullFields', 'false')) FROM t1")
   }
 
+  test("to_json over an unterminated string returns, its call left as it is") {
+    // the open quote runs to the end of the text, so the call has no close
+    // paren; rewritten, its re-lexed output would be the same one-argument
+    // call again, so the rule must not fire on it
+    val sql = "SELECT get_json_object(to_json(variant_get(parse_json('"
+    val run = scala.concurrent.Future(Translator.translate(sql))(scala.concurrent.ExecutionContext.global)
+    val tr = scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(5, "s"))
+    assert(tr.sql.contains("to_json(variant_get(parse_json('"), tr.sql)
+    assert(!tr.sql.contains("ignoreNullFields"), tr.sql)
+    // an unterminated literal is left as written; closed ones, '' escapes
+    // included, are still re-encoded
+    assert(Seq("'", "'a''", "'''").forall(s => !Lexer.Str(s).closed))
+    assert(Seq("''", "'a'", "'a'''", "''''").forall(s => Lexer.Str(s).closed))
+  }
+
   test("r7 session 3: entropy/histogram/product/bar/format_bytes renames") {
     assert(t("SELECT entropy(x), histogram(x), product(x) FROM t1") ==
       "SELECT graft_entropy(x), graft_histogram(x), graft_product(x) FROM t1")

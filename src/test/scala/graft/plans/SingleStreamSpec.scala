@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import scala.jdk.CollectionConverters._
 
 class SingleStreamSpec extends SparkTestBase {
@@ -60,31 +60,131 @@ class SingleStreamSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
-  test("drain starts exactly one Spark job fewer than toLocalIterator") {
-    view()
-    val q = "SELECT k, v FROM ss_t ORDER BY v DESC NULLS FIRST"
+  /** The Spark jobs and the stages that ran (skipped ones left out) while
+    * `run` ran, counted under a job group of its own. */
+  private def jobsAndStages(run: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val group = "single-stream-jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    def ours(p: java.util.Properties) =
+      Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+        if (ours(js.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (ours(ss.properties)) stages.incrementAndGet()
     }
-    def count(run: => Unit): Int = {
-      org.apache.spark.GraftListenerBus.drain(sc)
-      jobs.set(0)
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
       sc.setJobGroup(group, group)
       try run finally sc.clearJobGroup()
       org.apache.spark.GraftListenerBus.drain(sc)
-      jobs.get()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val plain = count(spark.sql(q).toLocalIterator().asScala.foreach(_ => ()))
-      val drained = count(SingleStream.drain(spark.sql(q)).foreach(_ => ()))
-      assert(drained == plain - 1, s"plain $plain jobs, drained $drained")
+      (jobs.get(), stages.get())
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with AQE on, then off. */
+  private def withAqeOnAndOff(body: String => Unit): Unit =
+    for (aqe <- Seq("true", "false")) try {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      body(aqe)
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    initialPlan(df).collect { case e: ShuffleExchangeExec => e }
+
+  test("drain runs a sorted reply in one job, two fewer than toLocalIterator") {
+    view()
+    val q = "SELECT k, v FROM ss_t ORDER BY v DESC NULLS FIRST"
+    // toLocalIterator: the range partitioner's sampling job, AQE's shuffle
+    // stage, the result job; drain: the result job, which gathers the four
+    // partitions itself
+    val (plain, _) = jobsAndStages(spark.sql(q).toLocalIterator().asScala.foreach(_ => ()))
+    val (drained, _) = jobsAndStages(SingleStream.drain(spark.sql(q)).foreach(_ => ()))
+    assert(plain == 3 && drained == 1, s"plain $plain jobs, drained $drained")
+  }
+
+  test("a 4-partition GROUP BY k ORDER BY k drains in one job with no shuffle exchange") {
+    view()
+    val q = "SELECT k % 40 AS g, count(*) AS c, sum(v) AS s FROM ss_t GROUP BY k % 40 ORDER BY g DESC"
+    withAqeOnAndOff { aqe =>
+      val drained = SingleStream.frame(spark.sql(q))
+      assert(shuffles(drained).isEmpty, s"aqe=$aqe: ${initialPlan(drained)}")
+      assert(initialPlan(drained).exists(_.isInstanceOf[SingleStreamExec]))
+      val want = spark.sql(q).collect().toSeq
+      var got = Seq.empty[org.apache.spark.sql.Row]
+      // the partial aggregates' map stage, then the gather and the final
+      // aggregate in the result stage
+      assert(jobsAndStages { got = SingleStream.drain(spark.sql(q)).toSeq } == ((1, 2)), s"aqe=$aqe")
+      assert(got == want, s"aqe=$aqe")
+      // an input the optimizer knows is empty has no partitions; the
+      // gather still hands the final aggregate one, for its one row
+      val empty = "SELECT count(*) AS c, max(v) AS m FROM ss_t WHERE 1 = 0 ORDER BY c"
+      assert(SingleStream.drain(spark.sql(empty)).toSeq == spark.sql(empty).collect().toSeq, s"aqe=$aqe")
+    }
+  }
+
+  test("an ORDER BY over a one-partition input plans no shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("single-stream").resolve("t").toString
+    try {
+      spark.range(0, 500).selectExpr("id AS k", "id * 7919 % 503 AS v").coalesce(1).write.parquet(dir)
+      spark.read.parquet(dir).createOrReplaceTempView("ss_one")
+      val q = "SELECT k, v FROM ss_one ORDER BY v DESC"
+      withAqeOnAndOff { aqe =>
+        val drained = SingleStream.frame(spark.sql(q))
+        assert(shuffles(drained).isEmpty, s"aqe=$aqe: ${initialPlan(drained)}")
+        val want = spark.sql(q).collect().toSeq
+        var got = Seq.empty[org.apache.spark.sql.Row]
+        // one job of one stage: the scan's one split passes the gather by
+        assert(jobsAndStages { got = SingleStream.drain(spark.sql(q)).toSeq } == ((1, 1)), s"aqe=$aqe")
+        assert(got == want, s"aqe=$aqe")
+      }
+    } finally {
+      // the session is shared: no view over the deleted files may outlive the test
+      spark.catalog.dropTempView("ss_one")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+    }
+  }
+
+  test("an aggregate whose input is over the advisory size keeps its hash exchange") {
+    // 40 local rows of an 8-byte key and a binary value (estimated at 100
+    // bytes), over a kilobyte; the aggregate's two longs are under one
+    spark.createDataFrame((0 until 40).map(i => (i % 4L, i.toString.getBytes("UTF-8"))))
+      .toDF("k", "b").createOrReplaceTempView("ss_wide")
+    val q = "SELECT k, count(b) AS c FROM ss_wide GROUP BY k ORDER BY k"
+    try {
+      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
+      withAqeOnAndOff { aqe =>
+        val drained = SingleStream.frame(spark.sql(q))
+        val agg = drained.queryExecution.optimizedPlan.collectFirst {
+          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+        }.get
+        assert(agg.stats.sizeInBytes <= 1024 && agg.child.stats.sizeInBytes > 1024)
+        val plan = initialPlan(drained)
+        assert(plan.exists(_.isInstanceOf[SingleStreamExec]), s"aqe=$aqe: $plan")
+        assert(shuffles(drained).exists(_.outputPartitioning.isInstanceOf[HashPartitioning]),
+          s"aqe=$aqe: $plan")
+        assert(SingleStream.drain(spark.sql(q)).toSeq == spark.sql(q).collect().toSeq, s"aqe=$aqe")
+      }
+    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+  }
+
+  test("a DISTINCT aggregate gathers above its final aggregate, as before") {
+    view()
+    val q = "SELECT k % 40 AS g, count(DISTINCT v % 7) AS c FROM ss_t GROUP BY k % 40 ORDER BY g"
+    withAqeOnAndOff { aqe =>
+      val drained = SingleStream.frame(spark.sql(q))
+      val plan = initialPlan(drained)
+      val gather = plan.collectFirst { case g: SingleStreamExec => g }.get
+      // every aggregate, final one included, runs below the gather
+      assert(plan.collect { case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a }
+        .forall(a => gather.exists(_ eq a)), s"aqe=$aqe: $plan")
+      assert(shuffles(drained).exists(_.outputPartitioning.isInstanceOf[HashPartitioning]),
+        s"aqe=$aqe: $plan")
+      assert(SingleStream.drain(spark.sql(q)).toSeq == spark.sql(q).collect().toSeq, s"aqe=$aqe")
+    }
   }
 
   test("a window already on one ordered partition keeps its one exchange") {
